@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..catalog import cut
 from .stable import dsum
 
 DAMPING = 0.85
@@ -58,9 +59,9 @@ def pagerank(
     grain here) should pass True; a billion-node graph keeps the
     default — there the rank vector must shuffle."""
     nn = nodes.agg(F.count(F.lit(1)).cast("double").alias("n"))
-    # edges is consumed once per iteration: cut the upstream (often
-    # fact-join) lineage so it is computed once, not ``iters`` times
-    edges = edges.localCheckpoint(eager=False)
+    # cut: multi-consumer — edges is read once per iteration; the
+    # upstream (often fact-join) lineage runs once, not ``iters`` times
+    edges = cut(edges)
     hint = F.broadcast if broadcast_ranks else (lambda df: df)
     ranks = nodes.crossJoin(F.broadcast(nn)).select(
         "node", (F.lit(1.0) / F.col("n")).alias("r")

@@ -47,11 +47,3 @@ def minhash_params(n_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     a = rng.randint(1, 1 << 31, size=n_hashes).tolist()
     b = rng.randint(0, 1 << 31, size=n_hashes).tolist()
     return list(zip(a, b))
-
-
-def universal_hash(h: Column, a: int, b: int) -> Column:
-    return (h * F.lit(a) + F.lit(b)) % F.lit(MOD31)
-
-
-def sql_universal_hash(h_expr: str, a: int, b: int) -> str:
-    return f"((({h_expr}) * {a} + {b}) % {MOD31})"

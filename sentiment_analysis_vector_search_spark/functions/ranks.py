@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..catalog import cut
+
 
 def dist_ntile(
     df: DataFrame,
@@ -35,7 +37,7 @@ def dist_ntile(
     sampling is rddId-seeded, so without exchange reuse the two
     evaluations could draw DIFFERENT partition boundaries and silently
     misrank. Rather than documenting the ``spark.sql.exchange.reuse``
-    precondition, the partitioned frame is localCheckpointed (lazily —
+    precondition, the partitioned frame is cut (lazily —
     eager=True would pay a separate materialization job per call): the
     returned frame is ONE LogicalRDD, so both branches share a single
     shuffle dependency (one boundary sample) and read the same blocks no
@@ -46,13 +48,14 @@ def dist_ntile(
     """
     spark = df.sparkSession
     n_part = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 8)
-    parts = (
+    # cut: pins ids — one boundary sample and one _mid assignment for both
+    # consumers (offsets aggregate and join-back)
+    parts = cut(
         df.select(value_col, tie_col)
         .repartitionByRange(n_part, value_col, tie_col)
         .sortWithinPartitions(value_col, tie_col)
         .withColumn("_pid", F.spark_partition_id())
         .withColumn("_mid", F.monotonically_increasing_id())
-        .localCheckpoint(eager=False)
     )
     w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     offs = (
@@ -145,7 +148,7 @@ def dist_group_rank(
     runs; their counts/offsets aggregate to |partitions| x |groups
     present| rows (bounded metadata, broadcast), and the global in-group
     rank is offset + in-segment index. Same exchange-reuse hardening as
-    dist_ntile: the partitioned frame is lazily localCheckpointed so
+    dist_ntile: the partitioned frame is lazily cut so
     both consumers share ONE boundary sample.
 
     Returns (group_col, value_col, tie_col, rk, n_g) with rk in
@@ -155,13 +158,13 @@ def dist_group_rank(
     low: a plain ``=`` would silently drop NULL-group rows)."""
     spark = df.sparkSession
     n_part = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 8)
-    parts = (
+    # cut: pins ids — one boundary sample and one _mid assignment
+    parts = cut(
         df.select(group_col, value_col, tie_col)
         .repartitionByRange(n_part, group_col, value_col, tie_col)
         .sortWithinPartitions(group_col, value_col, tie_col)
         .withColumn("_pid", F.spark_partition_id())
         .withColumn("_mid", F.monotonically_increasing_id())
-        .localCheckpoint(eager=False)
     )
     seg = parts.groupBy("_pid", group_col).agg(
         F.count(F.lit(1)).alias("c"), F.min("_mid").alias("base")
@@ -252,13 +255,13 @@ def dist_group_prefix_sum(
     Returns (group_col, order_col, tie_col, val_col, rk, cum)."""
     spark = df.sparkSession
     n_part = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 8)
-    parts = (
+    # cut: pins ids — one boundary sample and one _mid assignment
+    parts = cut(
         df.select(group_col, order_col, tie_col, val_col)
         .repartitionByRange(n_part, group_col, order_col, tie_col)
         .sortWithinPartitions(group_col, order_col, tie_col)
         .withColumn("_pid", F.spark_partition_id())
         .withColumn("_mid", F.monotonically_increasing_id())
-        .localCheckpoint(eager=False)
     )
     seg = parts.groupBy("_pid", group_col).agg(
         F.count(F.lit(1)).alias("c"),

@@ -17,17 +17,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def spark_dot(a: str, b: str) -> Column:
-    """Sequential-fold dot product of two array<double> columns (by name)."""
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
-    )
-
-
-def sql_dot(a: str, b: str) -> str:
-    return f"list_dot_product({a}, {b})"
-
-
 def hyperplanes(n_planes: int, dim: int, seed: int = 7) -> list[list[str]]:
     """Seeded Gaussian hyperplanes as repr() literal strings (round-trip exact)."""
     rng = np.random.RandomState(seed)

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import cut, table
 from ..functions.hashing import sql_md5_long
 from ..functions.stable import dsum, sql_dsum
 from ..registry import register
@@ -102,12 +102,11 @@ def q_customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("frequency"),
         dsum(F.col("o_totalprice")).alias("monetary"),
     )
-    # ONE cut on base (down from the r13 4-checkpoint construct tax):
-    # the melted pass is base's only DataFrame consumer, but
-    # repartitionByRange inside dist_group_rank evaluates its input
-    # TWICE (boundary-sampling pass + shuffle pass) — without the cut
-    # the orders groupBy runs once per pass (A/B-measured +0.3 s exec).
-    base = base.localCheckpoint(eager=False)
+    # cut: multi-consumer — the melted pass is base's only DataFrame
+    # consumer, but repartitionByRange inside dist_group_rank evaluates
+    # its input TWICE (boundary-sampling pass + shuffle pass); uncut, the
+    # orders groupBy runs once per pass (A/B-measured +0.3 s exec).
+    base = cut(base)
     melted = base.select(
         "custkey",
         F.explode(
@@ -241,12 +240,12 @@ FROM rolled r JOIN cohort_sizes s ON s.cohort_q = r.cohort_q
 @register("q_cohort_ltv", oracle=_LTV_ORACLE)
 def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders")
-    # Lazy lineage cut (r13): firsts feeds the cohort-size aggregate AND
-    # the aging join; without it the per-customer first-order groupBy over
-    # orders executed twice. Customer-grain — small at any SF.
-    firsts = orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
-        F.date_trunc("quarter", F.min("o_orderdate")).alias("cohort_q")
-    ).localCheckpoint(eager=False)
+    # cut: multi-consumer — the cohort-size aggregate AND the aging join
+    firsts = cut(
+        orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
+            F.date_trunc("quarter", F.min("o_orderdate")).alias("cohort_q")
+        )
+    )
     sizes = firsts.groupBy("cohort_q").agg(
         F.count(F.lit(1)).alias("cohort_customers")
     )
@@ -389,13 +388,14 @@ GROUP BY f.event_type
 @register("q_forecast_backtest", oracle=_FC_ORACLE)
 def q_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.col("ts").cast("date").alias("d"),
-        F.dayofweek("ts").alias("dow"),
-    ).agg(F.count(F.lit(1)).alias("n")).localCheckpoint(eager=False)
-    # (lazy cut: daily feeds the type spine, the train leg and the test
-    # leg — one events aggregation instead of three, r13)
+    # cut: multi-consumer — the type spine, the train leg and the test leg
+    daily = cut(
+        ev.groupBy(
+            "event_type",
+            F.col("ts").cast("date").alias("d"),
+            F.dayofweek("ts").alias("dow"),
+        ).agg(F.count(F.lit(1)).alias("n"))
+    )
     types = daily.select("event_type").distinct()
     dows = ev.select(F.dayofweek("ts").alias("dow")).distinct()
     spine = types.crossJoin(F.broadcast(dows))
@@ -482,13 +482,12 @@ def ab_test_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.hashing import md5_long
 
     ev = table(spark, sf_dir, "events")
-    # Lazy lineage cut (r13): pc feeds the global-average scalar AND the
-    # arm rollup; without it the per-user groupBy over events ran twice.
-    pc = ev.groupBy("user_id").agg(
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(
-            "purchases"
+    # cut: multi-consumer — the global-average scalar AND the arm rollup
+    pc = cut(
+        ev.groupBy("user_id").agg(
+            F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("purchases")
         )
-    ).localCheckpoint(eager=False)
+    )
     avg_row = pc.agg(
         (F.sum("purchases") * F.lit(1.0) / F.count(F.lit(1))).alias("avg_p")
     )

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import cut, table
 from ..functions import sentiment as S
 from ..functions.stable import davg, sql_davg
 from ..registry import register
@@ -123,14 +123,9 @@ def q_events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     once; nothing self-joins at event granularity.
     """
     events = table(spark, sf_dir, "events")
-    # pairs feeds BOTH the dau aggregate and the fan-out branch; without a
-    # checkpoint each branch would rescan events and redo the distinct.
-    # (users x days)-bounded — materialize-once (SCALING.md #6).
-    pairs = (
-        events.select("user_id", F.date_trunc("day", "ts").alias("day"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    # cut: multi-consumer — the dau aggregate and the fan-out branch
+    # would each rescan events and redo the distinct (SCALING.md #6)
+    pairs = cut(events.select("user_id", F.date_trunc("day", "ts").alias("day")).distinct())
     dau = pairs.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
     votes = pairs.select(
         "user_id",

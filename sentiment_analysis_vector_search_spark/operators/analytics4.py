@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import cut, table
 from ..functions.ranks import dist_ntile
 from ..functions.stable import dsum, sql_dsum
 from ..registry import register
@@ -76,16 +76,14 @@ def q_orders_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     # part count). explode_outer + isNotNull per the
     # InferFiltersFromGenerate rule: plain explode over a computed array
     # evaluates the pair expansion twice per row.
-    # lazy localCheckpoint (the dist_ntile sharing device): three
-    # branches consume the basket relation (order count, per-part
-    # counts, pair expansion) — without the cut each would re-run the
-    # fact scan + collect_set shuffle (three full fact passes at scale;
-    # column pruning makes the subtrees structurally different, so
-    # ReuseExchange cannot dedup them).
-    baskets = (
-        li.groupBy(F.col("l_orderkey").alias("ok"))
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
-        .localCheckpoint(eager=False)
+    # cut: multi-consumer — order count, per-part counts and pair
+    # expansion would each re-run the fact scan + collect_set shuffle
+    # (column pruning makes the subtrees differ, so ReuseExchange cannot
+    # dedup them).
+    baskets = cut(
+        li.groupBy(F.col("l_orderkey").alias("ok")).agg(
+            F.sort_array(F.collect_set("l_partkey")).alias("parts")
+        )
     )
     n_orders = baskets.agg(F.count(F.lit(1)).alias("n_orders"))
     pc = baskets.select(F.explode("parts").alias("pk")).groupBy("pk").agg(
@@ -180,11 +178,10 @@ def q_events_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunked = ev.withColumn("chunk", F.date_trunc("day", "ts"))
     w = Window.partitionBy("user_id", "chunk").orderBy("ts", "event_id")
     wc = Window.partitionBy("user_id", "chunk")
-    # lazy localCheckpoint: the within-trigram branch and the edge-row
-    # branch both consume this windowed frame — without the cut each
-    # re-runs the scan + the (user_id, chunk) window shuffle (the column
-    # subsets differ per branch, so ReuseExchange cannot dedup them).
-    rows = chunked.select(
+    # cut: multi-consumer — the within-trigram branch and the edge-row
+    # branch would each re-run the scan + the (user_id, chunk) window
+    # shuffle (column subsets differ, so ReuseExchange cannot dedup them).
+    rows = cut(chunked.select(
         "user_id",
         "chunk",
         "event_type",
@@ -192,7 +189,7 @@ def q_events_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).over(wc).alias("cnt"),
         F.lag("event_type", 1).over(w).alias("p1"),
         F.lag("event_type", 2).over(w).alias("p2"),
-    ).localCheckpoint(eager=False)
+    ))
     within = rows.where(F.col("p2").isNotNull()).select(
         F.col("p2").alias("e1"),
         F.col("p1").alias("e2"),

@@ -54,7 +54,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import cut, table
 from ..functions.hashing import md5_long, sql_md5_long
 from ..functions.ranks import dist_group_prefix_sum_auto, dist_group_rank_auto
 from ..functions.stable import (
@@ -451,11 +451,8 @@ def q_events_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(_PSI_BINS - 1),
         ).alias("bin"),
     )
-    cnt = (
-        ev.groupBy("event_type", "cohort", "bin")
-        .agg(F.count(F.lit(1)).alias("nc"))
-        .localCheckpoint(eager=False)  # three consumers of a tiny relation
-    )
+    # cut: multi-consumer — totals, the bin spine and the join back
+    cnt = cut(ev.groupBy("event_type", "cohort", "bin").agg(F.count(F.lit(1)).alias("nc")))
     tot = cnt.groupBy("event_type").agg(
         F.sum(F.when(F.col("cohort") == 0, F.col("nc")).otherwise(0)).alias("m"),
         F.sum(F.when(F.col("cohort") == 1, F.col("nc")).otherwise(0)).alias("n"),

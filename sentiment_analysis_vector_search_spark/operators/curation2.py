@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import cut, table
 from ..functions.hashing import md5_long, sql_md5_long
 from ..functions.stable import dsum, sql_dec2double, sql_vardec
 from ..registry import register
@@ -411,15 +411,9 @@ def emb_outlier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         F.posexplode(F.col("embedding").cast("array<double>")).alias("pos", "val"),
     )
-    # Lazy lineage cut (r13): cent feeds BOTH the c2 aggregate and the
-    # broadcast scoring join — without it the centroid aggregation (a
-    # full pass over the exploded embedding relation) executed twice.
-    # The (label, pos) frame is |labels|×dim rows at any corpus size.
-    cent = (
-        v.groupBy("label", "pos")
-        .agg(davg(F.col("val")).alias("centroid"))
-        .localCheckpoint(eager=False)
-    )
+    # cut: multi-consumer — the c2 aggregate and the broadcast scoring
+    # join would each re-run the centroid pass over the exploded vectors
+    cent = cut(v.groupBy("label", "pos").agg(davg(F.col("val")).alias("centroid")))
     c2 = cent.groupBy("label").agg(
         dsum(F.col("centroid") * F.col("centroid")).alias("c2")
     )

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import corpus_cut, fan_out, table
+from ..catalog import cut, fan_out, table
 from ..functions.hashing import md5_int31, sql_md5_int31
 from ..functions.tfidf import BPE_RE as _BPE_RE
 from ..registry import register
@@ -666,15 +666,11 @@ def decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus signatures) and verified exactly on candidates only."""
     from .dedup import band_structs_expr, minhash_sig_exprs, shingle_sets
 
-    sh = shingle_sets(spark, sf_dir, materialize=True)
+    sh = shingle_sets(spark, sf_dir)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    # Lazy lineage cut (r13): without it the band self-join/probe
-    # branches each re-run the 16-aggregate signature groupBy over the
-    # corpus-sized shingle relation (final-plan audit: 0 ReusedExchange
-    # — a broadcast side defeats exchange reuse). Behind the cut the
-    # aggregation runs once. Doc-grain = corpus-grain at 100 TB, so the
-    # cut routes through corpus_cut (reliable-checkpoint escape hatch).
-    sigs = corpus_cut(sh.groupBy("doc_id").agg(*minhash_sig_exprs()))
+    # cut: multi-consumer — the eval and corpus band branches would each
+    # re-run the 16-aggregate signature groupBy
+    sigs = cut(sh.groupBy("doc_id").agg(*minhash_sig_exprs()))
     band_structs = band_structs_expr()
     bands = sigs.select("doc_id", F.explode(band_structs).alias("b")).select(
         "doc_id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
@@ -683,11 +679,10 @@ def decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         {"doc_id": "eval_id"}
     )
     cbands = bands.where(F.col("doc_id") >= _EVAL_DOCS)
-    cand = (
-        cbands.join(F.broadcast(ebands), ["band", "bh"])
-        .select("doc_id", "eval_id")
-        .distinct()
-        .localCheckpoint(eager=True)
+    # cut: multi-consumer — the candidate id semi-join and the verify join
+    cand = cut(
+        cbands.join(F.broadcast(ebands), ["band", "bh"]).select("doc_id", "eval_id").distinct(),
+        eager=True,
     )
     # shingles of candidate corpus docs + ALL eval shingles (eval is
     # broadcast-sized by definition)

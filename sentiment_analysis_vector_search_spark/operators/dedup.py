@@ -31,7 +31,7 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import corpus_cut, fan_out, table
+from ..catalog import cut, fan_out, table
 from ..functions.hashing import (
     MOD31,
     md5_int31,
@@ -100,22 +100,16 @@ toksets AS (
 """
 
 
-def shingle_sets(
-    spark: SparkSession, sf_dir: str, materialize: bool = False
-) -> DataFrame:
-    """Distinct (doc_id, sh) word-trigram shingles.
+def shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (doc_id, sh) word-trigram shingles, behind an eager cut.
 
-    ``materialize=True`` cuts the lineage with an eager localCheckpoint so
-    consumers that read the relation several times (minhash: signatures +
-    sizes + both sides of the verify join; jaccard: sizes + df-filter +
-    both sides of the candidate self-join) pay the scan→explode→distinct
-    shuffle ONCE instead of once per subtree — at corpus scale each
-    recomputation is a full extra corpus scan + shuffle (the r4 verdict's
-    top finding: 3 redundant passes made minhash 31% of the whole suite).
-    On a multi-node cluster the same role is played by persist(DISK) or a
-    reliable checkpoint; localCheckpoint is the single-JVM equivalent.
+    The cut lets consumers that read the relation several times (minhash:
+    signatures + sizes + both sides of the verify join; jaccard: sizes +
+    df-filter + both sides of the candidate self-join) pay the
+    scan→explode→distinct shuffle once instead of once per subtree — at
+    corpus scale each recomputation is a full extra corpus scan + shuffle.
     A pipeline running several shingle-based dedups back-to-back should
-    materialize once and pass the frame to each operator via their ``sh``
+    build the frame once and pass it to each operator via their ``sh``
     parameter.
     """
     # tokenize + trigram transform + explode is the expensive scan-stage
@@ -135,12 +129,8 @@ def shingle_sets(
             ).otherwise(F.expr("array()"))
         ).alias("sh"),
     )
-    df = df.distinct()
-    if materialize:
-        # corpus_cut: corpus-grain relation — reliable-checkpoint
-        # escape hatch via SPARK_GRAFT_RELIABLE_CK_DIR (r13 verdict #7)
-        df = corpus_cut(df, eager=True)
-    return df
+    # cut: multi-consumer — sizes, df filter and both join sides read it
+    return cut(df.distinct(), eager=True)
 
 
 def _sizes(sh: DataFrame) -> DataFrame:
@@ -178,7 +168,7 @@ def dedup_ngram_jaccard(
     # ``sh``: optionally a pre-materialized shingle_sets() frame so a
     # pipeline running jaccard AND minhash shares one materialization.
     if sh is None:
-        sh = shingle_sets(spark, sf_dir, materialize=True)
+        sh = shingle_sets(spark, sf_dir)
     sizes = _sizes(sh)
     freq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df")).where(
         F.col("df") <= _DF_CAP
@@ -314,26 +304,23 @@ def dedup_minhash_lsh(
     # ``sh``: optionally a pre-materialized shingle_sets() frame (shared
     # with dedup_ngram_jaccard when a pipeline runs both).
     if sh is None:
-        sh = shingle_sets(spark, sf_dir, materialize=True)
+        sh = shingle_sets(spark, sf_dir)
     sizes = _sizes(sh)
-    # Lazy lineage cut (r13): without it the band self-join/probe
-    # branches each re-run the 16-aggregate signature groupBy over the
-    # corpus-sized shingle relation (final-plan audit: 0 ReusedExchange
-    # — a broadcast side defeats exchange reuse). Behind the cut the
-    # aggregation runs once. Doc-grain, so corpus-grain at 100 TB —
-    # corpus_cut provides the reliable-checkpoint escape hatch. NOTE
-    # (r13 advice): the cut hides size stats from Catalyst, so the
-    # downstream band joins lose auto-broadcast candidacy — the scale
-    # assumption is that the band self-join SHOULD shuffle (doc-grain
-    # sides are never broadcastable at corpus scale).
-    sigs = corpus_cut(sh.groupBy("doc_id").agg(*minhash_sig_exprs()))
+    # cut: multi-consumer — both band self-join sides and the probe branch
+    # would each re-run the 16-aggregate signature groupBy (a broadcast
+    # side defeats exchange reuse). The cut hides size stats from
+    # Catalyst, so the band joins shuffle — intended: doc-grain sides are
+    # never broadcastable at corpus scale.
+    sigs = cut(sh.groupBy("doc_id").agg(*minhash_sig_exprs()))
     band_structs = band_structs_expr()
     bands = sigs.select("doc_id", F.explode(band_structs).alias("b")).select(
         "doc_id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
     )
     a = bands.alias("a")
     b = bands.alias("b")
-    cand = (
+    # cut: multi-consumer — the candidate relation feeds the id semi-join
+    # below AND the verify join; without it the band self-join runs twice.
+    cand = cut(
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -341,11 +328,8 @@ def dedup_minhash_lsh(
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-        # Materialized once: the candidate relation feeds the id semi-join
-        # below AND the verify join — without the cut the band self-join
-        # (itself fed by the signature groupBy) would run twice.
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True,
     )
     # Semi-join the shingle relation down to candidate docs BEFORE the
     # verify join: only docs that collided in some band can contribute a
@@ -473,16 +457,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig_terms = " + ".join(
         f"(CASE WHEN s{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(_SIM_BITS)
     )
-    # Lazy lineage cut on the doc-grain signature relation (r13): the
-    # final AQE plan showed BOTH self-join sides evaluating the whole
-    # scan→tokenize→60-sum pipeline (2 parquet scans, 0 ReusedExchange —
-    # the planner broadcast one side, which defeats the exchange-reuse
-    # the explicit repartition was counting on). Behind the cut the
-    # signature aggregation runs ONCE and both sides read the same RDD
-    # blocks. (Contrast emb_candidate_pairs, where the duplicated
-    # subtree is 2k cheap rows and the broadcast WINS — this one is a
-    # corpus-sized token aggregation.)
-    sig = corpus_cut(
+    # cut: multi-consumer — both self-join sides would each evaluate the
+    # scan→tokenize→60-sum pipeline (a broadcast side defeats exchange
+    # reuse). Contrast emb_candidate_pairs, where the duplicated subtree
+    # is 2k cheap rows and the broadcast wins.
+    sig = cut(
         sums.select("doc_id", F.expr(f"cast(({sig_terms}) as bigint) AS simhash"))
     )
     bands = (
@@ -868,19 +847,6 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return comp.withColumn("component_size", F.count(F.lit(1)).over(w))
 
 
-def _materialized(df: DataFrame) -> DataFrame:
-    """persist(MEMORY_AND_DISK) + force-compute, so every later reader
-    (including two union branches inside ONE job) hits cached blocks
-    instead of racing to recompute the expensive subtree.  Unlike an
-    eager ``localCheckpoint`` the blocks are released the moment the
-    caller ``unpersist``s — checkpoint RDD blocks stay pinned until
-    driver GC collects the handle, which is exactly the block-churn
-    source behind the r6 1-in-3 latency spike in dedup_components."""
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()
-    return df
-
-
 def _cc_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairs stay LAZY: _components_from_pairs reads them exactly once
     # (single-explode symmetrization, r8), so the expensive LSH subtree
@@ -892,7 +858,7 @@ def _cc_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Lineage-truncation cadence: persisted-but-not-checkpointed rounds keep a
-# logical plan that grows with iteration count; a localCheckpoint every k
+# logical plan that grows with iteration count; a cut every k
 # rounds bounds it (path halving converges in O(log diameter) rounds, so k=4
 # means at most ~1-2 checkpoints per run instead of one per round).
 _CC_CK_EVERY = 4
@@ -911,8 +877,8 @@ def _components_from_pairs(pairs: DataFrame) -> DataFrame:
     Iteration-state lifecycle (the r6-verdict spike fix): each round's
     label frame is persisted (MEMORY_AND_DISK) and the PREVIOUS round's
     blocks are released explicitly the moment the new round is
-    materialized, instead of an eager localCheckpoint per round whose
-    blocks linger until driver GC. localCheckpoint is kept only every
+    materialized, instead of an eager cut per round whose blocks linger
+    until garbage collection. A cut is kept only every
     ``_CC_CK_EVERY`` rounds, purely for lineage truncation (on a real
     cluster: a reliable checkpoint at the same cadence).
     """
@@ -969,7 +935,9 @@ def _components_from_pairs(pairs: DataFrame) -> DataFrame:
         comp, releasable = _cc_rounds(edges_sl, comp, prev_sum, releasable, _sum)
     finally:
         spark.conf.set(_AQE, aqe_prev)
-    final = comp if releasable is None else comp.localCheckpoint(eager=True)
+    # cut: loop lineage — the converged labels leave with a bounded plan,
+    # so the persisted round frames below can be released.
+    final = comp if releasable is None else cut(comp, eager=True)
     if releasable is not None:
         releasable.unpersist(blocking=False)
     edges_sl.unpersist(blocking=False)
@@ -1011,7 +979,7 @@ def _cc_rounds(edges_sl, comp, prev_sum, releasable, _sum):
             F.least(F.col("component"), F.col("mcomp")).alias("component"),
         )
         if (i + 1) % _CC_CK_EVERY == 0:
-            new_comp = jumped.localCheckpoint(eager=True)
+            new_comp = cut(jumped, eager=True)  # cut: loop lineage
             new_releasable = None
         else:
             new_comp = jumped.persist(StorageLevel.MEMORY_AND_DISK)
@@ -1173,16 +1141,18 @@ GROUP BY 1
 
 @register("dedup_minhash_quality_audit", oracle=_MH_AUDIT_ORACLE)
 def dedup_minhash_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = shingle_sets(spark, sf_dir, materialize=True)
+    sh = shingle_sets(spark, sf_dir)
     sizes = _sizes(sh)
-    sigs = sh.groupBy("doc_id").agg(*minhash_sig_exprs()).localCheckpoint(eager=True)  # feeds bands AND both estimate join sides
+    # cut: multi-consumer — feeds bands AND both estimate join sides
+    sigs = cut(sh.groupBy("doc_id").agg(*minhash_sig_exprs()), eager=True)
     band_structs = band_structs_expr()
     bands = sigs.select("doc_id", F.explode_outer(band_structs).alias("b")).select(
         "doc_id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
     )
     a = bands.alias("a")
     b = bands.alias("b")
-    cand = (
+    # cut: multi-consumer — feeds the id semi-join AND the exact join
+    cand = cut(
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -1190,8 +1160,8 @@ def dedup_minhash_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True,
     )
     cand_ids = (
         cand.select(F.col("doc_a").alias("doc_id"))

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import corpus_cut, fan_out, table
+from ..catalog import cut, fan_out, table
 from ..functions.hashing import sql_md5_long
 from ..registry import register
 
@@ -104,13 +104,13 @@ def dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wcnt = Window.partitionBy("doc_id")
     wmin = Window.partitionBy("doc_id").orderBy("p").rowsBetween(0, _W - 1)
-    fps = (
+    # cut: multi-consumer — the cap filter and the pair join
+    fps = cut(
         grams.withColumn("ng", F.count(F.lit(1)).over(wcnt))
         .withColumn("fp", F.min("g").over(wmin))
         .where(F.col("p") <= F.col("ng") - _W)
         .select("doc_id", "fp")
         .distinct()
-        .localCheckpoint(eager=False)  # two consumers: cap filter + pair join
     )
     kept = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("nd")).where(
         F.col("nd") <= _CAP
@@ -188,13 +188,12 @@ def dedup_containment(
     from .dedup import _DF_CAP, shingle_sets
 
     if sh is None:
-        sh = shingle_sets(spark, sf_dir, materialize=True)
+        sh = shingle_sets(spark, sf_dir)
     freq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df")).where(
         F.col("df") <= _DF_CAP
     )
-    # corpus-grain cut (shingle rows scale with the corpus): corpus_cut
-    # adds the SPARK_GRAFT_RELIABLE_CK_DIR reliable-checkpoint hatch
-    filtered = corpus_cut(sh.join(freq.select("sh"), "sh"))
+    # cut: multi-consumer — the size aggregate and both self-join sides
+    filtered = cut(sh.join(freq.select("sh"), "sh"))
     fsz = filtered.groupBy("doc_id").agg(F.count(F.lit(1)).alias("fsz"))
     a = filtered.alias("a")
     b = filtered.alias("b")

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import cut
 from .dedup import (
     _JACCARD_T,
     band_structs_expr,
@@ -73,7 +74,7 @@ def _band_rows(sh: DataFrame) -> DataFrame:
 
 
 def _write(sh: DataFrame, index_dir: str, mode: str) -> None:
-    sh = sh.localCheckpoint(eager=True)  # one shingle derivation, 3 consumers
+    sh = cut(sh, eager=True)  # cut: multi-consumer — shingles, sizes, bands
     sh.write.mode(mode).parquet(f"{index_dir}/shingles")
     (
         sh.groupBy("doc_id")
@@ -126,15 +127,16 @@ def dedup_index_check(
     ``broadcast_max_bytes`` estimated bytes (exact batch shingle-row
     count x dtype row width; default ``stats.DEFAULT_BROADCAST_MAX_BYTES``)
     the probe falls back to keyed shuffle joins on the same equi keys.
-    The count is already on the driver for free: the batch is
-    localCheckpointed for the multi-branch probe, so count() reads
+    The count costs no extra pass: the batch is cut for
+    the multi-branch probe, so count() reads
     materialized block sizes. The chooser's 'salted' branch cannot
     trigger here — the probe key is a banded bucket hash whose occupancy
     dedup_index_stats audits (ndv ~ rows on the batch side).
     """
     from .. import stats as _stats
 
-    new_sh = _doc_shingles(docs).localCheckpoint(eager=True)
+    # cut: multi-consumer — the count, bands, shared join and sizes
+    new_sh = cut(_doc_shingles(docs), eager=True)
     n_rows = new_sh.count()
     # exact driver-side count in the chooser's stats shape
     batch_stats = {
@@ -164,15 +166,16 @@ def dedup_index_check(
     hint = F.broadcast if small else (lambda df: df)
     new_bands = _band_rows(new_sh)
     idx_bands = spark.read.parquet(f"{index_dir}/bands")
-    cand = (
+    # cut: multi-consumer — the index shingle semi-join and the shared join
+    cand = cut(
         idx_bands.join(
             hint(new_bands.withColumnsRenamed({"doc_id": "new_id", "bh": "bh"})),
             ["band", "bh"],
         )
         .select(F.col("doc_id").alias("idx_id"), "new_id")
         .where(F.col("idx_id") != F.col("new_id"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True,
     )
     idx_sh = spark.read.parquet(f"{index_dir}/shingles").join(
         hint(cand.select(F.col("idx_id").alias("doc_id")).distinct()),

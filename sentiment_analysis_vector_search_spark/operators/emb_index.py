@@ -33,6 +33,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import cut
 from ..sinks import spread_repartition
 from .dedup import _EMB_BAND_BITS, _EMB_BANDS, _EMB_T, emb_signatures
 
@@ -111,7 +112,8 @@ def emb_index_check(
     from .. import stats as _stats
 
     _check_width(index_dir)
-    new_bands = _sig_bands(vectors).localCheckpoint(eager=True)
+    # cut: multi-consumer — the count, the probe and the verify vectors
+    new_bands = cut(_sig_bands(vectors), eager=True)
     n_rows = new_bands.count()
     batch_stats = {
         "b": {
@@ -135,7 +137,8 @@ def emb_index_check(
     )
     hint = F.broadcast if small else (lambda df: df)
     idx_bands = spark.read.parquet(f"{index_dir}/bands")
-    cand = (
+    # cut: multi-consumer — the index vector semi-join and the verify join
+    cand = cut(
         idx_bands.join(
             hint(
                 new_bands.select(
@@ -148,8 +151,8 @@ def emb_index_check(
         )
         .select(F.col("vec_id").alias("idx_id"), "new_id")
         .where(F.col("idx_id") != F.col("new_id"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True,
     )
     idx_vecs = spark.read.parquet(f"{index_dir}/vectors").join(
         hint(cand.select(F.col("idx_id").alias("vec_id")).distinct()),

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
-from ..catalog import table
+from ..catalog import cut, table
 from ..functions.graph import pagerank, sql_pagerank_ctes
 from ..functions.stable import sql_dec2double, sql_vardec
 from ..registry import register
@@ -84,6 +84,8 @@ def q_nation_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     sn = nation.select(F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("src"))
     cn = nation.select(F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("dst"))
     vol = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(30,10)")
+    # No cut here: both consumers (outm and the edge join) sit inside
+    # pagerank's edge cut, where exchange reuse runs the fact join once.
     rev = (
         li.join(sup, li.l_suppkey == sup.s_suppkey)
         .join(broadcast(sn), F.col("s_nationkey") == F.col("sn_key"))
@@ -92,8 +94,6 @@ def q_nation_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
         .groupBy("src", "dst")
         .agg(F.sum(vol).alias("rev_dec"))
-        .localCheckpoint(eager=False)  # two consumers (outm + edges) of the
-        # #nations²-bounded aggregate: the fact join must execute once
     )
     outm = rev.groupBy("src").agg(F.sum("rev_dec").alias("out_dec"))
     edges = rev.join(outm, "src").select(
@@ -192,12 +192,11 @@ def q_nation_trade_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
     )
     m = e0.agg(F.avg("n").alias("an"))
-    # edge relation: 3 consumers in the triangle join — materialize once
-    e = (
+    # cut: multi-consumer — 3 consumers in the triangle join
+    e = cut(
         e0.crossJoin(broadcast(m))
         .where(F.col("n") >= F.lit(_TRI_FACTOR) * F.col("an"))
         .select("lo", "hi")
-        .localCheckpoint(eager=False)
     )
     ab = e.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
     bc = e.select(F.col("lo").alias("b"), F.col("hi").alias("c"))

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..catalog import cut
 from ..functions.stable import dsum
 from .similarity import _TOP_K, _TRAINED_NPROBE, _trained_assignments, _trained_codebook, _vectors
 from .similarity2 import _PQ_RERANK, _dot, _exact_rerank, _pq_codebook, _pq_encode, _pq_lut
@@ -71,13 +72,14 @@ def _probe_cells(
     q = queries.select("query_id", "qv", F.sqrt(_dot("qv", "qv")).alias("qnrm"))
     qsim = _dot("qv", "c") / (F.col("qnrm") * F.col("cn"))
     wq = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("label"))
-    return (
+    # cut: multi-consumer — the collected cell list, the LUT and the pair join
+    return cut(
         q.crossJoin(F.broadcast(coarse))
         .withColumn("sim", qsim)
         .withColumn("rk", F.row_number().over(wq))
         .where(F.col("rk") <= nprobe)
-        .select("query_id", "qv", "qnrm", F.col("label").alias("cell"))
-        .localCheckpoint(eager=True)
+        .select("query_id", "qv", "qnrm", F.col("label").alias("cell")),
+        eager=True,
     )
 
 
@@ -336,20 +338,21 @@ def ivfpq_codebook_refresh(
     vecs = _norm_vectors(vectors)
     codes = spark.read.parquet(f"{index_dir}/codes")
     # one Lloyd step per layer over the current assignment/encoding
-    coarse_new = (
-        _coarse_cell_means(codes, vecs)
-        .select(
+    # cut: multi-consumer — write + re-assign
+    coarse_new = cut(
+        _coarse_cell_means(codes, vecs).select(
             F.col("cell").alias("label"),
             F.col("m").alias("c"),
             F.col("mnrm").alias("cn"),
-        )
-        .localCheckpoint(eager=True)  # consumers: write + re-assign
+        ),
+        eager=True,
     )
-    pq_cb_new = (
+    # cut: multi-consumer — write + re-encode
+    pq_cb_new = cut(
         _pq_cell_stats(codes, vecs)
         .select(F.col("code").alias("label"), "s", F.col("m").alias("sc"))
-        .withColumn("sc2", _dot("sc", "sc"))
-        .localCheckpoint(eager=True)  # consumers: write + re-encode
+        .withColumn("sc2", _dot("sc", "sc")),
+        eager=True,
     )
     sim = _dot("v", "c") / (F.col("nrm") * F.col("cn"))
     wv = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("label"))
@@ -421,12 +424,13 @@ def ivfpq_refinement_audit(
     coarse = spark.read.parquet(f"{index_dir}/coarse_codebook")
     qsim = _dot("qv", "c") / (F.col("qnrm") * F.col("cn"))
     wq = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("label"))
-    qprobe_rk = (
+    # cut: multi-consumer — the collected cell list, the LUT and the pair join
+    qprobe_rk = cut(
         qprobe.join(F.broadcast(coarse), qprobe["cell"] == coarse["label"])
         .withColumn("sim", qsim)
         .withColumn("probe_rk", F.row_number().over(wq))
-        .select("query_id", "qv", "qnrm", "cell", "probe_rk")
-        .localCheckpoint(eager=True)
+        .select("query_id", "qv", "qnrm", "cell", "probe_rk"),
+        eager=True,
     )
     cells = sorted({r["cell"] for r in qprobe_rk.select("cell").distinct().collect()})
     enc = spark.read.parquet(f"{index_dir}/codes").where(F.col("cell").isin(cells))
@@ -443,7 +447,8 @@ def ivfpq_refinement_audit(
     pairs = enc.join(
         F.broadcast(qprobe_rk.select("query_id", "cell", "probe_rk")), "cell"
     ).where(pairs_filter)
-    adc = (
+    # cut: multi-consumer — one scoring pass read by every grid point
+    adc = cut(
         pairs.join(
             F.broadcast(lut),
             (pairs["s"] == F.col("ls"))
@@ -460,8 +465,8 @@ def ivfpq_refinement_audit(
         .withColumn(
             "adc_cosine", F.round(F.col("adc_sum") / (F.col("qnrm") * F.col("nrm")), 6)
         )
-        .select("query_id", "vec_id", "adc_cosine", "probe_rk")
-        .localCheckpoint(eager=True)  # one scoring pass, grid-many cuts
+        .select("query_id", "vec_id", "adc_cosine", "probe_rk"),
+        eager=True,
     )
     vecs = _norm_vectors(vectors)
     q = queries.select("query_id", "qv", F.sqrt(_dot("qv", "qv")).alias("qnrm"))
@@ -469,14 +474,15 @@ def ivfpq_refinement_audit(
     bq = q.select("query_id", F.col("qv").alias("bqv"), F.col("qnrm").alias("bqnrm"))
     bcos = F.round(_dot("v", "bqv") / (F.col("bqnrm") * F.col("nrm")), 6)
     wb = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    brute = (
+    # cut: multi-consumer — every grid point's recall join
+    brute = cut(
         vecs.crossJoin(F.broadcast(bq))
         .where(pairs_filter)
         .withColumn("cosine", bcos)
         .withColumn("rk", F.row_number().over(wb))
         .where(F.col("rk") <= k)
-        .select("query_id", "vec_id")
-        .localCheckpoint(eager=True)
+        .select("query_id", "vec_id"),
+        eager=True,
     )
     n_queries = q.count()
     denom = float(n_queries * k)
@@ -488,9 +494,11 @@ def ivfpq_refinement_audit(
         wa = Window.partitionBy("query_id").orderBy(
             F.desc("adc_cosine"), F.asc("vec_id")
         )
-        ranked = cand.withColumn("srk", F.row_number().over(wa)).where(
-            F.col("srk") <= max(rerank_ns)
-        ).localCheckpoint(eager=True)
+        # cut: multi-consumer — one shortlist per rerank depth
+        ranked = cut(
+            cand.withColumn("srk", F.row_number().over(wa)).where(F.col("srk") <= max(rerank_ns)),
+            eager=True,
+        )
         for n in sorted(rerank_ns):
             shortlist = ranked.where(F.col("srk") <= n).select(
                 "query_id", "vec_id"

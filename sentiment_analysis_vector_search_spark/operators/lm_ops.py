@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import fan_out, table
+from ..catalog import cut, fan_out, table
 from ..functions.hashing import MOD31, md5_long, sql_md5_long
 from ..functions.stable import (
     dsum,
@@ -107,7 +107,7 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document mean bigram log-probability under the corpus's own
     add-one-smoothed bigram LM, plus the CCNet-style keep band.
 
-    Scale shape: the corpus is tokenized ONCE (lazy localCheckpoint, two
+    Scale shape: the corpus is tokenized ONCE (lazy cut, two
     consumers); unigram and bigram count relations are vocabulary-grain
     (Heaps-bounded — sub-linear in corpus size) so at 100 TB they are
     far smaller than the fact side, but NOT broadcast-safe (word vocab
@@ -118,16 +118,19 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns, raw per row (rule 33), then decimal-summed — bit-identical
     on both engines at any partitioning."""
     docs = fan_out(spark, table(spark, sf_dir, "documents"))
-    toks = docs.select(
-        "doc_id",
-        F.expr(r"filter(split(lower(text), '\\s+'), w -> w <> '')").alias("t"),
-    ).localCheckpoint(eager=False)  # two consumers: unigram counts + bigrams
-    uc = (
+    # cut: multi-consumer — unigram counts + bigrams
+    toks = cut(
+        docs.select(
+            "doc_id",
+            F.expr(r"filter(split(lower(text), '\\s+'), w -> w <> '')").alias("t"),
+        )
+    )
+    # cut: multi-consumer — vsize + scoring join
+    uc = cut(
         toks.select(F.explode_outer("t").alias("w"))
         .where(F.col("w").isNotNull())
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)  # two consumers: vsize + scoring join
     )
     vsize = uc.agg(F.count(F.lit(1)).alias("v"))
     pair_expr = (
@@ -239,7 +242,8 @@ def corpus_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form arithmetic is ordered identically on both engines — raw
     doubles out, no final round."""
     docs = fan_out(spark, table(spark, sf_dir, "documents"))
-    uc = (
+    # cut: multi-consumer — type count + top-N
+    uc = cut(
         docs.select(
             F.explode_outer(
                 F.expr(r"filter(split(lower(text), '\\s+'), w -> w <> '')")
@@ -248,7 +252,6 @@ def corpus_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("w").isNotNull())
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)  # two consumers: type count + top-N
     )
     nt = uc.agg(F.count(F.lit(1)).alias("n_types"))
     top = uc.orderBy(F.desc("c"), F.asc("w")).limit(_ZF_N)

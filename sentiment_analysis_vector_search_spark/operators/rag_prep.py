@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import fan_out, table
+from ..catalog import cut, fan_out, table
 from ..functions.hashing import md5_long, sql_md5_long
 from ..registry import register
 
@@ -298,7 +298,7 @@ def rag_chunk_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and vector rankings — this operator is that fusion expressed with the
 # repo's two existing retrieval signals.
 #
-# Scale shape: the TF-IDF relation is computed once (lazy localCheckpoint
+# Scale shape: the TF-IDF relation is computed once (lazy cut
 # — three consumers would otherwise each replay its shuffles); the seed
 # vector is one document's ≤MAX_FEATURES rows, broadcast into a
 # posting-list equi-join on word (fan-out per word = that word's df —
@@ -356,7 +356,7 @@ def rag_hybrid_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.stable import dsum
     from .text_ops import tfidf_vectors
 
-    tfidf = tfidf_vectors(spark, sf_dir).localCheckpoint(eager=False)
+    tfidf = cut(tfidf_vectors(spark, sf_dir))  # cut: multi-consumer — both legs and the seed
 
     # leg A: keyword TF-IDF score over the fixed query-word set
     kw = (

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import fan_out, table
+from ..catalog import cut, fan_out, table
 from ..registry import register
 from .rag_prep import _chunks, _DOT, _N_CHUNKS_SQL, _spark_emb, _sql_emb
 
@@ -107,12 +107,12 @@ def rag_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     emb = chunks.select("doc_id", "chunk_id", _spark_emb(F.col("key")).alias("e"))
     q = spark.range(1).select(_spark_emb(F.lit("0:0")).alias("qe"))
-    pool = (
+    # cut: multi-consumer — 3 consumers; the corpus is scanned once
+    pool = cut(
         emb.join(F.broadcast(q))
         .select("doc_id", "chunk_id", "e", _cos_expr("e", "qe").alias("rel"))
         .orderBy(F.col("rel").desc(), "doc_id", "chunk_id")
         .limit(_POOL)
-        .localCheckpoint(eager=False)  # 3 consumers; corpus scanned once
     )
     s1 = _pick(pool, "rel")
     p1 = F.broadcast(

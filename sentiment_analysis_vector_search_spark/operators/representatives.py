@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..catalog import cut
 from ..functions.stable import DEC, sql_dec2double, sql_vardec
 from ..registry import register
 
@@ -225,11 +226,7 @@ def _kmeans_assignments_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text_ops import tfidf_vectors
 
     cls = classified(spark, sf_dir).select("doc_id", "sentiment")
-    # Materialize the class-annotated sparse vectors once: every Lloyd
-    # round re-joins this relation (assignment + centroid update), and the
-    # final scoring reads it twice more. On a cluster: persist(DISK) or a
-    # reliable checkpoint instead.
-    # LAZY checkpoints throughout the fit (r9 verdict #6): the fit is
+    # LAZY cuts throughout the fit: the fit is
     # fixed-overhead-bound at bench SF (~0.15 s/job x ~90 AQE stage-jobs,
     # measured), not data-bound, so the lever is fusing materialization
     # jobs into their first consumer — eager ckpts each paid a dedicated
@@ -253,13 +250,15 @@ def _kmeans_assignments_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gain. On a real cluster both components amortize: stage launch
     # overlaps across executors and the decimal CPU is embarrassingly
     # data-parallel. Stop optimizing here absent a new idea.
-    vec = (
+    # cut: multi-consumer — every Lloyd round's assignment and update
+    # joins, and the final scoring twice more
+    vec = cut(
         tfidf_vectors(spark, sf_dir)
         .join(cls, "doc_id")
         .select("sentiment", "doc_id", "word", "tfidf")
-        .localCheckpoint(eager=False)
     )
-    docs_d = vec.select("sentiment", "doc_id").distinct().localCheckpoint(eager=False)
+    # cut: multi-consumer — the seeds and every round's assignment
+    docs_d = cut(vec.select("sentiment", "doc_id").distinct())
     dnorm = vec.groupBy("doc_id").agg(
         F.sqrt(_dsum(F.col("tfidf") * F.col("tfidf"))).alias("dn")
     )
@@ -276,7 +275,7 @@ def _kmeans_assignments_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Per-cluster norm rides ON the centroid relation (window over the
     # <=30-cluster grain) instead of a separate groupBy + broadcast join
-    # per round: the norm is materialized by the same localCheckpoint
+    # per round: the norm is materialized by the same cut
     # that materializes the centroid, removing one broadcast exchange
     # and one join from every Lloyd round (r9 verdict #6 — the fit's
     # cost is driver job overhead, so jobs are what gets cut). Same
@@ -310,7 +309,7 @@ def _kmeans_assignments_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_doc = Window.partitionBy("sentiment", "doc_id").orderBy(
         F.desc(F.col("dot") / F.col("cn")), F.asc("cluster_id")
     )
-    cent = _with_cn(cent0).localCheckpoint(eager=False)
+    cent = cut(_with_cn(cent0))  # cut: loop lineage — the round-0 centroids
     for _ in range(_N_ITERS):
         best = (
             _dots(cent)
@@ -318,18 +317,14 @@ def _kmeans_assignments_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("rk") == 1)
             .select("sentiment", "doc_id", "cluster_id")
         )
-        # checkpoint the ASSIGNMENT too: both consumers below (the
-        # member-count broadcast and the centroid update) read it — an
-        # unmaterialized assign re-ran the whole dots+rank subplan
-        # twice per round (the r9 fit's hidden 2x).
-        assign = (
-            docs_d.join(best, ["sentiment", "doc_id"], "left")
-            .select(
+        # cut: multi-consumer — the member-count broadcast and the
+        # centroid update; uncut, the dots+rank subplan ran twice a round
+        assign = cut(
+            docs_d.join(best, ["sentiment", "doc_id"], "left").select(
                 "sentiment",
                 "doc_id",
                 F.coalesce(F.col("cluster_id"), F.lit(0)).alias("cluster_id"),
             )
-            .localCheckpoint(eager=False)
         )
         m = assign.groupBy("sentiment", "cluster_id").agg(
             F.count(F.lit(1)).alias("n")
@@ -340,9 +335,9 @@ def _kmeans_assignments_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("sentiment", "cluster_id", "word")
             .agg(F.round(_dsum(F.col("tfidf")) / F.min("n"), 6).alias("cw"))
         )
-        # one checkpoint per round truncates the lineage and lets the
-        # next round's broadcast read a materialized (tiny) relation.
-        cent = _with_cn(upd).localCheckpoint(eager=False)
+        # cut: loop lineage — one per round; the next round's broadcast
+        # reads a materialized (tiny) relation
+        cent = cut(_with_cn(upd))
 
     scored = (
         _dots(cent)
@@ -413,10 +408,10 @@ def representatives_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "centroid_cosine",
             )
         )
-        # ~3·k rows; materialize so (a) the conf restore below can't change
-        # the plan, (b) the invariants query and repeat calls reuse it
-        # without re-running the Lloyd rounds.
-        out = out.localCheckpoint(eager=True)
+        # cut: outlives its source — ~3·k rows memoized in _REPS_CACHE, so
+        # the conf restore below can't change the plan and repeat calls
+        # do not re-run the Lloyd rounds
+        out = cut(out, eager=True)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     _REPS_CACHE[key] = out

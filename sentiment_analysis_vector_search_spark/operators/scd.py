@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import cut, table
 from ..registry import register
 
 _SCD2_CTE = """
@@ -102,7 +102,10 @@ def scd2_from_events(ev: DataFrame) -> DataFrame:
     )
     # first event of a chunk compares against the previous chunk's last
     # state (day-grain join: rows = active days per user)
-    changes = (
+    # cut: multi-consumer — both phase-B branches (interval closing and
+    # chunk first-change bounds) would each re-run the whole phase-A
+    # pipeline; the change relation is state-transition grain.
+    changes = cut(
         local.join(prev_day_last, ["user_id", "chunk"])
         .select(
             "user_id",
@@ -116,13 +119,6 @@ def scd2_from_events(ev: DataFrame) -> DataFrame:
             F.col("prev_state").isNull()
             | (F.col("prev_state") != F.col("state"))
         )
-        # Lazy lineage cut (r13): changes feeds BOTH phase-B branches
-        # (interval closing + chunk first-change bounds) — without it the
-        # final plan re-ran the whole phase-A pipeline (two more events
-        # scans + the per-chunk lag window + the day-grain join) once per
-        # branch. The change relation is state-transition grain — far
-        # smaller than the event log at any scale.
-        .localCheckpoint(eager=False)
     )
 
     # --- phase B: interval closing, at change grain, chunk-split ---

@@ -26,7 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import cut, table
 from ..functions.stable import DEC
 from ..functions.vectors import hyperplanes, sql_plane_dot
 from ..registry import register
@@ -794,13 +794,14 @@ def ann_ivf_index_query(
         "aggregate(zip_with(qv, c, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
     ) / (F.col("qnrm") * F.col("cn"))
     wq = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("label"))
-    qprobe = (
+    # cut: multi-consumer — the collected cell list and the candidate join
+    qprobe = cut(
         q.crossJoin(F.broadcast(cents_n))
         .withColumn("sim", qsim)
         .withColumn("rk", F.row_number().over(wq))
         .where(F.col("rk") <= nprobe)
-        .select("query_id", "qv", "qnrm", F.col("label").alias("cell"))
-        .localCheckpoint(eager=True)
+        .select("query_id", "qv", "qnrm", F.col("label").alias("cell")),
+        eager=True,
     )
     cells = sorted({r.cell for r in qprobe.select("cell").distinct().collect()})
     assigned = spark.read.parquet(f"{index_dir}/assignments").where(
@@ -1043,7 +1044,8 @@ def ivf_codebook_refresh(
     asg = spark.read.parquet(f"{index_dir}/assignments")
     # one Lloyd step: cell -> mean of its current members (davg: the
     # _trained_codebook arithmetic, so centroids stay engine-stable)
-    cents_new = (
+    # cut: multi-consumer — write + re-assign
+    cents_new = cut(
         asg.select("cell", F.posexplode("v").alias("pos", "val"))
         .groupBy("cell", "pos")
         .agg(davg(F.col("val")).alias("cv"))
@@ -1062,8 +1064,8 @@ def ivf_codebook_refresh(
                     "aggregate(zip_with(c, c, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
                 )
             ).alias("cn"),
-        )
-        .localCheckpoint(eager=True)  # two consumers: write + re-assign
+        ),
+        eager=True,
     )
     sim = F.expr(
         "aggregate(zip_with(v, c, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"

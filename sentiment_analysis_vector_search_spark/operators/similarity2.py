@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import cut, table
 from ..functions.stable import davg, dsum, sql_davg, sql_dsum
 from ..registry import register
 from .similarity import _N_QUERIES, _TOP_K, _SQL_VECS_CTE, _vectors
@@ -277,11 +277,9 @@ def _exact_rerank(
 def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ/ADC shortlist + exact rerank top-k. Returns
     (query_id, vec_id, cosine, rk) with exact cosines."""
-    # Lazy lineage cut (r13): cb feeds BOTH the encode and the LUT —
-    # without it the final plan ran the codebook derivation (posexplode
-    # + two aggregations over embeddings) TWICE (6 embeddings scans, 10
-    # HashAggregates). The codebook is k x M rows at any corpus size.
-    cb = _pq_codebook(spark, sf_dir).localCheckpoint(eager=False)
+    # cut: multi-consumer — the encode and the LUT would each re-run the
+    # codebook derivation (posexplode + two aggregations over embeddings)
+    cb = cut(_pq_codebook(spark, sf_dir))
     vecs = _vectors(spark, sf_dir)
     enc = _pq_encode(vecs, cb)
     queries = vecs.where(F.col("vec_id") < _N_QUERIES).select(
@@ -465,7 +463,8 @@ def pq_index_drift(
     codes = spark.read.parquet(f"{index_dir}/codes")
     stats = _pq_cell_stats(codes, _norm_vectors(vectors))
     mnrm = F.sqrt(_dot("m", "m"))
-    cells = (
+    # cut: multi-consumer — the two tiny aggregates below
+    cells = cut(
         stats.join(
             F.broadcast(cb), (stats["s"] == cb["s"]) & (stats["code"] == cb["label"])
         )
@@ -482,8 +481,8 @@ def pq_index_drift(
             (
                 F.col("msv2") - F.lit(2.0) * _dot("m", "sc") + F.col("sc2")
             ).alias("residual"),
-        )
-        .localCheckpoint(eager=True)  # two tiny consumers below
+        ),
+        eager=True,
     )
     d = cells.agg(
         F.max("drift").alias("max_drift"),
@@ -543,11 +542,12 @@ def pq_codebook_refresh(
     codes = spark.read.parquet(f"{index_dir}/codes")
     # one Lloyd step: new sub-centroid = member-mean subvector of the
     # CURRENT encoding (the same decimal-stable arithmetic as training)
-    cb_new = (
+    # cut: multi-consumer — write + re-encode
+    cb_new = cut(
         _pq_cell_stats(codes, vecs)
         .select(F.col("code").alias("label"), "s", F.col("m").alias("sc"))
-        .withColumn("sc2", _dot("sc", "sc"))
-        .localCheckpoint(eager=True)  # two consumers: write + re-encode
+        .withColumn("sc2", _dot("sc", "sc")),
+        eager=True,
     )
     cb_dir_new = _os.path.join(index_dir, "codebook__new")
     codes_dir_new = _os.path.join(index_dir, "codes__new")
@@ -619,16 +619,18 @@ def pq_refinement_audit(
     wa = Window.partitionBy("query_id").orderBy(
         F.desc("adc_cosine"), F.asc("vec_id")
     )
-    ranked = (
+    # cut: multi-consumer — one shortlist per rerank depth
+    ranked = cut(
         adc.withColumn("srk", F.row_number().over(wa))
         .where(F.col("srk") <= max_n)
-        .select("query_id", "vec_id", "srk")
-        .localCheckpoint(eager=True)  # len(rerank_ns) consumers below
+        .select("query_id", "vec_id", "srk"),
+        eager=True,
     )
-    brute = (
+    # cut: multi-consumer — every rerank depth's recall join
+    brute = cut(
         ann_bruteforce_topk(spark, sf_dir)
-        .select("query_id", "vec_id")
-        .localCheckpoint(eager=True)
+        .select("query_id", "vec_id"),
+        eager=True,
     )
     n_queries = queries.count()
     denom = float(n_queries * k)

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import table
+from ..catalog import cut, table
 from ..functions.hashing import md5_long, sql_md5_long
 from ..registry import register
 
@@ -430,9 +430,9 @@ def q_events_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events").where(
         F.col("event_type").isin(_SO_A, _SO_B)
     )
-    # distinct at (tag, user, day) grain; 3 consumers (exact a/b counts,
-    # exact intersect) — materialize once (SCALING.md #6)
-    elems = (
+    # cut: multi-consumer — exact a/b counts and the exact intersect
+    # (SCALING.md #6)
+    elems = cut(
         ev.select(
             F.col("event_type").alias("tag"),
             "user_id",
@@ -440,9 +440,7 @@ def q_events_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.date_trunc("day", "ts").cast("date"),
                 F.to_date(F.lit("1970-01-01")),
             ).alias("dayno"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
+        ).distinct()
     )
     hashed = elems.withColumn(
         "u",
@@ -466,12 +464,11 @@ def q_events_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     w2 = Window.partitionBy("tag").orderBy(
         F.asc("u"), F.asc("user_id"), F.asc("dayno")
     )
-    # <= 2k retained rows feed 3 consumers — materialize once
-    sk = (
+    # cut: multi-consumer — <= 2k retained rows feed 3 consumers
+    sk = cut(
         cand.withColumn("rk", F.row_number().over(w2))
         .where(F.col("rk") <= _SO_K)
         .select("tag", "user_id", "dayno", "u")
-        .localCheckpoint(eager=False)
     )
     est = F.when(
         F.col("n_seen") < _SO_K, F.col("n_seen").cast("double")
@@ -676,9 +673,8 @@ def q_value_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     w_n = Window.partitionBy("event_type")
-    c = b.withColumn("cum", F.sum("cnt").over(w_cum)).withColumn(
-        "n", F.sum("cnt").over(w_n)
-    ).localCheckpoint(eager=False)  # two consumers: sel + the fetch joins
+    # cut: multi-consumer — sel + the fetch joins
+    c = cut(b.withColumn("cum", F.sum("cnt").over(w_cum)).withColumn("n", F.sum("cnt").over(w_n)))
     sel_aggs = [
         F.min(
             F.when(
@@ -861,10 +857,11 @@ def q_doclen_hist_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("bin")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    c = (
-        b.withColumn("cum", F.sum("cnt").over(w_cum))
-        .withColumn("n", F.sum("cnt").over(Window.partitionBy("source")))
-        .localCheckpoint(eager=False)  # two consumers: sel + fetch joins
+    # cut: multi-consumer — sel + the fetch joins
+    c = cut(
+        b.withColumn("cum", F.sum("cnt").over(w_cum)).withColumn(
+            "n", F.sum("cnt").over(Window.partitionBy("source"))
+        )
     )
     sel_aggs = [
         F.min(

@@ -44,7 +44,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import cut, table
 from ..functions import sentiment as S
 from ..functions.stable import dsum, sql_dsum, sql_stable_ln, with_stable_ln
 from ..registry import register
@@ -205,8 +205,8 @@ def _corpus_stats(dl: DataFrame) -> DataFrame:
 @register("bm25_retrieve", oracle=_BM25_ORACLE)
 def bm25_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    # three consumers (dl, dfs, query postings) — one tf derivation
-    tf = _tf_rows(docs).localCheckpoint(eager=False)
+    # cut: multi-consumer — dl, dfs and the query postings
+    tf = cut(_tf_rows(docs))
     dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("dl"))
     tfq = tf.where(F.col("word").isin(*_BM25_WORDS))
     dfs = tfq.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
@@ -231,7 +231,7 @@ def _bucket_py(word: str) -> int:
 def _postings_rows(docs: DataFrame) -> DataFrame:
     from ..functions.hashing import md5_int31
 
-    tf = _tf_rows(docs).localCheckpoint(eager=False)
+    tf = cut(_tf_rows(docs))  # cut: multi-consumer — dl and the join
     dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("dl"))
     return tf.join(dl, "doc_id").select(
         (md5_int31(F.col("word")) % _N_WORD_BUCKETS).alias("wb"),
@@ -288,7 +288,7 @@ def build_text_index(spark: SparkSession, docs: DataFrame, index_dir: str) -> No
     re-tidies the extra per-bucket files."""
     from ..sinks import spread_repartition
 
-    rows = _postings_rows(docs).localCheckpoint(eager=True)
+    rows = cut(_postings_rows(docs), eager=True)  # cut: multi-consumer — write + stats
     spread_repartition(rows, "wb", "word").write.mode("overwrite").partitionBy(
         "wb"
     ).parquet(os.path.join(index_dir, "postings"))
@@ -318,7 +318,7 @@ def text_index_add(
 
     if stage_dir is None:
         _read_manifest(index_dir)  # knob check before any write
-    rows = _postings_rows(new_docs).localCheckpoint(eager=True)
+    rows = cut(_postings_rows(new_docs), eager=True)  # cut: multi-consumer — write + stats
     writer = spread_repartition(rows, "wb", "word").write.partitionBy("wb")
     if stage_dir is None:
         writer.mode("append").parquet(os.path.join(index_dir, "postings"))
@@ -457,16 +457,11 @@ SELECT doc_id, score, rk FROM (
 def bm25_rm3_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 + RM3 query expansion, end to end in one plan."""
     docs = table(spark, sf_dir, "documents")
-    tf = _tf_rows(docs).localCheckpoint(eager=False)
-    # dl has FOUR consumers here (corpus scalars, pass-1 postings, rm
-    # weights, pass-2 postings) — unlike bm25_retrieve's two; checkpoint
-    # it or the doc-grain aggregation re-runs per consumer (measured
-    # 7.6s -> ~2s at sf0.1)
-    dl = (
-        tf.groupBy("doc_id")
-        .agg(F.sum("tf").cast("bigint").alias("dl"))
-        .localCheckpoint(eager=False)
-    )
+    tf = cut(_tf_rows(docs))  # cut: multi-consumer — dl and both passes
+    # cut: multi-consumer — corpus scalars, pass-1 postings, rm weights and
+    # pass-2 postings; without it the doc-grain aggregation re-runs per
+    # consumer (measured 7.6s -> ~2s at sf0.1)
+    dl = cut(tf.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("dl")))
     # corpus scalars as a broadcast 1-row relation (r14, guide §2.6):
     # the old st.collect() was a full blocking tf+dl job run BEFORE
     # pass 1 could even be submitted; folding (n, avgdl) into the

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import cut, table
 from ..functions import sentiment as S
 from ..functions.hashing import md5_long, sql_md5_long
 from ..functions.stable import dsum
@@ -225,19 +225,10 @@ def tfidf_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = docs.select("doc_id", F.explode(S.tokens(F.col("text"))).alias("word")).where(
         ~F.col("word").isin(*S.STOPWORDS) & (F.col("word") != "")
     )
-    # Lazy lineage cut (r13): tf feeds THREE plan branches (vocab, the
-    # weighted join, and — via weighted — both the norm aggregate and the
-    # final join). The final plan otherwise re-ran the tokenize-explode +
-    # (doc, word) groupBy once per branch (4 documents scans, 14
-    # HashAggregates — tfidf_vectors and its three downstream consumers
-    # doc_top_keywords / rag_retrieve / rag_hybrid_retrieve all paid it).
-    # The (doc, word, tf) relation is the same grain the persisted text
-    # index materializes — bounded, and one pass at any corpus size.
-    tf = (
-        words.groupBy("doc_id", "word")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
-    )
+    # cut: multi-consumer — vocab, the weighted join, and via weighted
+    # both the norm aggregate and the final join; uncut, the plan re-ran
+    # the tokenize-explode + (doc, word) groupBy once per branch.
+    tf = cut(words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf")))
     n_docs = docs.count()  # scalar; table stats — not a per-row collect
     vocab = tf.groupBy("word").agg(
         F.count(F.lit(1)).alias("df"), F.sum("tf").alias("total_tf")

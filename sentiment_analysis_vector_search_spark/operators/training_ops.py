@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import fan_out, table
+from ..catalog import cut, fan_out, table
 from ..functions.ranks import dist_ntile
 from ..functions.stable import sql_stable_ln, with_stable_ln
 from ..registry import register
@@ -181,7 +181,7 @@ def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 # degenerate collocation structure). PMI(a,b) = ln(P(ab) / (P(a)P(b))),
 # computed from one tokenized pass, min-count-filtered, top-K.
 #
-# Scale shape: the token relation is derived once (lazy localCheckpoint,
+# Scale shape: the token relation is derived once (lazy cut,
 # two consumers); the bigram generate is map-side over the token arrays
 # (one struct per adjacent pair), both aggregates are partial-agg
 # groupBys, and the unigram joins are vocabulary-grain equi-joins
@@ -241,15 +241,14 @@ SELECT w1, w2, n_pair, pmi, rk FROM (
 @register("tok_bigram_pmi", oracle=_PMI_ORACLE)
 def tok_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(spark, table(spark, sf_dir, "documents"))
-    toks = docs.select(
-        F.expr(r"filter(split(lower(text), '\\s+'), w -> w <> '')").alias("t")
-    ).localCheckpoint(eager=False)  # two consumers: unigrams + bigrams
-    uc = (
+    # cut: multi-consumer — unigrams + bigrams
+    toks = cut(docs.select(F.expr(r"filter(split(lower(text), '\\s+'), w -> w <> '')").alias("t")))
+    # cut: multi-consumer — nu, ca, cb
+    uc = cut(
         toks.select(F.explode_outer("t").alias("w"))
         .where(F.col("w").isNotNull())
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)  # three consumers: nu, ca, cb
     )
     nu = uc.agg(F.sum("c").alias("n_uni"))
     pair_expr = (
@@ -257,12 +256,12 @@ def tok_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         "transform(sequence(1, size(t) - 1), i -> struct(t[i-1] AS w1, t[i] AS w2)) "
         "ELSE array() END"
     )
-    bc = (
+    # cut: multi-consumer — nb + the scored join
+    bc = cut(
         toks.select(F.explode_outer(F.expr(pair_expr)).alias("b"))
         .where(F.col("b").isNotNull())
         .groupBy(F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
         .agg(F.count(F.lit(1)).alias("n_pair"))
-        .localCheckpoint(eager=False)  # two consumers: nb + the scored join
     )
     nb = bc.agg(F.sum("n_pair").alias("n_bi"))
     ca = uc.select(F.col("w").alias("w1"), F.col("c").alias("ca"))

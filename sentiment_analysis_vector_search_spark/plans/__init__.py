@@ -35,12 +35,6 @@ def assert_in_plan(df: DataFrame, *needles: str, mode: str = "formatted") -> Non
     assert not missing, f"plan missing {missing}:\n{plan}"
 
 
-def assert_not_in_plan(df: DataFrame, *needles: str, mode: str = "formatted") -> None:
-    plan = plan_str(df, mode)
-    present = [n for n in needles if n in plan]
-    assert not present, f"plan unexpectedly contains {present}:\n{plan}"
-
-
 def scan_read_schemas(df: DataFrame) -> list[str]:
     """ReadSchema lines from every parquet scan in the plan (column pruning)."""
     return [

@@ -24,6 +24,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .catalog import cut
+
 
 def list_data_files(
     spark: SparkSession, path: str, suffix: str = ".parquet"
@@ -462,21 +464,19 @@ def zorder_by(
     from .functions.ranks import dist_ntile
 
     n_levels = 1 << bits
-    # Pin a unique row id: monotonically_increasing_id is nondeterministic
-    # under recomputation, so checkpoint before fanning out per-column
-    # rank branches that must all agree on it.
-    # MATERIALIZATION COST (r6 advice): the eager checkpoint pins the
+    # cut: pins ids — monotonically_increasing_id is nondeterministic
+    # under recomputation, so cut before fanning out per-column rank
+    # branches that must all agree on it.
+    # MATERIALIZATION COST (r6 advice): the eager cut pins the
     # whole input in executor block storage for the duration of the
     # rewrite. That is acceptable for OPTIMIZE-style maintenance — Delta's
     # OPTIMIZE ZORDER also rewrites (and therefore holds) the files it
     # compacts, and the job is run per-partition/per-day slice, not over
     # the whole 100 TB table in one call. Callers with a natural unique
     # key could instead thread it through as the tie-breaker id and skip
-    # the checkpoint; a synthesized hash id is NOT a safe substitute
+    # the cut; a synthesized hash id is NOT a safe substitute
     # (duplicate rows would collide and collapse ranks).
-    ranked = df.withColumn("_zid", F.monotonically_increasing_id()).localCheckpoint(
-        eager=True
-    )
+    ranked = cut(df.withColumn("_zid", F.monotonically_increasing_id()), eager=True)
     for c in cols:
         r = dist_ntile(
             ranked.select(c, "_zid"), c, "_zid", n_levels, f"_r_{c}"

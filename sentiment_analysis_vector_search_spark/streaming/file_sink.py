@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import cut
 from .stream_ops import _DOC_SCHEMA, _stream_confs
 
 
@@ -493,7 +494,7 @@ def stream_ingest_dedup(
         h = batch_df.withColumn("_h", md5_long(F.col("text")))
         keep_ids = h.groupBy("_h").agg(F.min("doc_id").alias("doc_id"))
         batch = h.join(keep_ids, ["_h", "doc_id"], "left_semi").drop("_h")
-        batch = batch.localCheckpoint(eager=True)  # feeds check, gate, add
+        batch = cut(batch, eager=True)  # cut: multi-consumer — check, gate, add
         # history gate: anything near-duplicating the indexed corpus drops
         if os.path.isdir(f"{index_dir}/bands"):
             hits = (
@@ -505,7 +506,7 @@ def stream_ingest_dedup(
             survivors = batch.join(hits, "doc_id", "left_anti")
         else:
             survivors = batch
-        survivors = survivors.localCheckpoint(eager=True)
+        survivors = cut(survivors, eager=True)  # cut: multi-consumer — write + index add
         survivors.write.mode("append").parquet(out_dir)
         if os.path.isdir(f"{index_dir}/bands"):
             dedup_index_add(spark, survivors, index_dir)
@@ -630,9 +631,11 @@ def stream_emb_dedup_ingest(
                 applied = json.load(f)
         if batch_id in applied:
             return
-        batch = batch_df.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        ).localCheckpoint(eager=True)
+        # cut: multi-consumer — within-batch pairs, index check, gate, add
+        batch = cut(
+            batch_df.select("vec_id", F.col("embedding").cast("array<double>").alias("v")),
+            eager=True,
+        )
         # within-batch near-dup: keep the min vec_id of each pair
         within = (
             emb_candidate_pairs(batch)
@@ -651,7 +654,7 @@ def stream_emb_dedup_ingest(
             survivors = batch.join(hits, "vec_id", "left_anti")
         else:
             survivors = batch
-        survivors = survivors.localCheckpoint(eager=True)
+        survivors = cut(survivors, eager=True)  # cut: multi-consumer — write + index add
         survivors.select(
             "vec_id", F.col("v").alias("embedding")
         ).write.mode("append").parquet(out_dir)
@@ -1250,9 +1253,8 @@ def stream_scd2_maintenance(
         ]
         if not todo:
             return  # full replay: every bucket already recorded this batch
-        runs = runs.where(F.col("bucket").isin(todo)).localCheckpoint(
-            eager=True
-        )
+        # cut: multi-consumer — the empty-schema fallback, first and rest
+        runs = cut(runs.where(F.col("bucket").isin(todo)), eager=True)
 
         have = [
             b for b in todo if os.path.isdir(os.path.join(base, f"bucket={b}"))

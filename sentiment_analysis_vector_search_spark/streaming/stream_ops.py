@@ -30,6 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..catalog import cut
 from ..functions.stable import sql_dsum
 from ..registry import register
 
@@ -146,7 +147,7 @@ def _drain_to_memory(
             .start()
         )
         q.awaitTermination()
-    out = spark.table(sink).localCheckpoint(eager=True)
+    out = cut(spark.table(sink), eager=True)  # cut: outlives its source (memory sink dropped)
     spark.catalog.dropTempView(sink)
     shutil.rmtree(ck, ignore_errors=True)
     return out

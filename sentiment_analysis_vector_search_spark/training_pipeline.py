@@ -59,7 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import catalog
-from .catalog import table
+from .catalog import cut, table
 
 STAGES = (
     "gate",
@@ -135,9 +135,9 @@ def run_training_pipeline(
     if not man.get("dedup", {}).get("done"):
         t0 = time.perf_counter()
         docs = table(spark, cur, "documents")
-        # one fixpoint run, materialized: two consumers below would
-        # otherwise each replay the whole driver-side components loop
-        kc = dedup_keep_canonical(spark, cur).localCheckpoint(eager=True)
+        # cut: multi-consumer — two consumers below would otherwise each
+        # replay the whole components fixpoint loop
+        kc = cut(dedup_keep_canonical(spark, cur), eager=True)
         survivors = kc.where(~F.col("is_duplicate")).select("doc_id")
         # docs not in any dup component survive trivially (the operator
         # only emits docs that had at least one candidate pair)

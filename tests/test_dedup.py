@@ -240,32 +240,3 @@ def test_dedup_index_check_large_batch_keyed_path(spark, sf_dir, tmp_path):
     got_large = {(r.doc_a, r.doc_b, r.jaccard) for r in large.collect()}
     assert got_small, "fixture must contain cross-half pairs"
     assert got_small == got_large
-
-
-def test_corpus_cut_reliable_checkpoint_hatch(spark, tmp_path, monkeypatch):
-    """corpus_cut defaults to localCheckpoint (plan and rows identical to
-    the pre-r14 cuts); with SPARK_GRAFT_RELIABLE_CK_DIR set it routes
-    through a RELIABLE checkpoint in that directory instead — the
-    executor-loss-safe posture for corpus-grain relations at 100 TB."""
-    from sentiment_analysis_vector_search_spark.catalog import corpus_cut
-
-    df = spark.range(100).selectExpr("id", "id * 2 AS v")
-    want = [(r.id, r.v) for r in df.collect()]
-
-    monkeypatch.delenv("SPARK_GRAFT_RELIABLE_CK_DIR", raising=False)
-    local = corpus_cut(df, eager=True)
-    assert sorted((r.id, r.v) for r in local.collect()) == sorted(want)
-
-    ckdir = str(tmp_path / "reliable_ck")
-    monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CK_DIR", ckdir)
-    reliable = corpus_cut(df, eager=True)
-    assert sorted((r.id, r.v) for r in reliable.collect()) == sorted(want)
-    # the reliable path must have written checkpoint data into the dir
-    import os
-
-    hit = False
-    for root, _dirs, files in os.walk(ckdir):
-        if files:
-            hit = True
-            break
-    assert hit, f"no reliable checkpoint files under {ckdir}"
