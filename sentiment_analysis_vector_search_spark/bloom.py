@@ -47,13 +47,14 @@ from __future__ import annotations
 
 import hashlib
 import json
-import os
 from typing import Iterable, Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .commit import write_json
 
 _DEFAULT_BITS_PER_KEY = 16
 _K = 4  # hash functions; with 16 bits/key the false-positive rate ~0.2%
@@ -184,11 +185,10 @@ def build_bloom_index(
     df = spark.read.parquet(table_dir)
     rows = _file_rows(df, key_col, bits_per_key)
     rows.write.mode("overwrite").parquet(f"{index_dir}/files.parquet")
-    os.makedirs(index_dir, exist_ok=True)
-    with open(f"{index_dir}/manifest.json", "w") as fh:
-        json.dump(
-            {"key_col": key_col, "bits_per_key": bits_per_key, "k": _K}, fh
-        )
+    write_json(
+        f"{index_dir}/manifest.json",
+        {"key_col": key_col, "bits_per_key": bits_per_key, "k": _K},
+    )
 
 
 def _load_manifest(index_dir: str) -> dict:

@@ -34,6 +34,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .commit import write_json
+
 # stage name -> registered operator (import-light: resolved lazily so the
 # module does not force-load every operator suite at import time)
 _JOB_STAGES = (
@@ -58,7 +60,7 @@ def run_analysis_job(
     """Run the full analysis job; returns the manifest dict.
 
     Artifacts: ``{jobs_root}/{job_id}/{stage}/`` parquet per stage, then
-    ``{jobs_root}/{job_id}/manifest.json`` (atomic rename) with row
+    ``{jobs_root}/{job_id}/manifest.json`` (atomic write) with row
     counts and status — the success marker, written only after every
     stage committed.
     """
@@ -83,10 +85,7 @@ def run_analysis_job(
         "stages": counts,
         "sf_dir": sf_dir,
     }
-    tmp = os.path.join(job_dir, "_manifest.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=2, sort_keys=True)
-    os.replace(tmp, os.path.join(job_dir, "manifest.json"))
+    write_json(os.path.join(job_dir, "manifest.json"), manifest)
     return manifest
 
 

@@ -29,10 +29,13 @@ pytest pins exactly this expected finding.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..commit import fold_json
 from ..registry import register
 
 _DQ_ORACLE = """
@@ -387,55 +390,33 @@ def incremental_checksum(
     both additive, so after ANY number of folds the manifest equals the
     one-shot checksum over the union (pytest-pinned). Additive = NOT
     idempotent, so the applied-batch record rides inside the same atomic
-    os.replace as the fold (the incremental_cms protocol).
+    write as the fold (``commit.fold_json``).
 
-    The applied-batch record is the BOUNDED ``{"max_applied": N}`` form
-    (the SCD2-sink r11 fix, r11 advice low): Structured Streaming file-
-    source batch ids are strictly monotone per checkpoint, so one
-    integer replays exactly as well as the full id list and the manifest
-    stays O(1) on an unbounded stream. Single-writer contract: the
-    read-modify-write is NOT locked — one maintenance stream (or one CLI
-    fold sequence) per manifest path at a time; Structured Streaming
-    guarantees that for the streaming path (one query per checkpoint),
-    and concurrent ad-hoc CLI folds against one manifest are unsupported
-    (fold shards sequentially — each fold is one cheap Spark job)."""
-    import json
-    import os
+    Single-writer contract: the read-modify-write is NOT locked — one
+    maintenance stream (or one CLI fold sequence) per manifest path at a
+    time; Structured Streaming guarantees that for the streaming path
+    (one query per checkpoint), and concurrent ad-hoc CLI folds against
+    one manifest are unsupported (fold shards sequentially — each fold
+    is one cheap Spark job)."""
 
-    path = os.path.join(manifest_dir, f"{table_name}__checksum.json")
-    meta: dict = {}
-    n_rows, chk = 0, 0
-    if os.path.exists(path):
-        with open(path) as f:
-            raw = json.load(f)
-        meta = raw.get("__meta__", {})
-        n_rows, chk = int(raw["n_rows"]), int(raw["checksum"])
-    # legacy manifests stored the full id list; monotone ids make the
-    # max an equivalent replay guard
-    max_applied: int = meta.get(
-        "max_applied", max(meta.get("applied_batch_ids", [-1]), default=-1)
+    def fold(prior: dict | None) -> dict:
+        prior = prior or {"n_rows": 0, "checksum": 0}
+        row = table_checksum(batch_df, table_name, round_doubles).collect()[0]
+        return {
+            "table_name": table_name,
+            "n_rows": int(prior["n_rows"]) + int(row["n_rows"]),
+            "checksum": (int(prior["checksum"]) + int(row["checksum"])) % _CHK_MOD,
+            "encoding": "v1",
+        }
+
+    out = fold_json(
+        os.path.join(manifest_dir, f"{table_name}__checksum.json"), batch_id, fold
     )
-    if batch_id is not None and batch_id <= max_applied:
-        return {"table_name": table_name, "n_rows": n_rows, "checksum": chk}
-    row = table_checksum(batch_df, table_name, round_doubles).collect()[0]
-    n_rows += int(row["n_rows"])
-    chk = (chk + int(row["checksum"])) % _CHK_MOD
-    out = {
+    return {
         "table_name": table_name,
-        "n_rows": n_rows,
-        "checksum": chk,
-        "encoding": "v1",
+        "n_rows": int(out["n_rows"]),
+        "checksum": int(out["checksum"]),
     }
-    if batch_id is not None:
-        out["__meta__"] = {"max_applied": batch_id}
-    elif meta:
-        out["__meta__"] = meta
-    os.makedirs(manifest_dir, exist_ok=True)
-    tmp = path + ".__tmp__"
-    with open(tmp, "w") as f:
-        json.dump(out, f)
-    os.replace(tmp, path)
-    return {"table_name": table_name, "n_rows": n_rows, "checksum": chk}
 
 
 @register("dq_table_checksum", oracle=_chk_oracle())

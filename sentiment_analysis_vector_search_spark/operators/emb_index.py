@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import cut
+from ..commit import write_json
 from ..sinks import spread_repartition
 from .dedup import _EMB_BAND_BITS, _EMB_BANDS, _EMB_T, emb_signatures
 
@@ -62,8 +63,10 @@ def build_emb_index(
         .write.mode("overwrite")
         .parquet(f"{index_dir}/vectors")
     )
-    with open(os.path.join(index_dir, "manifest.json"), "w") as f:
-        json.dump({"bands": _EMB_BANDS, "band_bits": _EMB_BAND_BITS}, f)
+    write_json(
+        os.path.join(index_dir, "manifest.json"),
+        {"bands": _EMB_BANDS, "band_bits": _EMB_BAND_BITS},
+    )
 
 
 def emb_index_add(

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import cut
+from ..commit import write_json
 from ..functions.stable import dsum
 from .similarity import _TOP_K, _TRAINED_NPROBE, _trained_assignments, _trained_codebook, _vectors
 from .similarity2 import _PQ_RERANK, _dot, _exact_rerank, _pq_codebook, _pq_encode, _pq_lut
@@ -326,8 +327,6 @@ def ivfpq_codebook_refresh(
     the drift measurement plus {"refreshed": bool}; measurement-only
     while the max drift over both layers stays under ``max_drift`` and
     ``force`` is False. Single-writer: one refresh at a time per index."""
-    import json
-
     from ..sinks import spread_repartition
 
     ivfpq_index_recover(index_dir)
@@ -376,11 +375,7 @@ def ivfpq_codebook_refresh(
         .partitionBy("cell")
         .parquet(_os.path.join(index_dir, "codes__new"))
     )
-    marker = _os.path.join(index_dir, "_refresh_commit.json")
-    tmp = marker + ".__tmp__"
-    with open(tmp, "w") as f:
-        json.dump({"drift_at_refresh": drift}, f)
-    _os.replace(tmp, marker)
+    write_json(_os.path.join(index_dir, "_refresh_commit.json"), {"drift_at_refresh": drift})
     ivfpq_index_recover(index_dir)  # the swap IS forward recovery
     return {**drift, "refreshed": True}
 

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import cut, table
+from ..commit import write_json
 from ..functions.stable import DEC
 from ..functions.vectors import hyperplanes, sql_plane_dot
 from ..registry import register
@@ -1031,8 +1032,6 @@ def ivf_codebook_refresh(
     marker-file swap (module note above). Returns the drift measurement
     plus {"refreshed": bool}. No-op (measurement only) while max cell
     drift stays under ``max_drift`` and ``force`` is False."""
-    import json
-
     from ..functions.stable import davg
     from ..sinks import spread_repartition
 
@@ -1086,11 +1085,7 @@ def ivf_codebook_refresh(
         "overwrite"
     ).partitionBy("cell").parquet(asg_new)
     # commit point: both __new dirs are complete on disk
-    marker = os.path.join(index_dir, _IVF_REFRESH_MARKER)
-    tmp = marker + ".__tmp__"
-    with open(tmp, "w") as f:
-        json.dump({"drift_at_refresh": drift}, f)
-    os.replace(tmp, marker)
+    write_json(os.path.join(index_dir, _IVF_REFRESH_MARKER), {"drift_at_refresh": drift})
     ivf_index_recover(index_dir)  # the swap IS forward recovery
     return {**drift, "refreshed": True}
 

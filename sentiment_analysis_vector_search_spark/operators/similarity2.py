@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import cut, table
+from ..commit import write_json
 from ..functions.stable import davg, dsum, sql_davg, sql_dsum
 from ..registry import register
 from .similarity import _N_QUERIES, _TOP_K, _SQL_VECS_CTE, _vectors
@@ -531,8 +532,6 @@ def pq_codebook_refresh(
     (measurement only) while max cell drift stays under ``max_drift``
     and ``force`` is False. Single-writer: at most one refresh at a
     time per index."""
-    import json
-
     pq_index_recover(index_dir)
     drift = pq_index_drift(spark, index_dir, vectors)
     if not force and drift["max_drift"] < max_drift:
@@ -555,11 +554,7 @@ def pq_codebook_refresh(
     # full re-ENCODE (codes are quantizations, not assignments — every
     # stored code is stale the moment its sub-centroid moves)
     _pq_encode(vecs, cb_new).write.mode("overwrite").parquet(codes_dir_new)
-    marker = _os.path.join(index_dir, "_refresh_commit.json")
-    tmp = marker + ".__tmp__"
-    with open(tmp, "w") as f:
-        json.dump({"drift_at_refresh": drift}, f)
-    _os.replace(tmp, marker)
+    write_json(_os.path.join(index_dir, "_refresh_commit.json"), {"drift_at_refresh": drift})
     pq_index_recover(index_dir)  # the swap IS forward recovery
     return {**drift, "refreshed": True}
 

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import cut, table
+from ..commit import applied_max, write_json
 from ..functions import sentiment as S
 from ..functions.stable import dsum, sql_dsum, sql_stable_ln, with_stable_ln
 from ..registry import register
@@ -246,21 +247,14 @@ def _write_manifest(
     index_dir: str, n_docs: int, sum_dl: int, max_applied: int | None = None
 ) -> None:
     """Atomic manifest write. ``max_applied`` (streaming maintenance)
-    rides in the SAME os.replace as the counters, so recording a batch
-    and applying its counter bump are one indivisible effect — a crash
-    can never leave counters bumped but the batch unrecorded (or vice
-    versa), which is what made the old separate commits file only
-    at-least-once (r8 advice, medium). The record is ONE integer —
-    file-source batch ids are monotone, so "applied" == "<= max" —
-    bounded manifest state on an unbounded stream (the fleet-wide r12
-    conversion of the growing applied_batch_ids lists)."""
-    tmp = os.path.join(index_dir, "manifest.json.__tmp__")
+    rides in the SAME write as the counters, so recording a batch and
+    applying its counter bump are one indivisible effect — a crash can
+    never leave counters bumped but the batch unrecorded (or vice
+    versa)."""
     man: dict = {"n_docs": n_docs, "sum_dl": sum_dl, "buckets": _N_WORD_BUCKETS}
     if max_applied is not None:
         man["max_applied"] = max_applied
-    with open(tmp, "w") as f:
-        json.dump(man, f)
-    os.replace(tmp, os.path.join(index_dir, "manifest.json"))
+    write_json(os.path.join(index_dir, "manifest.json"), man)
 
 
 def _read_manifest(index_dir: str) -> dict:
@@ -271,11 +265,8 @@ def _read_manifest(index_dir: str) -> dict:
             f"text index built with {man['buckets']} word buckets, "
             f"engine expects {_N_WORD_BUCKETS} — rebuild the index"
         )
-    # legacy manifests stored the full id list; monotone ids make the
-    # max an equivalent replay guard
-    if "applied_batch_ids" in man and "max_applied" not in man:
-        ids = man.pop("applied_batch_ids")
-        man["max_applied"] = max(ids) if ids else -1
+    if "applied_batch_ids" in man:
+        man["max_applied"] = applied_max(man)
     return man
 
 

@@ -29,6 +29,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..commit import write_json
+
 _DEC = "decimal(30,10)"
 _ANSWERABLE = ("sum", "count", "avg", "min", "max")
 
@@ -58,9 +60,10 @@ def build_rollup(
 
         shutil.rmtree(out_dir)
     os.rename(tmp, out_dir)
-    manifest = {"dims": list(dims), "measures": dict(measures)}
-    with open(os.path.join(out_dir, "_rollup_manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
+    write_json(
+        os.path.join(out_dir, "_rollup_manifest.json"),
+        {"dims": list(dims), "measures": dict(measures)},
+    )
 
 
 def rollup_manifest(out_dir: str) -> dict:
@@ -171,8 +174,7 @@ def rollup_compact(spark: SparkSession, out_dir: str) -> int:
     tmp_old = f"{out_dir}__old__"
     compacted.write.mode("overwrite").parquet(tmp_new)
     n = spark.read.parquet(tmp_new).count()
-    with open(os.path.join(tmp_new, "_rollup_manifest.json"), "w") as f:
-        json.dump(m, f, indent=1, sort_keys=True)
+    write_json(os.path.join(tmp_new, "_rollup_manifest.json"), m)
     os.rename(out_dir, tmp_old)
     try:
         os.rename(tmp_new, out_dir)

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import cut
+from .commit import write_json
 
 
 def list_data_files(
@@ -235,7 +236,6 @@ def write_with_manifest(
     ISO date/time string column first — lexicographic order matches time
     order). Returns the manifest dict.
     """
-    import json
     import os
 
     import pyarrow.parquet as pq
@@ -265,8 +265,7 @@ def write_with_manifest(
                 col_stats[c] = [lo, hi]
         files[name] = col_stats
     manifest = {"stats_cols": list(stats_cols), "files": files}
-    with open(os.path.join(base, "_manifest.json"), "w") as f:
-        json.dump(manifest, f, default=str)
+    write_json(os.path.join(base, "_manifest.json"), manifest)
     return manifest
 
 
@@ -676,10 +675,7 @@ def commit_snapshot(
             prev_files = json.load(f)["files"]
 
     manifest = {"version": new_v, "mode": mode, "files": prev_files + new_files}
-    tmp = os.path.join(vdir, f".v{new_v:05d}.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.rename(tmp, os.path.join(vdir, f"v{new_v:05d}.json"))  # atomic commit
+    write_json(os.path.join(vdir, f"v{new_v:05d}.json"), manifest)  # the commit
     return new_v
 
 

@@ -15,6 +15,7 @@ stats-driven gate degrades to a shuffle join instead.
 
 from __future__ import annotations
 
+import os
 from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .catalog import table
+from .commit import fold_json, read_json, write_json
 
 # Spark's own default autoBroadcastJoinThreshold is 10 MB; executors in
 # this engine's target config comfortably hold a few dozen MB broadcast,
@@ -221,31 +223,18 @@ def write_table_stats(
     spark: SparkSession, sf_dir: str, name: str, stats_dir: str
 ) -> str:
     """Compute and persist ``name``'s stats as ``{stats_dir}/{name}.json``
-    (tmp + atomic rename). Returns the written path."""
-    import json
-    import os
-
-    stats = table_stats(spark, sf_dir, name)
-    os.makedirs(stats_dir, exist_ok=True)
+    (one atomic write). Returns the written path."""
     path = os.path.join(stats_dir, f"{name}.json")
-    tmp = f"{path}.__tmp__"
-    with open(tmp, "w") as f:
-        json.dump(stats, f, indent=1, sort_keys=True)
-    os.replace(tmp, path)
+    write_json(path, table_stats(spark, sf_dir, name))
     return path
 
 
 def load_table_stats(stats_dir: str, name: str) -> dict[str, dict] | None:
     """Read persisted stats; None when absent (caller decides whether to
     fall back to a live ANALYZE scan)."""
-    import json
-    import os
-
-    path = os.path.join(stats_dir, f"{name}.json")
-    if not os.path.exists(path):
+    stats = read_json(os.path.join(stats_dir, f"{name}.json"))
+    if stats is None:
         return None
-    with open(path) as f:
-        stats = json.load(f)
     # maintenance metadata (applied streaming batch ids) rides inside the
     # same atomically-replaced file but is NOT a column: strip it so every
     # consumer keeps iterating pure column stats
@@ -604,6 +593,25 @@ def column_fixed_histogram(
     return {int(r["bin"]): int(r["n"]) for r in rows}
 
 
+def _hist_knobs(label: str, width: float, bins: int, offset: float):
+    """``fold_json`` check: refuse to fold into a histogram artifact
+    built with other knobs (artifacts predating ``offset`` read as 0.0)."""
+
+    def check(raw: dict) -> None:
+        if (
+            raw.get("width") != width
+            or raw.get("bins") != bins
+            or float(raw.get("offset", 0.0)) != float(offset)
+        ):
+            raise ValueError(
+                f"{label} knob mismatch: stored width={raw.get('width')} "
+                f"bins={raw.get('bins')} offset={raw.get('offset', 0.0)} vs "
+                f"requested width={width} bins={bins} offset={offset}"
+            )
+
+    return check
+
+
 def incremental_histogram(
     stats_dir: str,
     name: str,
@@ -617,58 +625,31 @@ def incremental_histogram(
     """Fold one batch into a persisted fixed-width histogram
     (``{name}__hist_{col}.json``): counts are additive, so after ANY
     number of folds the artifact equals a one-shot histogram over the
-    union (pytest-pinned). Knob mismatch fails fast (the CMS provenance
-    discipline); the replay guard is the bounded ``max_applied`` record
-    inside the same atomic write (SCALING rules 21/35)."""
-    import json
-    import os
+    union (pytest-pinned). Knob mismatch fails fast; the replay guard
+    is ``commit.fold_json``'s record inside the same atomic write."""
 
-    path = os.path.join(stats_dir, f"{name}__hist_{col}.json")
-    meta: dict = {}
-    counts: dict[int, int] = {}
-    n_rows = 0
-    if os.path.exists(path):
-        with open(path) as f:
-            raw = json.load(f)
-        meta = raw.get("__meta__", {})
-        counts = {int(k): int(v) for k, v in raw.get("counts", {}).items()}
-        n_rows = int(raw.get("n_rows", 0))
-        # r12 artifacts predate the offset knob: absent == 0.0
-        if (
-            raw.get("width") != width
-            or raw.get("bins") != bins
-            or float(raw.get("offset", 0.0)) != float(offset)
-        ):
-            raise ValueError(
-                f"histogram knob mismatch: stored width={raw.get('width')} "
-                f"bins={raw.get('bins')} offset={raw.get('offset', 0.0)} vs "
-                f"requested width={width} bins={bins} offset={offset}"
-            )
-    max_applied = _max_applied(meta)
-    if batch_id is not None and batch_id <= max_applied:
-        return counts
-    fresh = column_fixed_histogram(batch_df, col, width, bins, offset)
-    for b, n in fresh.items():
-        counts[b] = counts.get(b, 0) + n
-    n_rows += sum(fresh.values())
-    out: dict = {
-        "counts": {str(k): v for k, v in sorted(counts.items())},
-        "n_rows": n_rows,
-        "col": col,
-        "width": width,
-        "bins": bins,
-        "offset": float(offset),
-    }
-    if batch_id is not None:
-        out["__meta__"] = {"max_applied": batch_id}
-    elif meta:
-        out["__meta__"] = meta
-    os.makedirs(stats_dir, exist_ok=True)
-    tmp = f"{path}.__tmp__"
-    with open(tmp, "w") as f:
-        json.dump(out, f, indent=1, sort_keys=True)
-    os.replace(tmp, path)
-    return counts
+    def fold(prior: dict | None) -> dict:
+        prior = prior or {}
+        counts = {int(k): int(v) for k, v in prior.get("counts", {}).items()}
+        fresh = column_fixed_histogram(batch_df, col, width, bins, offset)
+        for b, n in fresh.items():
+            counts[b] = counts.get(b, 0) + n
+        return {
+            "counts": {str(k): v for k, v in sorted(counts.items())},
+            "n_rows": int(prior.get("n_rows", 0)) + sum(fresh.values()),
+            "col": col,
+            "width": width,
+            "bins": bins,
+            "offset": float(offset),
+        }
+
+    art = fold_json(
+        os.path.join(stats_dir, f"{name}__hist_{col}.json"),
+        batch_id,
+        fold,
+        check=_hist_knobs("histogram", width, bins, offset),
+    )
+    return {int(k): int(v) for k, v in art["counts"].items()}
 
 
 def fixed_hist_rows(art: dict) -> list[dict]:
@@ -693,14 +674,9 @@ def fixed_hist_rows(art: dict) -> list[dict]:
 def load_histogram(stats_dir: str, name: str, col: str) -> dict:
     """Read back a persisted fixed-width histogram artifact (the whole
     JSON: counts/n_rows/width/bins); empty dict when absent."""
-    import json
-    import os
-
-    path = os.path.join(stats_dir, f"{name}__hist_{col}.json")
-    if not os.path.exists(path):
+    raw = read_json(os.path.join(stats_dir, f"{name}__hist_{col}.json"))
+    if raw is None:
         return {}
-    with open(path) as f:
-        raw = json.load(f)
     raw["counts"] = {int(k): int(v) for k, v in raw.get("counts", {}).items()}
     return raw
 
@@ -927,68 +903,47 @@ def incremental_histogram_grouped(
     (``{name}__ghist_{group_col}_{col}.json``): per-(group, bin) counts
     are additive, so after ANY number of folds the artifact equals a
     one-shot grouped histogram over the union (pytest-pinned). Same
-    knob-mismatch refusal and bounded ``max_applied`` replay guard
-    inside the same atomic write as the global artifact."""
-    import json
-    import os
+    knob-mismatch refusal and ``commit.fold_json`` replay guard as the
+    global artifact."""
 
-    path = os.path.join(stats_dir, f"{name}__ghist_{group_col}_{col}.json")
-    meta: dict = {}
-    counts: dict[str, dict[int, int]] = {}
-    n_rows = 0
-    if os.path.exists(path):
-        with open(path) as f:
-            raw = json.load(f)
-        meta = raw.get("__meta__", {})
+    def fold(prior: dict | None) -> dict:
+        prior = prior or {}
         counts = {
             g: {int(k): int(v) for k, v in c.items()}
-            for g, c in raw.get("counts", {}).items()
+            for g, c in prior.get("counts", {}).items()
         }
-        n_rows = int(raw.get("n_rows", 0))
-        if (
-            raw.get("width") != width
-            or raw.get("bins") != bins
-            or float(raw.get("offset", 0.0)) != float(offset)
-        ):
-            raise ValueError(
-                f"grouped histogram knob mismatch: stored "
-                f"width={raw.get('width')} bins={raw.get('bins')} "
-                f"offset={raw.get('offset', 0.0)} vs requested "
-                f"width={width} bins={bins} offset={offset}"
-            )
-    max_applied = _max_applied(meta)
-    if batch_id is not None and batch_id <= max_applied:
-        return counts
-    fresh = column_fixed_histogram_grouped(
-        batch_df, group_col, col, width, bins, offset
+        n_rows = int(prior.get("n_rows", 0))
+        fresh = column_fixed_histogram_grouped(
+            batch_df, group_col, col, width, bins, offset
+        )
+        for g, per_bin in fresh.items():
+            dst = counts.setdefault(g, {})
+            for b, n in per_bin.items():
+                dst[b] = dst.get(b, 0) + n
+            n_rows += sum(per_bin.values())
+        return {
+            "counts": {
+                g: {str(k): v for k, v in sorted(c.items())}
+                for g, c in sorted(counts.items())
+            },
+            "n_rows": n_rows,
+            "group_col": group_col,
+            "col": col,
+            "width": width,
+            "bins": bins,
+            "offset": float(offset),
+        }
+
+    art = fold_json(
+        os.path.join(stats_dir, f"{name}__ghist_{group_col}_{col}.json"),
+        batch_id,
+        fold,
+        check=_hist_knobs("grouped histogram", width, bins, offset),
     )
-    for g, per_bin in fresh.items():
-        dst = counts.setdefault(g, {})
-        for b, n in per_bin.items():
-            dst[b] = dst.get(b, 0) + n
-        n_rows += sum(per_bin.values())
-    out: dict = {
-        "counts": {
-            g: {str(k): v for k, v in sorted(c.items())}
-            for g, c in sorted(counts.items())
-        },
-        "n_rows": n_rows,
-        "group_col": group_col,
-        "col": col,
-        "width": width,
-        "bins": bins,
-        "offset": float(offset),
+    return {
+        g: {int(k): int(v) for k, v in c.items()}
+        for g, c in art["counts"].items()
     }
-    if batch_id is not None:
-        out["__meta__"] = {"max_applied": batch_id}
-    elif meta:
-        out["__meta__"] = meta
-    os.makedirs(stats_dir, exist_ok=True)
-    tmp = f"{path}.__tmp__"
-    with open(tmp, "w") as f:
-        json.dump(out, f, indent=1, sort_keys=True)
-    os.replace(tmp, path)
-    return counts
 
 
 def load_histogram_grouped(
@@ -996,14 +951,11 @@ def load_histogram_grouped(
 ) -> dict:
     """Read back a persisted grouped histogram artifact (counts keyed
     group -> bin); empty dict when absent."""
-    import json
-    import os
-
-    path = os.path.join(stats_dir, f"{name}__ghist_{group_col}_{col}.json")
-    if not os.path.exists(path):
+    raw = read_json(
+        os.path.join(stats_dir, f"{name}__ghist_{group_col}_{col}.json")
+    )
+    if raw is None:
         return {}
-    with open(path) as f:
-        raw = json.load(f)
     raw["counts"] = {
         g: {int(k): int(v) for k, v in c.items()}
         for g, c in raw.get("counts", {}).items()
@@ -1202,20 +1154,6 @@ def merge_stats(
 
 
 
-def _max_applied(meta: dict) -> int:
-    """Bounded replay guard shared by every incremental fold: highest
-    applied batch id (-1 when none). Structured Streaming file-source
-    batch ids are strictly monotone per checkpoint, so ONE integer
-    replays exactly as well as the old growing id list did — O(1)
-    manifest state on an unbounded stream (the SCD2/checksum r11-r12
-    fix, applied fleet-wide). Legacy list-form records collapse to
-    their max."""
-    if "max_applied" in meta:
-        return int(meta["max_applied"])
-    ids = meta.get("applied_batch_ids", [])
-    return max(ids) if ids else -1
-
-
 def incremental_analyze(
     spark: SparkSession,
     stats_dir: str,
@@ -1232,39 +1170,17 @@ def incremental_analyze(
     unchanged); the extra ``kmv`` key is the mergeable state.
 
     ``batch_id`` (streaming maintenance): the additive fold is NOT
-    idempotent, so the applied-batch record must be INDIVISIBLE from the
-    fold itself — it is stored under the reserved ``__meta__`` key of
-    the SAME atomically-replaced JSON (r8 advice, medium: a separate
-    commits file written after the fold left a crash window that
-    double-counted the batch on replay). A batch already recorded
-    returns the stored stats unchanged."""
-    import json
-    import os
+    idempotent, so the applied-batch record rides in the SAME atomic
+    write as the fold (``commit.fold_json``) — a record written after
+    the fold would leave a crash window that double-counts the batch on
+    replay. A batch already recorded returns the stored stats."""
 
-    path = os.path.join(stats_dir, f"{name}.json")
-    meta: dict = {}
-    prev = None
-    if os.path.exists(path):
-        with open(path) as f:
-            raw = json.load(f)
-        meta = raw.pop("__meta__", {})
-        prev = raw
-    max_applied = _max_applied(meta)
-    if batch_id is not None and batch_id <= max_applied:
-        return prev or {}  # replayed batch: fold already committed
-    fresh = partition_stats(new_df, k)
-    merged = merge_stats(prev, fresh, k) if prev else fresh
-    out = dict(merged)
-    if batch_id is not None:
-        out["__meta__"] = {"max_applied": batch_id}
-    elif meta:
-        out["__meta__"] = meta
-    os.makedirs(stats_dir, exist_ok=True)
-    tmp = f"{path}.__tmp__"
-    with open(tmp, "w") as f:
-        json.dump(out, f, indent=1, sort_keys=True)
-    os.replace(tmp, path)
-    return merged
+    def fold(prev: dict | None) -> dict:
+        fresh = partition_stats(new_df, k)
+        return merge_stats(prev, fresh, k) if prev else fresh
+
+    merged = fold_json(os.path.join(stats_dir, f"{name}.json"), batch_id, fold)
+    return merged or {}
 
 
 # ---------------------------------------------------------------------------
@@ -1362,55 +1278,29 @@ def incremental_heavy_hitters(
     batches (any value with total count > N/k survives; counts are
     lower bounds within N/k).
 
-    Exactly-once with no crash window (the ``incremental_analyze``
-    protocol): MG counts are additive, so a replayed batch would
-    inflate the sketch — the applied-batch record rides INSIDE the
-    sketch JSON and lands in the same single os.replace as the fold.
-    Returns (summary, total_rows)."""
-    import json
-    import os
+    MG counts are additive, so a replayed batch would inflate the
+    sketch: the applied-batch record rides in the same atomic write as
+    the fold (``commit.fold_json``). Returns (summary, total_rows)."""
 
-    path = os.path.join(stats_dir, f"{name}__hh_{col}.json")
-    meta: dict = {}
-    summary: dict = {}
-    n_rows = 0
-    if os.path.exists(path):
-        with open(path) as f:
-            raw = json.load(f)
-        meta = raw.get("__meta__", {})
-        summary = raw.get("summary", {})
-        n_rows = int(raw.get("n_rows", 0))
-    max_applied = _max_applied(meta)
-    if batch_id is not None and batch_id <= max_applied:
-        return summary, n_rows  # replayed batch: fold already committed
-    fresh, fresh_n = column_heavy_hitters(batch_df, col, k)
-    summary = merge_mg(summary, fresh, k)
-    n_rows += fresh_n
-    out = {"summary": summary, "n_rows": n_rows, "col": col, "k": k}
-    if batch_id is not None:
-        out["__meta__"] = {"max_applied": batch_id}
-    elif meta:
-        out["__meta__"] = meta
-    os.makedirs(stats_dir, exist_ok=True)
-    tmp = f"{path}.__tmp__"
-    with open(tmp, "w") as f:
-        json.dump(out, f, indent=1, sort_keys=True)
-    os.replace(tmp, path)
-    return summary, n_rows
+    def fold(prior: dict | None) -> dict:
+        prior = prior or {}
+        fresh, fresh_n = column_heavy_hitters(batch_df, col, k)
+        return {
+            "summary": merge_mg(prior.get("summary", {}), fresh, k),
+            "n_rows": int(prior.get("n_rows", 0)) + fresh_n,
+            "col": col,
+            "k": k,
+        }
+
+    art = fold_json(os.path.join(stats_dir, f"{name}__hh_{col}.json"), batch_id, fold)
+    return art["summary"], int(art["n_rows"])
 
 
 def load_heavy_hitters(stats_dir: str, name: str, col: str) -> tuple[dict, int]:
     """Read back a persisted hot-key sketch: (summary, n_rows). The
     max summary value feeds ``choose_join_strategy(hot_rows=...)`` the
     way ``hot_key_rows`` does from a live DataFrame."""
-    import json
-    import os
-
-    path = os.path.join(stats_dir, f"{name}__hh_{col}.json")
-    if not os.path.exists(path):
-        return {}, 0
-    with open(path) as f:
-        raw = json.load(f)
+    raw = read_json(os.path.join(stats_dir, f"{name}__hh_{col}.json")) or {}
     return raw.get("summary", {}), int(raw.get("n_rows", 0))
 
 
@@ -1541,38 +1431,21 @@ def incremental_sample(
 
     Replay-safe twice over: min-union is idempotent (re-folding the
     same batch cannot change the bottom-k), AND the applied-batch
-    record rides inside the same atomic write, keeping every
-    maintenance artifact on the one commit protocol (SCALING rule 21)."""
-    import json
-    import os
+    record rides inside the same atomic write (``commit.fold_json``)."""
 
-    path = os.path.join(stats_dir, f"{name}__smp_{val_col}.json")
-    meta: dict = {}
-    stored: list[list] = []
-    if os.path.exists(path):
-        with open(path) as f:
-            raw = json.load(f)
-        meta = raw.get("__meta__", {})
-        stored = raw.get("rows", [])
-    max_applied = _max_applied(meta)
-    if batch_id is not None and batch_id <= max_applied:
-        return stored
-    fresh = column_bottom_k_sample(batch_df, key_col, val_col, k)
-    seen = {r[0] for r in stored}
-    merged = sorted(
-        stored + [r for r in fresh if r[0] not in seen], key=lambda r: r[0]
-    )[:k]
-    out = {"rows": merged, "k": k, "key_col": key_col, "val_col": val_col}
-    if batch_id is not None:
-        out["__meta__"] = {"max_applied": batch_id}
-    elif meta:
-        out["__meta__"] = meta
-    os.makedirs(stats_dir, exist_ok=True)
-    tmp = f"{path}.__tmp__"
-    with open(tmp, "w") as f:
-        json.dump(out, f, indent=1, sort_keys=True)
-    os.replace(tmp, path)
-    return merged
+    def fold(prior: dict | None) -> dict:
+        stored = (prior or {}).get("rows", [])
+        fresh = column_bottom_k_sample(batch_df, key_col, val_col, k)
+        seen = {r[0] for r in stored}
+        merged = sorted(
+            stored + [r for r in fresh if r[0] not in seen], key=lambda r: r[0]
+        )[:k]
+        return {"rows": merged, "k": k, "key_col": key_col, "val_col": val_col}
+
+    art = fold_json(
+        os.path.join(stats_dir, f"{name}__smp_{val_col}.json"), batch_id, fold
+    )
+    return art.get("rows", [])
 
 
 def load_sample(stats_dir: str, name: str, val_col: str) -> list[list]:
@@ -1580,14 +1453,8 @@ def load_sample(stats_dir: str, name: str, val_col: str) -> list[list]:
     pairs); empty when absent. The ``estimated_range_rows(sample=...)``
     feed — consumers pass it the way they pass a histogram, behind the
     same ``table_stats``-style maintenance artifacts."""
-    import json
-    import os
-
-    path = os.path.join(stats_dir, f"{name}__smp_{val_col}.json")
-    if not os.path.exists(path):
-        return []
-    with open(path) as f:
-        return json.load(f).get("rows", [])
+    raw = read_json(os.path.join(stats_dir, f"{name}__smp_{val_col}.json")) or {}
+    return raw.get("rows", [])
 
 
 def sample_quantile(rows: list[list], q: float) -> float | None:
@@ -1670,54 +1537,32 @@ def incremental_cms(
     counters add, so after ANY number of batches the stored sketch
     equals a one-shot CMS over the union (pytest-pinned). Additive =
     NOT idempotent, so the applied-batch record rides inside the same
-    atomic os.replace as the fold (the incremental_analyze protocol —
-    SCALING rule 21)."""
-    import json
-    import os
+    atomic write as the fold (``commit.fold_json``). A stored sketch
+    with other ``d``/``w`` is refused: its counters would not line up."""
 
-    path = os.path.join(stats_dir, f"{name}__cms_{col}.json")
-    meta: dict = {}
-    counters: dict[str, int] = {}
-    n_rows = 0
-    if os.path.exists(path):
-        with open(path) as f:
-            raw = json.load(f)
-        meta = raw.get("__meta__", {})
-        counters = raw.get("counters", {})
-        n_rows = int(raw.get("n_rows", 0))
+    def check(raw: dict) -> None:
         if raw.get("d") != d or raw.get("w") != w:
             raise ValueError(
                 f"CMS knob mismatch: stored d={raw.get('d')} w={raw.get('w')}"
-                f" vs requested d={d} w={w}"  # provenance discipline
+                f" vs requested d={d} w={w}"
             )
-    max_applied = _max_applied(meta)
-    if batch_id is not None and batch_id <= max_applied:
-        return counters
-    fresh = column_cms(batch_df, col, d, w)
-    for k, n in fresh.items():
-        counters[k] = counters.get(k, 0) + n
-    n_rows += sum(fresh.values()) // d
-    out = {"counters": counters, "n_rows": n_rows, "col": col, "d": d, "w": w}
-    if batch_id is not None:
-        out["__meta__"] = {"max_applied": batch_id}
-    elif meta:
-        out["__meta__"] = meta
-    os.makedirs(stats_dir, exist_ok=True)
-    tmp = f"{path}.__tmp__"
-    with open(tmp, "w") as f:
-        json.dump(out, f, sort_keys=True)
-    os.replace(tmp, path)
-    return counters
+
+    def fold(prior: dict | None) -> dict:
+        prior = prior or {}
+        counters = prior.get("counters", {})
+        fresh = column_cms(batch_df, col, d, w)
+        for key, n in fresh.items():
+            counters[key] = counters.get(key, 0) + n
+        n_rows = int(prior.get("n_rows", 0)) + sum(fresh.values()) // d
+        return {"counters": counters, "n_rows": n_rows, "col": col, "d": d, "w": w}
+
+    art = fold_json(
+        os.path.join(stats_dir, f"{name}__cms_{col}.json"), batch_id, fold, check=check
+    )
+    return art["counters"]
 
 
 def load_cms(stats_dir: str, name: str, col: str) -> tuple[dict[str, int], int]:
     """Read back a persisted CMS: (counters, n_rows); empty when absent."""
-    import json
-    import os
-
-    path = os.path.join(stats_dir, f"{name}__cms_{col}.json")
-    if not os.path.exists(path):
-        return {}, 0
-    with open(path) as f:
-        raw = json.load(f)
+    raw = read_json(os.path.join(stats_dir, f"{name}__cms_{col}.json")) or {}
     return raw.get("counters", {}), int(raw.get("n_rows", 0))

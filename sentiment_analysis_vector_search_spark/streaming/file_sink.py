@@ -23,15 +23,65 @@ checkpoint dir lives on durable shared storage; partitionBy(lang) keeps
 reads prunable. Readers must go through ``read_file_sink`` (or any
 _spark_metadata-aware reader) so half-written files from a crashed batch
 are invisible.
+
+Every maintenance loop below runs through ``_drain``, the one
+``foreachBatch`` driver, and commits through ``commit.py``.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import cut
+from ..commit import applied_max, read_json, write_json
 from .stream_ops import _DOC_SCHEMA, _stream_confs
+
+BatchFn = Callable[[DataFrame, int], None]
+
+
+def _guarded(fn: BatchFn, record_path: str) -> BatchFn:
+    """Skip batches at or below the record's ``max_applied``; record a
+    batch (bounded, atomic) after ``fn`` returns."""
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_id <= applied_max(read_json(record_path)):
+            return  # replayed batch: already applied
+        fn(batch_df, batch_id)
+        write_json(record_path, {"max_applied": batch_id})
+
+    return run
+
+
+def _drain(
+    spark: SparkSession,
+    src: DataFrame,
+    checkpoint_dir: str,
+    fn: BatchFn,
+    record: str | None = None,
+) -> None:
+    """Run ``fn(batch_df, batch_id)`` over every micro-batch ``src`` has
+    available (``availableNow``) and return once the checkpointed source
+    is drained.
+
+    ``record`` names a replay record under ``checkpoint_dir`` for loops
+    whose effect cannot carry its own record (see ``_guarded``). It
+    makes an idempotent effect exactly-once; a non-idempotent effect is
+    at-least-once across a crash between the effect and the record."""
+    if record is not None:
+        fn = _guarded(fn, os.path.join(checkpoint_dir, record))
+    with _stream_confs(spark):
+        (
+            src.writeStream.foreachBatch(fn)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
 
 
 def stream_ingest_documents(
@@ -92,17 +142,13 @@ def stream_rollup_maintenance(
     merge_upsert rewrites just those partitions), so maintenance cost
     follows the batch's day-spread, not table size.
 
-    Exactly-once: the source checkpoint gives at-least-once batch
-    delivery, and a RECORDED-BATCH-ID guard (the canonical foreachBatch
-    idempotent-write pattern) makes the additive merge safe under
-    replay — adding a replayed batch into the prior state without the
-    guard would double-count, since the prior already contains it. The
-    aggregate state is sum/count-combinable so prior+batch recombines
-    exactly (decimal value sums).
+    Replays: the ``_rollup_commits.json`` record skips every batch
+    already merged, since adding a batch into a prior that contains it
+    would double-count. The merge is additive, not idempotent, so the
+    loop is at-least-once across a crash between the merge and the
+    record. The aggregate state is sum/count-combinable so prior+batch
+    recombines exactly (decimal value sums).
     """
-    import json
-    import os
-
     from ..catalog import normalize_event_ts, read_events_raw
     from ..sinks import merge_upsert
 
@@ -116,15 +162,8 @@ def stream_rollup_maintenance(
         .parquet(sf_dir)
     )
     ev = normalize_event_ts(src)
-    commits_path = os.path.join(checkpoint_dir, "_rollup_commits.json")
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        applied: list[int] = []
-        if os.path.exists(commits_path):
-            with open(commits_path) as f:
-                applied = json.load(f)
-        if batch_id in applied:
-            return  # replayed batch: already merged, skip (idempotence)
         day_agg = (
             batch_df.groupBy(
                 F.date_format("ts", "yyyy-MM-dd").alias("day"),
@@ -169,48 +208,36 @@ def stream_rollup_maintenance(
                 keys=["day", "event_type"],
                 partition_col="day",
             )
-        with open(commits_path, "w") as f:
-            json.dump(applied + [batch_id], f)
 
-    with _stream_confs(spark):
-        q = (
-            ev.writeStream.foreachBatch(upsert_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, ev, checkpoint_dir, upsert_batch, record="_rollup_commits.json")
 
 
 def _idempotent_append_dir(stage_dir: str, target_dir: str, batch_id: int) -> None:
     """Promote a STAGED parquet write into ``target_dir`` with
     batch-stamped deterministic file names (atomic ``os.replace`` each).
 
-    This is what upgrades the ingest loops' recorded-batch-id guard from
-    at-least-once to exactly-once (r5 advice): a crash can no longer leave
-    half-appended data that a replay would duplicate, because a replay
-    re-stages the SAME batch (frozen codebook + pinned stream shuffle
-    partitions → deterministic file count and contents) and re-replaces
-    the SAME destination names. Hive-partition subdirs (cell=N/...) are
+    This makes an append idempotent, so the ingest loops' replay record
+    is exactly-once: a crash can no longer leave half-appended data that
+    a replay would duplicate, because a replay re-stages the SAME batch
+    (deterministic file count and contents) and re-replaces the SAME
+    destination names. Hive-partition subdirs (cell=N/...) are
     preserved; only after every rename succeeds does the caller record
     the batch id.
 
-    Callers stage UNDER THE INDEX ROOT (``_stage_*`` dirs — the leading
+    Callers stage UNDER THE TARGET ROOT (``_stage_*`` dirs — the leading
     underscore keeps them invisible to Spark readers) so the renames are
     same-filesystem by construction: staging under the checkpoint dir
-    broke in the common production layout of local checkpoint +
-    shared-storage index, where every ``os.replace`` raises EXDEV
-    (r6 advice). A copy+fsync+replace fallback still guards the
-    unexpected cross-device case.
+    would break the common layout of local checkpoint + shared-storage
+    index, where every ``os.replace`` raises EXDEV. A
+    copy+fsync+replace fallback still guards the unexpected
+    cross-device case.
     """
-    import os
 
     def _promote(src: str, dst: str) -> None:
         try:
             os.replace(src, dst)
         except OSError as e:
             import errno
-            import shutil
 
             if e.errno != errno.EXDEV:
                 raise
@@ -237,6 +264,43 @@ def _idempotent_append_dir(stage_dir: str, target_dir: str, batch_id: int) -> No
             )
 
 
+def _stream_vector_ingest(
+    spark: SparkSession,
+    src_dir: str,
+    index_dir: str,
+    checkpoint_dir: str,
+    index_add: Callable[..., object],
+    name: str,
+    table: str,
+) -> None:
+    """The shared loop of the frozen-codebook vector ingests: each
+    micro-batch of ``embeddings*.parquet`` rows is staged by
+    ``index_add(..., stage_dir=...)``, promoted into ``index_dir/table``
+    by batch-stamped renames (``_idempotent_append_dir``), then recorded
+    in ``_{name}_commits.json``. A replay after a crash before the
+    record re-stages and re-replaces the same files: exactly-once."""
+    src = (
+        spark.readStream.schema(spark.read.parquet(src_dir).schema)
+        .option("pathGlobFilter", "embeddings*.parquet")
+        .parquet(src_dir)
+    )
+
+    def add_batch(batch_df: DataFrame, batch_id: int) -> None:
+        stage = os.path.join(index_dir, f"_stage_{name}_{batch_id}")
+        index_add(
+            spark,
+            index_dir,
+            batch_df.select(
+                "vec_id", F.col("embedding").cast("array<double>").alias("v")
+            ),
+            stage_dir=stage,
+        )
+        _idempotent_append_dir(stage, f"{index_dir}/{table}", batch_id)
+        shutil.rmtree(stage, ignore_errors=True)
+
+    _drain(spark, src, checkpoint_dir, add_batch, record=f"_{name}_commits.json")
+
+
 def stream_ivf_ingest(
     spark: SparkSession,
     src_dir: str,
@@ -244,7 +308,7 @@ def stream_ivf_ingest(
     checkpoint_dir: str,
 ) -> None:
     """Continuously-maintained vector index: streaming embeddings →
-    ``foreachBatch`` → ``ivf_index_add`` against the frozen codebook.
+    ``ivf_index_add`` against the frozen codebook.
 
     The serving-side complement of the batch index: the reference rebuilds
     its embedding matrix whenever reviews change (Context_analyzer fits in
@@ -255,60 +319,13 @@ def stream_ivf_ingest(
     cost tracks the batch, not the corpus. Bootstrap the codebook first
     (``build_ivf_index`` over the seed corpus, or copy one in); re-train
     it only when drift warrants — the classic IVF operating procedure.
-
-    Exactly-once: the source checkpoint replays whole micro-batches, and
-    since ``ivf_index_add`` APPENDS into cell partitions a replay would
-    duplicate vectors — the recorded-batch-id guard (same pattern as
-    ``stream_rollup_maintenance``) skips replayed batches, and (r6) the
-    staged batch-stamped-rename append closes the remaining crash window
-    between the append and the commit record.
+    Exactly-once via ``_stream_vector_ingest``.
     """
-    import json
-    import os
-
     from ..operators.similarity import ivf_index_add
 
-    src_schema = spark.read.parquet(src_dir).schema
-    src = (
-        spark.readStream.schema(src_schema)
-        .option("pathGlobFilter", "embeddings*.parquet")
-        .parquet(src_dir)
+    _stream_vector_ingest(
+        spark, src_dir, index_dir, checkpoint_dir, ivf_index_add, "ivf", "assignments"
     )
-    commits_path = os.path.join(checkpoint_dir, "_ivf_commits.json")
-
-    def add_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
-        applied: list[int] = []
-        if os.path.exists(commits_path):
-            with open(commits_path) as f:
-                applied = json.load(f)
-        if batch_id in applied:
-            return  # replayed batch is already in the index
-        # stage → batch-stamped atomic renames → record: exactly-once
-        # even across a crash mid-append (see _idempotent_append_dir).
-        stage = os.path.join(index_dir, f"_stage_ivf_{batch_id}")
-        ivf_index_add(
-            spark,
-            index_dir,
-            batch_df.select(
-                "vec_id", F.col("embedding").cast("array<double>").alias("v")
-            ),
-            stage_dir=stage,
-        )
-        _idempotent_append_dir(stage, f"{index_dir}/assignments", batch_id)
-        with open(commits_path, "w") as f:
-            json.dump(applied + [batch_id], f)
-        shutil.rmtree(stage, ignore_errors=True)
-
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(add_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
 
 def stream_pq_ingest(
@@ -318,8 +335,8 @@ def stream_pq_ingest(
     checkpoint_dir: str,
 ) -> None:
     """Continuously-maintained COMPRESSED vector index: streaming
-    embedding batches → ``foreachBatch`` → ``pq_index_add`` against the
-    frozen per-subspace codebooks.
+    embedding batches → ``pq_index_add`` against the frozen per-subspace
+    codebooks.
 
     The PQ twin of ``stream_ivf_ingest``: the store being maintained here
     is the codes table (no raw vectors — the 8-64 bytes/vector
@@ -327,57 +344,13 @@ def stream_pq_ingest(
     so ingest cost is one broadcast-codebook encode pass per batch.
     Frozen codebooks make each batch's codes reproducible → the streamed
     index stays IDENTICAL to a full rebuild (pinned by pytest).
-    Exactly-once (r6): recorded-batch-id guard PLUS the staged
-    idempotent append — codes land via batch-stamped atomic renames, so
-    a crash between the append and the commit record no longer leaves
-    duplicates for the replay to compound (pytest-pinned replay test).
+    Exactly-once via ``_stream_vector_ingest``.
     """
-    import json
-    import os
-
     from ..operators.similarity2 import pq_index_add
 
-    src_schema = spark.read.parquet(src_dir).schema
-    src = (
-        spark.readStream.schema(src_schema)
-        .option("pathGlobFilter", "embeddings*.parquet")
-        .parquet(src_dir)
+    _stream_vector_ingest(
+        spark, src_dir, index_dir, checkpoint_dir, pq_index_add, "pq", "codes"
     )
-    commits_path = os.path.join(checkpoint_dir, "_pq_commits.json")
-
-    def add_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
-        applied: list[int] = []
-        if os.path.exists(commits_path):
-            with open(commits_path) as f:
-                applied = json.load(f)
-        if batch_id in applied:
-            return  # replayed batch is already in the index
-        # stage → batch-stamped atomic renames → record: exactly-once
-        # even across a crash mid-append (see _idempotent_append_dir).
-        stage = os.path.join(index_dir, f"_stage_pq_{batch_id}")
-        pq_index_add(
-            spark,
-            index_dir,
-            batch_df.select(
-                "vec_id", F.col("embedding").cast("array<double>").alias("v")
-            ),
-            stage_dir=stage,
-        )
-        _idempotent_append_dir(stage, f"{index_dir}/codes", batch_id)
-        with open(commits_path, "w") as f:
-            json.dump(applied + [batch_id], f)
-        shutil.rmtree(stage, ignore_errors=True)
-
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(add_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
 
 def stream_ivfpq_ingest(
@@ -387,60 +360,21 @@ def stream_ivfpq_ingest(
     checkpoint_dir: str,
 ) -> None:
     """Continuously-maintained IVFADC index: streaming embedding batches
-    → ``foreachBatch`` → ``ivfpq_index_add`` against BOTH frozen
-    codebooks (coarse cells + PQ subspaces).
+    → ``ivfpq_index_add`` against BOTH frozen codebooks (coarse cells +
+    PQ subspaces).
 
     The composed twin of ``stream_ivf_ingest``/``stream_pq_ingest``: the
     maintained store is the cell-partitioned CODES table, so each batch
     pays one broadcast assign + one broadcast encode and the serving
     reader keeps its static cell pruning. Frozen codebooks make every
     batch reproducible → the streamed index stays IDENTICAL to a full
-    rebuild (pinned by pytest). Exactly-once: recorded-batch-id guard
-    plus the staged batch-stamped-rename append, the shared protocol."""
-    import json
-    import os
-
+    rebuild (pinned by pytest). Exactly-once via
+    ``_stream_vector_ingest``."""
     from ..operators.ivfpq import ivfpq_index_add
 
-    src_schema = spark.read.parquet(src_dir).schema
-    src = (
-        spark.readStream.schema(src_schema)
-        .option("pathGlobFilter", "embeddings*.parquet")
-        .parquet(src_dir)
+    _stream_vector_ingest(
+        spark, src_dir, index_dir, checkpoint_dir, ivfpq_index_add, "ivfpq", "codes"
     )
-    commits_path = os.path.join(checkpoint_dir, "_ivfpq_commits.json")
-
-    def add_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
-        applied: list[int] = []
-        if os.path.exists(commits_path):
-            with open(commits_path) as f:
-                applied = json.load(f)
-        if batch_id in applied:
-            return  # replayed batch is already in the index
-        stage = os.path.join(index_dir, f"_stage_ivfpq_{batch_id}")
-        ivfpq_index_add(
-            spark,
-            index_dir,
-            batch_df.select(
-                "vec_id", F.col("embedding").cast("array<double>").alias("v")
-            ),
-            stage_dir=stage,
-        )
-        _idempotent_append_dir(stage, f"{index_dir}/codes", batch_id)
-        with open(commits_path, "w") as f:
-            json.dump(applied + [batch_id], f)
-        shutil.rmtree(stage, ignore_errors=True)
-
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(add_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
 
 def stream_ingest_dedup(
@@ -463,13 +397,12 @@ def stream_ingest_dedup(
     corpus size. Within-batch duplicates are resolved first (exact
     min-doc_id per content hash), then history decides.
 
-    Exactly-once: foreachBatch with a recorded-batch-id guard (as the
-    rollup/IVF loops) — a replayed batch neither re-appends survivors
-    nor re-inserts signatures.
+    Every source file already landed arrives in one micro-batch. The
+    ``_ingest_commits.json`` record skips replayed batches, so a replay
+    neither re-appends survivors nor re-inserts signatures. The append
+    followed by the index add is not idempotent, so the loop is
+    at-least-once across a crash between those effects and the record.
     """
-    import json
-    import os
-
     from ..functions.hashing import md5_long
     from ..operators.dedup_index import dedup_index_add, dedup_index_check
 
@@ -481,15 +414,8 @@ def stream_ingest_dedup(
         .option("pathGlobFilter", "documents*.parquet")
         .parquet(src_dir)
     )
-    commits_path = os.path.join(checkpoint_dir, "_ingest_commits.json")
 
     def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        applied: list[int] = []
-        if os.path.exists(commits_path):
-            with open(commits_path) as f:
-                applied = json.load(f)
-        if batch_id in applied:
-            return
         # within-batch exact dedup: keep min doc_id per content hash
         h = batch_df.withColumn("_h", md5_long(F.col("text")))
         keep_ids = h.groupBy("_h").agg(F.min("doc_id").alias("doc_id"))
@@ -514,18 +440,8 @@ def stream_ingest_dedup(
             from ..operators.dedup_index import build_dedup_index
 
             build_dedup_index(spark, survivors, index_dir)
-        with open(commits_path, "w") as f:
-            json.dump(applied + [batch_id], f)
 
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(gate_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .option("maxFilesPerTrigger", "1")  # one source file per batch
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, src, checkpoint_dir, gate_batch, record="_ingest_commits.json")
 
 
 def stream_stats_maintenance(
@@ -537,20 +453,18 @@ def stream_stats_maintenance(
     kmv_k: int = 256,
 ) -> None:
     """Continuously-maintained table statistics: streaming documents →
-    ``foreachBatch`` → ``stats.incremental_analyze`` (r8). Each
+    ``stats.incremental_analyze``. Each
     micro-batch scans ONLY its own rows and folds counts/min-max/KMV
     sketches into the persisted JSON the broadcast / join-strategy
     gates read (``load_table_stats`` surface) — the ANALYZE never
     re-reads the table, which is the whole scalable-maintenance story.
 
-    Exactly-once, with NO crash window (r8 advice, medium): the stats
-    merge is ADDITIVE (counts sum, sketches union), so a replayed batch
-    would double-count — and a commit record written AFTER the fold
-    (the old separate commits file) left exactly that window. The
-    applied-batch record now rides inside the stats JSON itself
-    (``incremental_analyze(batch_id=...)``): fold and record are one
-    os.replace, so a crash either committed the batch fully or not at
-    all, and the replay check reads the same file it would update."""
+    Exactly-once with no crash window: the stats merge is ADDITIVE
+    (counts sum, sketches union), so a replayed batch would double-count
+    under a record written after the fold. The applied-batch record
+    rides inside the stats JSON itself (``incremental_analyze(batch_id=
+    ...)`` → ``commit.fold_json``): fold and record are one atomic
+    write, and the replay check reads the same file it would update."""
     from ..stats import incremental_analyze
 
     src = (
@@ -565,14 +479,7 @@ def stream_stats_maintenance(
             spark, stats_dir, table_name, batch_df, k=kmv_k, batch_id=batch_id
         )
 
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, src, checkpoint_dir, fold_batch)
 
 
 def stream_emb_dedup_ingest(
@@ -589,11 +496,11 @@ def stream_emb_dedup_ingest(
     index (``emb_index_check`` — O(batch + collisions)), survivors land
     in the parquet table AND join the index. Within-batch dups are
     resolved first (min vec_id per batch-internal near-dup pair via the
-    batch candidate generator), then history decides. Exactly-once via
-    the recorded-batch-id guard, as every foreachBatch loop here."""
-    import json
-    import os
-
+    batch candidate generator), then history decides. The
+    ``_emb_ingest_commits.json`` record skips replayed batches; the
+    append followed by the index add is not idempotent, so the loop is
+    at-least-once across a crash between those effects and the
+    record."""
     from ..operators.dedup import emb_candidate_pairs
     from ..operators.emb_index import (
         build_emb_index,
@@ -609,7 +516,7 @@ def stream_emb_dedup_ingest(
         # the candidate generators (emb_candidate_pairs / emb_index_check)
         # already filter at the module threshold BEFORE this loop's
         # re-filter, so a looser value would silently behave as _EMB_T —
-        # refuse a parameter the pipeline cannot honor (r8 advice, low)
+        # refuse a parameter the pipeline cannot honor
         raise ValueError(
             f"cosine_t={cosine_t} is below the candidate generators' "
             f"threshold {_EMB_T}; pairs under {_EMB_T} are never generated, "
@@ -622,15 +529,8 @@ def stream_emb_dedup_ingest(
         .option("pathGlobFilter", "embeddings*.parquet")
         .parquet(src_dir)
     )
-    commits_path = os.path.join(checkpoint_dir, "_emb_ingest_commits.json")
 
     def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        applied: list[int] = []
-        if os.path.exists(commits_path):
-            with open(commits_path) as f:
-                applied = json.load(f)
-        if batch_id in applied:
-            return
         # cut: multi-consumer — within-batch pairs, index check, gate, add
         batch = cut(
             batch_df.select("vec_id", F.col("embedding").cast("array<double>").alias("v")),
@@ -662,17 +562,8 @@ def stream_emb_dedup_ingest(
             emb_index_add(spark, survivors, index_dir)
         else:
             build_emb_index(spark, survivors, index_dir)
-        with open(commits_path, "w") as f:
-            json.dump(applied + [batch_id], f)
 
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(gate_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, src, checkpoint_dir, gate_batch, record="_emb_ingest_commits.json")
 
 
 def stream_bloom_maintenance(
@@ -690,14 +581,12 @@ def stream_bloom_maintenance(
     lookups stay file-pruned as the table grows, and maintenance cost is
     O(batch), never a table rescan.
 
-    Exactly-once: the table append uses the recorded-batch-id guard
-    (replayed batches would otherwise append duplicate files);
-    ``bloom_index_add`` itself is idempotent by construction — it
-    indexes the file-listing DIFF, so a crash between append and add is
-    healed by the next batch's add."""
-    import json
-    import os
-
+    Exactly-once: the batch is staged and promoted into ``table_dir``
+    under batch-stamped names (``_idempotent_append_dir``), so a replay
+    re-replaces the same files instead of appending duplicates, and the
+    ``_bloom_commits.json`` record skips batches already applied.
+    ``bloom_index_add`` is idempotent by construction — it indexes the
+    file-listing DIFF."""
     from ..bloom import bloom_index_add, build_bloom_index
 
     src = (
@@ -706,31 +595,18 @@ def stream_bloom_maintenance(
         .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
     )
-    commits_path = os.path.join(checkpoint_dir, "_bloom_commits.json")
 
     def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        applied: list[int] = []
-        if os.path.exists(commits_path):
-            with open(commits_path) as f:
-                applied = json.load(f)
-        if batch_id in applied:
-            return  # replayed batch: files already appended + indexed
-        batch_df.write.mode("append").parquet(table_dir)
-        with open(commits_path, "w") as f:
-            json.dump(applied + [batch_id], f)
+        stage = os.path.join(table_dir, f"_stage_bloom_{batch_id}")
+        batch_df.write.mode("overwrite").parquet(stage)
+        _idempotent_append_dir(stage, table_dir, batch_id)
+        shutil.rmtree(stage, ignore_errors=True)
         if not os.path.exists(os.path.join(index_dir, "manifest.json")):
             build_bloom_index(spark, table_dir, key_col, index_dir)
         else:
             bloom_index_add(spark, table_dir, index_dir)
 
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, src, checkpoint_dir, fold_batch, record="_bloom_commits.json")
 
 
 def stream_text_index_maintenance(
@@ -746,17 +622,13 @@ def stream_text_index_maintenance(
     a posting's state (tf, dl) depends only on its own document, queries
     after any number of batches are byte-identical to a full rebuild.
 
-    Exactly-once, with NO crash window (r8 advice, medium): the batch's
-    postings land via stage -> batch-stamped atomic renames (the
-    `_idempotent_append_dir` protocol the IVF/PQ loops use — a replay
-    re-stages the same deterministic files and re-replaces the same
-    names), and the counter bump + applied-batch record travel in ONE
-    manifest os.replace. The old shape (append postings, bump counters,
-    THEN write a separate commits file) replayed the whole batch on a
-    crash in between, permanently inflating tf/df/N."""
-    import os
-    import shutil
-
+    Exactly-once with no crash window: the batch's postings land via
+    stage -> batch-stamped atomic renames (``_idempotent_append_dir`` —
+    a replay re-stages the same deterministic files and re-replaces the
+    same names), and the counter bump + applied-batch record travel in
+    ONE manifest write. A separate record written after the counter
+    bump would replay the batch on a crash in between, permanently
+    inflating tf/df/N."""
     from ..operators.text_index import _read_manifest, _write_manifest, text_index_add
 
     src = (
@@ -773,7 +645,7 @@ def stream_text_index_maintenance(
             os.makedirs(index_dir, exist_ok=True)
             _write_manifest(index_dir, 0, 0, max_applied=-1)
         man = _read_manifest(index_dir)
-        if batch_id <= man.get("max_applied", -1):
+        if batch_id <= applied_max(man):
             return  # replayed batch: postings + counters already committed
         stage = os.path.join(index_dir, f"_stage_text_{batch_id}")
         dn, ds = text_index_add(spark, batch_df, index_dir, stage_dir=stage)
@@ -786,14 +658,7 @@ def stream_text_index_maintenance(
         )
         shutil.rmtree(stage, ignore_errors=True)
 
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, src, checkpoint_dir, fold_batch)
 
 
 def stream_hot_keys_maintenance(
@@ -806,7 +671,7 @@ def stream_hot_keys_maintenance(
     k: int = 64,
 ) -> None:
     """Continuously-maintained hot-key (Misra-Gries) skew signal:
-    streaming files → ``foreachBatch`` → ``stats.incremental_heavy_hitters``.
+    streaming files → ``stats.incremental_heavy_hitters``.
     Each micro-batch is scanned once, shuffle-free (per-partition MG
     summaries, bounded driver metadata), and folded into the persisted
     sketch that feeds ``choose_join_strategy(hot_rows=...)`` — so the
@@ -815,8 +680,8 @@ def stream_hot_keys_maintenance(
     ``stream_stats_maintenance``).
 
     Exactly-once with NO crash window: MG counts are additive, so the
-    applied-batch record rides inside the sketch JSON's single
-    os.replace (fold and record commit together, r9 protocol)."""
+    applied-batch record rides inside the sketch JSON's single atomic
+    write (``commit.fold_json``: fold and record commit together)."""
     from ..stats import incremental_heavy_hitters
 
     src = (
@@ -831,14 +696,7 @@ def stream_hot_keys_maintenance(
             stats_dir, table_name, col, batch_df, k=k, batch_id=batch_id
         )
 
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, src, checkpoint_dir, fold_batch)
 
 
 def stream_cdc_apply(
@@ -860,12 +718,12 @@ def stream_cdc_apply(
     per identical batch — last-wins keyed on ``_seq``, upserts replace
     the same rows, deletes of absent keys are no-ops — and the
     checkpointed file source re-delivers a crashed batch byte-identical.
-    A replay therefore converges to the same table state (the
-    "idempotent effect" leg of the r9 atomic-commit protocol; no
-    effect-then-record crash window exists because there is no record)."""
+    A replay therefore converges to the same table state (no
+    effect-then-record crash window exists because there is no
+    record)."""
     from ..sinks import apply_cdc
 
-    # probe under the SAME glob the stream reads (r9 advice): a stray
+    # probe under the SAME glob the stream reads: a stray
     # non-CDC parquet in the directory must not poison the inferred
     # schema, and an empty-but-existing dir should fail on the glob
     # ("no files matched"), not on a misleading inference error.
@@ -887,14 +745,7 @@ def stream_cdc_apply(
             partition_col=partition_col,
         )
 
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, src, checkpoint_dir, apply_batch)
 
 
 def stream_sample_maintenance(
@@ -908,7 +759,7 @@ def stream_sample_maintenance(
     k: int = 256,
 ) -> None:
     """Continuously-maintained deterministic row sample: streaming files
-    → ``foreachBatch`` → ``stats.incremental_sample``. The stored
+    → ``stats.incremental_sample``. The stored
     bottom-k-hash sample is byte-identical to a one-shot bottom-k over
     everything ingested so far (min-union mergeability), so quantile
     estimates (``stats.sample_quantile``) serve from k rows of driver
@@ -917,7 +768,7 @@ def stream_sample_maintenance(
     job over the batch's rows.
 
     Replay-safe twice over (idempotent min-union + the applied-batch
-    record inside the artifact's single atomic write; SCALING rule 21)."""
+    record inside the artifact's single atomic write)."""
     from ..stats import incremental_sample
 
     src = (
@@ -933,14 +784,7 @@ def stream_sample_maintenance(
             k=k, batch_id=batch_id,
         )
 
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, src, checkpoint_dir, fold_batch)
 
 
 def stream_cms_maintenance(
@@ -954,7 +798,7 @@ def stream_cms_maintenance(
     w: int = 512,
 ) -> None:
     """Continuously-maintained Count-Min frequency sketch: streaming
-    files → ``foreachBatch`` → ``stats.incremental_cms``. Each
+    files → ``stats.incremental_cms``. Each
     micro-batch is scanned once (map-side-combinable d x w counter
     build, <= 2,048 rows to the driver) and folded into the persisted
     sketch serving point-frequency upper bounds without re-reading the
@@ -964,7 +808,7 @@ def stream_cms_maintenance(
 
     Exactly-once with NO crash window: CMS counters are additive, so
     the applied-batch record rides inside the sketch JSON's single
-    os.replace (fold and record commit together, r9 protocol)."""
+    atomic write (``commit.fold_json``)."""
     from ..stats import incremental_cms
 
     src = (
@@ -979,14 +823,7 @@ def stream_cms_maintenance(
             stats_dir, table_name, col, batch_df, d=d, w=w, batch_id=batch_id
         )
 
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, src, checkpoint_dir, fold_batch)
 
 
 def stream_histogram_maintenance(
@@ -1001,9 +838,8 @@ def stream_histogram_maintenance(
     group_col: str | None = None,
 ) -> None:
     """Continuously-maintained fixed-width histogram of ``events.col``:
-    streaming files → ``foreachBatch`` → ``stats.incremental_histogram``
-    — the maintenance leg of q_value_hist_quantiles' mergeable quantile
-    summary (r12). Each micro-batch is scanned once (one partial-agg
+    streaming files → ``stats.incremental_histogram`` — the maintenance
+    leg of q_value_hist_quantiles' mergeable quantile summary. Each micro-batch is scanned once (one partial-agg
     pass, <= bins rows to the driver) and its counts ADD into the
     persisted artifact, so interpolated quantiles are always current
     from B integers of driver metadata without rescanning the table —
@@ -1012,10 +848,10 @@ def stream_histogram_maintenance(
 
     Exactly-once with no crash window: counts are additive, so the
     bounded ``max_applied`` record rides inside the artifact JSON's
-    single os.replace (the incremental_cms protocol, SCALING rule 35).
+    single atomic write (``commit.fold_json``).
 
-    ``offset`` shifts the support (stats-derived knobs, r12 verdict #4);
-    ``group_col`` maintains the GROUPED artifact instead (r13 — per-group
+    ``offset`` shifts the support (for stats-derived knobs);
+    ``group_col`` maintains the GROUPED artifact instead (per-group
     counts at (group, bin) grain, same protocol, same additivity)."""
     from .. import stats as st
     from ..catalog import read_events_raw
@@ -1044,14 +880,7 @@ def stream_histogram_maintenance(
                 bins=b, batch_id=batch_id, offset=offset,
             )
 
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, src, checkpoint_dir, fold_batch)
 
 
 def stream_checksum_maintenance(
@@ -1062,19 +891,16 @@ def stream_checksum_maintenance(
     table_name: str = "documents",
 ) -> None:
     """Continuously-maintained table checksum: streaming files →
-    ``foreachBatch`` → ``operators.dq.incremental_checksum``. Each
-    micro-batch is scanned once (one partial-agg digest pass, two
-    scalars to the driver) and folded into the persisted manifest, so
-    the migration-validation digest of everything ingested is always
-    current WITHOUT re-reading the table — the fifth maintained
-    artifact next to KMV / MG / bottom-k / CMS, closing the r10 verdict
-    #6 loop (shard checksums fold incrementally like the other
-    maintained artifacts).
+    ``operators.dq.incremental_checksum``. Each micro-batch is scanned
+    once (one partial-agg digest pass, two scalars to the driver) and
+    folded into the persisted manifest, so the migration-validation
+    digest of everything ingested is always current WITHOUT re-reading
+    the table — shard checksums fold incrementally like the other
+    maintained artifacts (KMV / MG / bottom-k / CMS).
 
     Exactly-once with NO crash window: the digest and row count are
     additive, so the applied-batch record rides inside the manifest
-    JSON's single os.replace (fold and record commit together, the
-    incremental_cms protocol)."""
+    JSON's single atomic write (``commit.fold_json``)."""
     from ..operators.dq import incremental_checksum
 
     src = (
@@ -1088,21 +914,14 @@ def stream_checksum_maintenance(
         # Empty micro-batches fold to (0, 0) safely since checksum_agg
         # coalesces its modular sum, but skipping them entirely matches
         # the other maintenance streams and saves a no-op Spark job per
-        # zero-row shard (r11 advice, medium).
+        # zero-row shard.
         if batch_df.isEmpty():
             return
         incremental_checksum(
             manifest_dir, table_name, batch_df, batch_id=batch_id
         )
 
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, src, checkpoint_dir, fold_batch)
 
 
 def check_scd_meta(scd_dir: str, n_buckets: int) -> None:
@@ -1111,18 +930,14 @@ def check_scd_meta(scd_dir: str, n_buckets: int) -> None:
     ``bucket = pmod(user_id, n_buckets)`` decides which directory holds
     a user's history; an apply run with a different ``n_buckets`` than
     the build would look for open rows in the wrong directories and
-    silently duplicate history (r10 advice, low). First writer records
-    the dimension (atomic os.replace of ``_scd_meta.json`` — the
-    underscore name is invisible to parquet readers); every later
-    writer fails fast on a mismatch. A pre-existing dimension with no
-    meta (built before this check) adopts the caller's value."""
-    import json
-    import os
-
+    silently duplicate history. First writer records the dimension
+    (atomic write of ``_scd_meta.json`` — the underscore name is
+    invisible to parquet readers); every later writer fails fast on a
+    mismatch. A pre-existing dimension with no meta (built before this
+    check) adopts the caller's value."""
     meta_path = os.path.join(scd_dir.rstrip("/"), "_scd_meta.json")
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            meta = json.load(fh)
+    meta = read_json(meta_path)
+    if meta is not None:
         if int(meta["n_buckets"]) != int(n_buckets):
             raise ValueError(
                 f"SCD2 dimension at {scd_dir} was built with "
@@ -1131,11 +946,7 @@ def check_scd_meta(scd_dir: str, n_buckets: int) -> None:
                 "rebuild the dimension"
             )
         return
-    os.makedirs(scd_dir.rstrip("/"), exist_ok=True)
-    tmp = meta_path + ".__tmp__"
-    with open(tmp, "w") as fh:
-        json.dump({"n_buckets": int(n_buckets)}, fh)
-    os.replace(tmp, meta_path)
+    write_json(meta_path, {"n_buckets": int(n_buckets)})
 
 
 def stream_scd2_maintenance(
@@ -1146,7 +957,7 @@ def stream_scd2_maintenance(
     n_buckets: int = 8,
 ) -> None:
     """Continuously-maintained SCD type-2 dimension: event batch files →
-    ``foreachBatch`` → merge into the persisted validity-interval table
+    merge into the persisted validity-interval table
     (``operators.scd.scd2_from_events`` semantics, incrementally).
 
     Per batch: the batch's own SCD2 runs are computed with the same
@@ -1171,22 +982,18 @@ def stream_scd2_maintenance(
     record INSIDE the same atomic directory swap — a crashed batch
     re-delivers byte-identical (checkpointed file source) and skips the
     buckets whose swap already landed, applying only the missing ones
-    (per-bucket exactly-once; SCALING rule 21's record-inside-artifact
-    leg, per partition). The record stores only the MAX applied batch id
-    (file-source batch ids are monotone, so "applied" == "<= max") —
-    bounded state on an unbounded stream; legacy list-form records read
-    as their max. The swap itself is two renames, so it is made
-    crash-recoverable (r10 advice, medium): the displaced directory gets
+    (per-bucket exactly-once: the record rides inside the artifact it
+    guards). The record is the bounded ``{"max_applied": N}`` form, read
+    by ``commit.applied_max`` (which also reads legacy list records).
+    The swap itself is two renames, so it is made crash-recoverable:
+    the displaced directory gets
     the DETERMINISTIC name ``bucket=N__old`` and ``_recover_swaps``
     runs before every batch — a bucket=N__old with no bucket=N means
     the crash hit between the renames (restore it); with both present
     the second rename landed (drop the leftover). A ``_scd_meta.json``
     at the table root records n_buckets at first write; a later apply
     with a different --buckets fails fast instead of silently merging
-    against a mismatched pmod layout (r10 advice, low)."""
-    import json
-    import os
-    import shutil
+    against a mismatched pmod layout."""
     import uuid as _uuid
 
     from pyspark.sql import Window as W
@@ -1208,18 +1015,10 @@ def stream_scd2_maintenance(
     cols = ["user_id", "state", "valid_from", "valid_to", "is_current"]
     check_scd_meta(base, n_buckets)
 
-    def _bucket_max(bdir: str) -> int:
-        """Highest batch id applied to this bucket (-1 if none). Reads
-        the bounded {"max_applied": N} record; legacy list records
-        (pre-r11) collapse to their max."""
-        p = os.path.join(bdir, "_applied.json")
-        if os.path.exists(p):
-            with open(p) as fh:
-                rec = json.load(fh)
-            if isinstance(rec, list):
-                return max(rec) if rec else -1
-            return int(rec["max_applied"])
-        return -1
+    def _bucket_max(b: int) -> int:
+        """Highest batch id applied to bucket ``b`` (-1 if none)."""
+        rec = read_json(os.path.join(base, f"bucket={b}", "_applied.json"))
+        return applied_max(rec)
 
     def _recover_swaps() -> None:
         """Repair any bucket directory swap a crash left half-done."""
@@ -1249,7 +1048,7 @@ def stream_scd2_maintenance(
         todo = [
             b
             for b in affected
-            if batch_id > _bucket_max(os.path.join(base, f"bucket={b}"))
+            if batch_id > _bucket_max(b)
         ]
         if not todo:
             return  # full replay: every bucket already recorded this batch
@@ -1364,9 +1163,10 @@ def stream_scd2_maintenance(
                 # but guard anyway
                 os.makedirs(new_dir, exist_ok=True)
             # the batch-id record rides INSIDE the directory swap
-            prior = _bucket_max(dst) if os.path.isdir(dst) else -1
-            with open(os.path.join(new_dir, "_applied.json"), "w") as fh:
-                json.dump({"max_applied": max(prior, batch_id)}, fh)
+            write_json(
+                os.path.join(new_dir, "_applied.json"),
+                {"max_applied": max(_bucket_max(b), batch_id)},
+            )
             # Deterministic old-dir name so a crash between the two
             # renames is repairable by _recover_swaps on the next batch.
             old_dir = f"{dst}__old"
@@ -1384,11 +1184,4 @@ def stream_scd2_maintenance(
         shutil.rmtree(tmp, ignore_errors=True)
 
     _recover_swaps()  # stream start: heal even if no batch fires
-    with _stream_confs(spark):
-        q = (
-            src.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, src, checkpoint_dir, apply_batch)

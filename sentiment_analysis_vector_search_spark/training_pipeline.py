@@ -51,7 +51,6 @@ stages — the checkpointing a multi-hour run wants anyway.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
@@ -60,6 +59,7 @@ from pyspark.sql import functions as F
 
 from . import catalog
 from .catalog import cut, table
+from .commit import read_json, write_json
 
 STAGES = (
     "gate",
@@ -77,19 +77,12 @@ def _manifest_path(out_root: str) -> str:
 
 
 def _load_manifest(out_root: str) -> dict:
-    p = _manifest_path(out_root)
-    if os.path.exists(p):
-        with open(p) as f:
-            return json.load(f)
-    return {}
+    return read_json(_manifest_path(out_root)) or {}
 
 
 def _mark(out_root: str, manifest: dict, stage: str, entry: dict) -> None:
     manifest[stage] = {**entry, "done": True}
-    tmp = _manifest_path(out_root) + ".__tmp__"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, _manifest_path(out_root))
+    write_json(_manifest_path(out_root), manifest)
 
 
 def _write_docs(docs: DataFrame, stage_dir: str) -> int:

@@ -163,6 +163,19 @@ def test_stream_bloom_maintenance(spark, sf_dir, tmp_path):
     assert spark.read.parquet(table_dir).count() == docs.count()
     assert spark.read.parquet(f"{index_dir}/files.parquet").count() == n_idx
 
+    # crash replay: with Spark's last commit entry and the loop's record
+    # both gone, Spark re-runs its last batch and the loop re-applies it;
+    # the staged append re-replaces the same files instead of appending
+    last = max(int(n) for n in os.listdir(f"{ck}/commits") if n.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(f"{ck}/commits/{name}"):
+            os.remove(f"{ck}/commits/{name}")
+    os.remove(f"{ck}/_bloom_commits.json")
+    stream_bloom_maintenance(spark, src, table_dir, index_dir, ck)
+    assert os.path.exists(f"{ck}/commits/{last}")
+    assert spark.read.parquet(table_dir).count() == docs.count()
+    assert spark.read.parquet(f"{index_dir}/files.parquet").count() == n_idx
+
 
 def test_percent_encoded_filename_roundtrip(spark, sf_dir, tmp_path):
     """Files with URI-escaping characters in the name (spaces -> %20 in

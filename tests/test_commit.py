@@ -1,0 +1,156 @@
+"""commit.py: the package's one commit path for maintained artifacts.
+
+Covers the atomic JSON write, the one reader of every replay-record
+form, the fold-with-record primitive, the resume of a streaming loop
+from an older list-form record, and the rule that no other module
+writes JSON or drives ``foreachBatch``.
+"""
+
+from __future__ import annotations
+
+import ast
+import os
+import shutil
+from pathlib import Path
+
+import pytest
+from pyspark.sql import functions as F
+
+from sentiment_analysis_vector_search_spark import commit
+from sentiment_analysis_vector_search_spark.commit import (
+    applied_max,
+    fold_json,
+    read_json,
+    write_json,
+)
+
+PKG = Path(__file__).resolve().parents[1] / "sentiment_analysis_vector_search_spark"
+
+
+def test_failed_replace_keeps_previous_file(tmp_path, monkeypatch):
+    path = str(tmp_path / "art.json")
+    write_json(path, {"n": 1})
+
+    def crash(src, dst):
+        raise OSError("simulated crash before the rename")
+
+    monkeypatch.setattr(commit.os, "replace", crash)
+    with pytest.raises(OSError):
+        write_json(path, {"n": 2})
+    monkeypatch.undo()
+    assert read_json(path) == {"n": 1}
+
+
+def test_applied_max_reads_every_record_form():
+    assert applied_max({"max_applied": 4}) == 4
+    assert applied_max([0, 3, 1]) == 3  # list-form _*_commits.json / _applied.json
+    assert applied_max({"applied_batch_ids": [2, 5]}) == 5
+    for empty in (None, [], {}, {"applied_batch_ids": []}):
+        assert applied_max(empty) == -1
+
+
+def test_fold_json_replay_never_calls_fold(tmp_path):
+    path = str(tmp_path / "sketch.json")
+
+    def add(k):
+        return lambda prior: {"n": (prior or {"n": 0})["n"] + k}
+
+    def boom(prior):
+        raise AssertionError("fold called for a replayed batch")
+
+    assert fold_json(path, 0, add(1)) == {"n": 1}
+    assert fold_json(path, 1, add(2)) == {"n": 3}
+    for replay in (0, 1):
+        assert fold_json(path, replay, boom) == {"n": 3}
+    assert read_json(path) == {"n": 3, "__meta__": {"max_applied": 1}}
+
+    # an older in-artifact list record guards the same way
+    write_json(path, {"n": 5, "__meta__": {"applied_batch_ids": [0, 3]}})
+    assert fold_json(path, 3, boom) == {"n": 5}
+    assert fold_json(path, 4, add(1)) == {"n": 6}
+    assert read_json(path)["__meta__"] == {"max_applied": 4}
+
+    # a one-off fold (no batch id) keeps the stored record
+    assert fold_json(path, None, add(1)) == {"n": 7}
+    assert read_json(path)["__meta__"] == {"max_applied": 4}
+
+
+def test_stream_resumes_from_list_form_record(spark, sf_dir, tmp_path, monkeypatch):
+    """A checkpoint whose loop record is an older id list resumes without
+    replaying a recorded batch, even when Spark re-runs that batch."""
+    from sentiment_analysis_vector_search_spark.operators import similarity
+    from sentiment_analysis_vector_search_spark.streaming.file_sink import (
+        stream_ivf_ingest,
+    )
+
+    full_dir = str(tmp_path / "ivf_full")
+    similarity.build_ivf_index(spark, sf_dir, full_dir)
+    idx = str(tmp_path / "ivf_stream")
+    shutil.copytree(f"{full_dir}/codebook", f"{idx}/codebook")
+    src_dir, ck = str(tmp_path / "emb_src"), str(tmp_path / "ck")
+    stage = str(tmp_path / "_emb")
+    spark.read.parquet(f"{sf_dir}/embeddings.parquet").where(
+        F.col("vec_id") % 2 == 0
+    ).coalesce(1).write.parquet(stage)
+    os.makedirs(src_dir)
+    part = next(n for n in os.listdir(stage) if n.endswith(".parquet"))
+    shutil.copy(os.path.join(stage, part), os.path.join(src_dir, "embeddings_a.parquet"))
+
+    stream_ivf_ingest(spark, src_dir, idx, ck)
+    n_rows = spark.read.parquet(f"{idx}/assignments").count()
+    record = os.path.join(ck, "_ivf_commits.json")
+    assert read_json(record) == {"max_applied": 0}
+
+    write_json(record, [0])  # the older list form
+    for name in ("0", ".0.crc"):
+        if os.path.exists(os.path.join(ck, "commits", name)):
+            os.remove(os.path.join(ck, "commits", name))
+
+    def boom(*args, **kwargs):
+        raise AssertionError("recorded batch re-applied")
+
+    monkeypatch.setattr(similarity, "ivf_index_add", boom)
+    stream_ivf_ingest(spark, src_dir, idx, ck)
+    assert os.path.exists(os.path.join(ck, "commits", "0"))  # Spark re-ran it
+    assert spark.read.parquet(f"{idx}/assignments").count() == n_rows
+
+
+def _calls(attr: str, owner: str | None = None) -> list[tuple[str, str | None, int]]:
+    """(module, innermost enclosing def, line) of every ``.attr(`` call
+    in the package, optionally only on the name ``owner``."""
+    out = []
+
+    def visit(node, fn, rel):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name, rel)
+                continue
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == attr
+                and (
+                    owner is None
+                    or isinstance(child.func.value, ast.Name)
+                    and child.func.value.id == owner
+                )
+            ):
+                out.append((rel, fn, child.lineno))
+            visit(child, fn, rel)
+
+    for path in sorted(PKG.rglob("*.py")):
+        visit(ast.parse(path.read_text()), None, path.relative_to(PKG).as_posix())
+    return out
+
+
+def test_only_commit_writes_json_and_only_drain_runs_foreachbatch():
+    """Every JSON file goes through commit.write_json (atomic), and every
+    streaming maintenance loop through file_sink._drain."""
+    dumps = [c for c in _calls("dump", owner="json") if c[0] != "commit.py"]
+    assert not dumps, f"json.dump outside commit.py: {dumps}"
+    drains = [
+        c
+        for c in _calls("foreachBatch")
+        if c[:2] != ("streaming/file_sink.py", "_drain")
+    ]
+    assert not drains, f"foreachBatch outside file_sink._drain: {drains}"
