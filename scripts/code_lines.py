@@ -2,7 +2,11 @@
 excluding blank lines, comment-only lines and docstrings (a string
 literal that is a whole statement).
 
-Run: python scripts/code_lines.py [package_dir]
+Run: python scripts/code_lines.py [path ...]
+
+Each path is a .py file or a directory (counted recursively); one count
+per path is printed, then the total when more than one path is given.
+With no path, the package directory is counted.
 """
 
 from __future__ import annotations
@@ -38,9 +42,24 @@ def code_lines(src: str) -> int:
     return len(lines)
 
 
+def path_lines(path: Path) -> int:
+    files = [path] if path.is_file() else sorted(path.rglob("*.py"))
+    return sum(code_lines(p.read_text()) for p in files)
+
+
 def main() -> int:
-    root = Path(sys.argv[1] if len(sys.argv) > 1 else "sentiment_analysis_vector_search_spark")
-    print(sum(code_lines(p.read_text()) for p in sorted(root.rglob("*.py"))))
+    paths = [Path(a) for a in sys.argv[1:]] or [Path("sentiment_analysis_vector_search_spark")]
+    missing = [str(p) for p in paths if not p.exists()]
+    if missing:
+        print(f"no such path: {', '.join(missing)}", file=sys.stderr)
+        return 2
+    counts = [path_lines(p) for p in paths]
+    if len(paths) == 1:
+        print(counts[0])
+        return 0
+    for p, n in zip(paths, counts):
+        print(f"{n}\t{p}")
+    print(f"{sum(counts)}\ttotal")
     return 0
 
 

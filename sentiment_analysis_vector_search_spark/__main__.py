@@ -32,6 +32,15 @@ import argparse
 import sys
 
 
+def _fold_id(batch_id: int | None, path: str) -> int | str:
+    """Replay guard of an additive CLI fold: ``--batch-id`` when given,
+    else the batch file's path digest — re-running a verb on the same
+    file is a no-op, and every other file is folded, in any order."""
+    from .commit import path_digest
+
+    return path_digest(path) if batch_id is None else batch_id
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="sentiment_analysis_vector_search_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -383,61 +392,34 @@ def main(argv: list[str] | None = None) -> int:
 
         spark = get_spark("cli-index")
         spark.sparkContext.setLogLevel("ERROR")
-        if args.kind == "ivf":
-            from .operators.similarity import build_ivf_index
-
-            build_ivf_index(spark, args.sf_dir, args.out_dir)
-        elif args.kind == "pq":
-            from .operators.similarity2 import build_pq_index
-
-            build_pq_index(spark, args.sf_dir, args.out_dir)
-        elif args.kind == "ivfpq":
-            from .operators.ivfpq import build_ivfpq_index
-
-            build_ivfpq_index(spark, args.sf_dir, args.out_dir)
-        else:
+        if args.kind == "dedup":
             from .catalog import table
             from .operators.dedup_index import build_dedup_index
 
             build_dedup_index(
                 spark, table(spark, args.sf_dir, "documents"), args.out_dir
             )
+        else:
+            from .operators.similarity import index_verb
+
+            index_verb(args.kind, "build")(spark, args.sf_dir, args.out_dir)
         print(f"built {args.kind} index at {args.out_dir}")
         return 0
 
-    if args.cmd == "ivf-refresh":
+    if args.cmd.endswith("-refresh"):
         import json
 
-        from .operators.similarity import ivf_codebook_refresh
+        from .operators.similarity import INDEX_LAYOUT, _vectors, index_verb
         from .session import get_spark
 
-        spark = get_spark("cli-ivf-refresh")
-        spark.sparkContext.setLogLevel("ERROR")
-        out = ivf_codebook_refresh(
-            spark, args.index_dir, max_drift=args.max_drift, force=args.force
-        )
-        print(json.dumps(out, sort_keys=True))
-        return 0
-
-    if args.cmd in ("pq-refresh", "ivfpq-refresh"):
-        import json
-
-        from .operators.similarity import _vectors
-        from .session import get_spark
-
+        kind = args.cmd[: -len("-refresh")]
         spark = get_spark(f"cli-{args.cmd}")
         spark.sparkContext.setLogLevel("ERROR")
-        vectors = _vectors(spark, args.sf_dir).select("vec_id", "v")
-        if args.cmd == "pq-refresh":
-            from .operators.similarity2 import pq_codebook_refresh as _refresh
-        else:
-            from .operators.ivfpq import ivfpq_codebook_refresh as _refresh
-        out = _refresh(
-            spark,
-            args.index_dir,
-            vectors,
-            max_drift=args.max_drift,
-            force=args.force,
+        store = ()
+        if INDEX_LAYOUT[kind].primary_store:
+            store = (_vectors(spark, args.sf_dir).select("vec_id", "v"),)
+        out = index_verb(kind, "refresh")(
+            spark, args.index_dir, *store, max_drift=args.max_drift, force=args.force
         )
         print(json.dumps(out, sort_keys=True))
         return 0
@@ -500,27 +482,13 @@ def main(argv: list[str] | None = None) -> int:
 
         spark = get_spark("cli-hotkeys")
         spark.sparkContext.setLogLevel("ERROR")
-        batch_id = args.batch_id
-        if batch_id is None:
-            # stable path-derived id: MG folding is additive, so an
-            # accidental CLI re-run on the same batch file must be a
-            # no-op (r9 advice). 60-bit md5 prefix of the resolved path.
-            import hashlib
-            import os as _os
-
-            batch_id = int(
-                hashlib.md5(
-                    _os.path.abspath(args.batch_path).encode()
-                ).hexdigest()[:15],
-                16,
-            )
         summary, n_rows = incremental_heavy_hitters(
             args.stats_dir,
             args.table,
             args.col,
             spark.read.parquet(args.batch_path),
             k=args.k,
-            batch_id=batch_id,
+            batch_id=_fold_id(args.batch_id, args.batch_path),
         )
         top = sorted(summary.items(), key=lambda kv: -kv[1])
         print(
@@ -602,19 +570,10 @@ def main(argv: list[str] | None = None) -> int:
             df = spark.read.parquet(args.path)
             name = _os.path.basename(_os.path.abspath(args.path)) or "table"
         if args.manifest_dir:
-            batch_id = args.batch_id
-            if batch_id is None:
-                import hashlib
-
-                batch_id = int(
-                    hashlib.md5(
-                        _os.path.abspath(args.path).encode()
-                    ).hexdigest()[:15],
-                    16,
-                )
             out = incremental_checksum(
                 args.manifest_dir, name, df,
-                round_doubles=args.round_doubles, batch_id=batch_id,
+                round_doubles=args.round_doubles,
+                batch_id=_fold_id(args.batch_id, args.path),
             )
             print(json.dumps(out))
         else:
@@ -638,23 +597,12 @@ def main(argv: list[str] | None = None) -> int:
 
         spark = get_spark("cli-cms")
         spark.sparkContext.setLogLevel("ERROR")
-        batch_id = args.batch_id
-        if batch_id is None:
-            import hashlib
-            import os as _os
-
-            batch_id = int(
-                hashlib.md5(
-                    _os.path.abspath(args.batch_path).encode()
-                ).hexdigest()[:15],
-                16,
-            )
         counters = incremental_cms(
             args.stats_dir,
             args.table,
             args.col,
             spark.read.parquet(args.batch_path),
-            batch_id=batch_id,
+            batch_id=_fold_id(args.batch_id, args.batch_path),
         )
         keys = [k for k in args.keys.split(",") if k]
         print(
@@ -992,22 +940,17 @@ def main(argv: list[str] | None = None) -> int:
         q = vecs.where(F.col("vec_id") == args.query_vec_id).select(
             F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
         )
-        if args.kind == "ivf":
-            from .operators.similarity import ann_ivf_index_query
+        from .operators.similarity import INDEX_LAYOUT, index_verb
 
-            res = ann_ivf_index_query(spark, args.index_dir, q, k=args.k)
-        elif args.kind == "pq":
-            from .operators.similarity2 import ann_pq_index_query
-
-            res = ann_pq_index_query(
-                spark, args.index_dir, q, vecs, k=args.k, exclude_self=True
-            )
-        else:
-            from .operators.ivfpq import ann_ivfpq_index_query
-
-            res = ann_ivfpq_index_query(
-                spark, args.index_dir, q, vecs, k=args.k, exclude_self=True
-            )
+        # the codes-only kinds rerank from the primary store; their query
+        # ids live in the corpus id space here, so self-matches are dropped
+        # (the IVF query always drops them)
+        store, kw = (), {}
+        if INDEX_LAYOUT[args.kind].primary_store:
+            store, kw = (vecs,), {"exclude_self": True}
+        res = index_verb(args.kind, "query")(
+            spark, args.index_dir, q, *store, k=args.k, **kw
+        )
         rows = res.orderBy("rk").collect()
         print(
             json.dumps(

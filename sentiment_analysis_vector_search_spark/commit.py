@@ -12,10 +12,15 @@ of every applied id, with O(1) state on an unbounded stream.
 :func:`applied_max` is the one reader of that record and of its older
 list forms; :func:`fold_json` folds a batch into an artifact whose
 record rides inside the same atomic write.
+
+Ad-hoc folds of batch files (the CLI verbs) have no monotone id: any two
+files arrive in any order. They are keyed by :func:`path_digest` and
+guarded by membership in an ``applied_paths`` list instead.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 from typing import Any, Callable
@@ -56,19 +61,37 @@ def applied_max(record: Any) -> int:
     return max(record.get("applied_batch_ids", []), default=-1)
 
 
+def path_digest(path: str) -> str:
+    """Fold id of a batch file: the md5 hex digest of its resolved path,
+    so re-folding the same file is recognised as a replay."""
+    return hashlib.md5(os.path.abspath(path).encode()).hexdigest()
+
+
+def _replayed(meta: dict, batch_id: int | str) -> bool:
+    if not isinstance(batch_id, str):
+        return batch_id <= applied_max(meta)
+    # older CLI folds recorded a digest as its 60-bit prefix under the
+    # bounded record: the last file such a fold applied is that max
+    return batch_id in meta.get("applied_paths", ()) or meta.get(
+        "max_applied"
+    ) == int(batch_id[:15], 16)
+
+
 def fold_json(
     path: str,
-    batch_id: int | None,
+    batch_id: int | str | None,
     fold: Callable[[dict | None], dict],
     check: Callable[[dict], None] | None = None,
 ) -> dict | None:
     """Fold one batch into the JSON artifact at ``path``.
 
     ``fold(prior)`` gets the stored artifact without its ``__meta__``
-    record (None when absent) and returns the new artifact. A
-    ``batch_id`` at or below the recorded max is a replay: ``fold`` is
-    not called and the stored artifact is returned. Otherwise the
-    result is stamped ``{"max_applied": batch_id}`` and written in one
+    record (None when absent) and returns the new artifact. A replay is
+    not folded — the stored artifact is returned — and is either an int
+    ``batch_id`` (a stream batch) at or below the recorded max, or a
+    :func:`path_digest` str already in the recorded ``applied_paths``.
+    Otherwise the result is stamped with the id (``max_applied`` for an
+    int, appended to ``applied_paths`` for a digest) and written in one
     :func:`write_json`, so fold and record commit together. With
     ``batch_id=None`` (a one-off fold) an existing record is kept.
     ``check(prior)`` validates a stored artifact before the replay
@@ -77,9 +100,16 @@ def fold_json(
     meta = prior.pop(META, {}) if prior is not None else {}
     if prior is not None and check is not None:
         check(prior)
-    if batch_id is not None and batch_id <= applied_max(meta):
+    if batch_id is not None and _replayed(meta, batch_id):
         return prior
     out = fold(prior)
-    record = {"max_applied": batch_id} if batch_id is not None else meta
+    record = meta
+    if isinstance(batch_id, str):
+        record = {**meta, "applied_paths": [*meta.get("applied_paths", []), batch_id]}
+    elif batch_id is not None:
+        # the bounded stream record replaces older id forms
+        record = {"max_applied": batch_id}
+        if "applied_paths" in meta:
+            record["applied_paths"] = meta["applied_paths"]
     write_json(path, {**out, META: record} if record else out)
     return out

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from ..catalog import cut, table
 from ..functions.hashing import md5_long, sql_md5_long
 from ..functions.stable import dsum, sql_dec2double, sql_vardec
+from ..functions.vectors import dot
 from ..registry import register
 
 # ---------------------------------------------------------------------------
@@ -179,12 +180,7 @@ def emb_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("embedding").alias("dim"),
     )
     n_nan = F.size(F.expr("filter(e, x -> isnan(x))"))
-    nrm = F.sqrt(
-        F.expr(
-            "aggregate(zip_with(e, e, (x, y) -> x * y), cast(0.0 as double),"
-            " (acc, x) -> acc + x)"
-        )
-    )
+    nrm = F.sqrt(dot("e", "e"))
     per_vec = emb.select("label", "dim", n_nan.alias("n_nan"), nrm.alias("nrm"))
     return per_vec.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_vecs"),

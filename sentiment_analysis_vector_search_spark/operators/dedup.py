@@ -41,7 +41,7 @@ from ..functions.hashing import (
     sql_md5_long,
 )
 from ..functions.stable import davg, sql_davg
-from ..functions.vectors import hyperplanes, spark_plane_dot, sql_plane_dot
+from ..functions.vectors import dot, hyperplanes, sql_plane_dot
 from ..registry import register
 
 # ---------------------------------------------------------------------------
@@ -686,9 +686,7 @@ def emb_candidate_pairs(vectors: DataFrame) -> DataFrame:
     a = bands.alias("a")
     b = bands.alias("b")
     cosine = F.round(
-        F.expr(
-            "aggregate(zip_with(a.v, b.v, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
-        )
+        dot("a.v", "b.v")
         / (F.col("a.nrm") * F.col("b.nrm")),
         6,
     )

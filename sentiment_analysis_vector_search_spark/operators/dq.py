@@ -383,7 +383,7 @@ def incremental_checksum(
     table_name: str,
     batch_df: DataFrame,
     round_doubles: int | None = None,
-    batch_id: int | None = None,
+    batch_id: int | str | None = None,
 ) -> dict:
     """Fold one shard/batch into a persisted checksum manifest
     (``{table_name}__checksum.json``): n_rows and the modular digest are

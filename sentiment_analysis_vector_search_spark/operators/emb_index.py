@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import cut
 from ..commit import write_json
+from ..functions.vectors import dot
 from ..sinks import spread_repartition
 from .dedup import _EMB_BAND_BITS, _EMB_BANDS, _EMB_T, emb_signatures
 
@@ -178,10 +179,7 @@ def emb_index_check(
         )
     )
     cosine = F.round(
-        F.expr(
-            "aggregate(zip_with(iv, nv, (x, y) -> x * y),"
-            " cast(0.0 as double), (acc, x) -> acc + x)"
-        )
+        dot("iv", "nv")
         / (F.col("inrm") * F.col("nnrm")),
         6,
     )

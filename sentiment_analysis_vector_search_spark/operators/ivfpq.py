@@ -13,14 +13,16 @@ This is the index shape a 100 TB vector corpus actually serves from:
 - the exact-cosine pass reads the primary store for only the
   RERANK-bounded shortlist per query (IVFADC+R).
 
-Composition is literal: the coarse layer IS build_ivf_index's trained
-codebook/assignment machinery (similarity.py:653,677) and the code
-layer IS the PQ encode/LUT/ADC machinery (similarity2.py:183,204) — so
-the byte-identity pytests of both parents transfer: with nprobe =
-#cells this index answers BYTE-IDENTICALLY to the flat PQ index (the
-IVF layer prunes nothing), pinned by pytest, and the incremental
-``add`` is reproducible against the frozen codebooks exactly like its
-parents.
+Composition is literal: the coarse layer IS the IVF index's trained
+codebook and assignment kernels (``similarity._trained_codebook``,
+``similarity._assign``, ``similarity._probe_cells``) and the code layer
+IS the PQ encode/LUT/ADC kernels (``similarity2._pq_encode``,
+``_pq_lut``, ``_adc_scores``); layout, writes, recovery and refresh are
+the shared index core in similarity.py. So the byte-identity pytests of
+both parents transfer: with nprobe = #cells this index answers
+BYTE-IDENTICALLY to the flat PQ index (the IVF layer prunes nothing),
+pinned by pytest, and the incremental ``add`` is reproducible against
+the frozen codebooks exactly like its parents.
 
 Parity/grading: the composed paths are pytest-verified components (the
 graded ANN queries cover the in-memory algorithms; this module is the
@@ -29,58 +31,91 @@ serving-layout composition, like build_ivf_index / build_pq_index).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import cut
-from ..commit import write_json
-from ..functions.stable import dsum
-from .similarity import _TOP_K, _TRAINED_NPROBE, _trained_assignments, _trained_codebook, _vectors
-from .similarity2 import _PQ_RERANK, _dot, _exact_rerank, _pq_codebook, _pq_encode, _pq_lut
+from .similarity import (
+    _TOP_K,
+    _TRAINED_NPROBE,
+    _append,
+    _assign,
+    _coarse_drift,
+    _coarse_lloyd,
+    _codebook_refresh,
+    _cosine_topk,
+    _norm_queries,
+    _norm_vectors,
+    _probe_cells,
+    _swap_recover,
+    _top_per_query,
+    _trained_codebook,
+    _vectors,
+    _write_index,
+)
+from .similarity2 import (
+    _PQ_RERANK,
+    _adc_scores,
+    _exact_rerank,
+    _pq_codebook,
+    _pq_drift,
+    _pq_encode,
+    _pq_lloyd,
+    _pq_lut,
+)
+
+
+def _ivfpq_codes(vecs: DataFrame, coarse: DataFrame, pq_cb: DataFrame) -> DataFrame:
+    """Cell-tagged PQ codes (vec_id, s, code, nrm, cell) of normalised
+    vectors: encoded against ``pq_cb``, assigned against ``coarse``."""
+    return _pq_encode(vecs, pq_cb).join(_assign(vecs, coarse, ("vec_id",)), "vec_id")
 
 
 def build_ivfpq_index(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
     """Materialize: coarse codebook, PQ codebook, and cell-partitioned
     PQ codes (vec_id, nrm, s, code, cell) — raw vectors are NOT copied
     (the primary store stays the single source of vector truth)."""
-    from ..sinks import spread_repartition
-
     coarse = _trained_codebook(spark, sf_dir)
-    coarse.coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/coarse_codebook")
     pq_cb = _pq_codebook(spark, sf_dir)
-    pq_cb.coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/pq_codebook")
-
-    vecs = _vectors(spark, sf_dir)
-    assigned = _trained_assignments(spark, sf_dir, coarse).select("vec_id", "cell")
-    codes = _pq_encode(vecs, pq_cb).join(assigned, "vec_id")
-    # write parallelism scales with executors, not #cells (the
-    # spread-repartition rule shared with every serving-index build);
-    # partitionBy keeps the cell=... pruning layout
-    (
-        spread_repartition(codes, "cell", "vec_id")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{index_dir}/codes")
-    )
+    codes = _ivfpq_codes(_vectors(spark, sf_dir), coarse, pq_cb)
+    _write_index("ivfpq", index_dir, (coarse, pq_cb, codes))
 
 
-def _probe_cells(
-    spark: SparkSession, index_dir: str, queries: DataFrame, nprobe: int
+def _probed_adc(
+    spark: SparkSession,
+    index_dir: str,
+    queries: DataFrame,
+    nprobe: int,
+    exclude_self: bool,
+    rank: bool = False,
 ) -> DataFrame:
-    """(query_id, qv, qnrm, cell) — each query's top-``nprobe`` coarse
-    cells by centroid cosine, materialized (bounded: nq x nprobe)."""
-    coarse = spark.read.parquet(f"{index_dir}/coarse_codebook")
-    q = queries.select("query_id", "qv", F.sqrt(_dot("qv", "qv")).alias("qnrm"))
-    qsim = _dot("qv", "c") / (F.col("qnrm") * F.col("cn"))
-    wq = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("label"))
-    # cut: multi-consumer — the collected cell list, the LUT and the pair join
-    return cut(
-        q.crossJoin(F.broadcast(coarse))
-        .withColumn("sim", qsim)
-        .withColumn("rk", F.row_number().over(wq))
-        .where(F.col("rk") <= nprobe)
-        .select("query_id", "qv", "qnrm", F.col("label").alias("cell")),
-        eager=True,
+    """Pruned compressed-domain ADC scores (query_id, vec_id, adc_sum,
+    qnrm, nrm[, probe_rk], adc_cosine): the probed cells' codes are read
+    with literal partition filters (``_probe_cells``), and the ADC join
+    keys on query_id so each query scores ONLY vectors in its own probed
+    cells — with nprobe = #cells this degenerates to the flat PQ scan
+    byte-for-byte. ``rank`` carries each candidate's best probe rank."""
+    qprobe, enc = _probe_cells(spark, "ivfpq", index_dir, queries, nprobe, rank)
+    # valid only when query ids live in the corpus vec_id space
+    pairs_filter = (
+        (F.col("vec_id") != F.col("query_id")) if exclude_self else F.lit(True)
+    )
+    pq_cb = spark.read.parquet(f"{index_dir}/pq_codebook")
+    lut = _pq_lut(
+        qprobe.select("query_id", "qv", "qnrm").distinct(), pq_cb
+    ).select(
+        F.col("query_id").alias("lq"), "qnrm", F.col("s").alias("ls"),
+        F.col("label").alias("ll"), "lutv",
+    )
+    probe_cols = ("query_id", "cell", "probe_rk") if rank else ("query_id", "cell")
+    pairs = enc.join(F.broadcast(qprobe.select(*probe_cols)), "cell").where(pairs_filter)
+    return _adc_scores(
+        pairs,
+        lut,
+        on=(pairs["s"] == F.col("ls"))
+        & (pairs["code"] == F.col("ll"))
+        & (pairs["query_id"] == F.col("lq")),
+        aggs=(F.min("probe_rk").alias("probe_rk"),) if rank else (),
     )
 
 
@@ -99,65 +134,16 @@ def ann_ivfpq_index_query(
     ``queries``: (query_id, qv array<double>); ``vectors`` is the
     primary store (vec_id, v), read only for the shortlist.
 
-    The probed cell ids are collected (nq x nprobe rows — bounded
-    metadata, same device as ann_ivf_index_query) and pushed as literal
-    partition filters, so only probed cell directories are opened; and
-    the ADC join keys on query_id so each query scores ONLY vectors in
-    its own probed cells — with nprobe = #cells this degenerates to the
-    flat PQ scan byte-for-byte.
-
     Opens with ``ivfpq_index_recover(forward_only=True)`` so a committed
     refresh swap a crash left half-done is completed before the read;
     uncommitted staging is left for the refresh writer (similarity.py
     writer/reader contract)."""
     ivfpq_index_recover(index_dir, forward_only=True)
-    qprobe = _probe_cells(spark, index_dir, queries, nprobe)
-    cells = sorted({r["cell"] for r in qprobe.select("cell").distinct().collect()})
-    enc = spark.read.parquet(f"{index_dir}/codes").where(F.col("cell").isin(cells))
-    if exclude_self:
-        # valid only when query ids live in the corpus vec_id space
-        pairs_filter = F.col("vec_id") != F.col("query_id")
-    else:
-        pairs_filter = F.lit(True)
-
-    pq_cb = spark.read.parquet(f"{index_dir}/pq_codebook")
-    lut = _pq_lut(
-        qprobe.select("query_id", "qv", "qnrm").distinct(), pq_cb
-    ).select(
-        F.col("query_id").alias("lq"), "qnrm", F.col("s").alias("ls"),
-        F.col("label").alias("ll"), "lutv",
+    adc = _probed_adc(spark, index_dir, queries, nprobe, exclude_self)
+    shortlist = _top_per_query(adc, "adc_cosine", rerank_n, "srk").select(
+        "query_id", "vec_id"
     )
-    pairs = enc.join(
-        F.broadcast(qprobe.select("query_id", "cell")), "cell"
-    ).where(pairs_filter)
-    adc = (
-        pairs.join(
-            F.broadcast(lut),
-            (pairs["s"] == F.col("ls"))
-            & (pairs["code"] == F.col("ll"))
-            & (pairs["query_id"] == F.col("lq")),
-        )
-        .groupBy("query_id", "vec_id")
-        .agg(
-            dsum(F.col("lutv")).alias("adc_sum"),
-            F.max("qnrm").alias("qnrm"),
-            F.max("nrm").alias("nrm"),
-        )
-        .withColumn(
-            "adc_cosine", F.round(F.col("adc_sum") / (F.col("qnrm") * F.col("nrm")), 6)
-        )
-    )
-    wa = Window.partitionBy("query_id").orderBy(F.desc("adc_cosine"), F.asc("vec_id"))
-    shortlist = (
-        adc.withColumn("srk", F.row_number().over(wa))
-        .where(F.col("srk") <= rerank_n)
-        .select("query_id", "vec_id")
-    )
-    vecs = vectors.select(
-        "vec_id", F.col("v").cast("array<double>").alias("v")
-    ).withColumn("nrm", F.sqrt(_dot("v", "v")))
-    q = queries.select("query_id", "qv", F.sqrt(_dot("qv", "qv")).alias("qnrm"))
-    return _exact_rerank(shortlist, vecs, q, k)
+    return _exact_rerank(shortlist, _norm_vectors(vectors), _norm_queries(queries), k)
 
 
 def ivfpq_index_add(
@@ -168,150 +154,64 @@ def ivfpq_index_add(
 ) -> None:
     """Encode + assign a batch against the FROZEN codebooks and append
     its cell-partitioned codes — cost proportional to the batch, result
-    identical to a full rebuild (pinned by pytest). ``stage_dir`` hooks
-    the idempotent staged-append protocol (file_sink)."""
-    from ..sinks import spread_repartition
-
+    identical to a full rebuild (pinned by pytest). ``stage_dir``: see
+    ``similarity._append``."""
     coarse = spark.read.parquet(f"{index_dir}/coarse_codebook")
     pq_cb = spark.read.parquet(f"{index_dir}/pq_codebook")
-    vecs = new_vectors.select(
-        "vec_id", F.col("v").cast("array<double>").alias("v")
-    ).withColumn("nrm", F.sqrt(_dot("v", "v")))
-    sim = _dot("v", "c") / (F.col("nrm") * F.col("cn"))
-    wv = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("label"))
-    assigned = (
-        vecs.crossJoin(F.broadcast(coarse))
-        .withColumn("sim", sim)
-        .withColumn("rk", F.row_number().over(wv))
-        .where(F.col("rk") == 1)
-        .select("vec_id", F.col("label").alias("cell"))
-    )
-    codes = _pq_encode(vecs, pq_cb).join(assigned, "vec_id")
-    writer = spread_repartition(codes, "cell", "vec_id").write.partitionBy("cell")
-    if stage_dir is None:
-        writer.mode("append").parquet(f"{index_dir}/codes")
-    else:
-        writer.mode("overwrite").parquet(stage_dir)
+    codes = _ivfpq_codes(_norm_vectors(new_vectors), coarse, pq_cb)
+    _append("ivfpq", index_dir, codes, stage_dir)
 
 
 # ---------------------------------------------------------------------------
-# IVFPQ codebook lifecycle (r12 verdict #2): the composed index carries
-# TWO frozen codebooks — the coarse IVF partitioner and the per-subspace
-# PQ codebooks — and streamed ingest (stream_ivfpq_ingest) appends
-# against both, so both drift. The refresh re-trains each with one Lloyd
-# step over the current assignment/encoding, then rebuilds the codes
-# table in full (re-ASSIGN against the new coarse codebook AND re-ENCODE
+# IVFPQ codebook lifecycle: the composed index carries TWO frozen
+# codebooks — the coarse IVF partitioner and the per-subspace PQ
+# codebooks — and streamed ingest (stream_ivfpq_ingest) appends against
+# both, so both drift. Drift is the IVF coarse drift plus the PQ drift,
+# through the same two functions the parent indexes use. The refresh
+# re-trains each with their Lloyd steps, then rebuilds the codes table
+# in full (re-ASSIGN against the new coarse codebook AND re-ENCODE
 # against the new PQ codebook — a stored code row is stale if either
 # codebook moved), committing all three directories behind the shared
-# marker-file swap (similarity.py::_swap_recover) with the same
-# writer/reader contract: refresh is the single writer, query opens
-# recover forward-only. Raw vectors live only in the primary store, so
-# drift and refresh take it as input, like pq_codebook_refresh.
+# marker-file swap (similarity._codebook_refresh). Raw vectors live only
+# in the primary store, so drift and refresh take it as input, like
+# pq_codebook_refresh.
 # ---------------------------------------------------------------------------
-
-import os as _os
-
-from ..functions.stable import davg
-from .similarity import _swap_recover
-from .similarity2 import _norm_vectors, _pq_cell_stats
-
-_IVFPQ_DIRS = ("coarse_codebook", "pq_codebook", "codes")
 
 
 def ivfpq_index_recover(index_dir: str, forward_only: bool = False) -> None:
     """Marker-file swap recovery over the three IVFPQ directories.
     ``forward_only=True`` is the reader mode — see similarity.py's
     writer/reader contract."""
-    _swap_recover(index_dir, _IVFPQ_DIRS, forward_only=forward_only)
+    _swap_recover("ivfpq", index_dir, forward_only)
 
 
-def _coarse_cell_means(codes: DataFrame, vecs: DataFrame) -> DataFrame:
-    """Per-cell decimal-mean member vector of the CURRENT assignment:
-    (cell, m array<double>, mnrm). codes carries (vec_id, cell) M times
-    (once per subspace) — distinct first so each vector counts once."""
-    members = codes.select("vec_id", "cell").distinct().join(
+def _cell_members(codes: DataFrame, vecs: DataFrame) -> DataFrame:
+    """(cell, v) of the CURRENT assignment. codes carries (vec_id, cell)
+    M times (once per subspace) — distinct first so each vector counts
+    once."""
+    return codes.select("vec_id", "cell").distinct().join(
         vecs.select("vec_id", "v"), "vec_id"
-    )
-    return (
-        members.select("cell", F.posexplode("v").alias("pos", "val"))
-        .groupBy("cell", "pos")
-        .agg(davg(F.col("val")).alias("cv"))
-        .groupBy("cell")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "cv"))),
-                lambda x: x["cv"],
-            ).alias("m")
-        )
-        .withColumn("mnrm", F.sqrt(_dot("m", "m")))
     )
 
 
 def ivfpq_index_drift(
     spark: SparkSession, index_dir: str, vectors: DataFrame
 ) -> dict:
-    """Drift of both codebooks vs the primary store: per-cell coarse
-    centroid drift (1 - cosine of stored centroid vs member mean) and
-    the PQ sub-centroid drift + ADC residual (similarity2 note).
+    """Drift of both codebooks vs the primary store: the IVF coarse
+    drift (1 - cosine of stored centroid vs member mean) and the PQ
+    sub-centroid drift + ADC residual (similarity2 note).
     ``max_drift`` is the max over both layers — the refresh gate."""
     vecs = _norm_vectors(vectors)
     codes = spark.read.parquet(f"{index_dir}/codes")
-    coarse = spark.read.parquet(f"{index_dir}/coarse_codebook")
-    c = (
-        _coarse_cell_means(codes, vecs)
-        .join(coarse, F.col("cell") == coarse["label"])
-        .select(
-            (
-                F.lit(1.0)
-                - _dot("m", "c")
-                / F.greatest(F.col("mnrm") * F.col("cn"), F.lit(1e-300))
-            ).alias("drift")
-        )
-        .agg(
-            F.max("drift").alias("max_drift"),
-            F.avg("drift").alias("mean_drift"),
-            F.count(F.lit(1)).alias("n_cells"),
-        )
-        .collect()[0]
+    c = _coarse_drift(
+        _cell_members(codes, vecs), spark.read.parquet(f"{index_dir}/coarse_codebook")
     )
-    pq_cb = spark.read.parquet(f"{index_dir}/pq_codebook")
-    stats = _pq_cell_stats(codes, vecs)
-    mnrm = F.sqrt(_dot("m", "m"))
-    p = (
-        stats.join(
-            F.broadcast(pq_cb),
-            (stats["s"] == pq_cb["s"]) & (stats["code"] == pq_cb["label"]),
-        )
-        .select(
-            (
-                F.lit(1.0)
-                - _dot("m", "sc")
-                / F.greatest(mnrm * F.sqrt(F.col("sc2")), F.lit(1e-300))
-            ).alias("drift"),
-            (
-                F.col("msv2") - F.lit(2.0) * _dot("m", "sc") + F.col("sc2")
-            ).alias("residual"),
-            "n_mem",
-        )
-        .agg(
-            F.max("drift").alias("max_drift"),
-            F.avg("drift").alias("mean_drift"),
-            F.count(F.lit(1)).alias("n_cells"),
-            (
-                F.sum(F.col("residual") * F.col("n_mem")) / F.sum("n_mem")
-            ).alias("mean_residual"),
-        )
-        .collect()[0]
-    )
+    p = _pq_drift(spark.read.parquet(f"{index_dir}/pq_codebook"), codes, vecs)
     return {
-        "coarse_max_drift": float(c["max_drift"]),
-        "coarse_mean_drift": float(c["mean_drift"]),
-        "coarse_n_cells": int(c["n_cells"]),
-        "pq_max_drift": float(p["max_drift"]),
-        "pq_mean_drift": float(p["mean_drift"]),
-        "pq_n_cells": int(p["n_cells"]),
-        "mean_adc_residual": float(p["mean_residual"]),
-        "max_drift": max(float(c["max_drift"]), float(p["max_drift"])),
+        **{f"coarse_{k}": c[k] for k in ("max_drift", "mean_drift", "n_cells")},
+        **{f"pq_{k}": p[k] for k in ("max_drift", "mean_drift", "n_cells")},
+        "mean_adc_residual": p["mean_adc_residual"],
+        "max_drift": max(c["max_drift"], p["max_drift"]),
     }
 
 
@@ -327,57 +227,22 @@ def ivfpq_codebook_refresh(
     the drift measurement plus {"refreshed": bool}; measurement-only
     while the max drift over both layers stays under ``max_drift`` and
     ``force`` is False. Single-writer: one refresh at a time per index."""
-    from ..sinks import spread_repartition
 
-    ivfpq_index_recover(index_dir)
-    drift = ivfpq_index_drift(spark, index_dir, vectors)
-    if not force and drift["max_drift"] < max_drift:
-        return {**drift, "refreshed": False}
+    def lloyd():
+        vecs = _norm_vectors(vectors)
+        codes = spark.read.parquet(f"{index_dir}/codes")
+        coarse_new = _coarse_lloyd(_cell_members(codes, vecs))
+        pq_cb_new = _pq_lloyd(codes, vecs)
+        return coarse_new, pq_cb_new, _ivfpq_codes(vecs, coarse_new, pq_cb_new)
 
-    vecs = _norm_vectors(vectors)
-    codes = spark.read.parquet(f"{index_dir}/codes")
-    # one Lloyd step per layer over the current assignment/encoding
-    # cut: multi-consumer — write + re-assign
-    coarse_new = cut(
-        _coarse_cell_means(codes, vecs).select(
-            F.col("cell").alias("label"),
-            F.col("m").alias("c"),
-            F.col("mnrm").alias("cn"),
-        ),
-        eager=True,
+    return _codebook_refresh(
+        "ivfpq",
+        index_dir,
+        lambda: ivfpq_index_drift(spark, index_dir, vectors),
+        lloyd,
+        max_drift,
+        force,
     )
-    # cut: multi-consumer — write + re-encode
-    pq_cb_new = cut(
-        _pq_cell_stats(codes, vecs)
-        .select(F.col("code").alias("label"), "s", F.col("m").alias("sc"))
-        .withColumn("sc2", _dot("sc", "sc")),
-        eager=True,
-    )
-    sim = _dot("v", "c") / (F.col("nrm") * F.col("cn"))
-    wv = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("label"))
-    assigned = (
-        vecs.crossJoin(F.broadcast(coarse_new))
-        .withColumn("sim", sim)
-        .withColumn("rk", F.row_number().over(wv))
-        .where(F.col("rk") == 1)
-        .select("vec_id", F.col("label").alias("cell"))
-    )
-    codes_new = _pq_encode(vecs, pq_cb_new).join(assigned, "vec_id")
-    coarse_new.coalesce(1).write.mode("overwrite").parquet(
-        _os.path.join(index_dir, "coarse_codebook__new")
-    )
-    pq_cb_new.coalesce(1).write.mode("overwrite").parquet(
-        _os.path.join(index_dir, "pq_codebook__new")
-    )
-    (
-        spread_repartition(codes_new, "cell", "vec_id")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(_os.path.join(index_dir, "codes__new"))
-    )
-    write_json(_os.path.join(index_dir, "_refresh_commit.json"), {"drift_at_refresh": drift})
-    ivfpq_index_recover(index_dir)  # the swap IS forward recovery
-    return {**drift, "refreshed": True}
 
 
 def ivfpq_refinement_audit(
@@ -391,7 +256,7 @@ def ivfpq_refinement_audit(
     exclude_self: bool = False,
 ) -> DataFrame:
     """(nprobe, rerank_n, n_queries, k, hits, recall) — the composed
-    index's calibration GRID (r13; the IVFPQ extension of
+    index's calibration GRID (the IVFPQ extension of
     similarity2.pq_refinement_audit): recall@k vs brute force for every
     (probe width, shortlist size) pair, over a PERSISTED index — the
     sweep a store owner runs to site the nprobe/rerank operating point.
@@ -409,90 +274,30 @@ def ivfpq_refinement_audit(
 
     Opens forward-only like the query path. Brute force is the exact
     scan over ``vectors`` (the primary store)."""
-    from .similarity2 import _norm_vectors
-
     ivfpq_index_recover(index_dir, forward_only=True)
-    max_probe = max(nprobes)
-    qprobe = _probe_cells(spark, index_dir, queries, max_probe)
-    # re-derive each probed cell's rank for its query (bounded relation:
-    # nq x max_probe rows) — the cut key for the nprobe axis
-    coarse = spark.read.parquet(f"{index_dir}/coarse_codebook")
-    qsim = _dot("qv", "c") / (F.col("qnrm") * F.col("cn"))
-    wq = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("label"))
-    # cut: multi-consumer — the collected cell list, the LUT and the pair join
-    qprobe_rk = cut(
-        qprobe.join(F.broadcast(coarse), qprobe["cell"] == coarse["label"])
-        .withColumn("sim", qsim)
-        .withColumn("probe_rk", F.row_number().over(wq))
-        .select("query_id", "qv", "qnrm", "cell", "probe_rk"),
-        eager=True,
-    )
-    cells = sorted({r["cell"] for r in qprobe_rk.select("cell").distinct().collect()})
-    enc = spark.read.parquet(f"{index_dir}/codes").where(F.col("cell").isin(cells))
-    pairs_filter = (
-        (F.col("vec_id") != F.col("query_id")) if exclude_self else F.lit(True)
-    )
-    pq_cb = spark.read.parquet(f"{index_dir}/pq_codebook")
-    lut = _pq_lut(
-        qprobe_rk.select("query_id", "qv", "qnrm").distinct(), pq_cb
-    ).select(
-        F.col("query_id").alias("lq"), "qnrm", F.col("s").alias("ls"),
-        F.col("label").alias("ll"), "lutv",
-    )
-    pairs = enc.join(
-        F.broadcast(qprobe_rk.select("query_id", "cell", "probe_rk")), "cell"
-    ).where(pairs_filter)
     # cut: multi-consumer — one scoring pass read by every grid point
     adc = cut(
-        pairs.join(
-            F.broadcast(lut),
-            (pairs["s"] == F.col("ls"))
-            & (pairs["code"] == F.col("ll"))
-            & (pairs["query_id"] == F.col("lq")),
-        )
-        .groupBy("query_id", "vec_id")
-        .agg(
-            dsum(F.col("lutv")).alias("adc_sum"),
-            F.max("qnrm").alias("qnrm"),
-            F.max("nrm").alias("nrm"),
-            F.min("probe_rk").alias("probe_rk"),
-        )
-        .withColumn(
-            "adc_cosine", F.round(F.col("adc_sum") / (F.col("qnrm") * F.col("nrm")), 6)
-        )
-        .select("query_id", "vec_id", "adc_cosine", "probe_rk"),
+        _probed_adc(
+            spark, index_dir, queries, max(nprobes), exclude_self, rank=True
+        ).select("query_id", "vec_id", "adc_cosine", "probe_rk"),
         eager=True,
     )
     vecs = _norm_vectors(vectors)
-    q = queries.select("query_id", "qv", F.sqrt(_dot("qv", "qv")).alias("qnrm"))
+    q = _norm_queries(queries)
     # exact brute-force truth over the primary store (one pass)
-    bq = q.select("query_id", F.col("qv").alias("bqv"), F.col("qnrm").alias("bqnrm"))
-    bcos = F.round(_dot("v", "bqv") / (F.col("bqnrm") * F.col("nrm")), 6)
-    wb = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
+    pairs = vecs.crossJoin(F.broadcast(q))
+    if exclude_self:
+        pairs = pairs.where(F.col("vec_id") != F.col("query_id"))
     # cut: multi-consumer — every grid point's recall join
-    brute = cut(
-        vecs.crossJoin(F.broadcast(bq))
-        .where(pairs_filter)
-        .withColumn("cosine", bcos)
-        .withColumn("rk", F.row_number().over(wb))
-        .where(F.col("rk") <= k)
-        .select("query_id", "vec_id"),
-        eager=True,
-    )
+    brute = cut(_cosine_topk(pairs, k).select("query_id", "vec_id"), eager=True)
     n_queries = q.count()
     denom = float(n_queries * k)
-    from .similarity2 import _exact_rerank
-
     grid = []
     for nprobe in sorted(nprobes):
         cand = adc.where(F.col("probe_rk") <= nprobe)
-        wa = Window.partitionBy("query_id").orderBy(
-            F.desc("adc_cosine"), F.asc("vec_id")
-        )
         # cut: multi-consumer — one shortlist per rerank depth
         ranked = cut(
-            cand.withColumn("srk", F.row_number().over(wa)).where(F.col("srk") <= max(rerank_ns)),
-            eager=True,
+            _top_per_query(cand, "adc_cosine", max(rerank_ns), "srk"), eager=True
         )
         for n in sorted(rerank_ns):
             shortlist = ranked.where(F.col("srk") <= n).select(

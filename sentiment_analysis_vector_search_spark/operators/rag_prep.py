@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import cut, fan_out, table
 from ..functions.hashing import md5_long, sql_md5_long
+from ..functions.vectors import dot
 from ..registry import register
 
 # ---------------------------------------------------------------------------
@@ -242,12 +243,6 @@ def _spark_emb(key: Column) -> Column:
     )
 
 
-_DOT = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> x * y), cast(0.0 as double),"
-    " (acc, x) -> acc + x)"
-)
-
-
 @register("rag_chunk_retrieve", oracle=_RETRIEVE_ORACLE)
 def rag_chunk_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The _R_DIM md5-embedding exprs per chunk are the expression-heavy
@@ -269,11 +264,8 @@ def rag_chunk_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "chunk_id",
         (
-            F.expr(_DOT.format(a="e", b="qe"))
-            / (
-                F.sqrt(F.expr(_DOT.format(a="e", b="e")))
-                * F.sqrt(F.expr(_DOT.format(a="qe", b="qe")))
-            )
+            dot("e", "qe")
+            / (F.sqrt(dot("e", "e")) * F.sqrt(dot("qe", "qe")))
         ).alias("raw_score"),
     )
     return (

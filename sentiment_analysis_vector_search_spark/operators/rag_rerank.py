@@ -26,8 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import cut, fan_out, table
+from ..functions.vectors import dot
 from ..registry import register
-from .rag_prep import _chunks, _DOT, _N_CHUNKS_SQL, _spark_emb, _sql_emb
+from .rag_prep import _chunks, _N_CHUNKS_SQL, _spark_emb, _sql_emb
 
 _POOL = 10
 _K = 3  # unrolled below; each step is pool-sized work
@@ -81,9 +82,7 @@ UNION ALL SELECT 3, doc_id, chunk_id, rel, mmr FROM s3
 
 
 def _cos_expr(a: str, b: str):
-    return F.expr(_DOT.format(a=a, b=b)) / (
-        F.sqrt(F.expr(_DOT.format(a=a, b=a))) * F.sqrt(F.expr(_DOT.format(a=b, b=b)))
-    )
+    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
 
 
 def _pick(df: DataFrame, order_col: str) -> DataFrame:

@@ -22,34 +22,63 @@ from __future__ import annotations
 
 import math
 import os
+from typing import Callable, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import cut, table
 from ..commit import write_json
-from ..functions.stable import DEC
-from ..functions.vectors import hyperplanes, sql_plane_dot
+from ..functions.stable import DEC, davg
+from ..functions.vectors import dot, dot_expr, hyperplanes, sql_plane_dot
 from ..registry import register
 
 _N_QUERIES = 5
 _TOP_K = 10
 
-_DOT_VQ = (
-    "aggregate(zip_with(v, qv, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
-)
+
+def _norm_vectors(vectors: DataFrame, v: str = "v") -> DataFrame:
+    """(vec_id, v array<double>, nrm) from a raw vector relation whose
+    vector column is ``v``."""
+    return vectors.select(
+        "vec_id", F.col(v).cast("array<double>").alias("v")
+    ).withColumn("nrm", F.sqrt(dot("v", "v")))
 
 
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings")
-    v = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    return v.withColumn(
-        "nrm",
-        F.sqrt(
-            F.expr(
-                "aggregate(zip_with(v, v, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
-            )
-        ),
+    return _norm_vectors(table(spark, sf_dir, "embeddings"), "embedding")
+
+
+def _corpus_queries(vecs: DataFrame) -> DataFrame:
+    """The first _N_QUERIES corpus vectors as (query_id, qv, qnrm)."""
+    return vecs.where(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.col("nrm").alias("qnrm"),
+    )
+
+
+def _norm_queries(queries: DataFrame) -> DataFrame:
+    """(query_id, qv, qnrm) from caller-supplied (query_id, qv) rows."""
+    return queries.select("query_id", "qv", F.sqrt(dot("qv", "qv")).alias("qnrm"))
+
+
+def _top_per_query(df: DataFrame, score: str, n: int, rank: str = "rk") -> DataFrame:
+    """Rows numbered ``rank`` per query_id by (score DESC, vec_id ASC),
+    the first ``n`` kept — the one top-k/shortlist device."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("vec_id"))
+    return df.withColumn(rank, F.row_number().over(w)).where(F.col(rank) <= n)
+
+
+def _cosine() -> Column:
+    """Exact 6dp cosine of a (query qv/qnrm, vector v/nrm) pair."""
+    return F.round(dot("v", "qv") / (F.col("qnrm") * F.col("nrm")), 6)
+
+
+def _cosine_topk(cand: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of candidate pairs by exact cosine."""
+    return _top_per_query(
+        cand.select("query_id", "vec_id", _cosine().alias("cosine")), "cosine", k
     )
 
 
@@ -86,22 +115,10 @@ SELECT query_id, vec_id, cosine, rk FROM (
 @register("ann_bruteforce_topk", oracle=_BRUTE_ORACLE)
 def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = _vectors(spark, sf_dir)
-    queries = vecs.where(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
+    cand = vecs.crossJoin(F.broadcast(_corpus_queries(vecs))).where(
+        F.col("vec_id") != F.col("query_id")
     )
-    scored = (
-        vecs.crossJoin(F.broadcast(queries))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(F.expr(_DOT_VQ) / (F.col("qnrm") * F.col("nrm")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= _TOP_K)
+    return _cosine_topk(cand, _TOP_K)
 
 
 # ---------------------------------------------------------------------------
@@ -268,12 +285,11 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "vec_id",
-            F.round(F.expr(_DOT_VQ) / (F.col("qnrm") * F.col("nrm")), 6).alias("cosine"),
+            _cosine().alias("cosine"),
         )
         .distinct()
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= _TOP_K)
+    return _top_per_query(scored, "cosine", _TOP_K)
 
 
 # ---------------------------------------------------------------------------
@@ -362,7 +378,7 @@ def _codebook(spark: SparkSession) -> DataFrame:
 
 def _with_sims_array(df: DataFrame, spark: SparkSession, vec: str, nrm: str) -> DataFrame:
     """Append `sims`: cosine of `vec` against every codebook centroid."""
-    dots = f"transform(cmat, c -> aggregate(zip_with({vec}, c, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x))"
+    dots = f"transform(cmat, c -> {dot_expr(vec, 'c')})"
     sims = f"zip_with({dots}, cnorms, (d, cn) -> d / ({nrm} * cn))"
     return df.crossJoin(F.broadcast(_codebook(spark))).withColumn(
         "sims", F.expr(sims)
@@ -428,16 +444,11 @@ def _assigned_arrow(spark: SparkSession, sf_dir: str, where=None) -> DataFrame:
     )
 
 
-@register("ann_ivf_topk", oracle=_IVF_ORACLE)
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    vecs = _vectors(spark, sf_dir)
-    assigned = _assigned_arrow(spark, sf_dir)
-    queries = vecs.where(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    qsims = _with_sims_array(queries, spark, "qv", "qnrm")
+def _seeded_ivf_topk(spark: SparkSession, sf_dir: str, where=None) -> DataFrame:
+    """Seeded-codebook IVF top-k over the corpus vectors passing
+    ``where`` (all when None); queries come from the unfiltered corpus."""
+    assigned = _assigned_arrow(spark, sf_dir, where=where)
+    qsims = _with_sims_array(_corpus_queries(_vectors(spark, sf_dir)), spark, "qv", "qnrm")
     # top-nprobe cells via in-array sort, not a row_number window: the
     # sims array is codebook-sized, so sorting it in place keeps the
     # query side a single map-only stage (the window version paid a whole
@@ -456,13 +467,12 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = F.broadcast(probed).join(assigned, "cell").where(
         F.col("vec_id") != F.col("query_id")
     )
-    scored = cand.select(
-        "query_id",
-        "vec_id",
-        F.round(F.expr(_DOT_VQ) / (F.col("qnrm") * F.col("nrm")), 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= _TOP_K)
+    return _cosine_topk(cand, _TOP_K)
+
+
+@register("ann_ivf_topk", oracle=_IVF_ORACLE)
+def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _seeded_ivf_topk(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -587,11 +597,10 @@ def ann_bruteforce_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     scored = vecs.mapInArrow(score, "query_id bigint, vec_id bigint, cosine double")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"))
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= _TOP_K)
+    return _top_per_query(
+        scored.select("query_id", "vec_id", F.round("cosine", 6).alias("cosine")),
+        "cosine",
+        _TOP_K,
     )
 
 
@@ -655,108 +664,207 @@ SELECT query_id, vec_id, cosine, rk FROM (
 """
 
 
+def _centroid_mean(
+    rows: DataFrame,
+    keys: tuple[str, ...],
+    vec,
+    out: str,
+    subdim: int | None = None,
+    carry: tuple[str, ...] = (),
+    pos_aggs: tuple[Column, ...] = (),
+    aggs: tuple[Column, ...] = (),
+) -> DataFrame:
+    """Per-``keys`` mean of the vector ``vec`` as ``out`` array<double>:
+    posexplode, one decimal-stable ``davg`` per (keys, pos) — the same
+    mean under any partitioning, so the oracle can replay it — then the
+    per-pos means collected back in pos order. ``subdim`` splits each
+    mean into subdim-wide subvectors, one row per (keys, s): the PQ
+    sub-centroids. ``carry`` columns ride into the per-pos grouping for
+    ``pos_aggs``; ``aggs`` join the final grouping."""
+    per_pos = (
+        rows.select(*keys, *carry, F.posexplode(vec).alias("pos", "val"))
+        .groupBy(*keys, "pos")
+        .agg(davg(F.col("val")).alias("cv"), *pos_aggs)
+    )
+    if subdim is not None:
+        per_pos = per_pos.withColumn("s", (F.col("pos") / F.lit(subdim)).cast("int"))
+        keys = (*keys, "s")
+    return per_pos.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "cv"))), lambda x: x["cv"]
+        ).alias(out),
+        *aggs,
+    )
+
+
+def _centroid_rank(
+    df: DataFrame, cents: DataFrame, key: str, vec: str, nrm: str
+) -> DataFrame:
+    """``df`` x broadcast codebook (label, c, cn) with ``rk``: each
+    centroid's row_number per ``key`` by cosine(vec, c) DESC, label ASC.
+    rk = 1 is the nearest cell; rk <= nprobe are the probed cells."""
+    sim = dot(vec, "c") / (F.col(nrm) * F.col("cn"))
+    w = Window.partitionBy(key).orderBy(F.desc("sim"), F.asc("label"))
+    return (
+        df.crossJoin(F.broadcast(cents))
+        .withColumn("sim", sim)
+        .withColumn("rk", F.row_number().over(w))
+    )
+
+
+def _assign(vecs: DataFrame, cents: DataFrame, keep=("vec_id", "v", "nrm")) -> DataFrame:
+    """Each (vec_id, v, nrm) vector's nearest cell: ``keep`` + cell."""
+    return (
+        _centroid_rank(vecs, cents, "vec_id", "v", "nrm")
+        .where(F.col("rk") == 1)
+        .select(*keep, F.col("label").alias("cell"))
+    )
+
+
+def _probe(
+    queries: DataFrame, cents: DataFrame, nprobe: int, keep=("query_id", "qv", "qnrm")
+) -> DataFrame:
+    """Each (query_id, qv, qnrm) query's ``nprobe`` nearest cells:
+    ``keep`` + cell, one row per probed cell."""
+    return (
+        _centroid_rank(queries, cents, "query_id", "qv", "qnrm")
+        .where(F.col("rk") <= nprobe)
+        .select(*keep, F.col("label").alias("cell"))
+    )
+
+
 def _trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-derived coarse codebook: per-label mean vectors with norms —
     (label, c array<double>, cn). Broadcast-sized by construction."""
-    from ..functions.stable import davg
-
     emb = table(spark, sf_dir, "embeddings")
-    cent_long = (
-        emb.select(
-            "label",
-            F.posexplode(F.col("embedding").cast("array<double>")).alias("pos", "val"),
-        )
-        .groupBy("label", "pos")
-        .agg(davg(F.col("val")).alias("cv"))
+    cents = _centroid_mean(
+        emb, ("label",), F.col("embedding").cast("array<double>"), "c"
     )
-    cents = cent_long.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cv"))), lambda x: x["cv"]
-        ).alias("c")
-    )
-    return cents.withColumn(
-        "cn", F.sqrt(F.expr("aggregate(zip_with(c, c, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"))
-    )
-
-
-def _trained_assignments(spark: SparkSession, sf_dir: str, cents_n: DataFrame) -> DataFrame:
-    """Every corpus vector assigned to its max-cosine codebook cell."""
-    vecs = _vectors(spark, sf_dir)
-    sim = F.expr(
-        "aggregate(zip_with(v, c, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
-    ) / (F.col("nrm") * F.col("cn"))
-    wv = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("label"))
-    return (
-        vecs.crossJoin(F.broadcast(cents_n))
-        .withColumn("sim", sim)
-        .withColumn("rk", F.row_number().over(wv))
-        .where(F.col("rk") == 1)
-        .select("vec_id", "v", "nrm", F.col("label").alias("cell"))
-    )
+    return cents.withColumn("cn", F.sqrt(dot("c", "c")))
 
 
 @register("ann_ivf_trained_topk", oracle=_trained_ivf_oracle())
 def ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents_n = _trained_codebook(spark, sf_dir)
     vecs = _vectors(spark, sf_dir)
-    assigned = _trained_assignments(spark, sf_dir, cents_n)
-    queries = vecs.where(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    qsim = F.expr(
-        "aggregate(zip_with(qv, c, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
-    ) / (F.col("qnrm") * F.col("cn"))
-    wq = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("label"))
-    qprobe = (
-        queries.crossJoin(F.broadcast(cents_n))
-        .withColumn("sim", qsim)
-        .withColumn("rk", F.row_number().over(wq))
-        .where(F.col("rk") <= _TRAINED_NPROBE)
-        .select("query_id", "qv", "qnrm", F.col("label").alias("cell"))
-    )
-    cand = F.broadcast(qprobe).join(assigned, "cell").where(
+    qprobe = _probe(_corpus_queries(vecs), cents_n, _TRAINED_NPROBE)
+    cand = F.broadcast(qprobe).join(_assign(vecs, cents_n), "cell").where(
         F.col("vec_id") != F.col("query_id")
     )
-    scored = cand.select(
-        "query_id",
-        "vec_id",
-        F.round(F.expr(_DOT_VQ) / (F.col("qnrm") * F.col("nrm")), 6).alias("cosine"),
+    return _cosine_topk(cand, _TOP_K)
+
+
+# ---------------------------------------------------------------------------
+# Persisted vector indexes — build once, query many times. Three kinds
+# share this core: IVF (here), PQ (similarity2) and IVF-PQ (ivfpq).
+# INDEX_LAYOUT is the one kind -> directories table: builds and refreshes
+# write its directories in order, the recover swap walks them, ingest
+# appends to (and compaction rewrites) the last one, and the CLI finds
+# each kind's verbs through it.
+#
+# The IVF build writes the codebook and the cell assignments as parquet,
+# with assignments PARTITIONED BY CELL so a query's nprobe cells become
+# partition-pruned directory reads: at 10^9 vectors a 2-of-1024-cell
+# probe opens ~0.2% of the index. Query results for the same (queries,
+# k, nprobe) are IDENTICAL to ann_ivf_trained_topk — pinned by pytest —
+# because both paths share _trained_codebook/_assign/_probe.
+# ---------------------------------------------------------------------------
+
+
+class _IndexKind(NamedTuple):
+    dirs: tuple[str, ...]  # swap order; dirs[-1] is the ingest table
+    module: str  # the operators module holding the kind's verbs
+    primary_store: bool  # search rerank and refresh read the raw vectors
+
+
+INDEX_LAYOUT = {
+    "ivf": _IndexKind(("codebook", "assignments"), "similarity", False),
+    "pq": _IndexKind(("codebook", "codes"), "similarity2", True),
+    "ivfpq": _IndexKind(("coarse_codebook", "pq_codebook", "codes"), "ivfpq", True),
+}
+
+_VERBS = {
+    "build": "build_{}_index",
+    "add": "{}_index_add",
+    "query": "ann_{}_index_query",
+    "refresh": "{}_codebook_refresh",
+}
+
+
+def index_verb(kind: str, verb: str) -> Callable:
+    """The ``build``/``add``/``query``/``refresh`` function of an index
+    kind (looked up at call time, so a patched module attribute wins)."""
+    import importlib
+
+    module = importlib.import_module(f".{INDEX_LAYOUT[kind].module}", __package__)
+    return getattr(module, _VERBS[verb].format(kind))
+
+
+def _write(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+    """Write one index directory: a codebook (no vec_id) as one file; a
+    table carrying ``cell`` partitioned by cell over a (cell, vec_id)
+    spread, so write parallelism scales with executors, not with the
+    ~16-cell codebook, while keeping the cell=... pruning layout; any
+    other table as is."""
+    from ..sinks import spread_repartition
+
+    if "vec_id" not in df.columns:
+        writer = df.coalesce(1).write
+    elif "cell" in df.columns:
+        writer = spread_repartition(df, "cell", "vec_id").write.partitionBy("cell")
+    else:
+        writer = df.write
+    writer.mode(mode).parquet(path)
+
+
+def _write_index(kind: str, index_dir: str, frames, suffix: str = "") -> None:
+    """Write ``frames`` as the kind's directories, in layout order."""
+    for name, df in zip(INDEX_LAYOUT[kind].dirs, frames, strict=True):
+        _write(df, os.path.join(index_dir, name + suffix))
+
+
+def _append(kind: str, index_dir: str, df: DataFrame, stage_dir: str | None) -> None:
+    """Append a batch to the kind's ingest table — or, with
+    ``stage_dir``, write it THERE (overwrite): the hook streaming ingest
+    uses to make the append idempotent (stage, then atomic batch-stamped
+    renames; see file_sink._idempotent_append_dir)."""
+    if stage_dir is None:
+        _write(df, os.path.join(index_dir, INDEX_LAYOUT[kind].dirs[-1]), "append")
+    else:
+        _write(df, stage_dir)
+
+
+def _probe_cells(
+    spark: SparkSession,
+    kind: str,
+    index_dir: str,
+    queries: DataFrame,
+    nprobe: int,
+    rank: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """(probes, probed table) of a persisted cell-partitioned index.
+
+    Probes: each (query_id, qv) query's top-``nprobe`` cells against the
+    stored coarse codebook — (query_id, qv, qnrm[, probe_rk], cell),
+    materialized (bounded: nq x nprobe). The probed cell ids are
+    collected (bounded metadata) and pushed as LITERAL partition filters
+    on the kind's data table, so the scan is statically pruned."""
+    dirs = INDEX_LAYOUT[kind].dirs
+    keep = ("query_id", "qv", "qnrm", *([F.col("rk").alias("probe_rk")] if rank else []))
+    cents = spark.read.parquet(f"{index_dir}/{dirs[0]}")
+    # cut: multi-consumer — the collected cell list and the candidate join
+    qprobe = cut(_probe(_norm_queries(queries), cents, nprobe, keep), eager=True)
+    cells = sorted({r.cell for r in qprobe.select("cell").distinct().collect()})
+    return qprobe, spark.read.parquet(f"{index_dir}/{dirs[-1]}").where(
+        F.col("cell").isin(cells)
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= _TOP_K)
-
-
-# ---------------------------------------------------------------------------
-# Persistent IVF index — build once, query many times. The build writes
-# the codebook and the cell assignments as parquet, with assignments
-# PARTITIONED BY CELL so a query's nprobe cells become partition-pruned
-# directory reads: at 10^9 vectors a 2-of-1024-cell probe opens ~0.2% of
-# the index. Query results for the same (queries, k, nprobe) are
-# IDENTICAL to ann_ivf_trained_topk — pinned by pytest — because both
-# paths share _trained_codebook/_trained_assignments.
-# ---------------------------------------------------------------------------
 
 
 def build_ivf_index(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
     """Materialize the trained-IVF index: codebook + cell-partitioned
     assignments (vec_id, v, nrm, cell)."""
     cents_n = _trained_codebook(spark, sf_dir)
-    from ..sinks import spread_repartition
-
-    cents_n.coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/codebook")
-    # (cell, vec_id) shuffle: write parallelism scales with executors,
-    # not with the ~16-cell codebook (r8 verdict #2); partitionBy keeps
-    # the cell=... pruning layout and compact_index('ivf') re-tidies.
-    (
-        spread_repartition(
-            _trained_assignments(spark, sf_dir, cents_n), "cell", "vec_id"
-        )
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{index_dir}/assignments")
-    )
+    _write_index("ivf", index_dir, (cents_n, _assign(_vectors(spark, sf_dir), cents_n)))
 
 
 def ann_ivf_index_query(
@@ -768,56 +876,22 @@ def ann_ivf_index_query(
 ) -> DataFrame:
     """Top-k cosine search against a persisted IVF index.
 
-    ``queries``: (query_id bigint, qv array<double>). The probe cells are
-    computed against the (tiny, collected) codebook and pushed as LITERAL
-    partition filters so the assignment scan is statically pruned — the
-    collect moves nq x nprobe cell ids, bounded metadata. The rerank is
-    the same broadcast-queries candidate join as the in-memory path.
+    ``queries``: (query_id bigint, qv array<double>). The probe cells
+    prune the assignment scan statically (``_probe_cells``); the rerank
+    is the same broadcast-queries candidate join as the in-memory path.
     Opens with ``ivf_index_recover(forward_only=True)`` (one existence
     check when idle) so a COMMITTED refresh swap a crash left half-done
     is completed before the read — queries never see a torn index.
     Forward-only: uncommitted __new staging is left for the refresh
-    writer to commit or clean (r12 advice — a query open must not
-    rmtree the staging a live refresh is still writing).
+    writer to commit or clean — a query open must not rmtree the
+    staging a live refresh is still writing.
     """
     ivf_index_recover(index_dir, forward_only=True)
-    cents_n = spark.read.parquet(f"{index_dir}/codebook")
-    q = queries.select(
-        "query_id",
-        "qv",
-        F.sqrt(
-            F.expr(
-                "aggregate(zip_with(qv, qv, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
-            )
-        ).alias("qnrm"),
-    )
-    qsim = F.expr(
-        "aggregate(zip_with(qv, c, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
-    ) / (F.col("qnrm") * F.col("cn"))
-    wq = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("label"))
-    # cut: multi-consumer — the collected cell list and the candidate join
-    qprobe = cut(
-        q.crossJoin(F.broadcast(cents_n))
-        .withColumn("sim", qsim)
-        .withColumn("rk", F.row_number().over(wq))
-        .where(F.col("rk") <= nprobe)
-        .select("query_id", "qv", "qnrm", F.col("label").alias("cell")),
-        eager=True,
-    )
-    cells = sorted({r.cell for r in qprobe.select("cell").distinct().collect()})
-    assigned = spark.read.parquet(f"{index_dir}/assignments").where(
-        F.col("cell").isin(cells)
-    )
+    qprobe, assigned = _probe_cells(spark, "ivf", index_dir, queries, nprobe)
     cand = F.broadcast(qprobe).join(assigned, "cell").where(
         F.col("vec_id") != F.col("query_id")
     )
-    scored = cand.select(
-        "query_id",
-        "vec_id",
-        F.round(F.expr(_DOT_VQ) / (F.col("qnrm") * F.col("nrm")), 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+    return _cosine_topk(cand, k)
 
 
 def ivf_index_add(
@@ -833,96 +907,58 @@ def ivf_index_add(
     pinned by pytest — and the maintenance cost is proportional to the
     batch, not the index (the real-world ingest path for a vector store;
     re-train the codebook only when drift warrants a rebuild).
-
-    ``stage_dir``: write the assigned batch THERE (overwrite, still
-    cell-partitioned) instead of appending into the index — the hook
-    streaming ingest uses to make the append idempotent (stage, then
-    atomic batch-stamped renames; see file_sink._idempotent_append_dir)."""
+    ``stage_dir``: see ``_append``."""
     cents_n = spark.read.parquet(f"{index_dir}/codebook")
-    vecs = new_vectors.select(
-        "vec_id", F.col("v").cast("array<double>").alias("v")
-    ).withColumn(
-        "nrm",
-        F.sqrt(
-            F.expr(
-                "aggregate(zip_with(v, v, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
-            )
-        ),
-    )
-    sim = F.expr(
-        "aggregate(zip_with(v, c, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
-    ) / (F.col("nrm") * F.col("cn"))
-    wv = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("label"))
-    assigned = (
-        vecs.crossJoin(F.broadcast(cents_n))
-        .withColumn("sim", sim)
-        .withColumn("rk", F.row_number().over(wv))
-        .where(F.col("rk") == 1)
-        .select("vec_id", "v", "nrm", F.col("label").alias("cell"))
-    )
-    from ..sinks import spread_repartition
-
-    writer = spread_repartition(assigned, "cell", "vec_id").write.partitionBy("cell")
-    if stage_dir is None:
-        writer.mode("append").parquet(f"{index_dir}/assignments")
-    else:
-        writer.mode("overwrite").parquet(stage_dir)
+    _append("ivf", index_dir, _assign(_norm_vectors(new_vectors), cents_n), stage_dir)
 
 
 # ---------------------------------------------------------------------------
-# IVF codebook lifecycle: drift measurement + refresh (r11 verdict #8c —
-# the one lifecycle step the serving-index family lacked). Ingest
-# against a FROZEN codebook (ivf_index_add / stream_ivf_ingest) slowly
-# pulls each cell's true mean away from its stored centroid; when that
-# drift passes a threshold, probe quality decays and the store owner
-# re-trains. ivf_index_drift measures the signal (bounded: one partial
-# agg to |cells| x dim rows against the broadcast codebook);
-# ivf_codebook_refresh runs ONE Lloyd step — new centroid = mean of the
-# vectors currently in the cell, then a full re-assign against the new
-# codebook (the same broadcast-assign shape as ivf_index_add, one index
-# scan) — and commits both directories behind a marker-file swap
-# protocol so a crash at ANY point leaves a recoverable index:
-#   1. write codebook__new / assignments__new (complete before commit)
-#   2. atomically write _refresh_commit.json   <- the commit point
+# Codebook lifecycle, shared by the three index kinds: drift measurement
+# + refresh. Ingest against a FROZEN codebook (*_index_add /
+# stream_*_ingest) slowly pulls each cell's true mean away from its
+# stored centroid; when that drift passes a threshold, probe quality
+# decays and the store owner re-trains. Each kind measures its drift
+# (bounded: one partial agg to |cells| x dim rows against the broadcast
+# codebook) and supplies ONE Lloyd step — new centroid = mean of the
+# vectors currently in the cell, then a full re-assign / re-encode
+# against the new codebook. _codebook_refresh commits every directory
+# behind a marker-file swap protocol so a crash at ANY point leaves a
+# recoverable index:
+#   1. write <dir>__new for every directory (complete before commit)
+#   2. atomically write the _REFRESH_MARKER file   <- the commit point
 #   3. per directory: rename cur -> cur__old, rename new -> cur, rm old
 #   4. remove the marker
-# ivf_index_recover rolls FORWARD when the marker exists (the new index
-# is complete by invariant 1) and rolls BACK stray __new dirs when it
-# does not (the swap never committed). The SCD2 bucket-swap protocol,
-# lifted to a two-directory artifact (file_sink.py:1107 precedent).
+# _swap_recover rolls FORWARD when the marker exists (the new index is
+# complete by invariant 1) and rolls BACK stray __new dirs when it does
+# not (the swap never committed) — the bucket-swap protocol of
+# file_sink.stream_scd2_maintenance, lifted to a multi-directory artifact.
 #
-# Writer/reader contract (r12 advice): rollback is a WRITER action —
-# only the refresh itself (the single writer; refreshes must not run
-# concurrently) may delete uncommitted __new staging, because a query
-# that opened mid-refresh would otherwise rmtree the staging the live
-# refresh is still writing. Query opens therefore recover FORWARD-ONLY
+# Writer/reader contract: rollback is a WRITER action — only the refresh
+# itself (the single writer; refreshes must not run concurrently) may
+# delete uncommitted __new staging, because a query that opened
+# mid-refresh would otherwise rmtree the staging the live refresh is
+# still writing. Query opens therefore recover FORWARD-ONLY
 # (forward_only=True): they complete a committed-but-torn swap (the
 # marker proves the __new dirs are complete and the writer is past its
 # point of no return) and leave pre-marker staging untouched.
 # ---------------------------------------------------------------------------
 
-_IVF_REFRESH_MARKER = "_refresh_commit.json"
+_REFRESH_MARKER = "_refresh_commit.json"
 
 
-def _swap_recover(
-    index_dir: str,
-    names: tuple[str, ...],
-    marker_name: str = _IVF_REFRESH_MARKER,
-    forward_only: bool = False,
-) -> None:
-    """Generic marker-file swap recovery over ``names`` subdirectories
-    of ``index_dir`` (shared by the IVF / PQ / IVFPQ codebook refresh
-    lifecycles). Marker present -> roll forward (install every __new);
-    marker absent -> roll back stray staging, UNLESS ``forward_only``
-    (the reader-side mode: never delete another process's staging)."""
+def _swap_recover(kind: str, index_dir: str, forward_only: bool = False) -> None:
+    """Marker-file swap recovery over the kind's directories. Marker
+    present -> roll forward (install every __new); marker absent -> roll
+    back stray staging, UNLESS ``forward_only`` (the reader-side mode:
+    never delete another process's staging)."""
     import contextlib
     import shutil
 
-    marker = os.path.join(index_dir, marker_name)
+    marker = os.path.join(index_dir, _REFRESH_MARKER)
     committed = os.path.exists(marker)
     if not committed and forward_only:
         return
-    for name in names:
+    for name in INDEX_LAYOUT[kind].dirs:
         cur = os.path.join(index_dir, name)
         new = cur + "__new"
         old = cur + "__old"
@@ -957,44 +993,46 @@ def _swap_recover(
             os.remove(marker)
 
 
-def ivf_index_drift(spark: SparkSession, index_dir: str) -> dict:
-    """Max/mean per-cell centroid drift of a persisted IVF index:
-    1 - cosine(stored centroid, mean of currently assigned vectors).
-    One assignments pass (partial-agg to |cells| x dim rows), codebook
-    broadcast; three scalars to the driver."""
-    from ..functions.stable import davg
+def _codebook_refresh(
+    kind: str,
+    index_dir: str,
+    drift: Callable[[], dict],
+    lloyd: Callable[[], tuple],
+    max_drift: float,
+    force: bool,
+) -> dict:
+    """The refresh every index kind runs (note above): writer-side
+    recover, measure ``drift()``, gate, stage ``lloyd()``'s frames as
+    the kind's ``<dir>__new`` directories, write the commit marker, then
+    swap by forward recovery. Returns the drift measurement plus
+    {"refreshed": bool}; measurement-only while ``max_drift`` is not
+    reached and ``force`` is False."""
+    _swap_recover(kind, index_dir)
+    measured = drift()
+    if not force and measured["max_drift"] < max_drift:
+        return {**measured, "refreshed": False}
+    _write_index(kind, index_dir, lloyd(), suffix="__new")
+    # commit point: every __new dir is complete on disk
+    write_json(os.path.join(index_dir, _REFRESH_MARKER), {"drift_at_refresh": measured})
+    _swap_recover(kind, index_dir)  # the swap IS forward recovery
+    return {**measured, "refreshed": True}
 
-    cents = spark.read.parquet(f"{index_dir}/codebook")
-    asg = spark.read.parquet(f"{index_dir}/assignments")
-    cell_mean = (
-        asg.select("cell", F.posexplode("v").alias("pos", "val"))
-        .groupBy("cell", "pos")
-        .agg(davg(F.col("val")).alias("cv"))
-        .groupBy("cell")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "cv"))),
-                lambda x: x["cv"],
-            ).alias("m")
-        )
-    )
-    dot = F.expr(
-        "aggregate(zip_with(m, c, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
-    )
-    mnrm = F.sqrt(
-        F.expr(
-            "aggregate(zip_with(m, m, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
-        )
-    )
+
+def _coarse_drift(members: DataFrame, cents: DataFrame) -> dict:
+    """Max/mean per-cell drift of cell ``members`` (cell, v) against a
+    coarse codebook (label, c, cn): 1 - cosine(stored centroid, mean of
+    the member vectors); three scalars to the driver."""
+    means = _centroid_mean(members, ("cell",), "v", "m")
+    mnrm = F.sqrt(dot("m", "m"))
     # greatest(denom, tiny): a zero-norm member mean (or a zero-norm
     # stored centroid) must read as full drift (1.0), not divide to NaN
-    # and silently disable the NaN < max_drift refresh gate (r12 advice)
+    # and silently disable the NaN < max_drift refresh gate
     d = (
-        cell_mean.join(cents, cell_mean["cell"] == cents["label"])
+        means.join(cents, means["cell"] == cents["label"])
         .select(
             (
                 F.lit(1.0)
-                - dot / F.greatest(mnrm * F.col("cn"), F.lit(1e-300))
+                - dot("m", "c") / F.greatest(mnrm * F.col("cn"), F.lit(1e-300))
             ).alias("drift")
         )
         .agg(
@@ -1011,15 +1049,37 @@ def ivf_index_drift(spark: SparkSession, index_dir: str) -> dict:
     }
 
 
+def _coarse_lloyd(members: DataFrame) -> DataFrame:
+    """One Lloyd step of a coarse codebook: cell -> decimal mean of its
+    current ``members`` (cell, v) as (label, c, cn) — the
+    _trained_codebook arithmetic, so centroids stay engine-stable."""
+    # cut: multi-consumer — write + re-assign
+    return cut(
+        _centroid_mean(members, ("cell",), "v", "c").select(
+            F.col("cell").alias("label"), "c", F.sqrt(dot("c", "c")).alias("cn")
+        ),
+        eager=True,
+    )
+
+
+def ivf_index_drift(spark: SparkSession, index_dir: str) -> dict:
+    """Max/mean per-cell centroid drift of a persisted IVF index:
+    1 - cosine(stored centroid, mean of currently assigned vectors).
+    One assignments pass (partial-agg to |cells| x dim rows); three
+    scalars to the driver."""
+    return _coarse_drift(
+        spark.read.parquet(f"{index_dir}/assignments"),
+        spark.read.parquet(f"{index_dir}/codebook"),
+    )
+
+
 def ivf_index_recover(index_dir: str, forward_only: bool = False) -> None:
     """Complete (marker present) or roll back (no marker) a refresh swap
     a crash left half-done — idempotent, cheap, safe to run at every
     index open. ``forward_only=True`` is the READER mode (query opens):
     it never deletes uncommitted __new staging, which may belong to a
-    refresh still writing it (module note: writer/reader contract)."""
-    _swap_recover(
-        index_dir, ("codebook", "assignments"), forward_only=forward_only
-    )
+    refresh still writing it (note above: writer/reader contract)."""
+    _swap_recover("ivf", index_dir, forward_only)
 
 
 def ivf_codebook_refresh(
@@ -1029,65 +1089,18 @@ def ivf_codebook_refresh(
     force: bool = False,
 ) -> dict:
     """Drift-triggered codebook re-train + full re-assign behind the
-    marker-file swap (module note above). Returns the drift measurement
-    plus {"refreshed": bool}. No-op (measurement only) while max cell
-    drift stays under ``max_drift`` and ``force`` is False."""
-    from ..functions.stable import davg
-    from ..sinks import spread_repartition
+    marker-file swap (``_codebook_refresh``). Returns the drift
+    measurement plus {"refreshed": bool}. No-op (measurement only) while
+    max cell drift stays under ``max_drift`` and ``force`` is False."""
 
-    ivf_index_recover(index_dir)
-    drift = ivf_index_drift(spark, index_dir)
-    if not force and drift["max_drift"] < max_drift:
-        return {**drift, "refreshed": False}
+    def lloyd():
+        asg = spark.read.parquet(f"{index_dir}/assignments")
+        cents_new = _coarse_lloyd(asg)
+        return cents_new, _assign(asg.select("vec_id", "v", "nrm"), cents_new)
 
-    asg = spark.read.parquet(f"{index_dir}/assignments")
-    # one Lloyd step: cell -> mean of its current members (davg: the
-    # _trained_codebook arithmetic, so centroids stay engine-stable)
-    # cut: multi-consumer — write + re-assign
-    cents_new = cut(
-        asg.select("cell", F.posexplode("v").alias("pos", "val"))
-        .groupBy("cell", "pos")
-        .agg(davg(F.col("val")).alias("cv"))
-        .groupBy("cell")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "cv"))),
-                lambda x: x["cv"],
-            ).alias("c")
-        )
-        .select(
-            F.col("cell").alias("label"),
-            "c",
-            F.sqrt(
-                F.expr(
-                    "aggregate(zip_with(c, c, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
-                )
-            ).alias("cn"),
-        ),
-        eager=True,
+    return _codebook_refresh(
+        "ivf", index_dir, lambda: ivf_index_drift(spark, index_dir), lloyd, max_drift, force
     )
-    sim = F.expr(
-        "aggregate(zip_with(v, c, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
-    ) / (F.col("nrm") * F.col("cn"))
-    wv = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("label"))
-    reassigned = (
-        asg.select("vec_id", "v", "nrm")
-        .crossJoin(F.broadcast(cents_new))
-        .withColumn("sim", sim)
-        .withColumn("rk", F.row_number().over(wv))
-        .where(F.col("rk") == 1)
-        .select("vec_id", "v", "nrm", F.col("label").alias("cell"))
-    )
-    cb_new = os.path.join(index_dir, "codebook__new")
-    asg_new = os.path.join(index_dir, "assignments__new")
-    cents_new.coalesce(1).write.mode("overwrite").parquet(cb_new)
-    spread_repartition(reassigned, "cell", "vec_id").write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(asg_new)
-    # commit point: both __new dirs are complete on disk
-    write_json(os.path.join(index_dir, _IVF_REFRESH_MARKER), {"drift_at_refresh": drift})
-    ivf_index_recover(index_dir)  # the swap IS forward recovery
-    return {**drift, "refreshed": True}
 
 
 # ---------------------------------------------------------------------------
@@ -1113,17 +1126,9 @@ WHERE vec_id <> query_id
 @register("ann_range_search", oracle=_RANGE_ORACLE)
 def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = _vectors(spark, sf_dir)
-    queries = vecs.where(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    cosine = F.round(
-        F.expr(_DOT_VQ) / (F.col("qnrm") * F.col("nrm")), 6
-    )
     return (
-        vecs.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", cosine.alias("cosine"))
+        vecs.join(F.broadcast(_corpus_queries(vecs)), F.col("vec_id") != F.col("query_id"))
+        .select("query_id", "vec_id", _cosine().alias("cosine"))
         .where(F.col("cosine") >= _RANGE_TAU)
     )
 
@@ -1208,31 +1213,4 @@ def ann_ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan below the cell assignment (pre-filtering). Queries themselves
     come from the unfiltered corpus. Oracle runs the identical
     algorithm (same codebook, probes, tie-breaks)."""
-    vecs = _vectors(spark, sf_dir)
-    assigned = _assigned_arrow(spark, sf_dir, where=F.col("label") < _FILT_MAX)
-    queries = vecs.where(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    qsims = _with_sims_array(queries, spark, "qv", "qnrm")
-    probe = (
-        f"transform(slice(array_sort("
-        f"  transform(sequence(1, {_N_CELLS}), i -> struct(sims[i-1] AS sim, i AS cell)),"
-        f"  (a, b) -> CASE WHEN a.sim > b.sim THEN -1 WHEN a.sim < b.sim THEN 1"
-        f"            WHEN a.cell < b.cell THEN -1 ELSE 1 END"
-        f"), 1, {_NPROBE}), s -> s.cell)"
-    )
-    probed = qsims.select(
-        "query_id", "qv", "qnrm", F.explode(F.expr(probe)).alias("cell")
-    )
-    cand = F.broadcast(probed).join(assigned, "cell").where(
-        F.col("vec_id") != F.col("query_id")
-    )
-    scored = cand.select(
-        "query_id",
-        "vec_id",
-        F.round(F.expr(_DOT_VQ) / (F.col("qnrm") * F.col("nrm")), 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= _TOP_K)
+    return _seeded_ivf_topk(spark, sf_dir, where=F.col("label") < _FILT_MAX)

@@ -16,7 +16,7 @@ et al., "Product Quantization for Nearest Neighbor Search", TPAMI 2011):
 Spark-first layout:
 - codebook training is per-(label, subspace) decimal-stable means — the
   same deterministic "trained" codebook device as ``ann_ivf_trained_topk``
-  (similarity.py:617), so the DuckDB oracle can train the identical
+  (``similarity._centroid_mean``), so the DuckDB oracle can train the identical
   codebook; a production run swaps in seeded k-means per subspace with
   k=256 without touching the plan shape;
 - encode = fact scan x broadcast codebook, argmin via ``min_by`` partial
@@ -37,14 +37,27 @@ pytest against ``ann_bruteforce_topk``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import cut, table
-from ..commit import write_json
 from ..functions.stable import davg, dsum, sql_davg, sql_dsum
+from ..functions.vectors import dot
 from ..registry import register
-from .similarity import _N_QUERIES, _TOP_K, _SQL_VECS_CTE, _vectors
+from .similarity import (
+    _SQL_VECS_CTE,
+    _TOP_K,
+    _append,
+    _centroid_mean,
+    _codebook_refresh,
+    _corpus_queries,
+    _norm_queries,
+    _norm_vectors,
+    _swap_recover,
+    _top_per_query,
+    _vectors,
+    _write_index,
+)
 
 _PQ_M = 8  # subspaces
 _PQ_SUBDIM = 8  # dims per subspace (embeddings are 64-dim)
@@ -57,36 +70,15 @@ _PQ_SUBDIM = 8  # dims per subspace (embeddings are 64-dim)
 _PQ_RERANK = 100
 
 
-def _dot(a: str, b: str) -> F.Column:
-    """Left-to-right fold dot product — bit-identical to DuckDB's
-    list_dot_product (same device as similarity.py's _DOT_VQ)."""
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y),"
-        " cast(0.0 as double), (acc, x) -> acc + x)"
-    )
-
-
 def _pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(label, subspace) sub-centroids: (s, label, sc array<double>,
     sc2 = <sc, sc>). k = |labels| cells per subspace here so the oracle
     can replay training; broadcast-sized by construction."""
     emb = table(spark, sf_dir, "embeddings")
-    cent_long = (
-        emb.select(
-            "label",
-            F.posexplode(F.col("embedding").cast("array<double>")).alias("pos", "val"),
-        )
-        .groupBy("label", "pos")
-        .agg(davg(F.col("val")).alias("cv"))
+    sub = _centroid_mean(
+        emb, ("label",), F.col("embedding").cast("array<double>"), "sc", subdim=_PQ_SUBDIM
     )
-    sub = cent_long.withColumn(
-        "s", (F.col("pos") / F.lit(_PQ_SUBDIM)).cast("int")
-    ).groupBy("label", "s").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cv"))), lambda x: x["cv"]
-        ).alias("sc")
-    )
-    return sub.withColumn("sc2", _dot("sc", "sc"))
+    return sub.withColumn("sc2", dot("sc", "sc"))
 
 
 def _sub_rows(df: DataFrame, vcol: str, keep: list[str]) -> DataFrame:
@@ -193,7 +185,7 @@ def _pq_encode(vecs: DataFrame, cb: DataFrame) -> DataFrame:
     vsub = _sub_rows(vecs, "v", ["vec_id", "nrm"])
     return (
         vsub.join(F.broadcast(cb), "s")
-        .withColumn("dist_key", F.col("sc2") - F.lit(2.0) * _dot("sv", "sc"))
+        .withColumn("dist_key", F.col("sc2") - F.lit(2.0) * dot("sv", "sc"))
         .groupBy("vec_id", "s")
         .agg(
             F.min_by(F.col("label"), F.struct("dist_key", "label")).alias("code"),
@@ -207,43 +199,53 @@ def _pq_lut(queries: DataFrame, cb: DataFrame) -> DataFrame:
     (query_id, qv, qnrm) rows — |Q| x M x k, broadcast-sized."""
     qsub = _sub_rows(queries, "qv", ["query_id", "qnrm"])
     return qsub.join(F.broadcast(cb), "s").select(
-        "query_id", "qnrm", "s", "label", _dot("sv", "sc").alias("lutv")
+        "query_id", "qnrm", "s", "label", dot("sv", "sc").alias("lutv")
+    )
+
+
+def _adc_scores(
+    pairs: DataFrame,
+    lut: DataFrame,
+    exclude_self: bool = False,
+    on: Column | None = None,
+    aggs: tuple[Column, ...] = (),
+) -> DataFrame:
+    """Compressed-domain scoring: M lookups + an order-independent exact
+    sum per (query, vector), then the 6dp ``adc_cosine`` a shortlist
+    ranks by (``_top_per_query``). ``on`` replaces the flat (s, code)
+    join key — the IVF-PQ path also keys on the query's probed cells.
+
+    ``exclude_self`` drops corpus vectors whose vec_id equals the
+    query_id. Only valid when the queries ARE corpus vectors sharing the
+    id space (ann_pq_adc_topk); for external queries the two id spaces
+    are unrelated and a coincidental collision would silently hide a
+    legitimate neighbor, so it defaults off.
+    """
+    cond = on if on is not None else (pairs.s == lut.s) & (pairs.code == lut.label)
+    if exclude_self:
+        cond = cond & (pairs.vec_id != lut.query_id)
+    return (
+        pairs.join(F.broadcast(lut), cond)
+        .groupBy("query_id", "vec_id")
+        .agg(
+            dsum(F.col("lutv")).alias("adc_sum"),
+            F.max("qnrm").alias("qnrm"),
+            F.max("nrm").alias("nrm"),
+            *aggs,
+        )
+        .withColumn(
+            "adc_cosine", F.round(F.col("adc_sum") / (F.col("qnrm") * F.col("nrm")), 6)
+        )
     )
 
 
 def _adc_shortlist(
     enc: DataFrame, lut: DataFrame, rerank_n: int, exclude_self: bool = False
 ) -> DataFrame:
-    """Compressed-domain scoring — 8 lookups + an order-independent
-    exact sum per (query, vector) — then the per-query shortlist.
-
-    ``exclude_self`` drops corpus vectors whose vec_id equals the
-    query_id. Only valid when the queries ARE corpus vectors sharing the
-    id space (ann_pq_adc_topk); for external queries the two id spaces
-    are unrelated and a coincidental collision would silently hide a
-    legitimate neighbor (r5 advice), so it defaults off.
-    """
-    cond = (enc.s == lut.s) & (enc.code == lut.label)
-    if exclude_self:
-        cond = cond & (enc.vec_id != lut.query_id)
-    adc = (
-        enc.join(F.broadcast(lut), cond)
-        .groupBy("query_id", "vec_id")
-        .agg(
-            dsum(F.col("lutv")).alias("adc_sum"),
-            F.max("qnrm").alias("qnrm"),
-            F.max("nrm").alias("nrm"),
-        )
-        .withColumn(
-            "adc_cosine", F.round(F.col("adc_sum") / (F.col("qnrm") * F.col("nrm")), 6)
-        )
-    )
-    wa = Window.partitionBy("query_id").orderBy(F.desc("adc_cosine"), F.asc("vec_id"))
-    return (
-        adc.withColumn("rk", F.row_number().over(wa))
-        .where(F.col("rk") <= rerank_n)
-        .select("query_id", "vec_id")
-    )
+    """(query_id, vec_id) of each query's ``rerank_n`` best flat-PQ ADC
+    scores."""
+    adc = _adc_scores(enc, lut, exclude_self)
+    return _top_per_query(adc, "adc_cosine", rerank_n).select("query_id", "vec_id")
 
 
 def _exact_rerank(
@@ -263,15 +265,10 @@ def _exact_rerank(
         )
         .withColumn(
             "cosine",
-            F.round(_dot("v", "qv2") / (F.col("qnrm2") * F.col("nrm")), 6),
+            F.round(dot("v", "qv2") / (F.col("qnrm2") * F.col("nrm")), 6),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        rerank.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("query_id", "vec_id", "cosine", "rk")
-    )
+    return _top_per_query(rerank, "cosine", k).select("query_id", "vec_id", "cosine", "rk")
 
 
 @register("ann_pq_adc_topk", oracle=_PQ_ORACLE)
@@ -283,11 +280,7 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = cut(_pq_codebook(spark, sf_dir))
     vecs = _vectors(spark, sf_dir)
     enc = _pq_encode(vecs, cb)
-    queries = vecs.where(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
+    queries = _corpus_queries(vecs)
     lut = _pq_lut(queries, cb)
     # queries are corpus vectors here: self-matches are excluded by id.
     shortlist = _adc_shortlist(enc, lut, _PQ_RERANK, exclude_self=True)
@@ -303,20 +296,15 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # primary vector store only for the RERANK-bounded shortlist. Query
 # results for the same (queries, k, rerank) are IDENTICAL to
 # ann_pq_adc_topk — pinned by pytest — because both paths share
-# _pq_encode/_pq_lut/_adc_shortlist/_exact_rerank.
+# _pq_encode/_pq_lut/_adc_shortlist/_exact_rerank. Layout, writes,
+# recovery and refresh are the shared index core in similarity.py.
 # ---------------------------------------------------------------------------
 
 
 def build_pq_index(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
     """Materialize the PQ index: codebook + codes (no raw vectors)."""
     cb = _pq_codebook(spark, sf_dir)
-    cb.coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/codebook")
-    vecs = _vectors(spark, sf_dir)
-    (
-        _pq_encode(vecs, cb)
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/codes")
-    )
+    _write_index("pq", index_dir, (cb, _pq_encode(_vectors(spark, sf_dir), cb)))
 
 
 def ann_pq_index_query(
@@ -337,7 +325,7 @@ def ann_pq_index_query(
     ``exclude_self`` (default OFF): set True ONLY when the query ids
     live in the corpus vec_id space (e.g. querying the index with its
     own vectors) — for external queries, an id that coincidentally
-    equals a vec_id must NOT hide that corpus vector (r5 advice).
+    equals a vec_id must NOT hide that corpus vector.
 
     Opens with ``pq_index_recover(forward_only=True)`` so a committed
     refresh swap a crash left half-done is completed before the read;
@@ -347,17 +335,9 @@ def ann_pq_index_query(
     pq_index_recover(index_dir, forward_only=True)
     cb = spark.read.parquet(f"{index_dir}/codebook")
     enc = spark.read.parquet(f"{index_dir}/codes")
-    q = queries.select(
-        "query_id",
-        "qv",
-        F.sqrt(_dot("qv", "qv")).alias("qnrm"),
-    )
-    lut = _pq_lut(q, cb)
-    shortlist = _adc_shortlist(enc, lut, rerank_n, exclude_self=exclude_self)
-    vecs = vectors.select(
-        "vec_id", F.col("v").cast("array<double>").alias("v")
-    ).withColumn("nrm", F.sqrt(_dot("v", "v")))
-    return _exact_rerank(shortlist, vecs, q, k)
+    q = _norm_queries(queries)
+    shortlist = _adc_shortlist(enc, _pq_lut(q, cb), rerank_n, exclude_self=exclude_self)
+    return _exact_rerank(shortlist, _norm_vectors(vectors), q, k)
 
 
 def pq_index_add(
@@ -370,34 +350,21 @@ def pq_index_add(
     append its codes — cost proportional to the batch, not the index,
     and the result is identical to a full rebuild (pinned by pytest).
     Re-train the codebook only when drift warrants a rebuild.
-
-    ``stage_dir``: write the batch's codes THERE (overwrite) instead of
-    appending into the index — the hook streaming ingest uses to make
-    the append idempotent (stage, then atomic batch-stamped renames;
-    see file_sink._idempotent_append_dir)."""
+    ``stage_dir``: see ``similarity._append``."""
     cb = spark.read.parquet(f"{index_dir}/codebook")
-    vecs = new_vectors.select(
-        "vec_id", F.col("v").cast("array<double>").alias("v")
-    ).withColumn("nrm", F.sqrt(_dot("v", "v")))
-    enc = _pq_encode(vecs, cb)
-    if stage_dir is None:
-        enc.write.mode("append").parquet(f"{index_dir}/codes")
-    else:
-        enc.write.mode("overwrite").parquet(stage_dir)
+    _append("pq", index_dir, _pq_encode(_norm_vectors(new_vectors), cb), stage_dir)
 
 
 # ---------------------------------------------------------------------------
-# PQ codebook lifecycle (r12 verdict #2 — the PQ mirror of
-# ivf_codebook_refresh at similarity.py): incremental ingest encodes
-# against FROZEN per-subspace codebooks, so a drifting corpus slowly
-# inflates the ADC quantization error; when the drift signal passes a
-# threshold, the store owner re-trains (one Lloyd step over the current
-# assignment) and — because the codes themselves are quantizations, not
-# assignments — re-ENCODEs the whole corpus against the new codebook.
-# Both directories (codebook, codes) commit behind the same marker-file
-# swap protocol as the IVF index (similarity.py::_swap_recover), with
-# the same writer/reader contract: refresh is the single writer; query
-# opens recover forward-only.
+# PQ codebook lifecycle — the PQ side of the shared refresh
+# (similarity._codebook_refresh): incremental ingest encodes against
+# FROZEN per-subspace codebooks, so a drifting corpus slowly inflates the
+# ADC quantization error; when the drift signal passes a threshold, the
+# store owner re-trains (one Lloyd step over the current assignment)
+# and — because the codes themselves are quantizations, not assignments
+# — re-ENCODEs the whole corpus against the new codebook. Both
+# directories (codebook, codes) commit behind the shared marker-file
+# swap with its writer/reader contract.
 #
 # The drift metric is twofold, one bounded pass over the index:
 #   - per-(subspace, code) centroid drift: 1 - cosine(stored
@@ -411,17 +378,6 @@ def pq_index_add(
 # vector store (the same relation ann_pq_index_query's rerank reads).
 # ---------------------------------------------------------------------------
 
-import os as _os
-
-from .similarity import _swap_recover
-
-
-def _norm_vectors(vectors: DataFrame) -> DataFrame:
-    """(vec_id, v array<double>, nrm) from a raw primary-store relation."""
-    return vectors.select(
-        "vec_id", F.col("v").cast("array<double>").alias("v")
-    ).withColumn("nrm", F.sqrt(_dot("v", "v")))
-
 
 def _pq_cell_stats(codes: DataFrame, vectors: DataFrame) -> DataFrame:
     """Per-(s, code) stats of the CURRENT encoding against the primary
@@ -434,36 +390,26 @@ def _pq_cell_stats(codes: DataFrame, vectors: DataFrame) -> DataFrame:
     rows = (
         codes.select("vec_id", "s", "code")
         .join(vsub, ["vec_id", "s"])
-        .withColumn("sv2", _dot("sv", "sv"))
+        .withColumn("sv2", dot("sv", "sv"))
     )
-    per_pos = (
-        rows.select("s", "code", "sv2", F.posexplode("sv").alias("pos", "val"))
-        .groupBy("s", "code", "pos")
-        .agg(
-            davg(F.col("val")).alias("cv"),
-            davg(F.col("sv2")).alias("msv2"),
-            F.count(F.lit(1)).alias("n_mem"),
-        )
-    )
-    return per_pos.groupBy("s", "code").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cv"))), lambda x: x["cv"]
-        ).alias("m"),
-        F.max("msv2").alias("msv2"),
-        F.max("n_mem").alias("n_mem"),
+    return _centroid_mean(
+        rows,
+        ("s", "code"),
+        "sv",
+        "m",
+        carry=("sv2",),
+        pos_aggs=(davg(F.col("sv2")).alias("msv2"), F.count(F.lit(1)).alias("n_mem")),
+        aggs=(F.max("msv2").alias("msv2"), F.max("n_mem").alias("n_mem")),
     )
 
 
-def pq_index_drift(
-    spark: SparkSession, index_dir: str, vectors: DataFrame
-) -> dict:
-    """Drift of a persisted PQ index vs the primary store (module note):
-    per-cell sub-centroid drift (the gate) + per-subspace mean ADC
-    residual. A handful of scalars to the driver."""
-    cb = spark.read.parquet(f"{index_dir}/codebook")
-    codes = spark.read.parquet(f"{index_dir}/codes")
-    stats = _pq_cell_stats(codes, _norm_vectors(vectors))
-    mnrm = F.sqrt(_dot("m", "m"))
+def _pq_drift(cb: DataFrame, codes: DataFrame, vecs: DataFrame) -> dict:
+    """PQ drift of ``codes`` encoded against codebook ``cb``, measured on
+    the normalised primary store ``vecs`` (module note): per-cell
+    sub-centroid drift (the gate) + per-subspace mean ADC residual. A
+    handful of scalars to the driver."""
+    stats = _pq_cell_stats(codes, vecs)
+    mnrm = F.sqrt(dot("m", "m"))
     # cut: multi-consumer — the two tiny aggregates below
     cells = cut(
         stats.join(
@@ -473,14 +419,14 @@ def pq_index_drift(
             stats["s"].alias("sub"),
             "n_mem",
             # zero-norm member mean or stored centroid reads as full
-            # drift, never NaN (same guard as ivf_index_drift)
+            # drift, never NaN (same guard as the coarse drift)
             (
                 F.lit(1.0)
-                - _dot("m", "sc")
+                - dot("m", "sc")
                 / F.greatest(mnrm * F.sqrt(F.col("sc2")), F.lit(1e-300))
             ).alias("drift"),
             (
-                F.col("msv2") - F.lit(2.0) * _dot("m", "sc") + F.col("sc2")
+                F.col("msv2") - F.lit(2.0) * dot("m", "sc") + F.col("sc2")
             ).alias("residual"),
         ),
         eager=True,
@@ -512,11 +458,37 @@ def pq_index_drift(
     }
 
 
+def _pq_lloyd(codes: DataFrame, vecs: DataFrame) -> DataFrame:
+    """One Lloyd step of the PQ codebook: new sub-centroid = member-mean
+    subvector of the CURRENT encoding (the same decimal-stable
+    arithmetic as training)."""
+    # cut: multi-consumer — write + re-encode
+    return cut(
+        _pq_cell_stats(codes, vecs)
+        .select(F.col("code").alias("label"), "s", F.col("m").alias("sc"))
+        .withColumn("sc2", dot("sc", "sc")),
+        eager=True,
+    )
+
+
+def pq_index_drift(
+    spark: SparkSession, index_dir: str, vectors: DataFrame
+) -> dict:
+    """Drift of a persisted PQ index vs the primary store (module note):
+    per-cell sub-centroid drift (the gate) + per-subspace mean ADC
+    residual. A handful of scalars to the driver."""
+    return _pq_drift(
+        spark.read.parquet(f"{index_dir}/codebook"),
+        spark.read.parquet(f"{index_dir}/codes"),
+        _norm_vectors(vectors),
+    )
+
+
 def pq_index_recover(index_dir: str, forward_only: bool = False) -> None:
     """Marker-file swap recovery for the PQ index (codebook + codes).
     ``forward_only=True`` is the reader mode — see similarity.py's
     writer/reader contract."""
-    _swap_recover(index_dir, ("codebook", "codes"), forward_only=forward_only)
+    _swap_recover("pq", index_dir, forward_only)
 
 
 def pq_codebook_refresh(
@@ -532,35 +504,26 @@ def pq_codebook_refresh(
     (measurement only) while max cell drift stays under ``max_drift``
     and ``force`` is False. Single-writer: at most one refresh at a
     time per index."""
-    pq_index_recover(index_dir)
-    drift = pq_index_drift(spark, index_dir, vectors)
-    if not force and drift["max_drift"] < max_drift:
-        return {**drift, "refreshed": False}
 
-    vecs = _norm_vectors(vectors)
-    codes = spark.read.parquet(f"{index_dir}/codes")
-    # one Lloyd step: new sub-centroid = member-mean subvector of the
-    # CURRENT encoding (the same decimal-stable arithmetic as training)
-    # cut: multi-consumer — write + re-encode
-    cb_new = cut(
-        _pq_cell_stats(codes, vecs)
-        .select(F.col("code").alias("label"), "s", F.col("m").alias("sc"))
-        .withColumn("sc2", _dot("sc", "sc")),
-        eager=True,
+    def lloyd():
+        vecs = _norm_vectors(vectors)
+        cb_new = _pq_lloyd(spark.read.parquet(f"{index_dir}/codes"), vecs)
+        # full re-ENCODE (codes are quantizations, not assignments —
+        # every stored code is stale the moment its sub-centroid moves)
+        return cb_new, _pq_encode(vecs, cb_new)
+
+    return _codebook_refresh(
+        "pq",
+        index_dir,
+        lambda: pq_index_drift(spark, index_dir, vectors),
+        lloyd,
+        max_drift,
+        force,
     )
-    cb_dir_new = _os.path.join(index_dir, "codebook__new")
-    codes_dir_new = _os.path.join(index_dir, "codes__new")
-    cb_new.coalesce(1).write.mode("overwrite").parquet(cb_dir_new)
-    # full re-ENCODE (codes are quantizations, not assignments — every
-    # stored code is stale the moment its sub-centroid moves)
-    _pq_encode(vecs, cb_new).write.mode("overwrite").parquet(codes_dir_new)
-    write_json(_os.path.join(index_dir, "_refresh_commit.json"), {"drift_at_refresh": drift})
-    pq_index_recover(index_dir)  # the swap IS forward recovery
-    return {**drift, "refreshed": True}
 
 
 # ---------------------------------------------------------------------------
-# PQ refinement-factor audit (r13, r12 verdict #7c) — the PQ twin of
+# PQ refinement-factor audit — the PQ twin of
 # dedup_minhash_quality_audit: a calibration table of shortlist size
 # (the IVFADC+R refinement factor) against measured recall@k vs brute
 # force, on the store's own data. A vector-store owner reads this table
@@ -585,40 +548,15 @@ def pq_refinement_audit(
     audited shortlist size (module note)."""
     from .similarity import ann_bruteforce_topk
 
-    max_n = max(rerank_ns)
     cb = _pq_codebook(spark, sf_dir)
     vecs = _vectors(spark, sf_dir)
-    enc = _pq_encode(vecs, cb)
-    queries = vecs.where(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    lut = _pq_lut(queries, cb)
-    cond = (enc.s == lut.s) & (enc.code == lut.label) & (
-        enc.vec_id != lut.query_id
-    )
-    adc = (
-        enc.join(F.broadcast(lut), cond)
-        .groupBy("query_id", "vec_id")
-        .agg(
-            dsum(F.col("lutv")).alias("adc_sum"),
-            F.max("qnrm").alias("qnrm"),
-            F.max("nrm").alias("nrm"),
-        )
-        .withColumn(
-            "adc_cosine",
-            F.round(F.col("adc_sum") / (F.col("qnrm") * F.col("nrm")), 6),
-        )
-    )
-    wa = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_cosine"), F.asc("vec_id")
-    )
+    queries = _corpus_queries(vecs)
+    adc = _adc_scores(_pq_encode(vecs, cb), _pq_lut(queries, cb), exclude_self=True)
     # cut: multi-consumer — one shortlist per rerank depth
     ranked = cut(
-        adc.withColumn("srk", F.row_number().over(wa))
-        .where(F.col("srk") <= max_n)
-        .select("query_id", "vec_id", "srk"),
+        _top_per_query(adc, "adc_cosine", max(rerank_ns), "srk").select(
+            "query_id", "vec_id", "srk"
+        ),
         eager=True,
     )
     # cut: multi-consumer — every rerank depth's recall join

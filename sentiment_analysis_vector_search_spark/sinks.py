@@ -889,9 +889,10 @@ def compact_index(
 ) -> int:
     """Compact a persisted ANN index's data files (maintenance verb).
 
-    The streamed ingest loops (`stream_ivf_ingest` / `stream_pq_ingest`)
-    append one batch-stamped file per micro-batch (per cell for IVF,
-    per word bucket for the BM25 text index) —
+    The streamed ingest loops (`stream_{ivf,pq,ivfpq}_ingest`) append
+    one batch-stamped file per micro-batch to the index's ingest table,
+    the last directory of ``similarity.INDEX_LAYOUT[kind]`` (per cell
+    for IVF, per word bucket for the BM25 text index) —
     exactly-once by design, but after N batches a query opens N files
     per probed cell. This rewrites each leaf directory down to
     ``target_files`` via ``compact_dir``'s atomic swap. Safe w.r.t. the
@@ -901,15 +902,15 @@ def compact_index(
     """
     import os
 
-    sub = {
-        "ivf": "assignments",
-        "pq": "codes",
-        "ivfpq": "codes",
-        "text": "postings",
-    }.get(kind)
-    if sub is None:
+    from .operators.similarity import INDEX_LAYOUT
+
+    if kind == "text":
+        sub = "postings"
+    elif kind in INDEX_LAYOUT:
+        sub = INDEX_LAYOUT[kind].dirs[-1]
+    else:
         raise ValueError(
-            f"unknown index kind {kind!r}; expected ivf, pq, ivfpq, or text"
+            f"unknown index kind {kind!r}; expected {', '.join(INDEX_LAYOUT)}, or text"
         )
     root = os.path.join(index_dir, sub)
 

@@ -1268,7 +1268,7 @@ def incremental_heavy_hitters(
     col: str,
     batch_df: DataFrame,
     k: int = MG_K,
-    batch_id: int | None = None,
+    batch_id: int | str | None = None,
 ) -> tuple[dict, int]:
     """Fold one batch's Misra-Gries summary into a persisted hot-key
     sketch (``{name}__hh_{col}.json``) — the incremental-ANALYZE story
@@ -1531,7 +1531,7 @@ def incremental_cms(
     batch_df: DataFrame,
     d: int = CMS_D,
     w: int = CMS_W,
-    batch_id: int | None = None,
+    batch_id: int | str | None = None,
 ) -> dict[str, int]:
     """Fold one batch into a persisted CMS (``{name}__cms_{col}.json``):
     counters add, so after ANY number of batches the stored sketch

@@ -269,16 +269,18 @@ def _stream_vector_ingest(
     src_dir: str,
     index_dir: str,
     checkpoint_dir: str,
-    index_add: Callable[..., object],
-    name: str,
-    table: str,
+    kind: str,
 ) -> None:
     """The shared loop of the frozen-codebook vector ingests: each
-    micro-batch of ``embeddings*.parquet`` rows is staged by
-    ``index_add(..., stage_dir=...)``, promoted into ``index_dir/table``
-    by batch-stamped renames (``_idempotent_append_dir``), then recorded
-    in ``_{name}_commits.json``. A replay after a crash before the
-    record re-stages and re-replaces the same files: exactly-once."""
+    micro-batch of ``embeddings*.parquet`` rows is staged by the kind's
+    ``*_index_add(..., stage_dir=...)``, promoted into its ingest table
+    (the last directory of ``similarity.INDEX_LAYOUT[kind]``) by
+    batch-stamped renames (``_idempotent_append_dir``), then recorded in
+    ``_{kind}_commits.json``. A replay after a crash before the record
+    re-stages and re-replaces the same files: exactly-once."""
+    from ..operators.similarity import INDEX_LAYOUT, index_verb
+
+    table = INDEX_LAYOUT[kind].dirs[-1]
     src = (
         spark.readStream.schema(spark.read.parquet(src_dir).schema)
         .option("pathGlobFilter", "embeddings*.parquet")
@@ -286,8 +288,8 @@ def _stream_vector_ingest(
     )
 
     def add_batch(batch_df: DataFrame, batch_id: int) -> None:
-        stage = os.path.join(index_dir, f"_stage_{name}_{batch_id}")
-        index_add(
+        stage = os.path.join(index_dir, f"_stage_{kind}_{batch_id}")
+        index_verb(kind, "add")(
             spark,
             index_dir,
             batch_df.select(
@@ -298,7 +300,7 @@ def _stream_vector_ingest(
         _idempotent_append_dir(stage, f"{index_dir}/{table}", batch_id)
         shutil.rmtree(stage, ignore_errors=True)
 
-    _drain(spark, src, checkpoint_dir, add_batch, record=f"_{name}_commits.json")
+    _drain(spark, src, checkpoint_dir, add_batch, record=f"_{kind}_commits.json")
 
 
 def stream_ivf_ingest(
@@ -321,11 +323,7 @@ def stream_ivf_ingest(
     it only when drift warrants — the classic IVF operating procedure.
     Exactly-once via ``_stream_vector_ingest``.
     """
-    from ..operators.similarity import ivf_index_add
-
-    _stream_vector_ingest(
-        spark, src_dir, index_dir, checkpoint_dir, ivf_index_add, "ivf", "assignments"
-    )
+    _stream_vector_ingest(spark, src_dir, index_dir, checkpoint_dir, "ivf")
 
 
 def stream_pq_ingest(
@@ -346,11 +344,7 @@ def stream_pq_ingest(
     index stays IDENTICAL to a full rebuild (pinned by pytest).
     Exactly-once via ``_stream_vector_ingest``.
     """
-    from ..operators.similarity2 import pq_index_add
-
-    _stream_vector_ingest(
-        spark, src_dir, index_dir, checkpoint_dir, pq_index_add, "pq", "codes"
-    )
+    _stream_vector_ingest(spark, src_dir, index_dir, checkpoint_dir, "pq")
 
 
 def stream_ivfpq_ingest(
@@ -370,11 +364,7 @@ def stream_ivfpq_ingest(
     batch reproducible → the streamed index stays IDENTICAL to a full
     rebuild (pinned by pytest). Exactly-once via
     ``_stream_vector_ingest``."""
-    from ..operators.ivfpq import ivfpq_index_add
-
-    _stream_vector_ingest(
-        spark, src_dir, index_dir, checkpoint_dir, ivfpq_index_add, "ivfpq", "codes"
-    )
+    _stream_vector_ingest(spark, src_dir, index_dir, checkpoint_dir, "ivfpq")
 
 
 def stream_ingest_dedup(

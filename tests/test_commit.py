@@ -20,6 +20,7 @@ from sentiment_analysis_vector_search_spark import commit
 from sentiment_analysis_vector_search_spark.commit import (
     applied_max,
     fold_json,
+    path_digest,
     read_json,
     write_json,
 )
@@ -73,6 +74,63 @@ def test_fold_json_replay_never_calls_fold(tmp_path):
     # a one-off fold (no batch id) keeps the stored record
     assert fold_json(path, None, add(1)) == {"n": 7}
     assert read_json(path)["__meta__"] == {"max_applied": 4}
+
+
+def test_fold_json_digest_ids_apply_each_file_once(tmp_path):
+    """Path digests are folded in any order, each exactly once; a stream
+    id and digests keep separate records in one artifact; the 60-bit
+    prefix an older CLI fold left as the max still reads as applied."""
+    path = str(tmp_path / "art.json")
+
+    def add(n):
+        return lambda prior: {"n": (prior or {"n": 0})["n"] + n}
+
+    a, b = sorted((path_digest(str(tmp_path / f)) for f in ("a", "b")), reverse=True)
+    assert fold_json(path, a, add(1)) == {"n": 1}
+    assert fold_json(path, b, add(2)) == {"n": 3}  # b < a: still folded
+    assert fold_json(path, a, add(10)) == {"n": 3}  # replay: no-op
+    assert fold_json(path, 5, add(4)) == {"n": 7}
+    assert fold_json(path, b, add(10)) == {"n": 7}
+    assert read_json(path)["__meta__"] == {"max_applied": 5, "applied_paths": [a, b]}
+
+    older = str(tmp_path / "older.json")
+    write_json(older, {"n": 1, "__meta__": {"max_applied": int(a[:15], 16)}})
+    assert fold_json(older, a, add(10)) == {"n": 1}
+    assert fold_json(older, b, add(2)) == {"n": 3}
+
+
+def test_cli_folds_count_a_second_file_with_a_lower_path_id(
+    spark, tmp_path, capsys
+):
+    """hotkeys, cmsfreq and checksum --manifest-dir fold a second batch
+    file even when its path id sorts below the first one's; re-running
+    a file stays a no-op."""
+    import json
+
+    import pandas as pd
+
+    from sentiment_analysis_vector_search_spark.__main__ import main
+
+    # one basename, so the checksum verb folds both into one manifest;
+    # folded in descending order of the 60-bit path id
+    paths = [str(tmp_path / f"shard{i}" / "docs.parquet") for i in range(2)]
+    paths.sort(key=lambda p: int(path_digest(p)[:15], 16), reverse=True)
+    for p, src in zip(paths, ("x", "y")):
+        os.makedirs(os.path.dirname(p))
+        pd.DataFrame({"doc_id": [1, 2, 3], "source": [src] * 3}).to_parquet(p)
+    stats, manifest = str(tmp_path / "stats"), str(tmp_path / "manifest")
+
+    def run(*argv):
+        assert main(list(argv)) == 0
+        return json.loads(capsys.readouterr().out)
+
+    for p in (*paths, paths[0]):
+        hot = run("hotkeys", "docs", "source", p, stats)
+        cms = run("cmsfreq", "docs", "source", p, stats, "--keys", "x,y")
+        chk = run("checksum", p, "--manifest-dir", manifest)
+    assert hot["n_rows"] == 6 and hot["hot"] == {"x": 3, "y": 3}
+    assert cms["estimates"] == {"x": 3, "y": 3}
+    assert chk["n_rows"] == 6
 
 
 def test_stream_resumes_from_list_form_record(spark, sf_dir, tmp_path, monkeypatch):

@@ -200,8 +200,8 @@ def test_ivfpq_codebook_refresh_swap_and_full_rebuild(spark, sf_dir, tmp_path):
 
     from pyspark.sql import Window
 
+    from sentiment_analysis_vector_search_spark.functions.vectors import dot as _dot
     from sentiment_analysis_vector_search_spark.operators.ivfpq import (
-        _dot,
         ivfpq_codebook_refresh,
         ivfpq_index_drift,
     )
@@ -358,3 +358,38 @@ def test_ivfpq_refinement_audit_grid(spark, sf_dir, tmp_path):
     }
     want = len(brute & served) / len(brute)
     assert abs(grid[(n_cells, 100)] - want) < 1e-9, (grid, want)
+
+
+def test_ivfpq_drift_equals_ivf_and_pq_drift(spark, sf_dir, tmp_path):
+    """Built from the same corpus, the composed index's coarse layer is
+    the IVF index and its code layer the PQ index: ivfpq_index_drift's
+    coarse_* fields equal ivf_index_drift, its pq_* fields equal
+    pq_index_drift, and the gate is the max of the two."""
+    from sentiment_analysis_vector_search_spark.operators.ivfpq import (
+        ivfpq_index_drift,
+    )
+    from sentiment_analysis_vector_search_spark.operators.similarity import (
+        build_ivf_index,
+        ivf_index_drift,
+    )
+    from sentiment_analysis_vector_search_spark.operators.similarity2 import (
+        build_pq_index,
+        pq_index_drift,
+    )
+
+    dirs = {kind: str(tmp_path / kind) for kind in ("ivf", "pq", "ivfpq")}
+    build_ivf_index(spark, sf_dir, dirs["ivf"])
+    build_pq_index(spark, sf_dir, dirs["pq"])
+    build_ivfpq_index(spark, sf_dir, dirs["ivfpq"])
+    vecs = _vectors(spark, sf_dir).select("vec_id", "v")
+
+    both = ivfpq_index_drift(spark, dirs["ivfpq"], vecs)
+    ivf = ivf_index_drift(spark, dirs["ivf"])
+    pq = pq_index_drift(spark, dirs["pq"], vecs)
+    for key in ("max_drift", "mean_drift", "n_cells"):
+        assert both[f"coarse_{key}"] == ivf[key]
+        assert both[f"pq_{key}"] == pq[key]
+    assert both["mean_adc_residual"] == pytest.approx(
+        pq["mean_adc_residual"], rel=1e-12
+    )
+    assert both["max_drift"] == max(ivf["max_drift"], pq["max_drift"])

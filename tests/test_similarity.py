@@ -483,3 +483,24 @@ def test_ivf_query_open_is_forward_only(spark, sf_dir, tmp_path):
     # the writer-side recover is the one that rolls it back
     ivf_index_recover(index_dir)
     assert not os.path.isdir(cb + "__new")
+
+
+def test_one_dot_product_and_refresh_marker_spelling():
+    """The left-fold dot product is spelled once (functions/vectors.py)
+    and the refresh marker file name once (similarity.py), so every
+    index kind and every caller share them."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "sentiment_analysis_vector_search_spark"
+    hits = {
+        needle: [
+            p.relative_to(pkg).as_posix()
+            for p in sorted(pkg.rglob("*.py"))
+            for _ in range(p.read_text().count(needle))
+        ]
+        for needle in ("aggregate(zip_with(", "_refresh_commit.json")
+    }
+    assert hits == {
+        "aggregate(zip_with(": ["functions/vectors.py"],
+        "_refresh_commit.json": ["operators/similarity.py"],
+    }
