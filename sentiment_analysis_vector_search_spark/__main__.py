@@ -41,6 +41,153 @@ def _fold_id(batch_id: int | None, path: str) -> int | str:
     return path_digest(path) if batch_id is None else batch_id
 
 
+_FOLD_VERBS = (
+    "analyze-incremental", "hotkeys", "sample", "hist", "cmsfreq", "checksum"
+)
+
+
+def _fold_verb(args) -> int:
+    """The one CLI fold path: fold the verb's batch file into its
+    maintained sketch (``stats.fold_sketch``) and print the verb's
+    report. The replay guard is ``_fold_id``'s, so re-running a verb on
+    the same file is a no-op. ``checksum`` without ``--manifest-dir``
+    prints the one-shot digest instead."""
+    import json
+    import os
+
+    from . import stats as st
+    from .session import get_spark
+
+    spark = get_spark(f"cli-{args.cmd}")
+    spark.sparkContext.setLogLevel("ERROR")
+    qs = [float(q) for q in getattr(args, "quantiles", "").split(",") if q]
+
+    def dump(obj) -> str:
+        return json.dumps(obj, indent=1, sort_keys=True)
+
+    if args.cmd == "analyze-incremental":
+        kind, params = "analyze", {}
+
+        def report(art):
+            # the KMV sketches are fold state, not stats to read
+            return dump(
+                {c: {k: v for k, v in s.items() if k != "kmv"} for c, s in art.items()}
+            )
+
+    elif args.cmd == "hotkeys":
+        kind, params = "hotkeys", {"col": args.col, "k": args.k}
+
+        def report(art):
+            top = sorted(art["summary"].items(), key=lambda kv: -kv[1])
+            return dump({"n_rows": art["n_rows"], "k": args.k, "hot": dict(top)})
+
+    elif args.cmd == "sample":
+        kind = "sample"
+        params = {"key_col": args.key_col, "val_col": args.val_col, "k": args.k}
+
+        def report(art):
+            rows = art["rows"]
+            return dump(
+                {
+                    "n_sample": len(rows),
+                    "k": args.k,
+                    "quantiles": {str(q): st.sample_quantile(rows, q) for q in qs},
+                }
+            )
+
+    elif args.cmd == "cmsfreq":
+        kind, params = "cms", {"col": args.col}
+        keys = [k for k in args.keys.split(",") if k]
+
+        def report(art):
+            counters = art["counters"]
+            return json.dumps(
+                {
+                    "n_counters": len(counters),
+                    "estimates": {k: st.cms_estimate(counters, k) for k in keys},
+                },
+                indent=1,
+            )
+
+    elif args.cmd == "hist":
+        b = st.HIST_BINS if args.bins is None else args.bins
+        w, o = args.width, args.offset
+        if args.derive and (w is None or o is None):
+            stats = st.load_sketch("analyze", args.stats_dir, args.table)
+            if stats is None or args.col not in stats:
+                print(
+                    f"--derive: no persisted stats for {args.table}.{args.col}"
+                    f" in {args.stats_dir} (run analyze-incremental first)"
+                )
+                return 1
+            knobs = st.hist_knobs_for(stats, args.col, bins=b)
+            w = knobs["width"] if w is None else w
+            o = knobs["offset"] if o is None else o
+        w = st.HIST_WIDTH if w is None else w
+        o = 0.0 if o is None else o
+        kind, params = "hist", {"col": args.col, "width": w, "bins": b, "offset": o}
+        if args.group_col is not None:
+            kind, params = "ghist", {**params, "group_col": args.group_col}
+
+        def report(art):
+            counts = art["counts"]
+            out = {"n_rows": art["n_rows"], "width": w, "bins": b, "offset": o}
+            if args.group_col is None:
+                out["n_bins_used"] = len(counts)
+                out["quantiles"] = {
+                    str(q): st.hist_quantile(counts, w, q, o) for q in qs
+                }
+            else:
+                out["n_groups"] = len(counts)
+                out["quantiles"] = {
+                    g: {str(q): st.hist_quantile(c, w, q, o) for q in qs}
+                    for g, c in sorted(counts.items())
+                    if c
+                }
+            if args.check:
+                try:
+                    out["support_check"] = st.histogram_support_check(
+                        args.stats_dir, args.table, args.col, group_col=args.group_col
+                    )
+                except KeyError as e:
+                    out["support_check"] = {"error": str(e)}
+            return dump(out)
+
+    else:  # checksum
+        kind, params = "checksum", {"round_doubles": args.round_doubles}
+
+        def report(art):
+            return json.dumps({k: art[k] for k in ("table_name", "n_rows", "checksum")})
+
+    if args.cmd != "checksum":
+        path, out_dir, name = args.batch_path, args.stats_dir, args.table
+        batch = spark.read.parquet(path)
+    else:
+        path, out_dir = args.path, args.manifest_dir
+        if args.table:
+            from .catalog import table
+
+            batch, name = table(spark, path, args.table), args.table
+        else:
+            batch = spark.read.parquet(path)
+            name = os.path.basename(os.path.abspath(path)) or "table"
+        if out_dir is None:
+            from .operators.dq import table_checksum
+
+            print(report(table_checksum(batch, name, args.round_doubles).collect()[0]))
+            return 0
+    art = st.fold_sketch(
+        kind,
+        out_dir,
+        name,
+        batch,
+        batch_id=_fold_id(getattr(args, "batch_id", None), path),
+        **params,
+    )
+    print(report(art))
+    return 0
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="sentiment_analysis_vector_search_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -203,8 +350,8 @@ def main(argv: list[str] | None = None) -> int:
         "--batch-id",
         type=int,
         default=None,
-        help="replay guard for the NON-idempotent additive fold; omit "
-        "for ad-hoc one-shot use",
+        help="replay guard for the additive fold; default derives a "
+        "stable id from the resolved batch path (the hotkeys rule)",
     )
 
     p_je = sub.add_parser(
@@ -217,7 +364,7 @@ def main(argv: list[str] | None = None) -> int:
     p_je.add_argument("small_table", help="stats JSON name of the small side")
     p_je.add_argument("big_table", help="stats JSON name of the big side")
     p_je.add_argument("key_col", help="join key column on the small side")
-    p_je.add_argument("stats_dir", help="dir of incremental_analyze JSONs")
+    p_je.add_argument("stats_dir", help="dir of analyze-incremental JSONs")
     p_je.add_argument(
         "--big-key-col",
         default=None,
@@ -474,43 +621,16 @@ def main(argv: list[str] | None = None) -> int:
             print(json.dumps(table_stats(spark, args.sf_dir, args.table), indent=1))
         return 0
 
-    if args.cmd == "hotkeys":
-        import json
-
-        from .session import get_spark
-        from .stats import incremental_heavy_hitters
-
-        spark = get_spark("cli-hotkeys")
-        spark.sparkContext.setLogLevel("ERROR")
-        summary, n_rows = incremental_heavy_hitters(
-            args.stats_dir,
-            args.table,
-            args.col,
-            spark.read.parquet(args.batch_path),
-            k=args.k,
-            batch_id=_fold_id(args.batch_id, args.batch_path),
-        )
-        top = sorted(summary.items(), key=lambda kv: -kv[1])
-        print(
-            json.dumps(
-                {"n_rows": n_rows, "k": args.k, "hot": dict(top)},
-                indent=1,
-                sort_keys=True,
-            )
-        )
-        return 0
+    if args.cmd in _FOLD_VERBS:
+        return _fold_verb(args)
 
     if args.cmd == "joinest":
         import json
 
-        from .stats import (
-            choose_join_strategy,
-            estimate_join_rows,
-            load_table_stats,
-        )
+        from .stats import choose_join_strategy, estimate_join_rows, load_sketch
 
-        st_small = load_table_stats(args.stats_dir, args.small_table)
-        st_big = load_table_stats(args.stats_dir, args.big_table)
+        st_small = load_sketch("analyze", args.stats_dir, args.small_table)
+        st_big = load_sketch("analyze", args.stats_dir, args.big_table)
         if st_small is None or st_big is None:
             missing = [
                 n
@@ -548,70 +668,6 @@ def main(argv: list[str] | None = None) -> int:
                     "small_rows": st_small[args.key_col]["n_rows"],
                     "big_rows": st_big[big_col]["n_rows"],
                 }
-            )
-        )
-        return 0
-
-    if args.cmd == "checksum":
-        import json
-        import os as _os
-
-        from .operators.dq import incremental_checksum, table_checksum
-        from .session import get_spark
-
-        spark = get_spark("cli-checksum")
-        spark.sparkContext.setLogLevel("ERROR")
-        if args.table:
-            from .catalog import table as _table
-
-            df = _table(spark, args.path, args.table)
-            name = args.table
-        else:
-            df = spark.read.parquet(args.path)
-            name = _os.path.basename(_os.path.abspath(args.path)) or "table"
-        if args.manifest_dir:
-            out = incremental_checksum(
-                args.manifest_dir, name, df,
-                round_doubles=args.round_doubles,
-                batch_id=_fold_id(args.batch_id, args.path),
-            )
-            print(json.dumps(out))
-        else:
-            row = table_checksum(df, name, args.round_doubles).collect()[0]
-            print(
-                json.dumps(
-                    {
-                        "table_name": row["table_name"],
-                        "n_rows": row["n_rows"],
-                        "checksum": int(row["checksum"]),
-                    }
-                )
-            )
-        return 0
-
-    if args.cmd == "cmsfreq":
-        import json
-
-        from .session import get_spark
-        from .stats import cms_estimate, incremental_cms
-
-        spark = get_spark("cli-cms")
-        spark.sparkContext.setLogLevel("ERROR")
-        counters = incremental_cms(
-            args.stats_dir,
-            args.table,
-            args.col,
-            spark.read.parquet(args.batch_path),
-            batch_id=_fold_id(args.batch_id, args.batch_path),
-        )
-        keys = [k for k in args.keys.split(",") if k]
-        print(
-            json.dumps(
-                {
-                    "n_counters": len(counters),
-                    "estimates": {k: cms_estimate(counters, k) for k in keys},
-                },
-                indent=1,
             )
         )
         return 0
@@ -667,148 +723,6 @@ def main(argv: list[str] | None = None) -> int:
                     "users": row["users"],
                     "open_rows": int(row["open_rows"]),
                 }
-            )
-        )
-        return 0
-
-    if args.cmd == "sample":
-        import json
-
-        from .session import get_spark
-        from .stats import incremental_sample, sample_quantile
-
-        spark = get_spark("cli-sample")
-        spark.sparkContext.setLogLevel("ERROR")
-        rows = incremental_sample(
-            args.stats_dir,
-            args.table,
-            args.key_col,
-            args.val_col,
-            spark.read.parquet(args.batch_path),
-            k=args.k,
-        )
-        qs = [float(q) for q in args.quantiles.split(",") if q]
-        print(
-            json.dumps(
-                {
-                    "n_sample": len(rows),
-                    "k": args.k,
-                    "quantiles": {str(q): sample_quantile(rows, q) for q in qs},
-                },
-                indent=1,
-                sort_keys=True,
-            )
-        )
-        return 0
-
-    if args.cmd == "hist":
-        import json
-
-        from . import stats as st
-        from .session import get_spark
-
-        spark = get_spark("cli-hist")
-        spark.sparkContext.setLogLevel("ERROR")
-        b = st.HIST_BINS if args.bins is None else args.bins
-        w, o = args.width, args.offset
-        if args.derive and (w is None or o is None):
-            stats = st.load_table_stats(args.stats_dir, args.table)
-            if stats is None or args.col not in stats:
-                print(
-                    f"--derive: no persisted stats for {args.table}.{args.col}"
-                    f" in {args.stats_dir} (run analyze-incremental first)"
-                )
-                return 1
-            knobs = st.hist_knobs_for(stats, args.col, bins=b)
-            w = knobs["width"] if w is None else w
-            o = knobs["offset"] if o is None else o
-        w = st.HIST_WIDTH if w is None else w
-        o = 0.0 if o is None else o
-        batch = spark.read.parquet(args.batch_path)
-        qs = [float(q) for q in args.quantiles.split(",") if q]
-        def _support(group_col=None):
-            if not args.check:
-                return None
-            try:
-                return st.histogram_support_check(
-                    args.stats_dir, args.table, args.col,
-                    group_col=group_col,
-                )
-            except KeyError as e:
-                return {"error": str(e)}
-
-        if args.group_col is not None:
-            gcounts = st.incremental_histogram_grouped(
-                args.stats_dir, args.table, args.group_col, args.col,
-                batch, width=w, bins=b, batch_id=args.batch_id, offset=o,
-            )
-            out = {
-                "n_rows": sum(
-                    sum(c.values()) for c in gcounts.values()
-                ),
-                "n_groups": len(gcounts),
-                "width": w,
-                "bins": b,
-                "offset": o,
-                "quantiles": {
-                    g: {
-                        str(q): st.hist_quantile(c, w, q, o)
-                        for q in qs
-                    }
-                    for g, c in sorted(gcounts.items())
-                    if c
-                },
-            }
-            chk = _support(args.group_col)
-            if chk is not None:
-                out["support_check"] = chk
-            print(json.dumps(out, indent=1, sort_keys=True))
-            return 0
-        counts = st.incremental_histogram(
-            args.stats_dir,
-            args.table,
-            args.col,
-            batch,
-            width=w,
-            bins=b,
-            batch_id=args.batch_id,
-            offset=o,
-        )
-        out = {
-            "n_rows": sum(counts.values()),
-            "n_bins_used": len(counts),
-            "width": w,
-            "bins": b,
-            "offset": o,
-            "quantiles": {
-                str(q): st.hist_quantile(counts, w, q, o) for q in qs
-            },
-        }
-        chk = _support()
-        if chk is not None:
-            out["support_check"] = chk
-        print(json.dumps(out, indent=1, sort_keys=True))
-        return 0
-
-    if args.cmd == "analyze-incremental":
-        import json
-
-        from .session import get_spark
-        from .stats import incremental_analyze
-
-        spark = get_spark("cli-analyze-inc")
-        spark.sparkContext.setLogLevel("ERROR")
-        merged = incremental_analyze(
-            spark, args.stats_dir, args.table, spark.read.parquet(args.batch_path)
-        )
-        print(
-            json.dumps(
-                {
-                    c: {k: v for k, v in s.items() if k != "kmv"}
-                    for c, s in merged.items()
-                },
-                indent=1,
-                sort_keys=True,
             )
         )
         return 0

@@ -512,7 +512,7 @@ def q_urgent_revenue_semi_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: both sides' key columns carry REAL KMV sketches
     (``partition_stats`` over the single projected key column — one
     bounded-metadata analyze + one TakeOrdered per side; a deployment
-    reads the same dicts back from ``incremental_analyze``'s persisted
+    reads the same dicts back from the persisted ``"analyze"`` sketch
     JSON, pinned equivalent in test_stats). ``choose_join_strategy``
     sees: small rows x width over the budget, ``key_set_bytes`` under
     it, and a KMV-estimated match fraction ~0.2 <= SEMI_REDUCE_MAX_MATCH
@@ -548,7 +548,7 @@ def q_urgent_revenue_semi_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-(session, sf_dir) memo for the two key-column sketches — the
     # ANALYZE-once-per-session metastore stand-in (the table_stats /
     # _REPS_CACHE precedent): re-executions consume the same persisted
-    # statistics a deployment would read back via load_table_stats,
+    # statistics a deployment would read back via stats.load_sketch,
     # instead of re-paying two analyze + TakeOrdered passes.
     memo = _SEMI_STATS_MEMO.setdefault(spark, {})
     cached = memo.get(sf_dir)

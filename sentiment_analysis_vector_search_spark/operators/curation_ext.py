@@ -404,7 +404,7 @@ def corpus_data_card(
     """Per-source corpus data card. ``stats_dir`` (r13, r12 verdict #4)
     is the documented scale path REALIZED: when given, p50_chars /
     p90_chars are served from the MAINTAINED grouped fixed-width
-    histogram (stats.incremental_histogram_grouped over documents
+    histogram (the "ghist" sketch of stats.SKETCHES over documents
     (source, n_chars)) via ``served_group_quantiles`` — |sources| x 64
     integers of driver metadata instead of an exact percentile over the
     fact table. The default (None) keeps the exact graded surface;

@@ -29,13 +29,10 @@ pytest pins exactly this expected finding.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..commit import fold_json
 from ..registry import register
 
 _DQ_ORACLE = """
@@ -293,17 +290,17 @@ def checksum_agg(df: DataFrame, fields: list[tuple[str, str]]) -> DataFrame:
     per-row md5 digests of the v1 canonical encoding — commutative and
     mergeable (shard checksums add mod 2^60), so any partitioning,
     ordering, or retry produces the identical value. Shared by the
-    graded query, the CLI ``checksum`` verb, and the incremental
-    manifest fold."""
+    graded query, the CLI ``checksum`` verb, and the ``"checksum"``
+    manifest sketch (``stats.SKETCHES``)."""
     from ..functions.hashing import md5_long
 
     canon = F.expr(chk_canon_sql(fields))
     digest = md5_long(F.concat(F.lit("chk:"), canon))
     # coalesce: sum() over ZERO rows is NULL (both engines), so an empty
-    # table/batch must checksum to 0, not crash the int() in
-    # incremental_checksum or the CLI one-shot (r11 advice, medium). The
-    # empty multiset's digest is the additive identity — folding an
-    # empty shard is a no-op by construction.
+    # table/batch must checksum to 0, not crash the int() of the
+    # manifest fold or the CLI one-shot. The empty multiset's digest is
+    # the additive identity — folding an empty shard is a no-op by
+    # construction.
     return df.select(digest.alias("d")).agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.expr(
@@ -376,47 +373,6 @@ def table_checksum(
     return checksum_agg(proj, fields).select(
         F.lit(table_name).alias("table_name"), "n_rows", "checksum"
     )
-
-
-def incremental_checksum(
-    manifest_dir: str,
-    table_name: str,
-    batch_df: DataFrame,
-    round_doubles: int | None = None,
-    batch_id: int | str | None = None,
-) -> dict:
-    """Fold one shard/batch into a persisted checksum manifest
-    (``{table_name}__checksum.json``): n_rows and the modular digest are
-    both additive, so after ANY number of folds the manifest equals the
-    one-shot checksum over the union (pytest-pinned). Additive = NOT
-    idempotent, so the applied-batch record rides inside the same atomic
-    write as the fold (``commit.fold_json``).
-
-    Single-writer contract: the read-modify-write is NOT locked — one
-    maintenance stream (or one CLI fold sequence) per manifest path at a
-    time; Structured Streaming guarantees that for the streaming path
-    (one query per checkpoint), and concurrent ad-hoc CLI folds against
-    one manifest are unsupported (fold shards sequentially — each fold
-    is one cheap Spark job)."""
-
-    def fold(prior: dict | None) -> dict:
-        prior = prior or {"n_rows": 0, "checksum": 0}
-        row = table_checksum(batch_df, table_name, round_doubles).collect()[0]
-        return {
-            "table_name": table_name,
-            "n_rows": int(prior["n_rows"]) + int(row["n_rows"]),
-            "checksum": (int(prior["checksum"]) + int(row["checksum"])) % _CHK_MOD,
-            "encoding": "v1",
-        }
-
-    out = fold_json(
-        os.path.join(manifest_dir, f"{table_name}__checksum.json"), batch_id, fold
-    )
-    return {
-        "table_name": table_name,
-        "n_rows": int(out["n_rows"]),
-        "checksum": int(out["checksum"]),
-    }
 
 
 @register("dq_table_checksum", oracle=_chk_oracle())

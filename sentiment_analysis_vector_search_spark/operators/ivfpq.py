@@ -75,10 +75,12 @@ def build_ivfpq_index(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
     """Materialize: coarse codebook, PQ codebook, and cell-partitioned
     PQ codes (vec_id, nrm, s, code, cell) — raw vectors are NOT copied
     (the primary store stays the single source of vector truth)."""
-    coarse = _trained_codebook(spark, sf_dir)
-    pq_cb = _pq_codebook(spark, sf_dir)
-    codes = _ivfpq_codes(_vectors(spark, sf_dir), coarse, pq_cb)
-    _write_index("ivfpq", index_dir, (coarse, pq_cb, codes))
+    _write_index(
+        "ivfpq",
+        index_dir,
+        (_trained_codebook(spark, sf_dir), _pq_codebook(spark, sf_dir)),
+        lambda coarse, pq_cb: _ivfpq_codes(_vectors(spark, sf_dir), coarse, pq_cb),
+    )
 
 
 def _probed_adc(
@@ -231,9 +233,8 @@ def ivfpq_codebook_refresh(
     def lloyd():
         vecs = _norm_vectors(vectors)
         codes = spark.read.parquet(f"{index_dir}/codes")
-        coarse_new = _coarse_lloyd(_cell_members(codes, vecs))
-        pq_cb_new = _pq_lloyd(codes, vecs)
-        return coarse_new, pq_cb_new, _ivfpq_codes(vecs, coarse_new, pq_cb_new)
+        codebooks = (_coarse_lloyd(_cell_members(codes, vecs)), _pq_lloyd(codes, vecs))
+        return codebooks, lambda coarse, pq_cb: _ivfpq_codes(vecs, coarse, pq_cb)
 
     return _codebook_refresh(
         "ivfpq",

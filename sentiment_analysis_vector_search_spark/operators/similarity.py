@@ -817,10 +817,24 @@ def _write(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     writer.mode(mode).parquet(path)
 
 
-def _write_index(kind: str, index_dir: str, frames, suffix: str = "") -> None:
-    """Write ``frames`` as the kind's directories, in layout order."""
-    for name, df in zip(INDEX_LAYOUT[kind].dirs, frames, strict=True):
-        _write(df, os.path.join(index_dir, name + suffix))
+def _write_index(
+    kind: str,
+    index_dir: str,
+    codebooks: tuple[DataFrame, ...],
+    encode: Callable[..., DataFrame],
+    suffix: str = "",
+) -> None:
+    """Write the kind's directories in layout order: the codebooks, then
+    the ingest table as ``encode(*stored)`` over the codebooks read back
+    from disk — the way ``*_index_add`` encodes — so no codebook is
+    computed a second time inside the table's write."""
+    dirs = INDEX_LAYOUT[kind].dirs
+    stored = []
+    for name, cb in zip(dirs[:-1], codebooks, strict=True):
+        path = os.path.join(index_dir, name + suffix)
+        _write(cb, path)
+        stored.append(cb.sparkSession.read.parquet(path))
+    _write(encode(*stored), os.path.join(index_dir, dirs[-1] + suffix))
 
 
 def _append(kind: str, index_dir: str, df: DataFrame, stage_dir: str | None) -> None:
@@ -863,8 +877,12 @@ def _probe_cells(
 def build_ivf_index(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
     """Materialize the trained-IVF index: codebook + cell-partitioned
     assignments (vec_id, v, nrm, cell)."""
-    cents_n = _trained_codebook(spark, sf_dir)
-    _write_index("ivf", index_dir, (cents_n, _assign(_vectors(spark, sf_dir), cents_n)))
+    _write_index(
+        "ivf",
+        index_dir,
+        (_trained_codebook(spark, sf_dir),),
+        lambda cents_n: _assign(_vectors(spark, sf_dir), cents_n),
+    )
 
 
 def ann_ivf_index_query(
@@ -997,13 +1015,13 @@ def _codebook_refresh(
     kind: str,
     index_dir: str,
     drift: Callable[[], dict],
-    lloyd: Callable[[], tuple],
+    lloyd: Callable[[], tuple[tuple, Callable]],
     max_drift: float,
     force: bool,
 ) -> dict:
     """The refresh every index kind runs (note above): writer-side
-    recover, measure ``drift()``, gate, stage ``lloyd()``'s frames as
-    the kind's ``<dir>__new`` directories, write the commit marker, then
+    recover, measure ``drift()``, gate, stage ``lloyd()``'s (codebooks,
+    encode) as the kind's ``<dir>__new`` directories, write the commit marker, then
     swap by forward recovery. Returns the drift measurement plus
     {"refreshed": bool}; measurement-only while ``max_drift`` is not
     reached and ``force`` is False."""
@@ -1011,7 +1029,7 @@ def _codebook_refresh(
     measured = drift()
     if not force and measured["max_drift"] < max_drift:
         return {**measured, "refreshed": False}
-    _write_index(kind, index_dir, lloyd(), suffix="__new")
+    _write_index(kind, index_dir, *lloyd(), suffix="__new")
     # commit point: every __new dir is complete on disk
     write_json(os.path.join(index_dir, _REFRESH_MARKER), {"drift_at_refresh": measured})
     _swap_recover(kind, index_dir)  # the swap IS forward recovery
@@ -1053,12 +1071,8 @@ def _coarse_lloyd(members: DataFrame) -> DataFrame:
     """One Lloyd step of a coarse codebook: cell -> decimal mean of its
     current ``members`` (cell, v) as (label, c, cn) — the
     _trained_codebook arithmetic, so centroids stay engine-stable."""
-    # cut: multi-consumer — write + re-assign
-    return cut(
-        _centroid_mean(members, ("cell",), "v", "c").select(
-            F.col("cell").alias("label"), "c", F.sqrt(dot("c", "c")).alias("cn")
-        ),
-        eager=True,
+    return _centroid_mean(members, ("cell",), "v", "c").select(
+        F.col("cell").alias("label"), "c", F.sqrt(dot("c", "c")).alias("cn")
     )
 
 
@@ -1095,8 +1109,9 @@ def ivf_codebook_refresh(
 
     def lloyd():
         asg = spark.read.parquet(f"{index_dir}/assignments")
-        cents_new = _coarse_lloyd(asg)
-        return cents_new, _assign(asg.select("vec_id", "v", "nrm"), cents_new)
+        return (_coarse_lloyd(asg),), lambda cents: _assign(
+            asg.select("vec_id", "v", "nrm"), cents
+        )
 
     return _codebook_refresh(
         "ivf", index_dir, lambda: ivf_index_drift(spark, index_dir), lloyd, max_drift, force

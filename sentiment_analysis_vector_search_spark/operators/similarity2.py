@@ -303,8 +303,12 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def build_pq_index(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
     """Materialize the PQ index: codebook + codes (no raw vectors)."""
-    cb = _pq_codebook(spark, sf_dir)
-    _write_index("pq", index_dir, (cb, _pq_encode(_vectors(spark, sf_dir), cb)))
+    _write_index(
+        "pq",
+        index_dir,
+        (_pq_codebook(spark, sf_dir),),
+        lambda cb: _pq_encode(_vectors(spark, sf_dir), cb),
+    )
 
 
 def ann_pq_index_query(
@@ -462,12 +466,10 @@ def _pq_lloyd(codes: DataFrame, vecs: DataFrame) -> DataFrame:
     """One Lloyd step of the PQ codebook: new sub-centroid = member-mean
     subvector of the CURRENT encoding (the same decimal-stable
     arithmetic as training)."""
-    # cut: multi-consumer — write + re-encode
-    return cut(
+    return (
         _pq_cell_stats(codes, vecs)
         .select(F.col("code").alias("label"), "s", F.col("m").alias("sc"))
-        .withColumn("sc2", dot("sc", "sc")),
-        eager=True,
+        .withColumn("sc2", dot("sc", "sc"))
     )
 
 
@@ -510,7 +512,7 @@ def pq_codebook_refresh(
         cb_new = _pq_lloyd(spark.read.parquet(f"{index_dir}/codes"), vecs)
         # full re-ENCODE (codes are quantizations, not assignments —
         # every stored code is stale the moment its sub-centroid moves)
-        return cb_new, _pq_encode(vecs, cb_new)
+        return (cb_new,), lambda cb: _pq_encode(vecs, cb)
 
     return _codebook_refresh(
         "pq",

@@ -558,8 +558,8 @@ def q_events_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
 # coin-flips; equi-width column_histogram is NOT mergeable either — its
 # bucket bounds depend on the observed min/max), and the estimate is
 # deterministic integer+IEEE arithmetic. The maintained leg lives in
-# stats.column_fixed_histogram / incremental_histogram /
-# stream_histogram_maintenance (the sixth maintained artifact), whose
+# stats.column_fixed_histogram and the "hist" entry of stats.SKETCHES
+# (folded per batch by stats.fold_sketch), whose
 # hist_quantile serves the SAME interpolation from <= bins integers of
 # driver metadata. This query runs the estimator as a graded surface
 # next to the exact percentile, per event type — the calibration audit
@@ -741,7 +741,7 @@ def q_value_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (<= |sources| x 64 rows); windows/selection run over that bounded
 # relation (global-window comment: bounded by 64 x |sources|). At 100 TB
 # the same counts come from the MAINTAINED grouped artifact
-# (stats.incremental_histogram_grouped + served_group_quantiles) with no
+# (the "ghist" sketch + stats.served_group_quantiles) with no
 # rescan — pytest pins the served values equal to this query's
 # estimates on identical knobs.
 # ---------------------------------------------------------------------------

@@ -1,9 +1,9 @@
-"""Table statistics feedback loop (r6 verdict #5).
+"""Table statistics feedback loop: the planner consumes what
+``sinks.analyze_table`` measures.
 
-``sinks.analyze_table`` computes per-column rows/nulls/min/max/approx-ndv
-but until this module nothing CONSUMED them. This is the consumer side:
-a per-(session, sf_dir, table) stats cache (one analyze scan per table
-per session — the in-repo stand-in for a metastore's persisted
+``sinks.analyze_table`` computes per-column rows/nulls/min/max/approx-ndv;
+this module is the consumer side: a per-(session, sf_dir, table) stats
+cache (one analyze scan per table per session — the in-repo stand-in for a metastore's persisted
 ``ANALYZE TABLE`` output) plus a stats-informed broadcast hint that
 generalizes the ``dedup_index_check`` size gate: broadcast a join side
 iff its ESTIMATED materialized size (estimated rows x schema row width)
@@ -16,6 +16,7 @@ stats-driven gate degrades to a shuffle join instead.
 from __future__ import annotations
 
 import os
+from typing import Callable, NamedTuple
 from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
@@ -23,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .catalog import table
-from .commit import fold_json, read_json, write_json
+from .commit import META, fold_json, read_json, write_json
 
 # Spark's own default autoBroadcastJoinThreshold is 10 MB; executors in
 # this engine's target config comfortably hold a few dozen MB broadcast,
@@ -52,7 +53,7 @@ def on_refresh(hook) -> None:
 
 def refresh(sf_dir: str | None = None) -> None:
     """Drop memoized stats for ``sf_dir`` (or all when None) across every
-    live session. ``catalog.refresh`` calls this (r7 advice, low): a
+    live session. ``catalog.refresh`` calls this, because a
     session that rewrites an sf_dir must not leave the broadcast /
     join-strategy gates consuming statistics of the replaced files."""
     for per in _STATS_MEMO.values():
@@ -143,14 +144,14 @@ def estimated_range_rows(
 
     ``histogram`` (rows of :func:`column_histogram`: bucket/lo/hi/n_rows)
     upgrades the estimate from uniform interpolation to bucket-mass
-    interpolation (r7 verdict #9): mass is summed per overlapping bucket,
+    interpolation: mass is summed per overlapping bucket,
     with only the PARTIAL buckets at the range edges interpolated — on a
     skewed column the uniform estimate misattributes the heavy tail's
     mass across the whole domain; the histogram pins it to its bucket.
 
-    ``sample`` (rows of :func:`incremental_sample` / ``load_sample``:
+    ``sample`` (the ``rows`` of the maintained ``"sample"`` sketch:
     [row_hash, value] pairs of the persisted uniform bottom-k row
-    sample) is the histogram's cheaper understudy (r9 verdict #7): for
+    sample) is the histogram's cheaper understudy: for
     a column that never earned a histogram scan, the in-range fraction
     of a uniform row sample is an unbiased selectivity estimate —
     empirical-CDF mass, error O(1/sqrt(k)) — which on skewed data beats
@@ -229,23 +230,10 @@ def write_table_stats(
     return path
 
 
-def load_table_stats(stats_dir: str, name: str) -> dict[str, dict] | None:
-    """Read persisted stats; None when absent (caller decides whether to
-    fall back to a live ANALYZE scan)."""
-    stats = read_json(os.path.join(stats_dir, f"{name}.json"))
-    if stats is None:
-        return None
-    # maintenance metadata (applied streaming batch ids) rides inside the
-    # same atomically-replaced file but is NOT a column: strip it so every
-    # consumer keeps iterating pure column stats
-    stats.pop("__meta__", None)
-    return stats
-
-
 # ---------------------------------------------------------------------------
-# Join-strategy chooser — the skew-detection consumer the r6 verdict
-# asked the stats to feed. ndv << rows on a join key is the classic
-# power-law pile-up signal: AQE splits moderate skew at runtime, but a
+# Join-strategy chooser — the skew-detection consumer of the stats,
+# because a join's strategy is where skew costs most. ndv << rows on a
+# join key is the classic power-law pile-up signal: AQE splits moderate skew at runtime, but a
 # hot-key ratio past ``salt_rows_per_key`` is where the explicit salted
 # join (operators/skew.salted_join) wins, because the planner never sees
 # per-key row counts until the shuffle already happened.
@@ -255,7 +243,7 @@ def load_table_stats(stats_dir: str, name: str) -> dict[str, dict] | None:
 def key_set_bytes(stats: dict[str, dict], key_col: str) -> float:
     """Estimated broadcast size of ``key_col``'s DISTINCT key set — the
     semi-join-reduction gate's small-side cost. Per-key bytes come from
-    the column's OWN stats, not a fixed constant (r9 advice): a wide
+    the column's OWN stats, not a fixed constant, because a wide
     string key (URL, content hash) can pass an ndv x 16 gate yet
     broadcast a key set far over the threshold. Observed min/max value
     lengths bound the payload width (numerics stringify to their digit
@@ -353,7 +341,7 @@ def choose_join_order(
     broadcast_max_bytes: int | None = None,
 ) -> list[dict]:
     """Stats-driven join ORDER for a 3+-table star around one fact
-    (r13, r12 verdict #7b): ``choose_join_strategy`` picks the physical
+    ``choose_join_strategy`` picks the physical
     strategy per edge, this picks the SEQUENCE. Each dim entry is
     ``{"name", "stats", "fact_col"[, "dim_col"][, "row_bytes"]}`` where
     ``stats`` characterizes the (possibly pre-filtered) dimension as the
@@ -459,13 +447,13 @@ def dim_hint(
     big_key: str,
     broadcast_max_bytes: int | None = None,
 ) -> DataFrame:
-    """Stats-informed dimension-side hint for a query's dim join (r7
-    verdict #6 — the wiring that makes ``choose_join_strategy`` a real
-    consumer): broadcast the dim iff the chooser picks 'broadcast' from
+    """Stats-informed dimension-side hint for a query's dim join (the
+    wiring that makes ``choose_join_strategy`` a real consumer):
+    broadcast the dim iff the chooser picks 'broadcast' from
     the memoized ANALYZE stats (full-table rows x dtype width — a
     conservative bound when the caller filtered the dim first).
     Otherwise the dim returns UNhinted and the join falls to Spark's
-    shuffle strategies — the 'salted' verdict cannot apply to a one-sided
+    shuffle strategies — the 'salted' strategy cannot apply to a one-sided
     hint (salting rewrites both join inputs; see
     ``stats_informed_join`` for the full rewrite) and degrades to the
     same shuffle AQE would skew-split. The threshold is read at call
@@ -533,7 +521,7 @@ def stats_informed_join(
 
 
 # ---------------------------------------------------------------------------
-# Fixed-width histogram — the MERGEABLE histogram (r12). column_histogram
+# Fixed-width histogram — the MERGEABLE histogram. column_histogram
 # below derives its bucket bounds from the observed min/max, which makes
 # it a fine one-shot CBO artifact but NOT batch-mergeable: two batches
 # with different ranges bucket differently. The fixed-width form (bin =
@@ -553,10 +541,10 @@ def fixed_hist_bin(
     col: str, width: float, bins: int, offset: float = 0.0
 ) -> F.Column:
     """The shared bin expression: clamp(floor((col - offset) / width),
-    0, bins - 1). ``offset`` (r13, r12 verdict #4) shifts the support to
+    0, bins - 1). ``offset`` shifts the support to
     [offset, offset + bins*width) so negative- or wide-range columns bin
     correctly instead of piling into bins 0/63; offset 0.0 reproduces
-    the r12 artifact bit-for-bit (backward compatible)."""
+    an artifact built before offsets existed bit-for-bit."""
     cd = F.col(col).cast("double")
     return F.least(
         F.greatest(
@@ -593,73 +581,14 @@ def column_fixed_histogram(
     return {int(r["bin"]): int(r["n"]) for r in rows}
 
 
-def _hist_knobs(label: str, width: float, bins: int, offset: float):
-    """``fold_json`` check: refuse to fold into a histogram artifact
-    built with other knobs (artifacts predating ``offset`` read as 0.0)."""
-
-    def check(raw: dict) -> None:
-        if (
-            raw.get("width") != width
-            or raw.get("bins") != bins
-            or float(raw.get("offset", 0.0)) != float(offset)
-        ):
-            raise ValueError(
-                f"{label} knob mismatch: stored width={raw.get('width')} "
-                f"bins={raw.get('bins')} offset={raw.get('offset', 0.0)} vs "
-                f"requested width={width} bins={bins} offset={offset}"
-            )
-
-    return check
-
-
-def incremental_histogram(
-    stats_dir: str,
-    name: str,
-    col: str,
-    batch_df: DataFrame,
-    width: float = HIST_WIDTH,
-    bins: int = HIST_BINS,
-    batch_id: int | None = None,
-    offset: float = 0.0,
-) -> dict[int, int]:
-    """Fold one batch into a persisted fixed-width histogram
-    (``{name}__hist_{col}.json``): counts are additive, so after ANY
-    number of folds the artifact equals a one-shot histogram over the
-    union (pytest-pinned). Knob mismatch fails fast; the replay guard
-    is ``commit.fold_json``'s record inside the same atomic write."""
-
-    def fold(prior: dict | None) -> dict:
-        prior = prior or {}
-        counts = {int(k): int(v) for k, v in prior.get("counts", {}).items()}
-        fresh = column_fixed_histogram(batch_df, col, width, bins, offset)
-        for b, n in fresh.items():
-            counts[b] = counts.get(b, 0) + n
-        return {
-            "counts": {str(k): v for k, v in sorted(counts.items())},
-            "n_rows": int(prior.get("n_rows", 0)) + sum(fresh.values()),
-            "col": col,
-            "width": width,
-            "bins": bins,
-            "offset": float(offset),
-        }
-
-    art = fold_json(
-        os.path.join(stats_dir, f"{name}__hist_{col}.json"),
-        batch_id,
-        fold,
-        check=_hist_knobs("histogram", width, bins, offset),
-    )
-    return {int(k): int(v) for k, v in art["counts"].items()}
-
-
 def fixed_hist_rows(art: dict) -> list[dict]:
     """Adapt a persisted fixed-width histogram artifact
-    (:func:`load_histogram`) into the bucket rows
+    (``load_sketch("hist", ...)``) into the bucket rows
     :func:`estimated_range_rows` consumes (lo/hi/n_rows dicts) — the
     maintained artifact feeds the planner's range selectivity the way a
     one-shot column_histogram scan does, with NO rescan: the sketch
     loop (KMV→ndv, MG→salt, bottom-k→selectivity, CMS→hot-key probe,
-    histogram→range mass) stays closed for the sixth artifact too. The
+    histogram→range mass) stays closed for the histogram too. The
     last bin is open-ended by construction (values clamp into it); its
     ``hi`` edge is still width*(b+1) — the same bounded-support
     assumption the fixed-width estimator itself makes."""
@@ -669,16 +598,6 @@ def fixed_hist_rows(art: dict) -> list[dict]:
         {"bucket": b, "lo": o + w * b, "hi": o + w * (b + 1), "n_rows": n}
         for b, n in sorted(art["counts"].items())
     ]
-
-
-def load_histogram(stats_dir: str, name: str, col: str) -> dict:
-    """Read back a persisted fixed-width histogram artifact (the whole
-    JSON: counts/n_rows/width/bins); empty dict when absent."""
-    raw = read_json(os.path.join(stats_dir, f"{name}__hist_{col}.json"))
-    if raw is None:
-        return {}
-    raw["counts"] = {int(k): int(v) for k, v in raw.get("counts", {}).items()}
-    return raw
 
 
 def hist_quantile(
@@ -720,11 +639,10 @@ def hist_knobs_for(
     stats: dict[str, dict], col: str, bins: int = HIST_BINS
 ) -> dict:
     """{"width", "bins", "offset"} for a fixed-width histogram of
-    ``col``, derived from maintained min/max stats (``table_stats`` /
-    ``load_table_stats`` / ``incremental_analyze`` all carry them) —
-    r12 verdict #4: the artifact family's own discipline
-    (bloom_bits_per_key_for precedent) instead of hard-coded knobs that
-    silently pile a negative- or wide-range column into bins 0/63.
+    ``col``, derived from maintained min/max stats (``table_stats`` and
+    the ``"analyze"`` sketch both carry them) — the artifact family's own
+    discipline (bloom_bits_per_key_for precedent), because hard-coded
+    knobs silently pile a negative- or wide-range column into bins 0/63.
 
     width = the smallest nice grid value >= span/(bins-1) (the -1 keeps
     the max in support after the offset snaps DOWN); offset = floor(mn /
@@ -760,11 +678,11 @@ def served_hist_quantiles(
 ) -> dict[str, float]:
     """q -> interpolated quantile served from the MAINTAINED fixed-width
     histogram artifact — q_value_percentiles' documented scale path
-    realized (r12 verdict #4): no table scan, <= bins integers of driver
+    realized: no table scan, <= bins integers of driver
     metadata, knobs read from the artifact itself. Raises KeyError when
     the artifact is absent (serve-from-artifact is an explicit contract,
     not a silent fallback)."""
-    art = load_histogram(stats_dir, name, col)
+    art = load_sketch("hist", stats_dir, name, col=col)
     if not art:
         raise KeyError(f"no maintained histogram for {name}.{col} in {stats_dir}")
     w = float(art["width"])
@@ -779,14 +697,14 @@ def histogram_support_check(
     stats: dict[str, dict] | None = None,
     group_col: str | None = None,
 ) -> dict:
-    """The re-band tripwire for the maintained histogram (r13 — the
-    dedup_index_stats discipline applied to the sixth artifact): compare
+    """The re-band tripwire for the maintained histogram (the
+    dedup_index_stats discipline applied to it): compare
     the STORED knobs against the knobs the CURRENT maintained min/max
     stats derive. A drifting corpus can push values past the fitted
     support, where they silently clamp into the edge bins and quantile
     estimates flatten; this check is how the store owner notices.
 
-    ``stats``: the live stats dict (``load_table_stats`` /
+    ``stats``: the live stats dict (the ``"analyze"`` sketch or
     ``table_stats``); defaults to the persisted ``{stats_dir}/{name}.json``.
     Returns {"stored": knobs, "derived": knobs, "support_lo/hi",
     "min_in_support", "max_in_support", "edge_bin_fraction",
@@ -794,16 +712,14 @@ def histogram_support_check(
     outside the stored support OR the derived width differs (the
     range widened enough for the snap to move). Raises KeyError when no
     artifact exists (an explicit contract, like served_hist_quantiles)."""
-    loader = load_histogram_grouped if group_col else load_histogram
-    art = (
-        loader(stats_dir, name, group_col, col)
-        if group_col
-        else loader(stats_dir, name, col)
-    )
+    if group_col:
+        art = load_sketch("ghist", stats_dir, name, group_col=group_col, col=col)
+    else:
+        art = load_sketch("hist", stats_dir, name, col=col)
     if not art:
         raise KeyError(f"no maintained histogram for {name}.{col} in {stats_dir}")
     if stats is None:
-        stats = load_table_stats(stats_dir, name)
+        stats = load_sketch("analyze", stats_dir, name)
     if stats is None or col not in stats:
         raise KeyError(
             f"no maintained stats for {name}.{col} in {stats_dir}"
@@ -842,7 +758,7 @@ def histogram_support_check(
 
 
 # ---------------------------------------------------------------------------
-# GROUPED fixed-width histogram (r13, r12 verdict #7a) — the r12
+# GROUPED fixed-width histogram — the fixed-width
 # artifact at group grain: one partial-agg scan to (group, bin) rows
 # (<= |groups| x bins — bounded for the few-big-groups shapes the
 # grouped percentile queries serve), additive across batches exactly
@@ -862,8 +778,8 @@ def column_fixed_histogram_grouped(
 ) -> dict[str, dict[int, int]]:
     """group -> {bin -> count} in ONE partial-agg scan (<= |groups| x
     ``bins`` rows to the driver). NULL values are excluded per group
-    (the exact-percentile legs ignore them too — the r12 advice
-    NULL-parity rule); a NULL group keys as the empty string's "None"
+    (the exact-percentile legs ignore them too, so NULLs stay at
+    parity); a NULL group keys as the empty string's "None"
     repr-stable alternative: it is kept under the JSON key "null"."""
     cd = F.col(col).cast("double")
     finite = (
@@ -888,81 +804,6 @@ def column_fixed_histogram_grouped(
     return out
 
 
-def incremental_histogram_grouped(
-    stats_dir: str,
-    name: str,
-    group_col: str,
-    col: str,
-    batch_df: DataFrame,
-    width: float = HIST_WIDTH,
-    bins: int = HIST_BINS,
-    batch_id: int | None = None,
-    offset: float = 0.0,
-) -> dict[str, dict[int, int]]:
-    """Fold one batch into a persisted GROUPED fixed-width histogram
-    (``{name}__ghist_{group_col}_{col}.json``): per-(group, bin) counts
-    are additive, so after ANY number of folds the artifact equals a
-    one-shot grouped histogram over the union (pytest-pinned). Same
-    knob-mismatch refusal and ``commit.fold_json`` replay guard as the
-    global artifact."""
-
-    def fold(prior: dict | None) -> dict:
-        prior = prior or {}
-        counts = {
-            g: {int(k): int(v) for k, v in c.items()}
-            for g, c in prior.get("counts", {}).items()
-        }
-        n_rows = int(prior.get("n_rows", 0))
-        fresh = column_fixed_histogram_grouped(
-            batch_df, group_col, col, width, bins, offset
-        )
-        for g, per_bin in fresh.items():
-            dst = counts.setdefault(g, {})
-            for b, n in per_bin.items():
-                dst[b] = dst.get(b, 0) + n
-            n_rows += sum(per_bin.values())
-        return {
-            "counts": {
-                g: {str(k): v for k, v in sorted(c.items())}
-                for g, c in sorted(counts.items())
-            },
-            "n_rows": n_rows,
-            "group_col": group_col,
-            "col": col,
-            "width": width,
-            "bins": bins,
-            "offset": float(offset),
-        }
-
-    art = fold_json(
-        os.path.join(stats_dir, f"{name}__ghist_{group_col}_{col}.json"),
-        batch_id,
-        fold,
-        check=_hist_knobs("grouped histogram", width, bins, offset),
-    )
-    return {
-        g: {int(k): int(v) for k, v in c.items()}
-        for g, c in art["counts"].items()
-    }
-
-
-def load_histogram_grouped(
-    stats_dir: str, name: str, group_col: str, col: str
-) -> dict:
-    """Read back a persisted grouped histogram artifact (counts keyed
-    group -> bin); empty dict when absent."""
-    raw = read_json(
-        os.path.join(stats_dir, f"{name}__ghist_{group_col}_{col}.json")
-    )
-    if raw is None:
-        return {}
-    raw["counts"] = {
-        g: {int(k): int(v) for k, v in c.items()}
-        for g, c in raw.get("counts", {}).items()
-    }
-    return raw
-
-
 def served_group_quantiles(
     stats_dir: str,
     name: str,
@@ -974,7 +815,7 @@ def served_group_quantiles(
     artifact — the scale path for per-group percentile surfaces
     (corpus_data_card's p50/p90, the q_group_percentiles family):
     serving cost |groups| x bins integers, no table scan."""
-    art = load_histogram_grouped(stats_dir, name, group_col, col)
+    art = load_sketch("ghist", stats_dir, name, group_col=group_col, col=col)
     if not art:
         raise KeyError(
             f"no maintained grouped histogram for {name}.{group_col}.{col}"
@@ -1001,7 +842,7 @@ def column_histogram(df: DataFrame, col: str, bins: int = 16) -> DataFrame:
     import math
 
     # Exclude non-finite values from BOTH the min/max probe and the
-    # bucketing scan (r7 advice, low): Spark's max treats NaN as the
+    # bucketing scan, because Spark's max treats NaN as the
     # largest double, so a single NaN row would otherwise make the bucket
     # width NaN and collapse the histogram into one null bucket.
     cd = F.col(col).cast("double")
@@ -1049,7 +890,7 @@ def column_histogram(df: DataFrame, col: str, bins: int = 16) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Incremental ANALYZE — mergeable per-partition statistics (r8). At
+# Incremental ANALYZE — mergeable per-partition statistics. At
 # 100 TB a full re-ANALYZE per ingest batch is a full table scan; the
 # scalable shape is per-partition stats + a merge. rows/nulls merge by
 # sum, min/max by comparison; distinct counts need a MERGEABLE sketch,
@@ -1154,35 +995,6 @@ def merge_stats(
 
 
 
-def incremental_analyze(
-    spark: SparkSession,
-    stats_dir: str,
-    name: str,
-    new_df: DataFrame,
-    k: int = KMV_K,
-    batch_id: int | None = None,
-) -> dict[str, dict]:
-    """Fold a new partition/batch into the persisted stats for ``name``
-    (atomic JSON, same surface ``load_table_stats`` consumers read):
-    scans ONLY ``new_df``, merges against the stored stats, writes back.
-    Returns the merged dict. The persisted ``approx_ndv`` stays
-    consumer-compatible (choose_join_strategy / dim_hint read it
-    unchanged); the extra ``kmv`` key is the mergeable state.
-
-    ``batch_id`` (streaming maintenance): the additive fold is NOT
-    idempotent, so the applied-batch record rides in the SAME atomic
-    write as the fold (``commit.fold_json``) — a record written after
-    the fold would leave a crash window that double-counts the batch on
-    replay. A batch already recorded returns the stored stats."""
-
-    def fold(prev: dict | None) -> dict:
-        fresh = partition_stats(new_df, k)
-        return merge_stats(prev, fresh, k) if prev else fresh
-
-    merged = fold_json(os.path.join(stats_dir, f"{name}.json"), batch_id, fold)
-    return merged or {}
-
-
 # ---------------------------------------------------------------------------
 # Heavy hitters (Misra-Gries) — the skew signal avg_rows_per_key can't
 # see. ndv-based detection misses the classic production failure: a join
@@ -1262,48 +1074,6 @@ def hot_key_rows(df: DataFrame, col: str, k: int = MG_K) -> float:
     return float(max(summary.values())) if summary else 0.0
 
 
-def incremental_heavy_hitters(
-    stats_dir: str,
-    name: str,
-    col: str,
-    batch_df: DataFrame,
-    k: int = MG_K,
-    batch_id: int | str | None = None,
-) -> tuple[dict, int]:
-    """Fold one batch's Misra-Gries summary into a persisted hot-key
-    sketch (``{name}__hh_{col}.json``) — the incremental-ANALYZE story
-    for the skew signal: each batch is scanned ONCE (shuffle-free
-    ``column_heavy_hitters``), summaries merge associatively, and the
-    stored result keeps the MG guarantee over the UNION of all folded
-    batches (any value with total count > N/k survives; counts are
-    lower bounds within N/k).
-
-    MG counts are additive, so a replayed batch would inflate the
-    sketch: the applied-batch record rides in the same atomic write as
-    the fold (``commit.fold_json``). Returns (summary, total_rows)."""
-
-    def fold(prior: dict | None) -> dict:
-        prior = prior or {}
-        fresh, fresh_n = column_heavy_hitters(batch_df, col, k)
-        return {
-            "summary": merge_mg(prior.get("summary", {}), fresh, k),
-            "n_rows": int(prior.get("n_rows", 0)) + fresh_n,
-            "col": col,
-            "k": k,
-        }
-
-    art = fold_json(os.path.join(stats_dir, f"{name}__hh_{col}.json"), batch_id, fold)
-    return art["summary"], int(art["n_rows"])
-
-
-def load_heavy_hitters(stats_dir: str, name: str, col: str) -> tuple[dict, int]:
-    """Read back a persisted hot-key sketch: (summary, n_rows). The
-    max summary value feeds ``choose_join_strategy(hot_rows=...)`` the
-    way ``hot_key_rows`` does from a live DataFrame."""
-    raw = read_json(os.path.join(stats_dir, f"{name}__hh_{col}.json")) or {}
-    return raw.get("summary", {}), int(raw.get("n_rows", 0))
-
-
 def kmv_intersection(
     sa: list[int], sb: list[int], k: int | None = None
 ) -> tuple[float, float, float]:
@@ -1317,15 +1087,15 @@ def kmv_intersection(
     estimates Jaccard, so |A ∩ B| ≈ ρ · |A ∪ B|. This needs NO
     knowledge of the sketches' build-k (a filled k=64 sketch and a
     complete 64-value set are indistinguishable from the list alone —
-    guessing 'complete' silently computed garbage on filled sketches,
-    the r9 bug this replaced). Pass ``k`` only when the build-k is
+    guessing 'complete' silently computes garbage on filled
+    sketches). Pass ``k`` only when the build-k is
     known: then two unfilled sketches are provably complete sets and
     every quantity is exact. Cost: pure python over ≤2k ints —
     driver-side metadata, never a data pass."""
     if not sa or not sb:
         # union leg = the non-empty side's OWN estimator: a FILLED sketch
-        # represents far more distincts than its k entries (r9 advice —
-        # len() capped the union at k). kmv_ndv with the module default k
+        # represents far more distincts than its k entries, and len()
+        # would cap the union at k. kmv_ndv with the module default k
         # keeps the unfilled case exact (= len) and estimates the filled
         # one; pass the caller's k when known for the same reason as below.
         s = sa or sb
@@ -1351,7 +1121,7 @@ def estimate_join_rows(
     stats_a: dict, stats_b: dict, col_a: str, col_b: str | None = None
 ) -> float:
     """Equi-join output-cardinality estimate from two tables' persisted
-    stats (``partition_stats`` / ``incremental_analyze`` shape): KMV
+    stats (``partition_stats`` / ``"analyze"`` sketch shape): KMV
     intersection gives the matching-key count, and each side contributes
     its average rows-per-key — |A ⋈ B| ≈ ndv(A∩B) · (rows_a/ndv_a) ·
     (rows_b/ndv_b). The uniform-frequency model under-estimates under
@@ -1410,51 +1180,6 @@ def column_bottom_k_sample(
         .collect()
     )
     return [[r["h"], r["v"]] for r in rows]
-
-
-def incremental_sample(
-    stats_dir: str,
-    name: str,
-    key_col: str,
-    val_col: str,
-    batch_df: DataFrame,
-    k: int = 256,
-    batch_id: int | None = None,
-) -> list[list]:
-    """Fold one batch into a persisted bottom-k-hash row sample
-    (``{name}__smp_{val_col}.json``) — the incremental leg of the
-    deterministic sampling device behind ``q_value_quantile_sketch``:
-    merge = keep the k hash-smallest of (stored ∪ batch bottom-k), so
-    after ANY number of batches the stored sample is byte-identical to
-    a one-shot bottom-k over the whole corpus (pinned by pytest). Serves
-    quantile estimates without rescanning the table.
-
-    Replay-safe twice over: min-union is idempotent (re-folding the
-    same batch cannot change the bottom-k), AND the applied-batch
-    record rides inside the same atomic write (``commit.fold_json``)."""
-
-    def fold(prior: dict | None) -> dict:
-        stored = (prior or {}).get("rows", [])
-        fresh = column_bottom_k_sample(batch_df, key_col, val_col, k)
-        seen = {r[0] for r in stored}
-        merged = sorted(
-            stored + [r for r in fresh if r[0] not in seen], key=lambda r: r[0]
-        )[:k]
-        return {"rows": merged, "k": k, "key_col": key_col, "val_col": val_col}
-
-    art = fold_json(
-        os.path.join(stats_dir, f"{name}__smp_{val_col}.json"), batch_id, fold
-    )
-    return art.get("rows", [])
-
-
-def load_sample(stats_dir: str, name: str, val_col: str) -> list[list]:
-    """Read back a persisted bottom-k row sample ([row_hash, value]
-    pairs); empty when absent. The ``estimated_range_rows(sample=...)``
-    feed — consumers pass it the way they pass a histogram, behind the
-    same ``table_stats``-style maintenance artifacts."""
-    raw = read_json(os.path.join(stats_dir, f"{name}__smp_{val_col}.json")) or {}
-    return raw.get("rows", [])
 
 
 def sample_quantile(rows: list[list], q: float) -> float | None:
@@ -1524,45 +1249,254 @@ def cms_estimate(counters: dict[str, int], key, d: int = CMS_D, w: int = CMS_W) 
     return int(est or 0)
 
 
-def incremental_cms(
+
+
+# ---------------------------------------------------------------------------
+# The maintained sketches. Seven planner artifacts stay current by folding
+# each ingest batch into a small JSON file instead of rescanning the
+# table. They differ only in their scan kernel, their merge and the knobs
+# they store, so SKETCHES holds exactly that per kind, and one fold / load
+# pair does the rest over commit.fold_json: a batch is scanned only when
+# its id is not a replay, the merge and the replay record commit in one
+# atomic write, and a stored knob that differs from the requested one
+# refuses the fold (counts built with other knobs do not line up). Every
+# merge has an identity — the scan of an empty batch — so an empty batch
+# is folded like any other and leaves the counts unchanged.
+# ---------------------------------------------------------------------------
+
+
+class Sketch(NamedTuple):
+    file: str  # artifact file name, formatted with the fold parameters
+    params: dict  # parameter -> default; ``...`` marks a required one
+    scan: Callable[[DataFrame, dict], dict]  # one batch -> its own artifact
+    merge: Callable[[dict, dict, dict], dict]  # (stored, batch, params) -> artifact
+    knobs: tuple[str, ...] = ()  # stored parameters a fold must match
+    decode: Callable[[dict], dict] = lambda art: art  # stored JSON -> served form
+
+
+def _add_counts(a: dict, b: dict) -> dict:
+    """Key-wise sum of two count maps; nested maps (histogram groups) are
+    summed recursively."""
+    out = dict(a)
+    for key, n in b.items():
+        if isinstance(n, dict):
+            out[key] = _add_counts(out.get(key, {}), n)
+        else:
+            out[key] = out.get(key, 0) + n
+    return out
+
+
+def _merge_counts(field: str) -> Callable[[dict, dict, dict], dict]:
+    """Merge of an additive artifact: ``field``'s counts and n_rows add."""
+    return lambda a, b, p: {
+        **b,
+        field: _add_counts(a[field], b[field]),
+        "n_rows": a["n_rows"] + b["n_rows"],
+    }
+
+
+def _bins(counts: dict, key: Callable) -> dict:
+    """Histogram counts with each bin key mapped through ``key`` (str to
+    store as JSON, int to serve), at either grain: group keys stay."""
+    out = {}
+    for k, v in counts.items():
+        if isinstance(v, dict):
+            out[k] = _bins(v, key)
+        else:
+            out[key(k)] = v
+    return out
+
+
+def _scan_mg(df: DataFrame, p: dict) -> dict:
+    summary, n_rows = column_heavy_hitters(df, p["col"], p["k"])
+    return {"summary": summary, "n_rows": n_rows, "col": p["col"], "k": p["k"]}
+
+
+def _scan_sample(df: DataFrame, p: dict) -> dict:
+    rows = column_bottom_k_sample(df, p["key_col"], p["val_col"], p["k"])
+    return {"rows": rows, "k": p["k"], "key_col": p["key_col"], "val_col": p["val_col"]}
+
+
+def _merge_sample(a: dict, b: dict, p: dict) -> dict:
+    """Bottom-k of the union: the k hash-smallest distinct rows."""
+    seen = {r[0] for r in a["rows"]}
+    rows = a["rows"] + [r for r in b["rows"] if r[0] not in seen]
+    return {**b, "rows": sorted(rows, key=lambda r: r[0])[: p["k"]]}
+
+
+def _scan_cms(df: DataFrame, p: dict) -> dict:
+    counters = column_cms(df, p["col"], p["d"], p["w"])
+    return {
+        "counters": counters,
+        "n_rows": sum(counters.values()) // p["d"],  # each row lands once per depth
+        "col": p["col"],
+        "d": p["d"],
+        "w": p["w"],
+    }
+
+
+def _scan_hist(df: DataFrame, p: dict) -> dict:
+    """One batch's fixed-width histogram, at the group grain when the
+    parameters name a ``group_col``."""
+    knobs = (p["width"], p["bins"], p["offset"])
+    if "group_col" in p:
+        counts = column_fixed_histogram_grouped(df, p["group_col"], p["col"], *knobs)
+        n_rows = sum(sum(c.values()) for c in counts.values())
+        grain = {"group_col": p["group_col"]}
+    else:
+        counts = column_fixed_histogram(df, p["col"], *knobs)
+        n_rows = sum(counts.values())
+        grain = {}
+    return {
+        "counts": _bins(counts, str),
+        "n_rows": n_rows,
+        **grain,
+        "col": p["col"],
+        "width": p["width"],
+        "bins": p["bins"],
+        "offset": float(p["offset"]),
+    }
+
+
+def _decode_hist(art: dict) -> dict:
+    return {**art, "counts": _bins(art["counts"], int)}
+
+
+def _scan_checksum(df: DataFrame, p: dict) -> dict:
+    from .operators.dq import table_checksum  # operators import this module
+
+    row = table_checksum(df, p["name"], p["round_doubles"]).collect()[0]
+    return {
+        "table_name": p["name"],
+        "n_rows": int(row["n_rows"]),
+        "checksum": int(row["checksum"]),
+        "encoding": "v1",
+    }
+
+
+def _merge_checksum(a: dict, b: dict, p: dict) -> dict:
+    from .operators.dq import _CHK_MOD
+
+    return {
+        **b,
+        "n_rows": a["n_rows"] + b["n_rows"],
+        "checksum": (a["checksum"] + b["checksum"]) % _CHK_MOD,
+    }
+
+
+_HIST = {"col": ..., "width": HIST_WIDTH, "bins": HIST_BINS, "offset": 0.0}
+_HIST_KNOBS = ("width", "bins", "offset")
+
+SKETCHES: dict[str, Sketch] = {
+    # KMV table stats: the column -> stats dict the join gates read
+    "analyze": Sketch(
+        "{name}.json",
+        {"k": KMV_K},
+        lambda df, p: partition_stats(df, p["k"]),
+        lambda a, b, p: merge_stats(a, b, p["k"]),
+        decode=lambda art: {c: s for c, s in art.items() if c != META},
+    ),
+    # Misra-Gries hot keys: choose_join_strategy's hot_rows
+    "hotkeys": Sketch(
+        "{name}__hh_{col}.json",
+        {"col": ..., "k": MG_K},
+        _scan_mg,
+        lambda a, b, p: {
+            **b,
+            "summary": merge_mg(a["summary"], b["summary"], p["k"]),
+            "n_rows": a["n_rows"] + b["n_rows"],
+        },
+        knobs=("k",),
+    ),
+    # bottom-k row sample: sample_quantile and range selectivity
+    "sample": Sketch(
+        "{name}__smp_{val_col}.json",
+        {"key_col": ..., "val_col": ..., "k": 256},
+        _scan_sample,
+        _merge_sample,
+        knobs=("k",),
+    ),
+    # Count-Min point frequencies: cms_estimate
+    "cms": Sketch(
+        "{name}__cms_{col}.json",
+        {"col": ..., "d": CMS_D, "w": CMS_W},
+        _scan_cms,
+        _merge_counts("counters"),
+        knobs=("d", "w"),
+    ),
+    # fixed-width histogram: served_hist_quantiles, fixed_hist_rows
+    "hist": Sketch(
+        "{name}__hist_{col}.json",
+        _HIST,
+        _scan_hist,
+        _merge_counts("counts"),
+        _HIST_KNOBS,
+        _decode_hist,
+    ),
+    # grouped histogram: served_group_quantiles
+    "ghist": Sketch(
+        "{name}__ghist_{group_col}_{col}.json",
+        {"group_col": ..., **_HIST},
+        _scan_hist,
+        _merge_counts("counts"),
+        _HIST_KNOBS,
+        _decode_hist,
+    ),
+    # checksum manifest: the migration-validation digest (operators/dq)
+    "checksum": Sketch(
+        "{name}__checksum.json",
+        {"round_doubles": None},
+        _scan_checksum,
+        _merge_checksum,
+    ),
+}
+
+
+def fold_sketch(
+    kind: str,
     stats_dir: str,
     name: str,
-    col: str,
     batch_df: DataFrame,
-    d: int = CMS_D,
-    w: int = CMS_W,
     batch_id: int | str | None = None,
-) -> dict[str, int]:
-    """Fold one batch into a persisted CMS (``{name}__cms_{col}.json``):
-    counters add, so after ANY number of batches the stored sketch
-    equals a one-shot CMS over the union (pytest-pinned). Additive =
-    NOT idempotent, so the applied-batch record rides inside the same
-    atomic write as the fold (``commit.fold_json``). A stored sketch
-    with other ``d``/``w`` is refused: its counters would not line up."""
+    **params,
+) -> dict:
+    """Fold ``batch_df`` into the ``kind`` sketch of table ``name`` under
+    ``stats_dir``; returns the committed artifact in its served form.
 
-    def check(raw: dict) -> None:
-        if raw.get("d") != d or raw.get("w") != w:
-            raise ValueError(
-                f"CMS knob mismatch: stored d={raw.get('d')} w={raw.get('w')}"
-                f" vs requested d={d} w={w}"
-            )
+    ``params`` are the kind's ``SKETCHES[kind].params``. ``batch_id`` is
+    ``commit.fold_json``'s replay guard — a stream batch id or a batch
+    file's path digest; a replay is not scanned and returns the stored
+    artifact, and None folds unguarded. A stored knob that differs from
+    the requested one raises ValueError.
+
+    Single writer per artifact: the read-modify-write is not locked, so
+    one stream or one sequence of CLI folds owns an artifact at a time."""
+    spec = SKETCHES[kind]
+    p = {**spec.params, **params, "name": name}
+    bad = set(params) - set(spec.params) | {k for k, v in p.items() if v is ...}
+    if bad:
+        raise TypeError(f"{kind} sketch: unknown or missing parameters {sorted(bad)}")
 
     def fold(prior: dict | None) -> dict:
-        prior = prior or {}
-        counters = prior.get("counters", {})
-        fresh = column_cms(batch_df, col, d, w)
-        for key, n in fresh.items():
-            counters[key] = counters.get(key, 0) + n
-        n_rows = int(prior.get("n_rows", 0)) + sum(fresh.values()) // d
-        return {"counters": counters, "n_rows": n_rows, "col": col, "d": d, "w": w}
+        fresh = spec.scan(batch_df, p)
+        return fresh if prior is None else spec.merge(prior, fresh, p)
 
-    art = fold_json(
-        os.path.join(stats_dir, f"{name}__cms_{col}.json"), batch_id, fold, check=check
-    )
-    return art["counters"]
+    def check(stored: dict) -> None:
+        have = {k: stored.get(k, spec.params[k]) for k in spec.knobs}
+        want = {k: p[k] for k in spec.knobs}
+        if have != want:
+            raise ValueError(f"{kind} knob mismatch: stored {have} vs requested {want}")
+
+    path = os.path.join(stats_dir, spec.file.format(**p))
+    return spec.decode(fold_json(path, batch_id, fold, check=check))
 
 
-def load_cms(stats_dir: str, name: str, col: str) -> tuple[dict[str, int], int]:
-    """Read back a persisted CMS: (counters, n_rows); empty when absent."""
-    raw = read_json(os.path.join(stats_dir, f"{name}__cms_{col}.json")) or {}
-    return raw.get("counters", {}), int(raw.get("n_rows", 0))
+def load_sketch(kind: str, stats_dir: str, name: str, **coords) -> dict | None:
+    """The stored ``kind`` sketch of table ``name`` in its served form —
+    with its ``__meta__`` replay record, except for "analyze", whose
+    served form is column stats only; None when absent. ``coords`` are
+    the parameters in the kind's file name (``col``, ``val_col``,
+    ``group_col``)."""
+    spec = SKETCHES[kind]
+    raw = read_json(os.path.join(stats_dir, spec.file.format(name=name, **coords)))
+    return None if raw is None else spec.decode(raw)

@@ -37,7 +37,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import cut
+from ..catalog import cut, read_events_raw
 from ..commit import applied_max, read_json, write_json
 from .stream_ops import _DOC_SCHEMA, _stream_confs
 
@@ -434,40 +434,42 @@ def stream_ingest_dedup(
     _drain(spark, src, checkpoint_dir, gate_batch, record="_ingest_commits.json")
 
 
-def stream_stats_maintenance(
+def stream_sketch_maintenance(
     spark: SparkSession,
+    kind: str,
     sf_dir: str,
     stats_dir: str,
     checkpoint_dir: str,
     table_name: str = "documents",
-    kmv_k: int = 256,
+    **params,
 ) -> None:
-    """Continuously-maintained table statistics: streaming documents →
-    ``stats.incremental_analyze``. Each
-    micro-batch scans ONLY its own rows and folds counts/min-max/KMV
-    sketches into the persisted JSON the broadcast / join-strategy
-    gates read (``load_table_stats`` surface) — the ANALYZE never
-    re-reads the table, which is the whole scalable-maintenance story.
+    """Keep one maintained sketch (``stats.SKETCHES[kind]``) current from
+    a file stream: each micro-batch is one ``{table_name}*.parquet`` file
+    under ``sf_dir``, scanned once and folded into the artifact under
+    ``stats_dir`` by ``stats.fold_sketch``, so the artifact stays
+    current without ever re-reading the table. ``params`` are the kind's
+    fold parameters (column names and knobs). Empty batches are folded
+    like any other: every merge has an identity.
 
-    Exactly-once with no crash window: the stats merge is ADDITIVE
-    (counts sum, sketches union), so a replayed batch would double-count
-    under a record written after the fold. The applied-batch record
-    rides inside the stats JSON itself (``incremental_analyze(batch_id=
-    ...)`` → ``commit.fold_json``): fold and record are one atomic
-    write, and the replay check reads the same file it would update."""
-    from ..stats import incremental_analyze
+    Exactly-once with no crash window: the folds are additive, so the
+    batch id rides inside the artifact's single atomic write
+    (``commit.fold_json``), and the replay check reads the same file it
+    would update."""
+    from ..stats import fold_sketch
 
+    if table_name == "events":
+        schema = read_events_raw(spark, sf_dir).schema
+    else:
+        schema = _DOC_SCHEMA
     src = (
-        spark.readStream.schema(_DOC_SCHEMA)
+        spark.readStream.schema(schema)
         .option("pathGlobFilter", f"{table_name}*.parquet")
         .option("maxFilesPerTrigger", "1")  # one source file per batch
         .parquet(sf_dir)
     )
 
     def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        incremental_analyze(
-            spark, stats_dir, table_name, batch_df, k=kmv_k, batch_id=batch_id
-        )
+        fold_sketch(kind, stats_dir, table_name, batch_df, batch_id=batch_id, **params)
 
     _drain(spark, src, checkpoint_dir, fold_batch)
 
@@ -651,44 +653,6 @@ def stream_text_index_maintenance(
     _drain(spark, src, checkpoint_dir, fold_batch)
 
 
-def stream_hot_keys_maintenance(
-    spark: SparkSession,
-    sf_dir: str,
-    stats_dir: str,
-    checkpoint_dir: str,
-    table_name: str = "documents",
-    col: str = "source",
-    k: int = 64,
-) -> None:
-    """Continuously-maintained hot-key (Misra-Gries) skew signal:
-    streaming files → ``stats.incremental_heavy_hitters``.
-    Each micro-batch is scanned once, shuffle-free (per-partition MG
-    summaries, bounded driver metadata), and folded into the persisted
-    sketch that feeds ``choose_join_strategy(hot_rows=...)`` — so the
-    salted-join trigger stays current as the corpus grows, without ever
-    re-reading the table (the same scalable-maintenance story as
-    ``stream_stats_maintenance``).
-
-    Exactly-once with NO crash window: MG counts are additive, so the
-    applied-batch record rides inside the sketch JSON's single atomic
-    write (``commit.fold_json``: fold and record commit together)."""
-    from ..stats import incremental_heavy_hitters
-
-    src = (
-        spark.readStream.schema(_DOC_SCHEMA)
-        .option("pathGlobFilter", f"{table_name}*.parquet")
-        .option("maxFilesPerTrigger", "1")  # one source file per batch
-        .parquet(sf_dir)
-    )
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        incremental_heavy_hitters(
-            stats_dir, table_name, col, batch_df, k=k, batch_id=batch_id
-        )
-
-    _drain(spark, src, checkpoint_dir, fold_batch)
-
-
 def stream_cdc_apply(
     spark: SparkSession,
     cdc_dir: str,
@@ -736,182 +700,6 @@ def stream_cdc_apply(
         )
 
     _drain(spark, src, checkpoint_dir, apply_batch)
-
-
-def stream_sample_maintenance(
-    spark: SparkSession,
-    sf_dir: str,
-    stats_dir: str,
-    checkpoint_dir: str,
-    table_name: str = "documents",
-    key_col: str = "doc_id",
-    val_col: str = "n_chars",
-    k: int = 256,
-) -> None:
-    """Continuously-maintained deterministic row sample: streaming files
-    → ``stats.incremental_sample``. The stored
-    bottom-k-hash sample is byte-identical to a one-shot bottom-k over
-    everything ingested so far (min-union mergeability), so quantile
-    estimates (``stats.sample_quantile``) serve from k rows of driver
-    metadata without ever rescanning the table — the maintenance leg of
-    the ``q_value_quantile_sketch`` device. Per batch: ONE TakeOrdered
-    job over the batch's rows.
-
-    Replay-safe twice over (idempotent min-union + the applied-batch
-    record inside the artifact's single atomic write)."""
-    from ..stats import incremental_sample
-
-    src = (
-        spark.readStream.schema(_DOC_SCHEMA)
-        .option("pathGlobFilter", f"{table_name}*.parquet")
-        .option("maxFilesPerTrigger", "1")  # one source file per batch
-        .parquet(sf_dir)
-    )
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        incremental_sample(
-            stats_dir, table_name, key_col, val_col, batch_df,
-            k=k, batch_id=batch_id,
-        )
-
-    _drain(spark, src, checkpoint_dir, fold_batch)
-
-
-def stream_cms_maintenance(
-    spark: SparkSession,
-    sf_dir: str,
-    stats_dir: str,
-    checkpoint_dir: str,
-    table_name: str = "documents",
-    col: str = "source",
-    d: int = 4,
-    w: int = 512,
-) -> None:
-    """Continuously-maintained Count-Min frequency sketch: streaming
-    files → ``stats.incremental_cms``. Each
-    micro-batch is scanned once (map-side-combinable d x w counter
-    build, <= 2,048 rows to the driver) and folded into the persisted
-    sketch serving point-frequency upper bounds without re-reading the
-    table — the fourth member of the maintained-sketch family next to
-    incremental_analyze (KMV), incremental_heavy_hitters (MG) and
-    incremental_sample (bottom-k).
-
-    Exactly-once with NO crash window: CMS counters are additive, so
-    the applied-batch record rides inside the sketch JSON's single
-    atomic write (``commit.fold_json``)."""
-    from ..stats import incremental_cms
-
-    src = (
-        spark.readStream.schema(_DOC_SCHEMA)
-        .option("pathGlobFilter", f"{table_name}*.parquet")
-        .option("maxFilesPerTrigger", "1")  # one source file per batch
-        .parquet(sf_dir)
-    )
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        incremental_cms(
-            stats_dir, table_name, col, batch_df, d=d, w=w, batch_id=batch_id
-        )
-
-    _drain(spark, src, checkpoint_dir, fold_batch)
-
-
-def stream_histogram_maintenance(
-    spark: SparkSession,
-    sf_dir: str,
-    stats_dir: str,
-    checkpoint_dir: str,
-    col: str = "value",
-    width: float | None = None,
-    bins: int | None = None,
-    offset: float = 0.0,
-    group_col: str | None = None,
-) -> None:
-    """Continuously-maintained fixed-width histogram of ``events.col``:
-    streaming files → ``stats.incremental_histogram`` — the maintenance
-    leg of q_value_hist_quantiles' mergeable quantile summary. Each micro-batch is scanned once (one partial-agg
-    pass, <= bins rows to the driver) and its counts ADD into the
-    persisted artifact, so interpolated quantiles are always current
-    from B integers of driver metadata without rescanning the table —
-    the sixth maintained artifact next to KMV / MG / bottom-k / CMS /
-    checksum.
-
-    Exactly-once with no crash window: counts are additive, so the
-    bounded ``max_applied`` record rides inside the artifact JSON's
-    single atomic write (``commit.fold_json``).
-
-    ``offset`` shifts the support (for stats-derived knobs);
-    ``group_col`` maintains the GROUPED artifact instead (per-group
-    counts at (group, bin) grain, same protocol, same additivity)."""
-    from .. import stats as st
-    from ..catalog import read_events_raw
-
-    w = st.HIST_WIDTH if width is None else width
-    b = st.HIST_BINS if bins is None else bins
-    raw = read_events_raw(spark, sf_dir)
-    src = (
-        spark.readStream.schema(raw.schema)
-        .option("pathGlobFilter", "events*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-    )
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if group_col is None:
-            st.incremental_histogram(
-                stats_dir, "events", col, batch_df, width=w, bins=b,
-                batch_id=batch_id, offset=offset,
-            )
-        else:
-            st.incremental_histogram_grouped(
-                stats_dir, "events", group_col, col, batch_df, width=w,
-                bins=b, batch_id=batch_id, offset=offset,
-            )
-
-    _drain(spark, src, checkpoint_dir, fold_batch)
-
-
-def stream_checksum_maintenance(
-    spark: SparkSession,
-    sf_dir: str,
-    manifest_dir: str,
-    checkpoint_dir: str,
-    table_name: str = "documents",
-) -> None:
-    """Continuously-maintained table checksum: streaming files →
-    ``operators.dq.incremental_checksum``. Each micro-batch is scanned
-    once (one partial-agg digest pass, two scalars to the driver) and
-    folded into the persisted manifest, so the migration-validation
-    digest of everything ingested is always current WITHOUT re-reading
-    the table — shard checksums fold incrementally like the other
-    maintained artifacts (KMV / MG / bottom-k / CMS).
-
-    Exactly-once with NO crash window: the digest and row count are
-    additive, so the applied-batch record rides inside the manifest
-    JSON's single atomic write (``commit.fold_json``)."""
-    from ..operators.dq import incremental_checksum
-
-    src = (
-        spark.readStream.schema(_DOC_SCHEMA)
-        .option("pathGlobFilter", f"{table_name}*.parquet")
-        .option("maxFilesPerTrigger", "1")  # one source file per batch
-        .parquet(sf_dir)
-    )
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # Empty micro-batches fold to (0, 0) safely since checksum_agg
-        # coalesces its modular sum, but skipping them entirely matches
-        # the other maintenance streams and saves a no-op Spark job per
-        # zero-row shard.
-        if batch_df.isEmpty():
-            return
-        incremental_checksum(
-            manifest_dir, table_name, batch_df, batch_id=batch_id
-        )
-
-    _drain(spark, src, checkpoint_dir, fold_batch)
 
 
 def check_scd_meta(scd_dir: str, n_buckets: int) -> None:

@@ -259,15 +259,15 @@ def test_semi_reduce_query_plan_and_flips(spark, sf_dir):
 def test_semi_reduce_query_stats_survive_persistence(spark, sf_dir, tmp_path):
     """The chooser's verdict is identical whether the KMV stats are live
     (partition_stats) or round-tripped through the persisted JSON
-    (incremental_analyze -> load_table_stats) — the deployment path."""
+    (fold_sketch -> load_sketch) — the deployment path."""
     from pyspark.sql import functions as F  # noqa: F811
 
     from sentiment_analysis_vector_search_spark.catalog import table
     from sentiment_analysis_vector_search_spark.stats import (
         choose_join_strategy,
-        incremental_analyze,
+        fold_sketch,
         key_set_bytes,
-        load_table_stats,
+        load_sketch,
         partition_stats,
         schema_row_bytes,
     )
@@ -285,10 +285,10 @@ def test_semi_reduce_query_stats_survive_persistence(spark, sf_dir, tmp_path):
         F.col("l_orderkey").alias("okey")
     )
     sd = str(tmp_path / "stats")
-    incremental_analyze(spark, sd, "urgent_keys", small.select("okey"))
-    incremental_analyze(spark, sd, "line_keys", big)
-    st_small = load_table_stats(sd, "urgent_keys")
-    st_big = load_table_stats(sd, "line_keys")
+    fold_sketch("analyze", sd, "urgent_keys", small.select("okey"))
+    fold_sketch("analyze", sd, "line_keys", big)
+    st_small = load_sketch("analyze", sd, "urgent_keys")
+    st_big = load_sketch("analyze", sd, "line_keys")
     live_small = partition_stats(small.select("okey"))
     assert st_small["okey"]["kmv"] == live_small["okey"]["kmv"]
     width = schema_row_bytes(small, st_small)

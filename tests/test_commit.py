@@ -174,25 +174,30 @@ def test_stream_resumes_from_list_form_record(spark, sf_dir, tmp_path, monkeypat
 
 
 def _calls(attr: str, owner: str | None = None) -> list[tuple[str, str | None, int]]:
-    """(module, innermost enclosing def, line) of every ``.attr(`` call
-    in the package, optionally only on the name ``owner``."""
+    """(module, innermost enclosing def, line) of every call of ``attr``
+    in the package — ``x.attr(`` or a bare ``attr(`` — optionally only
+    the ``owner.attr(`` form."""
     out = []
+
+    def called(func) -> bool:
+        if isinstance(func, ast.Name):
+            return owner is None and func.id == attr
+        return (
+            isinstance(func, ast.Attribute)
+            and func.attr == attr
+            and (
+                owner is None
+                or isinstance(func.value, ast.Name)
+                and func.value.id == owner
+            )
+        )
 
     def visit(node, fn, rel):
         for child in ast.iter_child_nodes(node):
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 visit(child, child.name, rel)
                 continue
-            if (
-                isinstance(child, ast.Call)
-                and isinstance(child.func, ast.Attribute)
-                and child.func.attr == attr
-                and (
-                    owner is None
-                    or isinstance(child.func.value, ast.Name)
-                    and child.func.value.id == owner
-                )
-            ):
+            if isinstance(child, ast.Call) and called(child.func):
                 out.append((rel, fn, child.lineno))
             visit(child, fn, rel)
 
@@ -212,3 +217,84 @@ def test_only_commit_writes_json_and_only_drain_runs_foreachbatch():
         if c[:2] != ("streaming/file_sink.py", "_drain")
     ]
     assert not drains, f"foreachBatch outside file_sink._drain: {drains}"
+
+
+def test_one_sketch_fold_and_one_sketch_stream():
+    """The maintained sketches have one fold and one stream loop: in
+    stats.py and operators/dq.py only ``fold_sketch`` calls fold_json,
+    and in streaming/file_sink.py one function builds the sketch
+    streams."""
+    folds = [
+        c
+        for c in _calls("fold_json")
+        if c[0] in ("stats.py", "operators/dq.py") and c[1] != "fold_sketch"
+    ]
+    assert not folds, f"fold_json outside stats.fold_sketch: {folds}"
+    tree = ast.parse((PKG / "streaming" / "file_sink.py").read_text())
+    builders = {
+        fn.name
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+        and any(
+            isinstance(n, ast.Name) and n.id == "fold_sketch"
+            or isinstance(n, ast.alias) and n.name == "fold_sketch"
+            for n in ast.walk(fn)
+        )
+    }
+    assert builders == {"stream_sketch_maintenance"}, builders
+
+
+def test_cli_fold_verbs_rerun_on_one_file_is_a_noop(spark, tmp_path, capsys):
+    """Every fold verb guards its batch file by its path id when no
+    --batch-id is given: a second run on the same file leaves n_rows
+    (and the CMS estimates) as the first run left them."""
+    import json
+
+    import pandas as pd
+
+    from sentiment_analysis_vector_search_spark.__main__ import main
+
+    path = str(tmp_path / "batch" / "events.parquet")
+    os.makedirs(os.path.dirname(path))
+    pd.DataFrame(
+        {
+            "doc_id": [1, 2, 3, 4],
+            "source": ["x", "x", "y", "z"],
+            "value": [1.0, 2.0, 15.0, 30.0],
+        }
+    ).to_parquet(path)
+    stats, manifest = str(tmp_path / "stats"), str(tmp_path / "manifest")
+    verbs = {
+        "analyze-incremental": (
+            ["analyze-incremental", "events", path, stats],
+            lambda out: out["doc_id"]["n_rows"],
+        ),
+        "hist": (["hist", "events", "value", path, stats], lambda out: out["n_rows"]),
+        "hist --group-col": (
+            ["hist", "events", "value", path, stats, "--group-col", "source"],
+            lambda out: out["n_rows"],
+        ),
+        "hotkeys": (
+            ["hotkeys", "events", "source", path, stats],
+            lambda out: out["n_rows"],
+        ),
+        "cmsfreq": (
+            ["cmsfreq", "events", "source", path, stats, "--keys", "x,y"],
+            lambda out: out["estimates"],
+        ),
+        "sample": (
+            ["sample", "events", "doc_id", "value", path, stats],
+            lambda out: out["n_sample"],
+        ),
+        "checksum": (
+            ["checksum", path, "--manifest-dir", manifest, "--round", "2"],
+            lambda out: out["n_rows"],
+        ),
+    }
+    for verb, (argv, counted) in verbs.items():
+        seen = []
+        for _ in range(2):
+            assert main(list(argv)) == 0
+            out = capsys.readouterr().out
+            seen.append(counted(json.loads(out[out.index("{"):])))
+        assert seen[0] == seen[1], (verb, seen)

@@ -117,9 +117,13 @@ def test_cli_checksum_and_incremental_manifest(spark, sf_dir, tmp_path, capsys):
     from sentiment_analysis_vector_search_spark.__main__ import main
     from sentiment_analysis_vector_search_spark.operators.dq import (
         dq_table_checksum,
-        incremental_checksum,
         table_checksum,
     )
+    from sentiment_analysis_vector_search_spark.stats import fold_sketch
+
+    def incremental_checksum(man, name, df, batch_id):
+        art = fold_sketch("checksum", man, name, df, batch_id=batch_id)
+        return {k: art[k] for k in ("table_name", "n_rows", "checksum")}
 
     base = dq_table_checksum(spark, sf_dir).collect()[0]
     rc = main(["checksum", sf_dir, "--table", "documents"])
@@ -174,10 +178,12 @@ def test_checksum_empty_table_and_bounded_record(spark, sf_dir, tmp_path):
     import json
     import os
 
-    from sentiment_analysis_vector_search_spark.operators.dq import (
-        incremental_checksum,
-        table_checksum,
-    )
+    from sentiment_analysis_vector_search_spark.operators.dq import table_checksum
+    from sentiment_analysis_vector_search_spark.stats import fold_sketch
+
+    def incremental_checksum(man, name, df, batch_id):
+        art = fold_sketch("checksum", man, name, df, batch_id=batch_id)
+        return {k: art[k] for k in ("table_name", "n_rows", "checksum")}
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     empty = docs.where("doc_id < 0")

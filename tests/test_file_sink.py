@@ -208,11 +208,11 @@ def test_stream_stats_maintenance_matches_batch_analyze(spark, sf_dir, tmp_path)
 
     from sentiment_analysis_vector_search_spark.stats import (
         kmv_ndv,
-        load_table_stats,
+        load_sketch,
         partition_stats,
     )
     from sentiment_analysis_vector_search_spark.streaming.file_sink import (
-        stream_stats_maintenance,
+        stream_sketch_maintenance,
     )
 
     # seed a source dir with the documents table split into two files so
@@ -229,9 +229,9 @@ def test_stream_stats_maintenance_matches_batch_analyze(spark, sf_dir, tmp_path)
     )
     stats_dir = str(tmp_path / "stats")
     ckpt = str(tmp_path / "ckpt")
-    stream_stats_maintenance(spark, src_dir, stats_dir, ckpt, kmv_k=256)
+    stream_sketch_maintenance(spark, "analyze", src_dir, stats_dir, ckpt, k=256)
 
-    got = load_table_stats(stats_dir, "documents")
+    got = load_sketch("analyze", stats_dir, "documents")
     want = partition_stats(docs, k=256)
     assert got.keys() == want.keys()
     for c in want:
@@ -243,8 +243,8 @@ def test_stream_stats_maintenance_matches_batch_analyze(spark, sf_dir, tmp_path)
     assert abs(nd_got - nd_want) / max(nd_want, 1) < 0.15
 
     # re-drain with the same checkpoint: no double-count
-    stream_stats_maintenance(spark, src_dir, stats_dir, ckpt, kmv_k=256)
-    again = load_table_stats(stats_dir, "documents")
+    stream_sketch_maintenance(spark, "analyze", src_dir, stats_dir, ckpt, k=256)
+    again = load_sketch("analyze", stats_dir, "documents")
     assert again["doc_id"]["n_rows"] == want["doc_id"]["n_rows"]
 
     # the applied-batch record lives INSIDE the atomically-replaced stats
@@ -257,17 +257,17 @@ def test_stream_stats_maintenance_matches_batch_analyze(spark, sf_dir, tmp_path)
     assert recorded[1] >= 1
     # crash-replay of an ALREADY-RECORDED batch id: the fold is a no-op
     # even without the stream's own guard (the record IS the guard)
-    from sentiment_analysis_vector_search_spark.stats import incremental_analyze
+    from sentiment_analysis_vector_search_spark.stats import fold_sketch
 
-    incremental_analyze(
-        spark, stats_dir, "documents", docs.limit(50), k=256, batch_id=recorded[0]
+    fold_sketch(
+        "analyze", stats_dir, "documents", docs.limit(50), k=256, batch_id=recorded[0]
     )
-    replayed = load_table_stats(stats_dir, "documents")
+    replayed = load_sketch("analyze", stats_dir, "documents")
     assert replayed["doc_id"]["n_rows"] == want["doc_id"]["n_rows"]
     shutil.rmtree(stats_dir)  # and a fresh stats dir rebuilds from zero
     ckpt2 = str(tmp_path / "ckpt2")
-    stream_stats_maintenance(spark, src_dir, stats_dir, ckpt2, kmv_k=256)
-    rebuilt = load_table_stats(stats_dir, "documents")
+    stream_sketch_maintenance(spark, "analyze", src_dir, stats_dir, ckpt2, k=256)
+    rebuilt = load_sketch("analyze", stats_dir, "documents")
     assert rebuilt["doc_id"]["n_rows"] == want["doc_id"]["n_rows"]
 
 
@@ -339,12 +339,16 @@ def test_stream_hot_keys_maintenance(spark, sf_dir, tmp_path):
     import os
 
     from sentiment_analysis_vector_search_spark.stats import (
-        incremental_heavy_hitters,
-        load_heavy_hitters,
+        fold_sketch,
+        load_sketch,
     )
     from sentiment_analysis_vector_search_spark.streaming.file_sink import (
-        stream_hot_keys_maintenance,
+        stream_sketch_maintenance,
     )
+
+    def load_hh(stats_dir, name, col):
+        art = load_sketch("hotkeys", stats_dir, name, col=col)
+        return art["summary"], art["n_rows"]
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     n_docs = docs.count()
@@ -366,9 +370,11 @@ def test_stream_hot_keys_maintenance(spark, sf_dir, tmp_path):
     )
     stats_dir = str(tmp_path / "stats")
     ckpt = str(tmp_path / "ckpt")
-    stream_hot_keys_maintenance(spark, src_dir, stats_dir, ckpt, k=16)
+    stream_sketch_maintenance(
+        spark, "hotkeys", src_dir, stats_dir, ckpt, col="source", k=16
+    )
 
-    summary, n_rows = load_heavy_hitters(stats_dir, "documents", "source")
+    summary, n_rows = load_hh(stats_dir, "documents", "source")
     assert n_rows == n_docs
     true_hot = planted.where(F.col("source") == "hot-src").count()
     # MG guarantee over the union of folded batches: count > N/k survives,
@@ -377,8 +383,10 @@ def test_stream_hot_keys_maintenance(spark, sf_dir, tmp_path):
     assert true_hot - n_docs / 16 <= summary["hot-src"] <= true_hot
 
     # re-drain: checkpoint makes it a no-op
-    stream_hot_keys_maintenance(spark, src_dir, stats_dir, ckpt, k=16)
-    again, n2 = load_heavy_hitters(stats_dir, "documents", "source")
+    stream_sketch_maintenance(
+        spark, "hotkeys", src_dir, stats_dir, ckpt, col="source", k=16
+    )
+    again, n2 = load_hh(stats_dir, "documents", "source")
     assert n2 == n_docs and again == summary
 
     # crash-replay of a RECORDED batch id: the fold is a no-op even
@@ -388,10 +396,11 @@ def test_stream_hot_keys_maintenance(spark, sf_dir, tmp_path):
         meta = json.load(f)["__meta__"]
     assert set(meta) == {"max_applied"} and meta["max_applied"] >= 1
     recorded = [0, meta["max_applied"]]
-    incremental_heavy_hitters(
-        stats_dir, "documents", "source", planted, k=16, batch_id=recorded[0]
+    fold_sketch(
+        "hotkeys", stats_dir, "documents", planted, col="source", k=16,
+        batch_id=recorded[0],
     )
-    after, n3 = load_heavy_hitters(stats_dir, "documents", "source")
+    after, n3 = load_hh(stats_dir, "documents", "source")
     assert n3 == n_docs and after == summary
 
 
@@ -482,11 +491,11 @@ def test_stream_sample_maintenance_equals_one_shot(spark, sf_dir, tmp_path):
 
     from sentiment_analysis_vector_search_spark.stats import (
         column_bottom_k_sample,
-        incremental_sample,
+        fold_sketch,
         sample_quantile,
     )
     from sentiment_analysis_vector_search_spark.streaming.file_sink import (
-        stream_sample_maintenance,
+        stream_sketch_maintenance,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -500,7 +509,10 @@ def test_stream_sample_maintenance_equals_one_shot(spark, sf_dir, tmp_path):
     )
     stats_dir = str(tmp_path / "stats")
     ckpt = str(tmp_path / "ckpt")
-    stream_sample_maintenance(spark, src_dir, stats_dir, ckpt, k=64)
+    stream_sketch_maintenance(
+        spark, "sample", src_dir, stats_dir, ckpt,
+        key_col="doc_id", val_col="n_chars", k=64,
+    )
 
     path = os.path.join(stats_dir, "documents__smp_n_chars.json")
     with open(path) as f:
@@ -516,16 +528,19 @@ def test_stream_sample_maintenance_equals_one_shot(spark, sf_dir, tmp_path):
     assert abs(p50 - exact) <= 0.35 * spread
 
     # re-drain: no-op; recorded-batch replay: no-op
-    stream_sample_maintenance(spark, src_dir, stats_dir, ckpt, k=64)
+    stream_sketch_maintenance(
+        spark, "sample", src_dir, stats_dir, ckpt,
+        key_col="doc_id", val_col="n_chars", k=64,
+    )
     with open(path) as f:
         again = json.load(f)
     assert again["rows"] == want
     # bounded record (r12 fleet-wide conversion): one integer
     assert set(again["__meta__"]) == {"max_applied"}
     assert again["__meta__"]["max_applied"] >= 1
-    incremental_sample(
-        stats_dir, "documents", "doc_id", "n_chars", docs, k=64,
-        batch_id=0,
+    fold_sketch(
+        "sample", stats_dir, "documents", docs, key_col="doc_id",
+        val_col="n_chars", k=64, batch_id=0,
     )
     with open(path) as f:
         assert json.load(f)["rows"] == want
@@ -543,7 +558,7 @@ def test_stream_checksum_maintenance_equals_one_shot(spark, sf_dir, tmp_path):
         dq_table_checksum,
     )
     from sentiment_analysis_vector_search_spark.streaming.file_sink import (
-        stream_checksum_maintenance,
+        stream_sketch_maintenance,
     )
 
     src_dir = str(tmp_path / "src")
@@ -557,7 +572,7 @@ def test_stream_checksum_maintenance_equals_one_shot(spark, sf_dir, tmp_path):
     )
     man_dir = str(tmp_path / "man")
     ckpt = str(tmp_path / "ckpt")
-    stream_checksum_maintenance(spark, src_dir, man_dir, ckpt)
+    stream_sketch_maintenance(spark, "checksum", src_dir, man_dir, ckpt)
 
     with open(os.path.join(man_dir, "documents__checksum.json")) as f:
         man = json.load(f)
@@ -568,13 +583,15 @@ def test_stream_checksum_maintenance_equals_one_shot(spark, sf_dir, tmp_path):
     assert man["__meta__"] == {"max_applied": 1}
 
     # re-drain: no new files -> manifest byte-identical
-    stream_checksum_maintenance(spark, src_dir, man_dir, ckpt)
+    stream_sketch_maintenance(spark, "checksum", src_dir, man_dir, ckpt)
     with open(os.path.join(man_dir, "documents__checksum.json")) as f:
         assert json.load(f) == man
 
     # fresh checkpoint: same files re-deliver as the same batch ids —
     # the record inside the manifest must skip the double-fold
-    stream_checksum_maintenance(spark, src_dir, man_dir, str(tmp_path / "ck2"))
+    stream_sketch_maintenance(
+        spark, "checksum", src_dir, man_dir, str(tmp_path / "ck2")
+    )
     with open(os.path.join(man_dir, "documents__checksum.json")) as f:
         again = json.load(f)
     assert again["n_rows"] == want["n_rows"]
@@ -596,11 +613,16 @@ def test_stream_histogram_maintenance_equals_one_shot(spark, sf_dir, tmp_path):
     from sentiment_analysis_vector_search_spark.stats import (
         column_fixed_histogram,
         hist_quantile,
-        load_histogram,
+        load_sketch,
     )
     from sentiment_analysis_vector_search_spark.streaming.file_sink import (
-        stream_histogram_maintenance,
+        stream_sketch_maintenance,
     )
+
+    def drain_hist(spark, src_dir, stats_dir, ckpt):
+        stream_sketch_maintenance(
+            spark, "hist", src_dir, stats_dir, ckpt, table_name="events", col="value"
+        )
 
     ev = read_events_raw(spark, sf_dir)
     src_dir = str(tmp_path / "src")
@@ -613,9 +635,9 @@ def test_stream_histogram_maintenance_equals_one_shot(spark, sf_dir, tmp_path):
     )
     stats_dir = str(tmp_path / "stats")
     ckpt = str(tmp_path / "ckpt")
-    stream_histogram_maintenance(spark, src_dir, stats_dir, ckpt)
+    drain_hist(spark, src_dir, stats_dir, ckpt)
 
-    art = load_histogram(stats_dir, "events", "value")
+    art = load_sketch("hist", stats_dir, "events", col="value")
     want = column_fixed_histogram(ev, "value")
     assert art["counts"] == want  # streamed == one-shot
     assert art["n_rows"] == sum(want.values())
@@ -625,8 +647,8 @@ def test_stream_histogram_maintenance_equals_one_shot(spark, sf_dir, tmp_path):
     path = os.path.join(stats_dir, "events__hist_value.json")
     with open(path) as f:
         before = f.read()
-    stream_histogram_maintenance(spark, src_dir, stats_dir, ckpt)
-    stream_histogram_maintenance(spark, src_dir, stats_dir, str(tmp_path / "c2"))
+    drain_hist(spark, src_dir, stats_dir, ckpt)
+    drain_hist(spark, src_dir, stats_dir, str(tmp_path / "c2"))
     with open(path) as f:
         assert f.read() == before
 
@@ -641,12 +663,10 @@ def test_stream_histogram_maintenance_equals_one_shot(spark, sf_dir, tmp_path):
     # knob mismatch fails fast (provenance discipline)
     import pytest
 
-    from sentiment_analysis_vector_search_spark.stats import (
-        incremental_histogram,
-    )
+    from sentiment_analysis_vector_search_spark.stats import fold_sketch
 
     with pytest.raises(ValueError, match="knob mismatch"):
-        incremental_histogram(stats_dir, "events", "value", ev, width=5.0)
+        fold_sketch("hist", stats_dir, "events", ev, col="value", width=5.0)
 
 
 def test_stream_grouped_histogram_maintenance_and_data_card_serving(
@@ -664,16 +684,16 @@ def test_stream_grouped_histogram_maintenance_and_data_card_serving(
     )
     from sentiment_analysis_vector_search_spark.stats import (
         column_fixed_histogram_grouped,
+        fold_sketch,
         hist_knobs_for,
-        incremental_histogram_grouped,
-        load_histogram_grouped,
+        load_sketch,
         table_stats,
     )
 
     # maintenance leg over the events stream source (the shared harness)
     from sentiment_analysis_vector_search_spark.catalog import read_events_raw
     from sentiment_analysis_vector_search_spark.streaming.file_sink import (
-        stream_histogram_maintenance,
+        stream_sketch_maintenance,
     )
 
     ev = read_events_raw(spark, sf_dir)
@@ -686,11 +706,11 @@ def test_stream_grouped_histogram_maintenance_and_data_card_serving(
         f"{src_dir}/events_b.parquet", index=False
     )
     stats_dir = str(tmp_path / "stats")
-    stream_histogram_maintenance(
-        spark, src_dir, stats_dir, str(tmp_path / "ckpt"),
-        group_col="event_type",
+    stream_sketch_maintenance(
+        spark, "ghist", src_dir, stats_dir, str(tmp_path / "ckpt"),
+        table_name="events", group_col="event_type", col="value",
     )
-    art = load_histogram_grouped(stats_dir, "events", "event_type", "value")
+    art = load_sketch("ghist", stats_dir, "events", group_col="event_type", col="value")
     want = column_fixed_histogram_grouped(ev, "event_type", "value")
     assert art["counts"] == want
     assert art["__meta__"] == {"max_applied": 1}
@@ -698,9 +718,9 @@ def test_stream_grouped_histogram_maintenance_and_data_card_serving(
     path = os.path.join(stats_dir, "events__ghist_event_type_value.json")
     with open(path) as f:
         before = f.read()
-    stream_histogram_maintenance(
-        spark, src_dir, stats_dir, str(tmp_path / "c2"),
-        group_col="event_type",
+    stream_sketch_maintenance(
+        spark, "ghist", src_dir, stats_dir, str(tmp_path / "c2"),
+        table_name="events", group_col="event_type", col="value",
     )
     with open(path) as f:
         assert f.read() == before
@@ -710,8 +730,8 @@ def test_stream_grouped_histogram_maintenance_and_data_card_serving(
     docs = table(spark, sf_dir, "documents")
     knobs = hist_knobs_for(table_stats(spark, sf_dir, "documents"), "n_chars")
     dstats = str(tmp_path / "dstats")
-    incremental_histogram_grouped(
-        dstats, "documents", "source", "n_chars", docs,
+    fold_sketch(
+        "ghist", dstats, "documents", docs, group_col="source", col="n_chars",
         width=knobs["width"], bins=knobs["bins"], offset=knobs["offset"],
         batch_id=0,
     )

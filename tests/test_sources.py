@@ -363,14 +363,14 @@ def test_cli_joinest_verb(spark, sf_dir, tmp_path, capsys):
     import json
 
     from sentiment_analysis_vector_search_spark.__main__ import main
-    from sentiment_analysis_vector_search_spark.stats import incremental_analyze
+    from sentiment_analysis_vector_search_spark.stats import fold_sketch
 
     sd = str(tmp_path / "stats")
-    incremental_analyze(
-        spark, sd, "orders", spark.read.parquet(f"{sf_dir}/orders.parquet")
+    fold_sketch(
+        "analyze", sd, "orders", spark.read.parquet(f"{sf_dir}/orders.parquet")
     )
-    incremental_analyze(
-        spark, sd, "lineitem", spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    fold_sketch(
+        "analyze", sd, "lineitem", spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     )
     rc = main(
         ["joinest", "orders", "lineitem", "o_orderkey", sd,

@@ -78,15 +78,15 @@ def test_q3_still_broadcasts_under_real_stats(spark, sf_dir):
 
 def test_persisted_stats_roundtrip(spark, sf_dir, tmp_path):
     from sentiment_analysis_vector_search_spark.stats import (
-        load_table_stats,
+        load_sketch,
         table_stats,
         write_table_stats,
     )
 
-    assert load_table_stats(str(tmp_path), "nation") is None
+    assert load_sketch("analyze", str(tmp_path), "nation") is None
     path = write_table_stats(spark, sf_dir, "nation", str(tmp_path))
     assert path.endswith("nation.json")
-    loaded = load_table_stats(str(tmp_path), "nation")
+    loaded = load_sketch("analyze", str(tmp_path), "nation")
     assert loaded == table_stats(spark, sf_dir, "nation")
 
 
@@ -150,9 +150,9 @@ def test_cli_stats_verb(tmp_path, capsys, sf_dir):
     assert rc == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["written"].endswith("region.json")
-    from sentiment_analysis_vector_search_spark.stats import load_table_stats
+    from sentiment_analysis_vector_search_spark.stats import load_sketch
 
-    loaded = load_table_stats(str(tmp_path), "region")
+    loaded = load_sketch("analyze", str(tmp_path), "region")
     assert loaded is not None and loaded["r_name"]["n_rows"] == 5
 
 
@@ -384,13 +384,13 @@ def test_kmv_sketch_estimator_accuracy(spark):
 
 
 def test_incremental_analyze_matches_full_scan(spark, tmp_path):
-    """Folding three chunks through incremental_analyze must equal a
+    """Folding three chunks into the "analyze" sketch must equal a
     full-table partition_stats: counts/min/max exactly, ndv within the
     sketch error — and merging overlapping chunks must NOT double-count
     distincts (the property a scalar ndv cannot provide)."""
     from sentiment_analysis_vector_search_spark.stats import (
-        incremental_analyze,
-        load_table_stats,
+        fold_sketch,
+        load_sketch,
         partition_stats,
     )
 
@@ -403,9 +403,9 @@ def test_incremental_analyze_matches_full_scan(spark, tmp_path):
     # chunk 3 OVERLAPS chunk 0's values on `dup` by construction (mod)
     sd = str(tmp_path / "stats")
     for ch in chunks:
-        merged = incremental_analyze(spark, sd, "t", ch)
+        merged = fold_sketch("analyze", sd, "t", ch)
     direct = partition_stats(full)
-    persisted = load_table_stats(sd, "t")
+    persisted = load_sketch("analyze", sd, "t")
     assert persisted.keys() == direct.keys()
     for c in direct:
         assert persisted[c]["n_rows"] == direct[c]["n_rows"] == 9_000
@@ -676,8 +676,8 @@ def test_estimated_range_rows_sample_beats_uniform_on_skew(spark, tmp_path):
 
     from sentiment_analysis_vector_search_spark.stats import (
         estimated_range_rows,
-        incremental_sample,
-        load_sample,
+        fold_sketch,
+        load_sketch,
         partition_stats,
     )
 
@@ -692,8 +692,8 @@ def test_estimated_range_rows_sample_beats_uniform_on_skew(spark, tmp_path):
     true_hi = df.where((F.col("x") >= 900.0) & (F.col("x") <= 1000.0)).count()
     uniform = estimated_range_rows(st, "x", 900.0, 1000.0)
     # persisted maintenance path: fold -> load -> estimate
-    incremental_sample(str(tmp_path), "t", "k", "x", df, k=256)
-    sample = load_sample(str(tmp_path), "t", "x")
+    fold_sketch("sample", str(tmp_path), "t", df, key_col="k", val_col="x", k=256)
+    sample = load_sketch("sample", str(tmp_path), "t", val_col="x")["rows"]
     assert sample and sample == sorted(sample)
     est = estimated_range_rows(st, "x", 900.0, 1000.0, sample=sample)
     # uniform sees ~10% of rows in the top decile; truth is ~1%
@@ -723,9 +723,13 @@ def test_incremental_cms_merge_equals_one_shot_and_replay_noop(spark, sf_dir, tm
     from sentiment_analysis_vector_search_spark.stats import (
         cms_estimate,
         column_cms,
-        incremental_cms,
-        load_cms,
+        fold_sketch,
+        load_sketch,
     )
+
+    def load_cms(sd, name, col):
+        art = load_sketch("cms", sd, name, col=col)
+        return art["counters"], art["n_rows"]
 
     full = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "source"
@@ -737,13 +741,13 @@ def test_incremental_cms_merge_equals_one_shot_and_replay_noop(spark, sf_dir, tm
 
     a = full.where(F.col("doc_id") % 2 == 0).select("source")
     b = full.where(F.col("doc_id") % 2 == 1).select("source")
-    incremental_cms(sd, "docs", "source", a, batch_id=0)
-    incremental_cms(sd, "docs", "source", b, batch_id=1)
+    fold_sketch("cms", sd, "docs", a, col="source", batch_id=0)
+    fold_sketch("cms", sd, "docs", b, col="source", batch_id=1)
     folded, n_rows = load_cms(sd, "docs", "source")
     assert folded == one_shot
     assert n_rows == docs.count()
     # replay: additive fold guarded by the applied-batch record
-    incremental_cms(sd, "docs", "source", a, batch_id=0)
+    fold_sketch("cms", sd, "docs", a, col="source", batch_id=0)
     again, _ = load_cms(sd, "docs", "source")
     assert again == one_shot
     # estimates upper-bound truth for every source
@@ -752,23 +756,27 @@ def test_incremental_cms_merge_equals_one_shot_and_replay_noop(spark, sf_dir, tm
         assert cms_estimate(folded, src) >= int(n)
     # knob provenance: a mismatched width refuses instead of corrupting
     with pytest.raises(ValueError):
-        incremental_cms(sd, "docs", "source", a, w=1024, batch_id=2)
+        fold_sketch("cms", sd, "docs", a, col="source", w=1024, batch_id=2)
 
 
 def test_stream_cms_maintenance_drains_and_folds(spark, sf_dir, tmp_path):
-    from sentiment_analysis_vector_search_spark.stats import column_cms, load_cms
+    from sentiment_analysis_vector_search_spark.stats import column_cms, load_sketch
     from sentiment_analysis_vector_search_spark.streaming.file_sink import (
-        stream_cms_maintenance,
+        stream_sketch_maintenance,
     )
 
+    def load_cms(sd, name, col):
+        art = load_sketch("cms", sd, name, col=col)
+        return art["counters"], art["n_rows"]
+
     sd, ck = str(tmp_path / "stats"), str(tmp_path / "ck")
-    stream_cms_maintenance(spark, sf_dir, sd, ck)
+    stream_sketch_maintenance(spark, "cms", sf_dir, sd, ck, col="source")
     counters, n_rows = load_cms(sd, "documents", "source")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("source")
     assert counters == column_cms(docs, "source")
     assert n_rows == docs.count()
     # re-drain: checkpointed source re-delivers nothing, sketch unchanged
-    stream_cms_maintenance(spark, sf_dir, sd, ck)
+    stream_sketch_maintenance(spark, "cms", sf_dir, sd, ck, col="source")
     assert load_cms(sd, "documents", "source")[0] == counters
 
 
@@ -784,8 +792,8 @@ def test_fixed_hist_feeds_range_selectivity_and_cli(spark, sf_dir, tmp_path, cap
     from sentiment_analysis_vector_search_spark.stats import (
         estimated_range_rows,
         fixed_hist_rows,
-        incremental_histogram,
-        load_histogram,
+        fold_sketch,
+        load_sketch,
         table_stats,
     )
 
@@ -801,8 +809,8 @@ def test_fixed_hist_feeds_range_selectivity_and_cli(spark, sf_dir, tmp_path, cap
     df = spark.read.parquet(os.path.join(d, "events.parquet"))
 
     stats_dir = str(tmp_path / "stats")
-    incremental_histogram(stats_dir, "events", "value", df, batch_id=0)
-    art = load_histogram(stats_dir, "events", "value")
+    fold_sketch("hist", stats_dir, "events", df, col="value", batch_id=0)
+    art = load_sketch("hist", stats_dir, "events", col="value")
     rows = fixed_hist_rows(art)
     # uniform stats would smear mass over [0, 510]; the artifact pins it
     stats = {"value": {"n_rows": 1000, "n_nulls": 0, "approx_ndv": 20.0,
@@ -813,8 +821,8 @@ def test_fixed_hist_feeds_range_selectivity_and_cli(spark, sf_dir, tmp_path, cap
     assert abs(uniform - 900.0) > 800.0  # uniform is wildly off here
 
     # replayed fold: no-op (bounded record guard)
-    incremental_histogram(stats_dir, "events", "value", df, batch_id=0)
-    assert load_histogram(stats_dir, "events", "value")["n_rows"] == 1000
+    fold_sketch("hist", stats_dir, "events", df, col="value", batch_id=0)
+    assert load_sketch("hist", stats_dir, "events", col="value")["n_rows"] == 1000
 
     # CLI verb: quantiles from the artifact; p50 in the dense low band
     rc = main(["hist", "events", "value", os.path.join(d, "events.parquet"),
@@ -891,9 +899,9 @@ def test_grouped_histogram_incremental_and_served_quantiles(spark, sf_dir, tmp_p
     from sentiment_analysis_vector_search_spark.catalog import table
     from sentiment_analysis_vector_search_spark.stats import (
         column_fixed_histogram_grouped,
+        fold_sketch,
         hist_knobs_for,
-        incremental_histogram_grouped,
-        load_histogram_grouped,
+        load_sketch,
         served_group_quantiles,
         table_stats,
     )
@@ -905,32 +913,32 @@ def test_grouped_histogram_incremental_and_served_quantiles(spark, sf_dir, tmp_p
     stats_dir = str(tmp_path / "stats")
     a = docs.where(F.col("doc_id") % 2 == 0)
     bdf = docs.where(F.col("doc_id") % 2 == 1)
-    incremental_histogram_grouped(
-        stats_dir, "documents", "source", "n_chars", a,
+    fold_sketch(
+        "ghist", stats_dir, "documents", a, group_col="source", col="n_chars",
         width=w, bins=b, offset=o, batch_id=0,
     )
-    incremental_histogram_grouped(
-        stats_dir, "documents", "source", "n_chars", bdf,
+    fold_sketch(
+        "ghist", stats_dir, "documents", bdf, group_col="source", col="n_chars",
         width=w, bins=b, offset=o, batch_id=1,
     )
-    art = load_histogram_grouped(stats_dir, "documents", "source", "n_chars")
+    art = load_sketch("ghist", stats_dir, "documents", group_col="source", col="n_chars")
     want = column_fixed_histogram_grouped(docs, "source", "n_chars", w, b, o)
     assert art["counts"] == want  # folded == one-shot
     assert art["offset"] == o and art["width"] == w
 
     # replayed batch id: byte-identical artifact
-    incremental_histogram_grouped(
-        stats_dir, "documents", "source", "n_chars", bdf,
+    fold_sketch(
+        "ghist", stats_dir, "documents", bdf, group_col="source", col="n_chars",
         width=w, bins=b, offset=o, batch_id=1,
     )
     assert (
-        load_histogram_grouped(stats_dir, "documents", "source", "n_chars")["counts"]
+        load_sketch("ghist", stats_dir, "documents", group_col="source", col="n_chars")["counts"]
         == want
     )
 
     with pytest.raises(ValueError, match="knob mismatch"):
-        incremental_histogram_grouped(
-            stats_dir, "documents", "source", "n_chars", bdf,
+        fold_sketch(
+            "ghist", stats_dir, "documents", bdf, group_col="source", col="n_chars",
             width=w * 2, bins=b, offset=o,
         )
 
@@ -960,13 +968,13 @@ def test_served_hist_quantiles_scale_path(spark, sf_dir, tmp_path):
 
     from sentiment_analysis_vector_search_spark.catalog import table
     from sentiment_analysis_vector_search_spark.stats import (
-        incremental_histogram,
+        fold_sketch,
         served_hist_quantiles,
     )
 
     stats_dir = str(tmp_path / "stats")
     ev = table(spark, sf_dir, "events")
-    incremental_histogram(stats_dir, "events", "value", ev, batch_id=0)
+    fold_sketch("hist", stats_dir, "events", ev, col="value", batch_id=0)
     served = served_hist_quantiles(stats_dir, "events", "value", (0.5, 0.9, 0.99))
 
     exact = {
@@ -1110,19 +1118,18 @@ def test_histogram_support_tripwire(spark, sf_dir, tmp_path, capsys):
     from sentiment_analysis_vector_search_spark.catalog import table
     from sentiment_analysis_vector_search_spark.stats import (
         hist_knobs_for,
+        fold_sketch,
         histogram_support_check,
-        incremental_analyze,
-        incremental_histogram,
-        load_table_stats,
+        load_sketch,
     )
 
     stats_dir = str(tmp_path / "stats")
     ev = table(spark, sf_dir, "events")
-    incremental_analyze(spark, stats_dir, "events", ev, batch_id=0)
-    stats = load_table_stats(stats_dir, "events")
+    fold_sketch("analyze", stats_dir, "events", ev, batch_id=0)
+    stats = load_sketch("analyze", stats_dir, "events")
     knobs = hist_knobs_for(stats, "value")
-    incremental_histogram(
-        stats_dir, "events", "value", ev,
+    fold_sketch(
+        "hist", stats_dir, "events", ev, col="value",
         width=knobs["width"], bins=knobs["bins"], offset=knobs["offset"],
         batch_id=0,
     )
@@ -1151,3 +1158,74 @@ def test_histogram_support_tripwire(spark, sf_dir, tmp_path, capsys):
     captured = capsys.readouterr().out
     out = json.loads(captured[captured.index("{"):])
     assert out["support_check"]["rebuild_recommended"] is False
+
+
+def test_sample_and_hotkeys_folds_refuse_a_different_k(spark, tmp_path):
+    """The bottom-k sample and the Misra-Gries summary store their k: a
+    fold with another k is refused, not merged into an artifact whose
+    rows or counters no longer hold the stored guarantee."""
+    import os
+
+    import pandas as pd
+    import pytest
+
+    from sentiment_analysis_vector_search_spark.__main__ import main
+    from sentiment_analysis_vector_search_spark.commit import read_json
+
+    paths = []
+    for i in range(2):
+        path = str(tmp_path / f"shard{i}" / "docs.parquet")
+        os.makedirs(os.path.dirname(path))
+        pd.DataFrame(
+            {
+                "doc_id": range(i * 100, i * 100 + 100),
+                "source": ["a", "b"] * 50,
+                "value": [float(v) for v in range(100)],
+            }
+        ).to_parquet(path)
+        paths.append(path)
+    stats = str(tmp_path / "stats")
+    for argv, art in (
+        (["sample", "docs", "doc_id", "value"], "docs__smp_value.json"),
+        (["hotkeys", "docs", "source"], "docs__hh_source.json"),
+    ):
+        assert main([*argv, paths[0], stats, "--k", "8"]) == 0
+        before = read_json(os.path.join(stats, art))
+        with pytest.raises(ValueError, match="knob mismatch"):
+            main([*argv, paths[1], stats, "--k", "16"])
+        assert read_json(os.path.join(stats, art)) == before
+
+
+def test_every_sketch_folds_an_empty_batch_as_identity(spark, sf_dir, tmp_path):
+    """The maintenance loops fold empty batches like any other, so each
+    kind's merge must have the empty batch as its identity: an empty
+    fold before or after a batch leaves the artifact as that batch alone
+    left it, and only the replay record moves."""
+    import os
+
+    from sentiment_analysis_vector_search_spark.commit import read_json
+    from sentiment_analysis_vector_search_spark.stats import SKETCHES, fold_sketch
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(200)
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet").limit(200)
+    cases = {
+        "analyze": (docs, {}),
+        "hotkeys": (docs, {"col": "source"}),
+        "sample": (docs, {"key_col": "doc_id", "val_col": "n_chars"}),
+        "cms": (docs, {"col": "source"}),
+        "hist": (ev, {"col": "value"}),
+        "ghist": (ev, {"group_col": "event_type", "col": "value"}),
+        "checksum": (docs, {}),
+    }
+    assert cases.keys() == SKETCHES.keys()
+    for kind, (df, params) in cases.items():
+        arts = []
+        for order in ((df, df.where("1 = 0")), (df.where("1 = 0"), df)):
+            sd = str(tmp_path / kind / str(len(arts)))
+            for bid, batch in enumerate(order):
+                fold_sketch(kind, sd, "t", batch, batch_id=bid, **params)
+            (name,) = os.listdir(sd)
+            art = read_json(os.path.join(sd, name))
+            assert art.pop("__meta__") == {"max_applied": 1}, kind
+            arts.append(art)
+        assert arts[0] == arts[1], kind
