@@ -1,30 +1,38 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS].
 
+Run: python bench.py [NAME ...]
+
 Prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: median_sec}, "spread": {...}, "sf": ...} — and writes the
-uncompressed numbers to bench_detail.json next to this script.
+uncompressed numbers to bench_detail.json next to this script. Given query
+names, it times only those, skips the scale smoke and writes
+bench_detail_only.json instead.
 
-CAPTURE BUDGET: the round driver records only the LAST 2000 CHARS of
-stdout (BENCH_r04 was an unparseable mid-line cut because the full
-71-query line is ~4 KB, and with 83 queries even 1-decimal medians
-overflow). The final line keeps the scale-smoke summary, then the
-SLOWEST K queries individually (largest K that fits — what a perf
-review audits), folding the fast tail into {"fast_omitted": {n,
-total}}, then spread highlights, then the 3rd decimal.
-bench_detail.json always holds the complete 3-decimal medians, the
-complete spread, and the per-rep raw timings; per-query progress goes
-to stderr, which the driver does not capture.
+Capture budget: the caller may keep only the LAST 2000 chars of stdout,
+and the full line with every median is several KB. The final line keeps
+the scale-smoke summary, then the SLOWEST K queries individually (largest
+K that fits — what a perf audit reads), folding the fast tail into
+{"fast_omitted": {n, total}}, then spread highlights, then the 3rd
+decimal. The detail file always holds the complete 3-decimal medians,
+the complete spread, the per-rep raw timings and the layer record;
+per-query progress goes to stderr.
 
-Each query is forced end-to-end with the `noop` sink (full execution, no
-driver-side collect) and timed SPARK_GRAFT_BENCH_REPS times (default 3);
-the reported number is the per-query MEDIAN after one untimed warmup
-execution — single-shot timings in a shared JVM swung 2-4x round-over-round
-with zero code change (r3: q10_returned_items 3.1x), and a query's first
-execution pays codegen compilation + shuffle-file setup that a sustained
-workload never sees. The spread (max-min) flags queries whose median is
-still noisy. The headline set
-covers every suite: relational, sentiment pipeline, text analysis, dedup,
-similarity, streaming.
+One rep protocol for every query: one untimed warmup, then
+SPARK_GRAFT_BENCH_REPS (default 3) timed reps, each a fresh
+``fn(spark, sf_dir)`` construct plus a full execution into the ``noop``
+sink; the reported number is the median rep. The warmup pays codegen and
+shuffle-file setup that a sustained workload never sees. After the reps,
+``gc.collect()`` drops the plan references so the ContextCleaner can free
+the query's cut blocks before the next query runs.
+
+Layers (``layers`` in the detail file), read in the same loop: per rep
+``construct_s`` (the ``fn`` call) and ``exec_s`` (the noop write), the two
+halves of the timed interval; per query ``plan_s`` (``executedPlan()`` of
+one extra untimed construct) and ``jobs``, ``tasks``, ``shuffle_bytes``,
+``spill_bytes`` and ``gc_s`` (the tasks' JVM GC time), read from the
+status store under the last rep's job group (each rep runs under its own).
+The suite's JVM GC seconds (``jvm_gc_s``) come from the GC MXBeans, and
+``layer_collect_s`` is the time all of this reading took.
 """
 
 from __future__ import annotations
@@ -36,22 +44,14 @@ import statistics
 import sys
 import time
 
-_MAX_LINE = 1990  # driver keeps the last 2000 stdout chars; leave margin
+_MAX_LINE = 1990  # keep the line under a 2000-char tail capture
 _SPREAD_FLOOR = 0.1  # seconds; smaller spreads are warm-JVM noise
 
-# Zero-swing grading standard (r13, r12 verdict #6 — the declared
-# sub-second exemption): a >=2x max/min rep swing is GRADED (counts
-# against the zero-swing bar) only when the query's median is at least
-# _SWING_GRADE_FLOOR_MULT x the suite's per-query fixed-cost floor
-# (_floor below). Under that multiple the seconds at stake are the
-# scheduler+noop-sink cost itself: r12's five >=2x driver swings all
-# sat on medians <= 0.6 s over a 0.097 s floor — noise-floor jitter,
-# while every real regression this repo has caught moved a multi-second
-# median. Sub-threshold swings are still RECORDED (raw_runs +
-# exempt_swings in bench_detail.json) — exempt from grading, never from
-# measurement. The in-loop retry backstop gates on the static
-# _SPREAD_FLOOR stand-in (10 x 0.1 s = 1.0 s) because the true floor is
-# only known once every query has run; grading uses the true floor.
+# A >=2x max/min rep swing GRADES only when the query's median is at
+# least 10x the suite's per-query fixed-cost floor (_floor); below that
+# the seconds at stake are the scheduler+noop-sink cost itself (SCALING.md
+# rule 36). Exempt swings are still recorded in the detail file.
+_SWING_RATIO = 2.0
 _SWING_GRADE_FLOOR_MULT = 10.0
 
 
@@ -59,14 +59,14 @@ def _swing_lists(
     timings: dict[str, float], raw: dict[str, list[float]], floor: float
 ) -> tuple[dict[str, float], dict[str, float]]:
     """(graded, exempt) swing maps name -> max/min rep ratio, split by
-    the declared rule above."""
+    the rule above."""
     graded: dict[str, float] = {}
     exempt: dict[str, float] = {}
     for name, runs in raw.items():
         if len(runs) < 2 or min(runs) <= 0:
             continue
         ratio = max(runs) / min(runs)
-        if ratio >= _RETRY_RATIO:
+        if ratio >= _SWING_RATIO:
             dst = (
                 graded
                 if timings[name] >= _SWING_GRADE_FLOOR_MULT * floor
@@ -75,9 +75,9 @@ def _swing_lists(
             dst[name] = round(ratio, 2)
     return graded, exempt
 
-# Every suite is represented so regressions anywhere are visible
-# round-over-round; only representatives_kmeans (iterative fit, memoized
-# — a repeat-timing would measure the cache) sits out.
+# Every suite is represented so regressions anywhere are visible; only
+# representatives_kmeans (iterative fit, memoized — a repeat-timing would
+# measure the cache) sits out.
 HEADLINE = [
     # relational
     "q1_pricing_summary",
@@ -178,11 +178,11 @@ HEADLINE = [
     "contrastive_pairs",
     "split_train_holdout",
     "rag_chunk_retrieve",
-    # r7 additions: training-feed preparation
+    # training-feed preparation
     "train_shuffle_shards",
     "sample_epochs",
     "bpe_merge_candidates",
-    # r8 additions: chatbot data surface + MLflow params + analytics4
+    # chatbot data surface, run params, basket/path/curriculum analytics
     "chat_suggested_questions",
     "chat_context_summary",
     "run_params",
@@ -206,15 +206,13 @@ HEADLINE = [
     "stream_dedup_exact",
     "stream_interval_join",
     "stream_quality_gate",
-    # r6 additions: the three new operators + the rewritten trigram score
-    # (its r6 plan — single gram materialization + broadcast corpus — is a
-    # perf claim the bench should witness)
+    # repetition / activity / length / trigram text metrics
     "text_repetition_score",
     "q_events_dau_wau",
     "docs_length_histogram",
     "text_char_trigram_score",
-    # late-r8 additions: retrieval fusion / chat history / curation cards /
-    # embedding audit / exact decontam / balance / BM25
+    # retrieval fusion, chat history, curation cards, embedding audit,
+    # exact decontamination, balance, BM25
     "rag_hybrid_retrieve",
     "chat_history_messages",
     "corpus_data_card",
@@ -223,12 +221,12 @@ HEADLINE = [
     "corpus_balance_gini",
     "bm25_retrieve",
     "tok_bigram_pmi",
-    # r9 additions: report-header source normalization + MG-driven salt
+    # report-header source normalization, sketch-driven salted join
     "fix_source_name",
     "q_source_report",
     "q_events_hot_user_join",
-    # late-r9 additions: LM gate / weighted sampling / graph centrality /
-    # MMR rerank / winnowing dedup
+    # LM gate, weighted sampling, graph centrality, MMR rerank, winnowing
+    # dedup and the sketches
     "text_bigram_lm_score",
     "sample_weighted",
     "q_nation_pagerank",
@@ -240,13 +238,12 @@ HEADLINE = [
     "domain_temperature_mix",
     "q_value_quantile_sketch",
     "q_events_range_join",
-    # r10 additions: KMV-driven semi-join reduction / CMS frequency
-    # sketch / RM3 pseudo-relevance feedback
+    # semi-join reduction, CMS frequencies, RM3 feedback
     "q_urgent_revenue_semi_reduce",
     "q_events_cms_freq",
     "bm25_rm3_expand",
-    # late-r10 additions: sketch set algebra / skyline / filtered ANN /
-    # containment dedup / blocked fuzzy ER / triangles / SCD2
+    # set algebra, skyline, filtered ANN, containment dedup, fuzzy ER,
+    # triangles, SCD2, checksums, grouping sets
     "q_events_kmv_setops",
     "q_part_skyline",
     "ann_ivf_filtered_topk",
@@ -258,258 +255,101 @@ HEADLINE = [
     "q_nation_segment_unpivot",
     "dq_table_checksum",
     "q_orders_grouping_sets",
-    # new r11
+    # percentiles, salted sketch join, SCD overlay, budgets, drift
     "q_group_percentiles_exact",
     "q_events_cms_salted_join",
     "q_user_scd2_type1_overlay",
     "sample_char_budget",
     "q_events_psi_drift",
-    # late r11 (post-freeze; staged r12 must-grade)
     "q_group_percentiles_interp",
-    # new r12 (pre-freeze; graded on arrival)
     "q_source_weighted_percentiles",
     "q_value_hist_quantiles",
-    # new r13 (pre-freeze; graded on arrival)
     "q_doclen_hist_by_source",
-    # late r13 (post-freeze; staged r14 must-grade)
     "q_star_ordered_revenue",
 ]
 
 
-# Iterative operators (driver-side loop of Spark jobs per execution):
-# their reps interleave block allocation/release across many jobs, so a
-# rep can land on a JVM busy collecting the previous rep's blocks. They
-# get 5 reps minimum + a gc BETWEEN reps (not only between queries) so
-# one stalled rep cannot swing the median (r6 verdict #2: raw reps swung
-# 1.6-9.2s with zero code change at 3 reps).
-_ITERATIVE = {"dedup_components", "dedup_keep_canonical"}
-_ITERATIVE_MIN_REPS = 5
-
-# Suite-churn-sensitive queries, adjudicated per the isolated-rerun rule
-# (r13): their in-suite medians read ~2x the isolated cost with >=2x rep
-# swings that persisted through the retry backstop — docs_source_profile
-# raw 1.36-2.78s in-suite vs [0.91-1.12] isolated (ratio 1.23);
-# q20_part_promotion raw 0.98-2.49 vs [0.97-1.20] isolated (1.24).
-# Neighbor JVM state, not the query: they get the _ITERATIVE mechanics
-# (settle + untimed rewarm, then a JVM settle before EVERY timed rep,
-# 5-rep minimum) so the graded swing list stays empty under rule 36.
-#
-# r13 optimization round: the stateful STREAMING drains join the set,
-# on the same isolated-rerun evidence — stream_stateful_user_stats read
-# in-suite medians 10.93 / 2.01 / 11.14 s across three full runs at
-# near-identical code while an isolated fresh-JVM 5-rep run measured
-# [1.55-2.02] (median 1.64); stream_interval_join 6.30/1.60/4.08 vs
-# isolated 1.62; stream_dedup_exact 3.38/0.90/4.74. Each drain starts
-# and tears down a streaming query + state store against a ~100-query-
-# old JVM — exactly the ContextCleaner/old-gen backlog the per-rep
-# settle exists for. Methodology note (OPTIMIZATION_r13.md): this
-# changes only WHEN the JVM is settled around these queries' reps, not
-# what is timed; the pre-change artifacts are kept
-# (bench_detail_r13opt_baseline.json).
-#
-# r14: the remaining two drains with r13-driver churn evidence join —
-# stream_sessionize graded a 2.56x rep swing on the r13 driver's
-# 32-core run (its 8-core run of the SAME code minutes later read 1.52s
-# vs the graded 2.68s median) and stream_windowed_counts "regressed"
-# 0.72x with ZERO code change that round — the identical
-# drain-against-aged-JVM failure mode as the three r13 members.
-# stream_quality_gate stays OUT: stateless gate, no swing on any
-# recorded host. Disclosure: pre-change r14 baseline artifacts are
-# committed (bench_detail_r14_baseline.json: sessionize raw
-# [1.918, 1.277, 1.285] — the same first-rep churn shape), and
-# bench_detail.json now records settle-set membership per run
-# (settle_sets) so graded numbers stay auditable.
-_PER_REP_SETTLE = {
-    "docs_source_profile",
-    "q20_part_promotion",
-    "stream_stateful_user_stats",
-    "stream_interval_join",
-    "stream_dedup_exact",
-    "stream_sessionize",
-    "stream_windowed_counts",
-}
-
-# Broadcast/mapInArrow-heavy queries (the similarity block): each rep
-# builds and tears down broadcast relations + Arrow/python-worker state,
-# and a rep landing on a JVM still collecting a NEIGHBOR query's blocks
-# measured 8.3x the uncontended time on unchanged code (r7 verdict #2:
-# driver ann_ivf_topk raw [9.3, 5.2, 4.6] vs 1.12s judge-uncontended —
-# first-rep contamination surviving the single warmup). They get one
-# JVM-gc-and-settle AFTER the warmup (so measured reps start on a quiet
-# heap; their own per-rep garbage is small) + 5 reps so a residual
-# outlier cannot carry the median.
-_GC_SETTLE = {
-    "ann_bruteforce_topk",
-    "ann_bruteforce_topk_arrow",
-    "ann_lsh_topk",
-    "ann_ivf_topk",
-    "ann_pq_adc_topk",
-    "rag_retrieve",
-    "dedup_minhash_quality_audit",
-    # r8 verdict #4: the remaining 3-rep queries whose driver raw reps
-    # swung >= 2x on UNCHANGED code (host contention masquerading as
-    # regression): q_revenue_rollup [0.91, 2.02, 0.78], q_customer_rfm
-    # [1.80, 1.84, 2.88], stream_interval_join spread 0.91, plus the
-    # same-class floor-adjusted outliers the verdict adjudicated.
-    "q_revenue_rollup",
-    "q_customer_rfm",
-    "stream_interval_join",
-    "q_cohort_ltv",
-    "stream_dedup_exact",
-    "q_order_deciles",
-    # r9 verdict #8: the last >=2x raw-swing queries in the r9 artifacts
-    # (first-rep effect surviving the single warmup)
-    "q19_disjunctive_filter",
-    # r10 local artifact: first-rep 0.59 vs 0.25 floor, same class
-    "q_value_percentiles",
-    # late-r10 local artifact: one mid-run rep spike [.58,.55,1.40,.54,
-    # .44] — median unharmed via the fleet backstop's extra reps; the
-    # settle + 5-rep floor shrinks the odds of the spike carrying
-    "q5_local_supplier",
-}
-_GC_SETTLE_MIN_REPS = 5
-
-# Fleet-wide backstop for the same failure mode on queries NOT in the
-# settle sets: if the measured reps still swing >= 2x max/min, the rep
-# set is contaminated by neighbor-query JVM state, not by the query —
-# settle the heap and take up to 2 extra reps so the median (over ALL
-# recorded reps; nothing is discarded) re-centers on the quiet value.
-_RETRY_RATIO = 2.0
-# r12: 2 -> 3. r11's driver artifact recorded several >=2x raw swings
-# that two extra reps could not fully re-center (stream_interval_join
-# 1.8-9.9s); a third retry is cheap relative to the information it buys
-# — the median is over ALL recorded reps, so retries only ever improve
-# its centering.
-_RETRY_MAX = 3
-
-
-def _jvm_settle(spark) -> None:
-    import gc
-
-    gc.collect()
-    try:
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(0.5)
-    except Exception:  # noqa: BLE001 — hygiene only
-        pass
-
-
-# Periodic deep settle: per-query gc keeps REFERENCES clean, but the
-# ContextCleaner's shuffle/checkpoint deletions are asynchronous — over
-# a ~134-query suite the deletion backlog plus old-gen growth degrades a
-# sustained mid-suite WINDOW (r9 measured: the dedup block's in-suite
-# rep floor 4.9s vs 3.0s on a fresh JVM; one rep hit 41.7s on a full
-# GC). Every _DEEP_EVERY queries the suite stops untimed, double-GCs
-# the JVM, and sleeps long enough for the cleaner to drain, bounding
-# accumulation for the whole fleet instead of per-query whack-a-mole.
-_DEEP_EVERY = 12
-
-
-def _deep_settle(spark) -> None:
-    import gc
-
-    gc.collect()
-    try:
-        jvm = spark.sparkContext._jvm
-        jvm.System.gc()
-        time.sleep(0.7)
-        jvm.System.gc()  # second pass collects finalizer-reachable blocks
-        time.sleep(0.8)
-    except Exception:  # noqa: BLE001 — hygiene only
-        pass
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
 
 
 def _time_queries(
     spark, queries, names, sf_dir: str, reps: int
-) -> tuple[dict[str, float], dict[str, float], dict[str, list[float]]]:
+) -> tuple[dict[str, float], dict[str, float], dict[str, list[float]], dict, dict]:
+    """(medians, spreads, raw reps, layers, suite): every query is timed
+    by the protocol in the module docstring; ``suite`` holds
+    ``layer_collect_s`` and ``jvm_gc_s``."""
     import gc
 
+    from perfbench.spans import GcReader, StageCollector
+
+    # Past spark.ui.retainedStages the status store trims SKIPPED stages
+    # first, and StageCollector cannot read a job whose stage is gone. The
+    # trim reads the bound from the live conf, so it is lifted from the
+    # first timed rep until the counters are read; the warmups trim the
+    # store back, because a store that keeps every stage is slower to read.
+    conf = spark.sparkContext._jsc.sc().conf()
+    retained = conf.get("spark.ui.retainedStages", "1000")
+    c0 = time.perf_counter()
+    stages, gcr = StageCollector(spark), GcReader(spark)
+    gc0 = gcr.read()["gc_s"]
     timings: dict[str, float] = {}
     spread: dict[str, float] = {}
     raw: dict[str, list[float]] = {}
-    for qi, name in enumerate(names):
-        if qi and qi % _DEEP_EVERY == 0:
-            _deep_settle(spark)
+    layers: dict[str, dict] = {}
+    collect_s = time.perf_counter() - c0
+    for name in names:
         fn = queries[name]
-        if name in _ITERATIVE or name in _PER_REP_SETTLE:
-            n_reps = max(reps, _ITERATIVE_MIN_REPS)
-        elif name in _GC_SETTLE:
-            n_reps = max(reps, _GC_SETTLE_MIN_REPS)
-        else:
-            n_reps = reps
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warmup
-        if name in _GC_SETTLE or name in _ITERATIVE or name in _PER_REP_SETTLE:
-            # settle, then one MORE untimed rep (r9 verdict #8): the
-            # settle drains neighbor-query garbage, but the first
-            # execution AFTER a JVM GC repays JIT/broadcast state the
-            # warmup already paid — timing it produced the residual
-            # first-rep >=2x swings (ann_bruteforce_topk_arrow, q19).
-            # Measured reps now start on a quiet AND re-warmed JVM.
-            # r12: _ITERATIVE members get the same treatment — their
-            # timed loop settles before EVERY rep, so without a rewarm
-            # the first timed rep always ran GC-cold (r11 driver raw
-            # reps: dedup_components 2.3-5.6s; isolated 5-rep local
-            # re-measure shows the same shape, first rep 6.0s vs 1.9-2.2
-            # steady — structural, not host noise).
-            _jvm_settle(spark)
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        runs = []
-        for _ in range(n_reps):
-            if name in _ITERATIVE or name in _PER_REP_SETTLE:
-                # Python gc alone frees py4j proxies but the JVM-side RDD
-                # handles only reach the ContextCleaner after a JVM GC —
-                # without it the previous rep's blocks are collected
-                # DURING the next rep (measured: a 3x first-rep outlier
-                # with python-gc only; none with the JVM GC + settle).
-                _jvm_settle(spark)
+        _noop(fn(spark, sf_dir))  # warmup
+        conf.set("spark.ui.retainedStages", str(2**31 - 1))
+        runs, cons = [], []
+        for i in range(reps):
+            c0 = time.perf_counter()
+            stages.set_group(f"bench:{name}:{i}")
             t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        retries = 0
-        # retry only where a swing could GRADE (r12 verdict #6): medians
-        # under 10 x the static floor stand-in are exempt by rule, so
-        # extra reps there spend time a graded number never sees
-        while (
-            retries < _RETRY_MAX
-            and min(runs) > 0.05
-            and statistics.median(runs) >= _SWING_GRADE_FLOOR_MULT * _SPREAD_FLOOR
-            and max(runs) / min(runs) >= _RETRY_RATIO
-        ):
-            # escalate after the first failed retry: a light settle did
-            # not quiet the JVM, so pay the deep double-GC + cleaner
-            # drain before spending further reps (r13 — both local-run
-            # graded-swing sets were churn whose reps CLIMBED through
-            # light settles; the deep settle is the only device that
-            # drains the ContextCleaner backlog mid-suite)
-            (_deep_settle if retries >= 1 else _jvm_settle)(spark)
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-            retries += 1
-        # Query isolation: drop the Python references to each rep's plan so
-        # the ContextCleaner can unpersist its localCheckpoint/cache blocks
-        # BEFORE the next query runs — without this, checkpoint blocks from
-        # the shingle-heavy dedup queries linger and inflate whatever runs
-        # after them (measured: dedup_simhash 2.3s standalone vs 5.8s
-        # in-suite behind minhash+jaccard).
+            df = fn(spark, sf_dir)
+            t1 = time.perf_counter()
+            _noop(df)
+            t2 = time.perf_counter()
+            collect_s += t0 - c0
+            runs.append(round(t2 - t0, 3))
+            cons.append(round(t1 - t0, 3))
+        # Every rep runs the same jobs; reading one rep's counters keeps
+        # the py4j round trips (a few per stage) to a third.
+        c0 = time.perf_counter()
+        stages.set_group(None)
+        counters = {"group": f"bench:{name}:{reps - 1}"}
+        stages.collect([counters])  # waits for the listener bus, then reads
+        conf.set("spark.ui.retainedStages", retained)
+        collect_s += time.perf_counter() - c0
+        df = fn(spark, sf_dir)
+        t0 = time.perf_counter()
+        df._jdf.queryExecution().executedPlan()
+        plan_s = time.perf_counter() - t0
+        del df
         gc.collect()
         timings[name] = round(statistics.median(runs), 3)
         spread[name] = round(max(runs) - min(runs), 3)
-        raw[name] = [round(r, 3) for r in runs]
+        raw[name] = runs
+        layers[name] = {
+            "construct_s": cons,
+            "exec_s": [round(r - c, 3) for r, c in zip(runs, cons)],
+            "plan_s": round(plan_s, 3),
+            **{k: counters[k] for k in ("jobs", "tasks", "shuffle_bytes", "spill_bytes")},
+            "gc_s": counters["gc_ms"] / 1000.0,
+        }
         print(f"  {name}: {timings[name]}s (spread {spread[name]}s)", file=sys.stderr)
-    return timings, spread, raw
+    c0 = time.perf_counter()
+    jvm_gc_s = gcr.read()["gc_s"] - gc0
+    collect_s += time.perf_counter() - c0
+    suite = {"layer_collect_s": round(collect_s, 3), "jvm_gc_s": round(jvm_gc_s, 3)}
+    return timings, spread, raw, layers, suite
 
 
 def _floor(timings: dict[str, float]) -> float:
-    """Per-query fixed-cost floor: median of the 3 cheapest query medians.
-
-    r5/r6 showed the calib probe too noisy to normalize cross-round
-    TOTALS (0.348/0.613/0.648 for near-identical code on one host); the
-    floor is the complementary signal — the per-query scheduler+noop-sink
-    cost every query pays regardless of its work. Cross-round per-query
-    comparison: (t_r7 - floor_r7) vs (t_r6 - floor_r6), i.e. subtract
-    each round's floor BEFORE comparing, rather than dividing totals by
-    calib (r6 verdict #7)."""
+    """Per-query fixed-cost floor: median of the 3 cheapest query medians,
+    the scheduler+noop-sink cost every query pays regardless of its work.
+    Compare a query across runs as (t - floor) in each run."""
     cheapest = sorted(timings.values())[:3]
     return round(statistics.median(cheapest), 3) if cheapest else 0.0
 
@@ -520,7 +360,6 @@ def _final_line(
     spread: dict[str, float],
     sf: float | None,
     scale: dict | None,
-    calib: float | None = None,
     detail_name: str = "bench_detail.json",
     swings: tuple[dict, dict] | None = None,
 ) -> str:
@@ -549,21 +388,10 @@ def _final_line(
             "unit": "sec",
             "queries": {n: round(v, q_nd) for n, v in kept.items()},
         }
-        if calib is not None:
-            # canonical fixed-job median: divide totals by this before
-            # comparing rounds (hosts differ round-to-round)
-            obj["calib"] = calib
-            # r13 verdict #6: the calib-normalized total printed NEXT TO
-            # the raw value (r12→r13 compared runs at calib 0.896 vs
-            # 0.66 — raw totals conflate host state with code changes).
-            # Additions-only: the contract fields are unchanged.
-            if calib > 0:
-                obj["total_calib_adj"] = round(total / calib, 2)
         obj["floor"] = _floor(timings)
         if swings is not None:
-            # the zero-swing grading standard's verdict surface: swings
-            # at medians >= 10x floor; sub-threshold ones are exempt by
-            # the declared rule and live in the detail file
+            # swings at medians >= 10x floor; the exempt ones are in the
+            # detail file
             obj["graded_swings"] = swings[0]
             obj["swings_exempt_n"] = len(swings[1])
         if omitted:
@@ -599,51 +427,42 @@ def main() -> None:
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     m = re.search(r"sf([0-9.]+)/?$", sf_dir)
     sf = float(m.group(1)) if m else None
+    only = sys.argv[1:]
+    # bench_detail.json is the COMMITTED artifact for the default sf0.1
+    # suite; named-query runs and other SFs write a side file so they
+    # cannot clobber it.
+    if only:
+        fname = "bench_detail_only.json"
+    elif sf is not None and abs(sf - 0.1) < 1e-9:
+        fname = "bench_detail.json"
+    else:
+        fname = f"bench_detail_sf{sf}.json"
 
     import __spark_entry__ as entrymod
     from sentiment_analysis_vector_search_spark.session import get_spark
 
     spark = get_spark("bench")
     queries = entrymod.queries()
+    unknown = [n for n in only if n not in queries]
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
 
     # Warm the JVM + parquet footers outside the timed region.
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
 
-    # Machine-calibration probe: a FIXED canonical job (scan + shuffle agg
-    # over synthetic rows, fully repo-independent) timed like a query.
-    # Round-over-round totals are only comparable after normalizing by
-    # this — r4's host ran the identical suite ~3x faster than r5's
-    # (same code, same flags: fixed per-stage cost differs per round's
-    # hardware), so absolute seconds across rounds mislead without it.
-    def _calib(spark_):
-        return (
-            spark_.range(0, 2_000_000, 1, 32)
-            .selectExpr("id % 1000 AS k", "id AS v")
-            .groupBy("k")
-            .agg({"v": "sum"})
-        )
-
-    _calib(spark).write.format("noop").mode("overwrite").save()
-    calib_runs = []
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        _calib(spark).write.format("noop").mode("overwrite").save()
-        calib_runs.append(time.perf_counter() - t0)
-    calib = round(statistics.median(calib_runs), 3)
-
-    timings, spread, raw = _time_queries(spark, queries, HEADLINE, sf_dir, reps)
+    timings, spread, raw, layers, suite = _time_queries(
+        spark, queries, only or HEADLINE, sf_dir, reps
+    )
     total = round(sum(timings.values()), 3)
 
-    # Crash insurance (r4 advice #5): emit a headline-only line BEFORE the
-    # multi-minute scale smoke. If the run is killed mid-smoke, this is the
-    # last complete stdout line and still parses; on a full run the final
-    # line (with sf10_equiv) supersedes it in the driver's tail capture.
-    print(_final_line(total, timings, spread, sf, None, calib))
+    # Crash insurance: a headline-only line BEFORE the multi-minute scale
+    # smoke, so a run killed mid-smoke still ends in a parseable line.
+    print(_final_line(total, timings, spread, sf, None, fname))
     sys.stdout.flush()
 
     scale_summary = None
     scale_detail = None
-    if os.environ.get("SPARK_GRAFT_SCALE", "1") != "0":
+    if not only and os.environ.get("SPARK_GRAFT_SCALE", "1") != "0":
         try:
             from scripts.bench_scale import attach_ratios, run_scale_bench
 
@@ -664,47 +483,32 @@ def main() -> None:
     detail = {
         "metric": "headline_suite_total",
         "value": total,
-        "calib": calib,
         "floor": floor,
         "unit": "sec",
         "queries": timings,
         "spread": spread,
         "raw_runs": raw,
+        "layers": layers,
+        **suite,
         "swing_rule": {
-            "ratio": _RETRY_RATIO,
+            "ratio": _SWING_RATIO,
             "floor_mult": _SWING_GRADE_FLOOR_MULT,
             "graded_when": "median >= floor_mult * floor",
         },
         "graded_swings": graded_swings,
         "exempt_swings": exempt_swings,
-        # auditability (r13 advice, low): which queries ran under the
-        # per-rep JVM-settle / gc-settle / iterative rep mechanics, so a
-        # grader can see whose medians exclude cross-query JVM churn
-        "settle_sets": {
-            "per_rep_settle": sorted(_PER_REP_SETTLE),
-            "gc_settle": sorted(_GC_SETTLE),
-            "iterative": sorted(_ITERATIVE),
-        },
         "sf": sf,
         "reps": reps,
     }
     if scale_detail is not None:
         detail["sf10_equiv"] = scale_detail
     here = os.path.dirname(os.path.abspath(__file__))
-    # bench_detail.json is the COMMITTED artifact for the default sf0.1
-    # config; debug runs at other SFs write a side file so they cannot
-    # clobber the round's record.
-    fname = (
-        "bench_detail.json"
-        if sf is not None and abs(sf - 0.1) < 1e-9
-        else f"bench_detail_sf{sf}.json"
-    )
     with open(os.path.join(here, fname), "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
 
     print(
         _final_line(
-            total, timings, spread, sf, scale_summary, calib, fname,
+            total, timings, spread, sf, scale_summary, fname,
             swings=(graded_swings, exempt_swings),
         )
     )

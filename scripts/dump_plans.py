@@ -1,8 +1,16 @@
 """Regenerate PLANS.md: formatted physical plans of headline queries with
-the scale-relevant properties annotated. Run: python scripts/dump_plans.py"""
+the scale-relevant properties annotated, or print the plans of named
+queries.
+
+Run: python scripts/dump_plans.py            # rewrite PLANS.md (sf0.001 shapes)
+     python scripts/dump_plans.py NAME ...   # print each NAME's formatted plan
+                                             # at $SPARK_GRAFT_SF_DIR (default:
+                                             # the PLANS.md data)
+"""
 
 from __future__ import annotations
 
+import os
 import sys
 
 sys.path.insert(0, ".")
@@ -89,6 +97,11 @@ def main() -> None:
     spark = get_spark("plans")
     qs = entrymod.queries()
     sf = "/root/testdata/sf0.001"
+    if sys.argv[1:]:
+        sf = os.environ.get("SPARK_GRAFT_SF_DIR", sf)
+        for name in sys.argv[1:]:
+            print(f"## {name}\n\n{plan_str(qs[name](spark, sf)).strip()}\n")
+        return
     out = ["# PLANS — headline physical plans (local[*], sf0.001 shapes)\n"]
     out.append(
         "Regenerate with `python scripts/dump_plans.py`. The shapes below are\n"

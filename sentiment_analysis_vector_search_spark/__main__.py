@@ -149,8 +149,8 @@ def _fold_verb(args) -> int:
                     out["support_check"] = st.histogram_support_check(
                         args.stats_dir, args.table, args.col, group_col=args.group_col
                     )
-                except KeyError as e:
-                    out["support_check"] = {"error": str(e)}
+                except KeyError as e:  # str() of a KeyError adds quotes
+                    out["support_check"] = {"error": e.args[0]}
             return dump(out)
 
     else:  # checksum

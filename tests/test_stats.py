@@ -1160,6 +1160,26 @@ def test_histogram_support_tripwire(spark, sf_dir, tmp_path, capsys):
     assert out["support_check"]["rebuild_recommended"] is False
 
 
+def test_hist_check_without_stats_names_the_verb(sf_dir, tmp_path, capsys):
+    """`hist --check` before any `analyze-incremental` reports the missing
+    stats as plain text that names the verb to run."""
+    import json
+    import os
+
+    from sentiment_analysis_vector_search_spark.__main__ import main
+
+    stats_dir = str(tmp_path / "stats")
+    rc = main(["hist", "events", "value", os.path.join(sf_dir, "events.parquet"),
+               stats_dir, "--check"])
+    assert rc == 0
+    captured = capsys.readouterr().out
+    out = json.loads(captured[captured.index("{"):])
+    assert out["support_check"] == {
+        "error": f"no maintained stats for events.value in {stats_dir}"
+        " (run analyze-incremental first)"
+    }
+
+
 def test_sample_and_hotkeys_folds_refuse_a_different_k(spark, tmp_path):
     """The bottom-k sample and the Misra-Gries summary store their k: a
     fold with another k is refused, not merged into an artifact whose
