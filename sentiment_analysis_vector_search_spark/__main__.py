@@ -11,7 +11,7 @@
     python -m sentiment_analysis_vector_search_spark analyze-incremental <table> <batch-path> <stats-dir>
     python -m sentiment_analysis_vector_search_spark hotkeys <table> <col> <batch-path> <stats-dir> [--k K]
     python -m sentiment_analysis_vector_search_spark sample <table> <key-col> <val-col> <batch-path> <stats-dir> [--k K] [--quantiles 0.5,0.95]
-    python -m sentiment_analysis_vector_search_spark rollup build|answer|add <rollup-dir> [...]
+    python -m sentiment_analysis_vector_search_spark rollup build|answer|add|compact <rollup-dir> [...]
     python -m sentiment_analysis_vector_search_spark warc <warc-path> <out-dir>
     python -m sentiment_analysis_vector_search_spark knn <kind> <index-dir> --vectors-dir D [--query-vec-id N] [--k K]
 
@@ -443,9 +443,9 @@ def main(argv: list[str] | None = None) -> int:
     )
 
     p_roll = sub.add_parser(
-        "rollup", help="materialized rollup: build / answer / add"
+        "rollup", help="materialized rollup: build / answer / add / compact"
     )
-    p_roll.add_argument("roll_cmd", choices=("build", "answer", "add"))
+    p_roll.add_argument("roll_cmd", choices=("build", "answer", "add", "compact"))
     p_roll.add_argument("rollup_dir")
     p_roll.add_argument("--source", help="parquet path (build/add)")
     p_roll.add_argument("--dims", help="comma list (build)")
@@ -730,7 +730,12 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "rollup":
         import json
 
-        from .plans.matviews import build_rollup, rollup_add, rollup_answer
+        from .plans.matviews import (
+            build_rollup,
+            rollup_add,
+            rollup_answer,
+            rollup_compact,
+        )
         from .session import get_spark
 
         spark = get_spark("cli-rollup")
@@ -753,6 +758,9 @@ def main(argv: list[str] | None = None) -> int:
         elif args.roll_cmd == "add":
             rollup_add(spark, args.rollup_dir, spark.read.parquet(args.source))
             print(json.dumps({"added": args.source}))
+        elif args.roll_cmd == "compact":
+            n = rollup_compact(spark, args.rollup_dir)
+            print(json.dumps({"compacted": args.rollup_dir, "state_rows": n}))
         else:
             wants = [
                 tuple(w.split(":", 1))

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import cut
+from ..commit import recover_swaps
 from .similarity import (
     _TOP_K,
     _TRAINED_NPROBE,
@@ -47,7 +48,6 @@ from .similarity import (
     _norm_queries,
     _norm_vectors,
     _probe_cells,
-    _swap_recover,
     _top_per_query,
     _trained_codebook,
     _vectors,
@@ -136,11 +136,9 @@ def ann_ivfpq_index_query(
     ``queries``: (query_id, qv array<double>); ``vectors`` is the
     primary store (vec_id, v), read only for the shortlist.
 
-    Opens with ``ivfpq_index_recover(forward_only=True)`` so a committed
-    refresh swap a crash left half-done is completed before the read;
-    uncommitted staging is left for the refresh writer (similarity.py
-    writer/reader contract)."""
-    ivfpq_index_recover(index_dir, forward_only=True)
+    Opens with ``recover_swaps(forward_only=True)`` like the IVF query
+    (``similarity.ann_ivf_index_query``)."""
+    recover_swaps(index_dir, forward_only=True)
     adc = _probed_adc(spark, index_dir, queries, nprobe, exclude_self)
     shortlist = _top_per_query(adc, "adc_cosine", rerank_n, "srk").select(
         "query_id", "vec_id"
@@ -158,6 +156,7 @@ def ivfpq_index_add(
     its cell-partitioned codes — cost proportional to the batch, result
     identical to a full rebuild (pinned by pytest). ``stage_dir``: see
     ``similarity._append``."""
+    recover_swaps(index_dir)  # a refresh or compaction a crash left open
     coarse = spark.read.parquet(f"{index_dir}/coarse_codebook")
     pq_cb = spark.read.parquet(f"{index_dir}/pq_codebook")
     codes = _ivfpq_codes(_norm_vectors(new_vectors), coarse, pq_cb)
@@ -173,18 +172,11 @@ def ivfpq_index_add(
 # re-trains each with their Lloyd steps, then rebuilds the codes table
 # in full (re-ASSIGN against the new coarse codebook AND re-ENCODE
 # against the new PQ codebook — a stored code row is stale if either
-# codebook moved), committing all three directories behind the shared
-# marker-file swap (similarity._codebook_refresh). Raw vectors live only
+# codebook moved), committing all three directories in one
+# ``commit.swap_dirs`` (SCALING.md rule 37). Raw vectors live only
 # in the primary store, so drift and refresh take it as input, like
 # pq_codebook_refresh.
 # ---------------------------------------------------------------------------
-
-
-def ivfpq_index_recover(index_dir: str, forward_only: bool = False) -> None:
-    """Marker-file swap recovery over the three IVFPQ directories.
-    ``forward_only=True`` is the reader mode — see similarity.py's
-    writer/reader contract."""
-    _swap_recover("ivfpq", index_dir, forward_only)
 
 
 def _cell_members(codes: DataFrame, vecs: DataFrame) -> DataFrame:
@@ -275,7 +267,7 @@ def ivfpq_refinement_audit(
 
     Opens forward-only like the query path. Brute force is the exact
     scan over ``vectors`` (the primary store)."""
-    ivfpq_index_recover(index_dir, forward_only=True)
+    recover_swaps(index_dir, forward_only=True)
     # cut: multi-consumer — one scoring pass read by every grid point
     adc = cut(
         _probed_adc(

@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import cut, table
-from ..commit import write_json
+from ..commit import recover_swaps, staged, swap_dirs
 from ..functions.stable import DEC, davg
 from ..functions.vectors import dot, dot_expr, hyperplanes, sql_plane_dot
 from ..registry import register
@@ -191,12 +191,12 @@ SELECT query_id, vec_id, cosine, rk FROM (
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-LSH candidate generation with Arrow-vectorized signatures.
 
-    The r3 formulation computed 8 plane dots per row as interpreted
-    higher-order-function Columns — the same per-row lambda-math cost that
-    made dedup_embedding 3.1s (2.08s here, r4 bench, the slowest
-    similarity op). One einsum per Arrow batch does identical algebra
-    vectorized: bits = sign(V·P^T), bucket_b = 2*bit(2b) + bit(2b+1) —
-    integer-exact, so the candidate set is unchanged and the (JVM-fold)
+    Computing 8 plane dots per row as interpreted higher-order-function
+    Columns pays the same per-row lambda-math cost that made
+    dedup_embedding the slowest similarity op. One einsum per Arrow
+    batch does identical algebra vectorized: bits = sign(V·P^T),
+    bucket_b = 2*bit(2b) + bit(2b+1) — integer-exact, so the candidate
+    set is unchanged and the (JVM-fold)
     verify cosines still hash-match the oracle. The plane matrix is
     process-resident per executor (broadcast); queries are the vec_id <
     _N_QUERIES rows of the SAME signature relation, so signatures are
@@ -391,8 +391,8 @@ def _assigned_arrow(spark: SparkSession, sf_dir: str, where=None) -> DataFrame:
     higher-order-lambda dot products per row (the same treatment
     dedup_embedding's signatures got; measured 0.5s → ~0.1s at sf0.1 for
     the assignment stage). argmax tie-break is first-max on both engines;
-    nrm comes from the same einsum the oracle's fold agrees with at
-    round-6 (the dedup_embedding precedent, green at both graded SFs)."""
+    nrm comes from the same einsum the oracle's fold agrees with (the
+    dedup_embedding precedent, green at both graded SFs)."""
     import numpy as np
 
     cmat = np.array([[float(c) for c in p] for p in _CENTROIDS], dtype=np.float64)
@@ -533,7 +533,7 @@ def rag_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # once (the crossJoin shape ships a duplicate query array per candidate
 # pair — 2x64 doubles/pair vs 64 doubles/vector here). mapInArrow, not
 # mapInPandas: pandas materializes the list<double> column as one ndarray
-# OBJECT per row (measured 8x slower than the JVM path in r3), while the
+# OBJECT per row (measured 8x slower than the JVM path), while the
 # Arrow ListArray's values buffer reshapes to the (n x d) matrix zero-copy.
 # Each batch scores with one (n x d)·(d x q) einsum; only scalar score rows
 # come back. einsum without `optimize` sums j left-to-right, matching the
@@ -822,7 +822,6 @@ def _write_index(
     index_dir: str,
     codebooks: tuple[DataFrame, ...],
     encode: Callable[..., DataFrame],
-    suffix: str = "",
 ) -> None:
     """Write the kind's directories in layout order: the codebooks, then
     the ingest table as ``encode(*stored)`` over the codebooks read back
@@ -831,17 +830,18 @@ def _write_index(
     dirs = INDEX_LAYOUT[kind].dirs
     stored = []
     for name, cb in zip(dirs[:-1], codebooks, strict=True):
-        path = os.path.join(index_dir, name + suffix)
+        path = os.path.join(index_dir, name)
         _write(cb, path)
         stored.append(cb.sparkSession.read.parquet(path))
-    _write(encode(*stored), os.path.join(index_dir, dirs[-1] + suffix))
+    _write(encode(*stored), os.path.join(index_dir, dirs[-1]))
 
 
 def _append(kind: str, index_dir: str, df: DataFrame, stage_dir: str | None) -> None:
-    """Append a batch to the kind's ingest table — or, with
+    """Append a batch to the kind's ingest table (its ``*_index_add``
+    runs the writer's ``recover_swaps`` first) — or, with
     ``stage_dir``, write it THERE (overwrite): the hook streaming ingest
     uses to make the append idempotent (stage, then atomic batch-stamped
-    renames; see file_sink._idempotent_append_dir)."""
+    renames; see commit.idempotent_append_dir)."""
     if stage_dir is None:
         _write(df, os.path.join(index_dir, INDEX_LAYOUT[kind].dirs[-1]), "append")
     else:
@@ -897,14 +897,12 @@ def ann_ivf_index_query(
     ``queries``: (query_id bigint, qv array<double>). The probe cells
     prune the assignment scan statically (``_probe_cells``); the rerank
     is the same broadcast-queries candidate join as the in-memory path.
-    Opens with ``ivf_index_recover(forward_only=True)`` (one existence
-    check when idle) so a COMMITTED refresh swap a crash left half-done
-    is completed before the read — queries never see a torn index.
-    Forward-only: uncommitted __new staging is left for the refresh
-    writer to commit or clean — a query open must not rmtree the
-    staging a live refresh is still writing.
+    Opens with ``recover_swaps(forward_only=True)`` (one existence
+    check when idle) so a COMMITTED swap a crash left half-done is
+    completed before the read — queries never see a torn index.
+    Uncommitted staging is left to its writer.
     """
-    ivf_index_recover(index_dir, forward_only=True)
+    recover_swaps(index_dir, forward_only=True)
     qprobe, assigned = _probe_cells(spark, "ivf", index_dir, queries, nprobe)
     cand = F.broadcast(qprobe).join(assigned, "cell").where(
         F.col("vec_id") != F.col("query_id")
@@ -926,6 +924,7 @@ def ivf_index_add(
     batch, not the index (the real-world ingest path for a vector store;
     re-train the codebook only when drift warrants a rebuild).
     ``stage_dir``: see ``_append``."""
+    recover_swaps(index_dir)  # a refresh or compaction a crash left open
     cents_n = spark.read.parquet(f"{index_dir}/codebook")
     _append("ivf", index_dir, _assign(_norm_vectors(new_vectors), cents_n), stage_dir)
 
@@ -939,76 +938,12 @@ def ivf_index_add(
 # (bounded: one partial agg to |cells| x dim rows against the broadcast
 # codebook) and supplies ONE Lloyd step — new centroid = mean of the
 # vectors currently in the cell, then a full re-assign / re-encode
-# against the new codebook. _codebook_refresh commits every directory
-# behind a marker-file swap protocol so a crash at ANY point leaves a
-# recoverable index:
-#   1. write <dir>__new for every directory (complete before commit)
-#   2. atomically write the _REFRESH_MARKER file   <- the commit point
-#   3. per directory: rename cur -> cur__old, rename new -> cur, rm old
-#   4. remove the marker
-# _swap_recover rolls FORWARD when the marker exists (the new index is
-# complete by invariant 1) and rolls BACK stray __new dirs when it does
-# not (the swap never committed) — the bucket-swap protocol of
-# file_sink.stream_scd2_maintenance, lifted to a multi-directory artifact.
-#
-# Writer/reader contract: rollback is a WRITER action — only the refresh
-# itself (the single writer; refreshes must not run concurrently) may
-# delete uncommitted __new staging, because a query that opened
-# mid-refresh would otherwise rmtree the staging the live refresh is
-# still writing. Query opens therefore recover FORWARD-ONLY
-# (forward_only=True): they complete a committed-but-torn swap (the
-# marker proves the __new dirs are complete and the writer is past its
-# point of no return) and leave pre-marker staging untouched.
+# against the new codebook. _codebook_refresh stages every directory
+# under index_dir/_swap and installs them all in one commit.swap_dirs, so
+# a crash at any point leaves a recoverable index. Refreshes are the
+# single writer per index; query opens recover forward-only (SCALING.md
+# rule 37).
 # ---------------------------------------------------------------------------
-
-_REFRESH_MARKER = "_refresh_commit.json"
-
-
-def _swap_recover(kind: str, index_dir: str, forward_only: bool = False) -> None:
-    """Marker-file swap recovery over the kind's directories. Marker
-    present -> roll forward (install every __new); marker absent -> roll
-    back stray staging, UNLESS ``forward_only`` (the reader-side mode:
-    never delete another process's staging)."""
-    import contextlib
-    import shutil
-
-    marker = os.path.join(index_dir, _REFRESH_MARKER)
-    committed = os.path.exists(marker)
-    if not committed and forward_only:
-        return
-    for name in INDEX_LAYOUT[kind].dirs:
-        cur = os.path.join(index_dir, name)
-        new = cur + "__new"
-        old = cur + "__old"
-        if committed:
-            # forward: the __new dirs were complete before the marker.
-            # In reader mode a live post-commit writer may be doing the
-            # same renames concurrently — the sequence is idempotent, so
-            # whoever loses a rename race just skips that step.
-            try:
-                if os.path.isdir(new):
-                    if os.path.isdir(cur):
-                        if os.path.isdir(old):
-                            shutil.rmtree(old)
-                        os.rename(cur, old)
-                    os.rename(new, cur)
-                if os.path.isdir(old):
-                    shutil.rmtree(old)
-            except OSError:
-                if not forward_only:
-                    raise
-        else:
-            # back: an uncommitted staging attempt; current index wins.
-            # WRITER-ONLY (refresh start) — never reached in reader mode.
-            if os.path.isdir(new):
-                shutil.rmtree(new)
-            if os.path.isdir(old) and not os.path.isdir(cur):
-                os.rename(old, cur)  # defensive; unreachable by protocol
-            elif os.path.isdir(old):
-                shutil.rmtree(old)
-    if committed:
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(marker)
 
 
 def _codebook_refresh(
@@ -1021,18 +956,15 @@ def _codebook_refresh(
 ) -> dict:
     """The refresh every index kind runs (note above): writer-side
     recover, measure ``drift()``, gate, stage ``lloyd()``'s (codebooks,
-    encode) as the kind's ``<dir>__new`` directories, write the commit marker, then
-    swap by forward recovery. Returns the drift measurement plus
-    {"refreshed": bool}; measurement-only while ``max_drift`` is not
-    reached and ``force`` is False."""
-    _swap_recover(kind, index_dir)
+    encode) as the kind's directories, then swap them in. Returns the
+    drift measurement plus {"refreshed": bool}; measurement-only while
+    ``max_drift`` is not reached and ``force`` is False."""
+    recover_swaps(index_dir)
     measured = drift()
     if not force and measured["max_drift"] < max_drift:
         return {**measured, "refreshed": False}
-    _write_index(kind, index_dir, *lloyd(), suffix="__new")
-    # commit point: every __new dir is complete on disk
-    write_json(os.path.join(index_dir, _REFRESH_MARKER), {"drift_at_refresh": measured})
-    _swap_recover(kind, index_dir)  # the swap IS forward recovery
+    _write_index(kind, staged(index_dir), *lloyd())
+    swap_dirs(index_dir, INDEX_LAYOUT[kind].dirs)
     return {**measured, "refreshed": True}
 
 
@@ -1087,15 +1019,6 @@ def ivf_index_drift(spark: SparkSession, index_dir: str) -> dict:
     )
 
 
-def ivf_index_recover(index_dir: str, forward_only: bool = False) -> None:
-    """Complete (marker present) or roll back (no marker) a refresh swap
-    a crash left half-done — idempotent, cheap, safe to run at every
-    index open. ``forward_only=True`` is the READER mode (query opens):
-    it never deletes uncommitted __new staging, which may belong to a
-    refresh still writing it (note above: writer/reader contract)."""
-    _swap_recover("ivf", index_dir, forward_only)
-
-
 def ivf_codebook_refresh(
     spark: SparkSession,
     index_dir: str,
@@ -1103,7 +1026,7 @@ def ivf_codebook_refresh(
     force: bool = False,
 ) -> dict:
     """Drift-triggered codebook re-train + full re-assign behind the
-    marker-file swap (``_codebook_refresh``). Returns the drift
+    directory swap (``_codebook_refresh``). Returns the drift
     measurement plus {"refreshed": bool}. No-op (measurement only) while
     max cell drift stays under ``max_drift`` and ``force`` is False."""
 

@@ -41,6 +41,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import cut, table
+from ..commit import recover_swaps
 from ..functions.stable import davg, dsum, sql_davg, sql_dsum
 from ..functions.vectors import dot
 from ..registry import register
@@ -53,7 +54,6 @@ from .similarity import (
     _corpus_queries,
     _norm_queries,
     _norm_vectors,
-    _swap_recover,
     _top_per_query,
     _vectors,
     _write_index,
@@ -331,12 +331,10 @@ def ann_pq_index_query(
     own vectors) — for external queries, an id that coincidentally
     equals a vec_id must NOT hide that corpus vector.
 
-    Opens with ``pq_index_recover(forward_only=True)`` so a committed
-    refresh swap a crash left half-done is completed before the read;
-    uncommitted staging is left for the refresh writer (similarity.py
-    writer/reader contract).
+    Opens with ``recover_swaps(forward_only=True)`` like the IVF query
+    (``ann_ivf_index_query``).
     """
-    pq_index_recover(index_dir, forward_only=True)
+    recover_swaps(index_dir, forward_only=True)
     cb = spark.read.parquet(f"{index_dir}/codebook")
     enc = spark.read.parquet(f"{index_dir}/codes")
     q = _norm_queries(queries)
@@ -355,6 +353,7 @@ def pq_index_add(
     and the result is identical to a full rebuild (pinned by pytest).
     Re-train the codebook only when drift warrants a rebuild.
     ``stage_dir``: see ``similarity._append``."""
+    recover_swaps(index_dir)  # a refresh or compaction a crash left open
     cb = spark.read.parquet(f"{index_dir}/codebook")
     _append("pq", index_dir, _pq_encode(_norm_vectors(new_vectors), cb), stage_dir)
 
@@ -367,8 +366,8 @@ def pq_index_add(
 # store owner re-trains (one Lloyd step over the current assignment)
 # and — because the codes themselves are quantizations, not assignments
 # — re-ENCODEs the whole corpus against the new codebook. Both
-# directories (codebook, codes) commit behind the shared marker-file
-# swap with its writer/reader contract.
+# directories (codebook, codes) commit in one ``commit.swap_dirs``
+# (SCALING.md rule 37).
 #
 # The drift metric is twofold, one bounded pass over the index:
 #   - per-(subspace, code) centroid drift: 1 - cosine(stored
@@ -484,13 +483,6 @@ def pq_index_drift(
         spark.read.parquet(f"{index_dir}/codes"),
         _norm_vectors(vectors),
     )
-
-
-def pq_index_recover(index_dir: str, forward_only: bool = False) -> None:
-    """Marker-file swap recovery for the PQ index (codebook + codes).
-    ``forward_only=True`` is the reader mode — see similarity.py's
-    writer/reader contract."""
-    _swap_recover("pq", index_dir, forward_only)
 
 
 def pq_codebook_refresh(

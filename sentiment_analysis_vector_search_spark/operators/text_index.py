@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import cut, table
-from ..commit import applied_max, write_json
+from ..commit import applied_max, recover_swaps, write_json
 from ..functions import sentiment as S
 from ..functions.stable import dsum, sql_dsum, sql_stable_ln, with_stable_ln
 from ..registry import register
@@ -307,6 +307,7 @@ def text_index_add(
     os.replace. Returns the (doc-count, doc-length) increments."""
     from ..sinks import spread_repartition
 
+    recover_swaps(index_dir)  # a compaction a crash left open
     if stage_dir is None:
         _read_manifest(index_dir)  # knob check before any write
     rows = cut(_postings_rows(new_docs), eager=True)  # cut: multi-consumer — write + stats
@@ -339,7 +340,9 @@ def text_index_query(
     """BM25 top-k from the index alone: reads ONLY the query words'
     bucket partitions (plan-pinned PartitionFilters), computes df from
     the pruned postings, and scores with the same shared expression as
-    the batch query — byte-identical results (pytest)."""
+    the batch query — byte-identical results (pytest). Opens with a
+    forward-only ``recover_swaps`` like the vector index queries."""
+    recover_swaps(index_dir, forward_only=True)
     man = _read_manifest(index_dir)
     buckets = sorted({_bucket_py(w) for w in words})
     post = (

@@ -1,4 +1,4 @@
-"""Materialized rollups with aggregate-query rewrite (r8).
+"""Materialized rollups with aggregate-query rewrite.
 
 The warehouse pattern: materialize ONE fine-grained partial aggregate
 (dims → re-aggregable measure state) and answer every coarser
@@ -29,7 +29,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..commit import write_json
+from ..commit import replace_dir, write_json
 
 _DEC = "decimal(30,10)"
 _ANSWERABLE = ("sum", "count", "avg", "min", "max")
@@ -53,17 +53,15 @@ def build_rollup(
         aggs.append(F.min(F.col(col)).alias(f"_min_{name}"))
         aggs.append(F.max(F.col(col)).alias(f"_max_{name}"))
     rolled = df.groupBy(*dims).agg(*aggs)
-    tmp = f"{out_dir}__tmp__"
-    rolled.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(out_dir):
-        import shutil
 
-        shutil.rmtree(out_dir)
-    os.rename(tmp, out_dir)
-    write_json(
-        os.path.join(out_dir, "_rollup_manifest.json"),
-        {"dims": list(dims), "measures": dict(measures)},
-    )
+    def write(tmp: str) -> None:
+        rolled.write.mode("overwrite").parquet(tmp)
+        write_json(
+            os.path.join(tmp, "_rollup_manifest.json"),
+            {"dims": list(dims), "measures": dict(measures)},
+        )
+
+    replace_dir(out_dir, write)
 
 
 def rollup_manifest(out_dir: str) -> dict:
@@ -139,8 +137,8 @@ def rollup_add(
     the fact table: partial-aggregate the batch with the manifest's
     dims/measures, append, and let ``rollup_answer``'s re-aggregation
     absorb the duplicate dim rows (partial state is mergeable by
-    construction). Compact on a schedule via ``build_rollup`` from the
-    rollup itself being re-grouped — or simply rebuild."""
+    construction). Fold the appended state back with ``rollup_compact``
+    (``rollup compact`` on the CLI)."""
     m = rollup_manifest(out_dir)
     aggs = [F.count(F.lit(1)).alias("_rows")]
     for name, col in m["measures"].items():
@@ -157,29 +155,21 @@ def rollup_compact(spark: SparkSession, out_dir: str) -> int:
     sums/counts/_rows sum, min/max fold — never touches the fact
     table). After many ``rollup_add`` appends a dim tuple is spread
     over many state rows and small files; compaction restores one row
-    per dim tuple behind the same atomic tmp-swap discipline as
-    compact_dir. Returns the compacted row count."""
-    import shutil
+    per dim tuple, swapped in like ``build_rollup``. Returns the
+    compacted row count."""
 
-    m = rollup_manifest(out_dir)
-    rolled = spark.read.parquet(out_dir)
-    aggs = [F.sum("_rows").alias("_rows")]
-    for name in m["measures"]:
-        aggs.append(F.sum(f"_sum_{name}").alias(f"_sum_{name}"))
-        aggs.append(F.sum(f"_cnt_{name}").alias(f"_cnt_{name}"))
-        aggs.append(F.min(f"_min_{name}").alias(f"_min_{name}"))
-        aggs.append(F.max(f"_max_{name}").alias(f"_max_{name}"))
-    compacted = rolled.groupBy(*m["dims"]).agg(*aggs).select(*rolled.columns)
-    tmp_new = f"{out_dir}__compact__"
-    tmp_old = f"{out_dir}__old__"
-    compacted.write.mode("overwrite").parquet(tmp_new)
-    n = spark.read.parquet(tmp_new).count()
-    write_json(os.path.join(tmp_new, "_rollup_manifest.json"), m)
-    os.rename(out_dir, tmp_old)
-    try:
-        os.rename(tmp_new, out_dir)
-    except OSError:
-        os.rename(tmp_old, out_dir)  # restore before re-raising
-        raise
-    shutil.rmtree(tmp_old)
-    return n
+    def write(tmp: str) -> int:
+        m = rollup_manifest(out_dir)
+        rolled = spark.read.parquet(out_dir)
+        aggs = [F.sum("_rows").alias("_rows")]
+        for name in m["measures"]:
+            aggs.append(F.sum(f"_sum_{name}").alias(f"_sum_{name}"))
+            aggs.append(F.sum(f"_cnt_{name}").alias(f"_cnt_{name}"))
+            aggs.append(F.min(f"_min_{name}").alias(f"_min_{name}"))
+            aggs.append(F.max(f"_max_{name}").alias(f"_max_{name}"))
+        compacted = rolled.groupBy(*m["dims"]).agg(*aggs).select(*rolled.columns)
+        compacted.write.mode("overwrite").parquet(tmp)
+        write_json(os.path.join(tmp, "_rollup_manifest.json"), m)
+        return spark.read.parquet(tmp).count()
+
+    return replace_dir(out_dir, write)

@@ -15,24 +15,30 @@ writers make layout explicit:
   layout a downstream training-data loader wants.
 
 Both return the reloaded DataFrame so callers can assert round-trips.
+
+Every in-place rewrite here (compaction, OPTIMIZE, MERGE, CDC apply)
+installs its output through ``commit.swap_dirs``; local filesystem only
+(SCALING.md rule 37).
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import cut
-from .commit import write_json
+from .commit import recover_swaps, replace_dir, staged, swap_dirs, write_json
 
 
 def list_data_files(
     spark: SparkSession, path: str, suffix: str = ".parquet"
 ) -> list[str]:
     """Data-file listing through the Hadoop FileSystem API — the shared
-    listing for index/maintenance jobs (r9 verdict #3). ``os.listdir``
+    listing for index/maintenance jobs. ``os.listdir``
     only sees the local filesystem; routing through ``FileSystem.get``
     makes the same call work on any path shape Spark itself can read
     (file:// URIs today; hdfs://, s3a:// on a real cluster — the
@@ -59,7 +65,7 @@ def spread_repartition(
     df: DataFrame, part_col: str, spreader_col: str, n: int | None = None
 ) -> DataFrame:
     """Shuffle for a ``partitionBy(part_col)`` write WITHOUT capping the
-    write parallelism at the partition key's cardinality (r8 verdict #2).
+    write parallelism at the partition key's cardinality.
 
     ``repartition(F.col(part_col))`` hashes on the partition column
     alone, so at most #distinct(part_col) shuffle tasks are non-empty —
@@ -142,39 +148,25 @@ def compact_dir(
     path: str,
     target_files: int,
     sort_within: Sequence[str] = (),
+    root: str | None = None,
 ) -> None:
     """Small-file compaction: rewrite a parquet directory into
     ``target_files`` files. The streaming/incremental sinks above produce
     per-batch files; at 100 TB the read side dies by open-file overhead
     long before by bytes, so periodic compaction is part of the sink
-    contract.
-
-    Swap discipline: write to a temp dir, rename the old dir aside, rename
-    the new one in, then delete the old — readers never see a half-written
-    directory, only (briefly, between the two renames) a missing one.
-    LOCAL-FS ONLY: rename-based swaps don't exist on object stores; there
-    you'd compact into a new prefix and flip a table/partition pointer
-    (metastore or table-format commit) instead.
+    contract. The rewrite is staged and swapped in by
+    ``commit.replace_dir`` (in its own hidden sibling, or under an
+    artifact's ``root``), so readers never see a half-written
+    directory.
     """
-    import os
-    import shutil
-    import uuid as _uuid
 
-    token = _uuid.uuid4().hex[:8]
-    base = path.rstrip("/")
-    tmp_new = f"{base}__compact_{token}"
-    tmp_old = f"{base}__old_{token}"
-    df = spark.read.parquet(path).coalesce(target_files)
-    if sort_within:
-        df = df.sortWithinPartitions(*sort_within)
-    df.write.mode("overwrite").parquet(tmp_new)
-    os.rename(base, tmp_old)
-    try:
-        os.rename(tmp_new, base)
-    except OSError:
-        os.rename(tmp_old, base)  # roll back so the directory never vanishes
-        raise
-    shutil.rmtree(tmp_old)
+    def write(tmp: str) -> None:
+        df = spark.read.parquet(path).coalesce(target_files)
+        if sort_within:
+            df = df.sortWithinPartitions(*sort_within)
+        df.write.mode("overwrite").parquet(tmp)
+
+    replace_dir(path, write, root)
 
 
 def expire_partitions(
@@ -186,7 +178,7 @@ def expire_partitions(
 
     Unlike compact_dir this takes NO SparkSession: it is pure local-
     filesystem manipulation (list + rmtree), and a session parameter would
-    mislead callers into thinking the engine is involved (r4 advice).
+    mislead callers into thinking the engine is involved.
 
     The reference prunes job outputs older than N days by directory mtime
     (cleanup_old_jobs.py:13); at lakehouse scale retention keys on the
@@ -194,12 +186,8 @@ def expire_partitions(
     written yesterday must still expire. Directories that are not
     ``partition_col=value`` entries are left untouched (the reference's
     "keep the visualizations folder" rule, generalized). Returns the
-    removed partition values. LOCAL-FS ONLY like compact_dir; on object
-    stores this is a metastore/table-format DROP PARTITION.
+    removed partition values.
     """
-    import os
-    import shutil
-
     removed: list[str] = []
     prefix = f"{partition_col}="
     base = path.rstrip("/")
@@ -236,8 +224,6 @@ def write_with_manifest(
     ISO date/time string column first — lexicographic order matches time
     order). Returns the manifest dict.
     """
-    import os
-
     import pyarrow.parquet as pq
 
     df.write.mode("overwrite").parquet(path)
@@ -274,7 +260,6 @@ def manifest_prune(path: str, col: str, lo, hi) -> tuple[list[str], int]:
     with no stats for ``col`` — skipping is only safe when proven).
     Returns (kept_paths, total_files)."""
     import json
-    import os
 
     base = path.rstrip("/")
     with open(os.path.join(base, "_manifest.json")) as f:
@@ -305,14 +290,11 @@ def _late_evolved_columns(base: str) -> set[str]:
     """Columns absent from at least one stored data file's footer —
     i.e. added AFTER some of the table was written (additive schema
     evolution). One footer read per leaf directory: bounded metadata."""
-    import os
-
     import pyarrow.parquet as pq
 
     seen: list[set[str]] = []
-    for root, _dirs, files in os.walk(base):
-        if "__merge_" in root or "__old_" in root:
-            continue
+    for root, dirs, files in os.walk(base):
+        dirs[:] = [d for d in dirs if not d.startswith("_")]  # swap staging
         parts = sorted(f for f in files if f.endswith(".parquet"))
         if parts:
             schema = pq.read_schema(os.path.join(root, parts[0]))
@@ -341,10 +323,10 @@ def merge_upsert(
 
     The update batch's distinct partition VALUES are collected (bounded
     metadata, not data). Each affected partition is rebuilt as
-    (old ANTI-JOIN update-keys) UNION update-rows and atomically swapped
-    in; untouched partitions' files are never opened. LOCAL-FS ONLY (see
-    compact_dir); on object stores the swap is a table-format commit.
-    Returns the rewritten partition values.
+    (old ANTI-JOIN update-keys) UNION update-rows and the rebuilt
+    partitions are swapped in together (``commit.swap_dirs``); untouched
+    partitions' files are never opened. Returns the rewritten partition
+    values.
 
     ``allow_new_columns=True`` enables additive schema evolution: a
     column present on only one side surfaces as nulls on the other
@@ -353,11 +335,8 @@ def merge_upsert(
     (mergeSchema), since a plain read samples one footer and can drop
     late-added columns.
     """
-    import os
-    import shutil
-    import uuid as _uuid
-
     base = path.rstrip("/")
+    recover_swaps(base)
     parts = sorted(
         str(r[0])
         for r in updates.select(partition_col).distinct().collect()
@@ -366,7 +345,7 @@ def merge_upsert(
     # holds mixed per-partition schemas, and a plain read samples ONE
     # footer — if it samples an unevolved partition it would read (and
     # rewrite) the affected partitions WITHOUT the late-added column,
-    # silently nulling stored values (round-7 advice, high).
+    # silently nulling stored values.
     old = spark.read.option("mergeSchema", "true").parquet(base)
     new_cols = [c for c in updates.columns if c not in old.columns]
     if new_cols and not allow_new_columns:
@@ -389,7 +368,7 @@ def merge_upsert(
     # footer — i.e. the table itself predates it); a batch omitting a
     # base-schema column is almost always upstream schema drift or a
     # typo, and silently writing NULL over stored values for every
-    # upserted key is data loss (r8 advice, low). Hard error by default;
+    # upserted key is data loss. Hard error by default;
     # ``allow_missing_columns=True`` is the explicit opt-in.
     batch_missing = [c for c in old.columns if c not in updates.columns]
     if batch_missing and not allow_missing_columns:
@@ -409,31 +388,13 @@ def merge_upsert(
     merged = old.join(
         updates.select(*keys).distinct(), list(keys), "left_anti"
     ).unionByName(updates, allowMissingColumns=True)
-    token = _uuid.uuid4().hex[:8]
-    tmp = f"{base}__merge_{token}"
     (
         merged.repartition(F.col(partition_col))
         .write.mode("overwrite")
         .partitionBy(partition_col)
-        .parquet(tmp)
+        .parquet(staged(base))
     )
-    for v in parts:
-        sub = f"{partition_col}={v}"
-        new_dir = os.path.join(tmp, sub)
-        dst = os.path.join(base, sub)
-        old_dir = f"{dst}__old_{token}"
-        had_old = os.path.isdir(dst)
-        if had_old:
-            os.rename(dst, old_dir)
-        try:
-            os.rename(new_dir, dst)
-        except OSError:
-            if had_old:
-                os.rename(old_dir, dst)
-            raise
-        if had_old:
-            shutil.rmtree(old_dir)
-    shutil.rmtree(tmp)
+    swap_dirs(base, [f"{partition_col}={v}" for v in parts])
     return parts
 
 
@@ -453,7 +414,7 @@ def zorder_by(
     ``ntile().over(Window.orderBy(...))`` window, which would move the
     entire frame through ONE partition per listed column — for the one
     component whose whole job is clustering 100 TB tables, exactly the
-    scale-killer to avoid (r5 verdict #2, fixed r6). Cost at scale: one
+    scale-killer to avoid. Cost at scale: one
     range shuffle per listed column plus the join-back on a pinned row
     id — the same per-column pass Delta's OPTIMIZE ZORDER pays. The bit
     planes are then interleaved into one sort key. Returns the frame
@@ -466,7 +427,7 @@ def zorder_by(
     # cut: pins ids — monotonically_increasing_id is nondeterministic
     # under recomputation, so cut before fanning out per-column rank
     # branches that must all agree on it.
-    # MATERIALIZATION COST (r6 advice): the eager cut pins the
+    # MATERIALIZATION COST: the eager cut pins the
     # whole input in executor block storage for the duration of the
     # rewrite. That is acceptable for OPTIMIZE-style maintenance — Delta's
     # OPTIMIZE ZORDER also rewrites (and therefore holds) the files it
@@ -515,13 +476,11 @@ def apply_cdc(
     appears multiple times in one batch the LAST change wins by the
     batch's ``_seq`` column if present, else arbitrarily-deterministic
     by the op ordering D < I < U (emit _seq from your log position for
-    real CDC streams). Returns the rewritten partition values.
+    real CDC streams). A partition whose rows are all deleted is dropped
+    in the same swap. Returns the rewritten partition values.
     """
-    import os
-    import shutil
-    import uuid as _uuid
-
     base = path.rstrip("/")
+    recover_swaps(base)
     order = F.col("_seq") if "_seq" in changes.columns else F.col(op_col)
     w = Window.partitionBy(*keys).orderBy(F.desc(order))
     last = (
@@ -534,7 +493,7 @@ def apply_cdc(
     )
     # mergeSchema for the same reason as merge_upsert: a previously
     # evolved table must not lose its late-added column to a single
-    # sampled footer (round-7 advice, high).
+    # sampled footer.
     old = spark.read.option("mergeSchema", "true").parquet(base)
     want_types = dict(last.dtypes)
     for c, t in old.dtypes:
@@ -552,34 +511,15 @@ def apply_cdc(
             "the table first via merge_upsert(allow_new_columns=True)"
         )
     merged = survivors.unionByName(upserts, allowMissingColumns=True)
-    token = _uuid.uuid4().hex[:8]
-    tmp = f"{base}__cdc_{token}"
     (
         merged.repartition(F.col(partition_col))
         .write.mode("overwrite")
         .partitionBy(partition_col)
-        .parquet(tmp)
+        .parquet(staged(base))
     )
-    for v in parts:
-        sub = f"{partition_col}={v}"
-        new_dir = os.path.join(tmp, sub)
-        dst = os.path.join(base, sub)
-        old_dir = f"{dst}__old_{token}"
-        had_old = os.path.isdir(dst)
-        # a partition whose rows were ALL deleted has no dir in tmp
-        has_new = os.path.isdir(new_dir)
-        if had_old:
-            os.rename(dst, old_dir)
-        if has_new:
-            try:
-                os.rename(new_dir, dst)
-            except OSError:
-                if had_old:
-                    os.rename(old_dir, dst)
-                raise
-        if had_old:
-            shutil.rmtree(old_dir)
-    shutil.rmtree(tmp)
+    names = [f"{partition_col}={v}" for v in parts]
+    kept = [n for n in names if os.path.isdir(staged(base, n))]
+    swap_dirs(base, kept, [n for n in names if n not in kept])
     return parts
 
 
@@ -612,16 +552,12 @@ def write_jsonl_shards(
 
 
 def _versions_dir(root: str) -> str:
-    import os
-
     return os.path.join(root.rstrip("/"), "_versions")
 
 
 def snapshot_versions(root: str) -> list[int]:
     """Committed snapshot versions, ascending (uncommitted data dirs —
     crash leftovers — are invisible: only a manifest makes data live)."""
-    import os
-
     vdir = _versions_dir(root)
     if not os.path.isdir(vdir):
         return []
@@ -651,7 +587,6 @@ def commit_snapshot(
     and historical versions stay readable until expired.
     """
     import json
-    import os
 
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
@@ -686,7 +621,6 @@ def read_snapshot(
 ) -> DataFrame:
     """Time travel: read the table as of ``version`` (default: latest)."""
     import json
-    import os
 
     base = root.rstrip("/")
     versions = snapshot_versions(base)
@@ -705,8 +639,6 @@ def expire_snapshots(root: str, keep_last: int) -> list[str]:
     data files no surviving snapshot references. Returns deleted paths.
     Time travel contracts shrink; the latest snapshot is never touched."""
     import json
-    import os
-    import shutil
 
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
@@ -753,8 +685,6 @@ def vacuum_orphans(root: str, grace_seconds: float = 3600.0) -> list[str]:
     referenced).
     """
     import json
-    import os
-    import shutil
     import time
 
     base = root.rstrip("/")
@@ -847,8 +777,8 @@ def optimize_table(
     bits: int = 8,
 ) -> dict:
     """The OPTIMIZE maintenance verb: compact + Z-order-cluster +
-    rebuild the file-skipping manifest, in one pass with ``compact_dir``'s
-    atomic-swap discipline — the operational entrypoint a table owner
+    rebuild the file-skipping manifest, in one pass swapped in like
+    ``compact_dir`` — the operational entrypoint a table owner
     actually schedules (Delta's ``OPTIMIZE ... ZORDER BY`` / Iceberg's
     rewrite_data_files). Streaming/incremental sinks produce per-batch
     files whose stats ranges all overlap; after this pass the directory
@@ -856,32 +786,12 @@ def optimize_table(
     EVERY listed column. Run per partition/day slice at scale (the
     zorder_by materialization note applies). Returns the manifest.
     """
-    import os
-    import shutil
-    import uuid as _uuid
 
-    token = _uuid.uuid4().hex[:8]
-    base = path.rstrip("/")
-    tmp_new = f"{base}__optimize_{token}"
-    tmp_old = f"{base}__old_{token}"
-    df = spark.read.parquet(path)
-    z = zorder_by(df, list(zorder_cols), bits=bits, n_files=n_files)
-    try:
-        manifest = write_with_manifest(spark, z, tmp_new, list(zorder_cols))
-        os.rename(base, tmp_old)
-        try:
-            os.rename(tmp_new, base)
-        except OSError:
-            # roll the original table back into place before re-raising
-            # (mirrors compact_dir): without this, a failed second rename
-            # leaves the table directory MISSING and the finally clause
-            # deletes the optimized output too (round-7 advice, medium).
-            os.rename(tmp_old, base)
-            raise
-        shutil.rmtree(tmp_old)
-    finally:
-        shutil.rmtree(tmp_new, ignore_errors=True)
-    return manifest
+    def write(tmp: str) -> dict:
+        z = zorder_by(spark.read.parquet(path), list(zorder_cols), bits=bits, n_files=n_files)
+        return write_with_manifest(spark, z, tmp, list(zorder_cols))
+
+    return replace_dir(path, write)
 
 
 def compact_index(
@@ -895,13 +805,14 @@ def compact_index(
     for IVF, per word bucket for the BM25 text index) —
     exactly-once by design, but after N batches a query opens N files
     per probed cell. This rewrites each leaf directory down to
-    ``target_files`` via ``compact_dir``'s atomic swap. Safe w.r.t. the
+    ``target_files`` via ``compact_dir``, swapped in under the index
+    directory, so the index's one recovery (query opens, refreshes,
+    appends, the next compaction) finishes a compaction a crash left
+    open. Safe w.r.t. the
     ingest protocol: replayed batches are skipped by recorded batch id
     BEFORE any file naming matters, and new batch files never collide
     with compacted ``part-*`` names. Returns files removed (net).
     """
-    import os
-
     from .operators.similarity import INDEX_LAYOUT
 
     if kind == "text":
@@ -913,12 +824,14 @@ def compact_index(
             f"unknown index kind {kind!r}; expected {', '.join(INDEX_LAYOUT)}, or text"
         )
     root = os.path.join(index_dir, sub)
+    recover_swaps(index_dir)  # a compaction or refresh a crash left open
 
     def _count(d: str) -> int:
-        return sum(
-            len([f for f in files if f.endswith(".parquet")])
-            for _, _, files in os.walk(d)
-        )
+        n = 0
+        for _, dirs, files in os.walk(d):
+            dirs[:] = [x for x in dirs if not x.startswith("_")]  # hidden
+            n += len([f for f in files if f.endswith(".parquet")])
+        return n
 
     before = _count(root)
     leaves = [
@@ -928,7 +841,7 @@ def compact_index(
     ] or [root]
     for leaf in leaves:
         if len([f for f in os.listdir(leaf) if f.endswith(".parquet")]) > target_files:
-            compact_dir(spark, leaf, target_files)
+            compact_dir(spark, leaf, target_files, root=index_dir)
     return before - _count(root)
 
 
@@ -940,8 +853,6 @@ def manifest_prune_multi(
     intersection of per-column prunes. This is where Z-order clustering
     pays: after `optimize_table(cols=[a, b])` a two-predicate query
     skips files neither single-column layout could."""
-    import os
-
     kept_sets = []
     total = 0
     for col, (lo, hi) in preds.items():
@@ -980,7 +891,6 @@ def snapshot_diff(
     "what changed between yesterday's and today's table".
     """
     import json
-    import os
 
     base = root.rstrip("/")
     vdir = _versions_dir(base)

@@ -25,7 +25,12 @@ _spark_metadata-aware reader) so half-written files from a crashed batch
 are invisible.
 
 Every maintenance loop below runs through ``_drain``, the one
-``foreachBatch`` driver, and commits through ``commit.py``.
+``foreachBatch`` driver, and commits through ``commit.py``: appends are
+promoted under batch-stamped names (``commit.idempotent_append_dir``),
+and the loops that rewrite directories (the rollup days, the SCD2
+buckets) stage them under the table's hidden ``_swap`` directory and
+install them in one ``commit.swap_dirs``, with the batch id recorded
+inside each swapped directory.
 """
 
 from __future__ import annotations
@@ -38,7 +43,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import cut, read_events_raw
-from ..commit import applied_max, read_json, write_json
+from ..commit import (
+    applied_max,
+    idempotent_append_dir,
+    read_json,
+    recover_swaps,
+    staged,
+    swap_dirs,
+    write_json,
+)
 from .stream_ops import _DOC_SCHEMA, _stream_confs
 
 BatchFn = Callable[[DataFrame, int], None]
@@ -128,6 +141,27 @@ def read_file_sink(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(out_dir)
 
 
+_APPLIED = "_applied.json"  # a swapped directory's batch record
+
+
+def _applied(base: str, name: str) -> int:
+    """Highest batch id recorded in directory ``name`` of ``base``."""
+    return applied_max(read_json(os.path.join(base, name, _APPLIED)))
+
+
+def _swap_in_batch(
+    df: DataFrame, col: str, base: str, names: list[str], batch_id: int
+) -> None:
+    """Rewrite partitions ``names`` of ``base`` from ``df`` partitioned by
+    ``col``, each carrying the batch's record, in one swap."""
+    df.repartition(F.col(col)).write.mode("overwrite").partitionBy(col).parquet(
+        staged(base)
+    )
+    for name in names:
+        write_json(staged(base, name, _APPLIED), {"max_applied": batch_id})
+    swap_dirs(base, names)
+
+
 def stream_rollup_maintenance(
     spark: SparkSession,
     sf_dir: str,
@@ -138,19 +172,19 @@ def stream_rollup_maintenance(
     ``foreachBatch`` MERGE into a day-partitioned summary table.
 
     The incremental-materialized-view loop a 100 TB pipeline runs: each
-    micro-batch re-aggregates ONLY the days it touches (batch agg →
-    merge_upsert rewrites just those partitions), so maintenance cost
-    follows the batch's day-spread, not table size.
+    micro-batch re-aggregates ONLY the days it touches (prior day state
+    + batch agg, swapped in per day), so maintenance cost follows the
+    batch's day-spread, not table size. The aggregate state is
+    sum/count-combinable so prior+batch recombines exactly (decimal
+    value sums).
 
-    Replays: the ``_rollup_commits.json`` record skips every batch
-    already merged, since adding a batch into a prior that contains it
-    would double-count. The merge is additive, not idempotent, so the
-    loop is at-least-once across a crash between the merge and the
-    record. The aggregate state is sum/count-combinable so prior+batch
-    recombines exactly (decimal value sums).
+    Exactly-once: the merge is additive, so each rewritten day carries
+    its ``{"max_applied": N}`` record inside the same swap, and a replay
+    skips the days that already carry its batch id (the SCD2 rule). The
+    ``_rollup_commits.json`` record only skips a fully applied replay
+    early.
     """
     from ..catalog import normalize_event_ts, read_events_raw
-    from ..sinks import merge_upsert
 
     raw = read_events_raw(spark, sf_dir)
     # growing-source glob: a continuous ingest lands NEW files
@@ -174,94 +208,38 @@ def stream_rollup_maintenance(
                 F.sum(F.col("value").cast("decimal(30,10)")).alias("value_d"),
             )
         )
-        if not os.path.isdir(rollup_dir) or not any(
-            d.startswith("day=") for d in os.listdir(rollup_dir)
-        ):
-            (
-                day_agg.repartition(F.col("day"))
-                .write.mode("overwrite")
-                .partitionBy("day")
-                .parquet(rollup_dir)
-            )
-        else:
-            # combine with existing state for the affected days only
-            # (day reads back DATE-inferred from the hive path → cast to
-            # the batch's string form before the union)
-            days = [r.day for r in day_agg.select("day").distinct().collect()]
+        days = sorted(r.day for r in day_agg.select("day").distinct().collect())
+        todo = [d for d in days if batch_id > _applied(rollup_dir, f"day={d}")]
+        if not todo:
+            return  # replay: every day already carries this batch
+        combined = day_agg.where(F.col("day").isin(todo))
+        have = [
+            os.path.join(rollup_dir, f"day={d}")
+            for d in todo
+            if os.path.isdir(os.path.join(rollup_dir, f"day={d}"))
+        ]
+        if have:
+            # day reads back DATE-inferred from the hive path: cast to the
+            # batch's string form before the union
             prior = (
-                spark.read.parquet(rollup_dir)
+                spark.read.option("basePath", rollup_dir)
+                .parquet(*have)
                 .withColumn("day", F.col("day").cast("string"))
-                .where(F.col("day").isin(days))
             )
             combined = (
-                prior.unionByName(day_agg)
+                prior.unionByName(combined)
                 .groupBy("day", "event_type")
                 .agg(
                     F.sum("n_events").alias("n_events"),
                     F.sum("value_d").alias("value_d"),
                 )
             )
-            merge_upsert(
-                spark,
-                rollup_dir,
-                combined,
-                keys=["day", "event_type"],
-                partition_col="day",
-            )
+        _swap_in_batch(
+            combined, "day", rollup_dir, [f"day={d}" for d in todo], batch_id
+        )
 
+    recover_swaps(rollup_dir)  # a swap a crashed drain left open
     _drain(spark, ev, checkpoint_dir, upsert_batch, record="_rollup_commits.json")
-
-
-def _idempotent_append_dir(stage_dir: str, target_dir: str, batch_id: int) -> None:
-    """Promote a STAGED parquet write into ``target_dir`` with
-    batch-stamped deterministic file names (atomic ``os.replace`` each).
-
-    This makes an append idempotent, so the ingest loops' replay record
-    is exactly-once: a crash can no longer leave half-appended data that
-    a replay would duplicate, because a replay re-stages the SAME batch
-    (deterministic file count and contents) and re-replaces the SAME
-    destination names. Hive-partition subdirs (cell=N/...) are
-    preserved; only after every rename succeeds does the caller record
-    the batch id.
-
-    Callers stage UNDER THE TARGET ROOT (``_stage_*`` dirs — the leading
-    underscore keeps them invisible to Spark readers) so the renames are
-    same-filesystem by construction: staging under the checkpoint dir
-    would break the common layout of local checkpoint + shared-storage
-    index, where every ``os.replace`` raises EXDEV. A
-    copy+fsync+replace fallback still guards the unexpected
-    cross-device case.
-    """
-
-    def _promote(src: str, dst: str) -> None:
-        try:
-            os.replace(src, dst)
-        except OSError as e:
-            import errno
-
-            if e.errno != errno.EXDEV:
-                raise
-            # Cross-filesystem: copy to a temp name on the DESTINATION
-            # fs, fsync, then the final replace is same-fs and atomic.
-            tmp = f"{dst}.__tmp__"
-            shutil.copyfile(src, tmp)
-            with open(tmp, "rb") as f:
-                os.fsync(f.fileno())
-            os.replace(tmp, dst)
-            os.unlink(src)
-
-    for root, _dirs, files in os.walk(stage_dir):
-        parts = sorted(f for f in files if f.endswith(".parquet"))
-        if not parts:
-            continue
-        rel = os.path.relpath(root, stage_dir)
-        dest = target_dir if rel == "." else os.path.join(target_dir, rel)
-        os.makedirs(dest, exist_ok=True)
-        for i, fn in enumerate(parts):
-            _promote(
-                os.path.join(root, fn),
-                os.path.join(dest, f"batch{batch_id}_part{i:05d}.parquet"),
-            )
 
 
 def _stream_vector_ingest(
@@ -275,7 +253,7 @@ def _stream_vector_ingest(
     micro-batch of ``embeddings*.parquet`` rows is staged by the kind's
     ``*_index_add(..., stage_dir=...)``, promoted into its ingest table
     (the last directory of ``similarity.INDEX_LAYOUT[kind]``) by
-    batch-stamped renames (``_idempotent_append_dir``), then recorded in
+    batch-stamped renames (``idempotent_append_dir``), then recorded in
     ``_{kind}_commits.json``. A replay after a crash before the record
     re-stages and re-replaces the same files: exactly-once."""
     from ..operators.similarity import INDEX_LAYOUT, index_verb
@@ -297,7 +275,7 @@ def _stream_vector_ingest(
             ),
             stage_dir=stage,
         )
-        _idempotent_append_dir(stage, f"{index_dir}/{table}", batch_id)
+        idempotent_append_dir(stage, f"{index_dir}/{table}", batch_id)
         shutil.rmtree(stage, ignore_errors=True)
 
     _drain(spark, src, checkpoint_dir, add_batch, record=f"_{kind}_commits.json")
@@ -574,7 +552,7 @@ def stream_bloom_maintenance(
     O(batch), never a table rescan.
 
     Exactly-once: the batch is staged and promoted into ``table_dir``
-    under batch-stamped names (``_idempotent_append_dir``), so a replay
+    under batch-stamped names (``idempotent_append_dir``), so a replay
     re-replaces the same files instead of appending duplicates, and the
     ``_bloom_commits.json`` record skips batches already applied.
     ``bloom_index_add`` is idempotent by construction — it indexes the
@@ -591,7 +569,7 @@ def stream_bloom_maintenance(
     def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
         stage = os.path.join(table_dir, f"_stage_bloom_{batch_id}")
         batch_df.write.mode("overwrite").parquet(stage)
-        _idempotent_append_dir(stage, table_dir, batch_id)
+        idempotent_append_dir(stage, table_dir, batch_id)
         shutil.rmtree(stage, ignore_errors=True)
         if not os.path.exists(os.path.join(index_dir, "manifest.json")):
             build_bloom_index(spark, table_dir, key_col, index_dir)
@@ -615,7 +593,7 @@ def stream_text_index_maintenance(
     after any number of batches are byte-identical to a full rebuild.
 
     Exactly-once with no crash window: the batch's postings land via
-    stage -> batch-stamped atomic renames (``_idempotent_append_dir`` —
+    stage -> batch-stamped atomic renames (``idempotent_append_dir`` —
     a replay re-stages the same deterministic files and re-replaces the
     same names), and the counter bump + applied-batch record travel in
     ONE manifest write. A separate record written after the counter
@@ -641,7 +619,7 @@ def stream_text_index_maintenance(
             return  # replayed batch: postings + counters already committed
         stage = os.path.join(index_dir, f"_stage_text_{batch_id}")
         dn, ds = text_index_add(spark, batch_df, index_dir, stage_dir=stage)
-        _idempotent_append_dir(stage, os.path.join(index_dir, "postings"), batch_id)
+        idempotent_append_dir(stage, os.path.join(index_dir, "postings"), batch_id)
         _write_manifest(
             index_dir,
             man["n_docs"] + dn,
@@ -757,23 +735,17 @@ def stream_scd2_maintenance(
     Exactly-once: the merge is NOT idempotent (re-extending an open row
     against an already-applied batch would mis-close it), so each
     rewritten bucket directory carries an ``_applied.json`` batch-id
-    record INSIDE the same atomic directory swap — a crashed batch
-    re-delivers byte-identical (checkpointed file source) and skips the
-    buckets whose swap already landed, applying only the missing ones
-    (per-bucket exactly-once: the record rides inside the artifact it
-    guards). The record is the bounded ``{"max_applied": N}`` form, read
-    by ``commit.applied_max`` (which also reads legacy list records).
-    The swap itself is two renames, so it is made crash-recoverable:
-    the displaced directory gets
-    the DETERMINISTIC name ``bucket=N__old`` and ``_recover_swaps``
-    runs before every batch — a bucket=N__old with no bucket=N means
-    the crash hit between the renames (restore it); with both present
-    the second rename landed (drop the leftover). A ``_scd_meta.json``
-    at the table root records n_buckets at first write; a later apply
-    with a different --buckets fails fast instead of silently merging
-    against a mismatched pmod layout."""
-    import uuid as _uuid
-
+    record INSIDE the same directory swap (``commit.swap_dirs``) — a
+    crashed batch re-delivers byte-identical (checkpointed file source)
+    and skips the buckets that already carry it. The record is the
+    bounded ``{"max_applied": N}`` form, read by ``commit.applied_max``
+    (which also reads legacy list records). A swap a crash left open is
+    finished or discarded by ``commit.recover_swaps`` when the stream
+    starts (a batch's own swap completes or rolls back before the next
+    batch runs). A ``_scd_meta.json`` at the table root records
+    n_buckets at first write; a later apply with a different --buckets
+    fails fast instead of silently merging against a mismatched pmod
+    layout."""
     from pyspark.sql import Window as W
 
     from ..catalog import normalize_event_ts
@@ -793,27 +765,7 @@ def stream_scd2_maintenance(
     cols = ["user_id", "state", "valid_from", "valid_to", "is_current"]
     check_scd_meta(base, n_buckets)
 
-    def _bucket_max(b: int) -> int:
-        """Highest batch id applied to bucket ``b`` (-1 if none)."""
-        rec = read_json(os.path.join(base, f"bucket={b}", "_applied.json"))
-        return applied_max(rec)
-
-    def _recover_swaps() -> None:
-        """Repair any bucket directory swap a crash left half-done."""
-        if not os.path.isdir(base):
-            return
-        for name in os.listdir(base):
-            if not name.endswith("__old"):
-                continue
-            old_dir = os.path.join(base, name)
-            dst = os.path.join(base, name[: -len("__old")])
-            if os.path.isdir(dst):
-                shutil.rmtree(old_dir)  # second rename landed; drop leftover
-            else:
-                os.rename(old_dir, dst)  # crash between renames; restore
-
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_swaps()
         ev = normalize_event_ts(batch_df)
         if ev.isEmpty():
             return
@@ -823,11 +775,7 @@ def stream_scd2_maintenance(
         affected = sorted(
             int(r[0]) for r in runs.select("bucket").distinct().collect()
         )
-        todo = [
-            b
-            for b in affected
-            if batch_id > _bucket_max(b)
-        ]
+        todo = [b for b in affected if batch_id > _applied(base, f"bucket={b}")]
         if not todo:
             return  # full replay: every bucket already recorded this batch
         # cut: multi-consumer — the empty-schema fallback, first and rest
@@ -922,44 +870,9 @@ def stream_scd2_maintenance(
             .unionByName(rest)
         )
 
-        token = _uuid.uuid4().hex[:8]
-        tmp = f"{base}__scd_{token}"
-        (
-            merged.repartition(F.col("bucket"))
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(tmp)
+        _swap_in_batch(
+            merged, "bucket", base, [f"bucket={b}" for b in todo], batch_id
         )
-        os.makedirs(base, exist_ok=True)
-        for b in todo:
-            sub = f"bucket={b}"
-            new_dir = os.path.join(tmp, sub)
-            dst = os.path.join(base, sub)
-            if not os.path.isdir(new_dir):
-                # a bucket whose only rows were open rows untouched by
-                # this batch cannot occur (todo buckets all carry runs),
-                # but guard anyway
-                os.makedirs(new_dir, exist_ok=True)
-            # the batch-id record rides INSIDE the directory swap
-            write_json(
-                os.path.join(new_dir, "_applied.json"),
-                {"max_applied": max(_bucket_max(b), batch_id)},
-            )
-            # Deterministic old-dir name so a crash between the two
-            # renames is repairable by _recover_swaps on the next batch.
-            old_dir = f"{dst}__old"
-            had_old = os.path.isdir(dst)
-            if had_old:
-                os.rename(dst, old_dir)
-            try:
-                os.rename(new_dir, dst)
-            except OSError:
-                if had_old:
-                    os.rename(old_dir, dst)
-                raise
-            if had_old:
-                shutil.rmtree(old_dir)
-        shutil.rmtree(tmp, ignore_errors=True)
 
-    _recover_swaps()  # stream start: heal even if no batch fires
+    recover_swaps(base)  # a swap a crashed drain left open
     _drain(spark, src, checkpoint_dir, apply_batch)

@@ -2,8 +2,9 @@
 
 Covers the atomic JSON write, the one reader of every replay-record
 form, the fold-with-record primitive, the resume of a streaming loop
-from an older list-form record, and the rule that no other module
-writes JSON or drives ``foreachBatch``.
+from an older list-form record, the directory swap's crash matrix, and
+the rules that no other module writes JSON, drives ``foreachBatch`` or
+renames anything.
 """
 
 from __future__ import annotations
@@ -18,12 +19,18 @@ from pyspark.sql import functions as F
 
 from sentiment_analysis_vector_search_spark import commit
 from sentiment_analysis_vector_search_spark.commit import (
+    SWAP,
     applied_max,
     fold_json,
     path_digest,
     read_json,
+    recover_swaps,
+    replace_dir,
+    staged,
+    swap_dirs,
     write_json,
 )
+from tests.swaps import Crash, crash_at
 
 PKG = Path(__file__).resolve().parents[1] / "sentiment_analysis_vector_search_spark"
 
@@ -206,6 +213,19 @@ def _calls(attr: str, owner: str | None = None) -> list[tuple[str, str | None, i
     return out
 
 
+def test_only_commit_renames():
+    """Every rename in the package is a commit.py step (the JSON replace,
+    the swap, the batch-stamped promote), so the replace-a-directory
+    decision cannot drift back into the modules that rewrite data."""
+    renames = [
+        c
+        for attr in ("rename", "replace")
+        for c in _calls(attr, owner="os")
+        if c[0] != "commit.py"
+    ]
+    assert not renames, f"os.rename/os.replace outside commit.py: {renames}"
+
+
 def test_only_commit_writes_json_and_only_drain_runs_foreachbatch():
     """Every JSON file goes through commit.write_json (atomic), and every
     streaming maintenance loop through file_sink._drain."""
@@ -298,3 +318,167 @@ def test_cli_fold_verbs_rerun_on_one_file_is_a_noop(spark, tmp_path, capsys):
             out = capsys.readouterr().out
             seen.append(counted(json.loads(out[out.index("{"):])))
         assert seen[0] == seen[1], (verb, seen)
+
+
+# ---------------------------------------------------------------------------
+# The directory swap's crash matrix: plain files in directories. The swap
+# installs a (replacing a live a), installs b (new) and drops c, which is
+# four renames: a -> old, new a -> a, new b -> b, c -> old. A Crash stands
+# for a process death at a rename.
+# ---------------------------------------------------------------------------
+
+_N_RENAMES = 4
+
+
+def _files(root: str) -> dict[str, str]:
+    out = {}
+    for d, _dirs, names in os.walk(root):
+        for n in names:
+            p = os.path.join(d, n)
+            with open(p) as f:
+                out[os.path.relpath(p, root)] = f.read()
+    return out
+
+
+def _by_dir(files: dict[str, str]) -> dict[str, dict[str, str]]:
+    out: dict[str, dict[str, str]] = {}
+    for rel, text in files.items():
+        top, _, rest = rel.partition(os.sep)
+        out.setdefault(top, {})[rest] = text
+    return out
+
+
+def _put(path: str, text: str) -> None:
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "w") as f:
+        f.write(text)
+
+
+def _stage_swap(root: str) -> None:
+    """A live table (a, c, keep) and a complete staging for a and b."""
+    for name in ("a", "c", "keep"):
+        _put(os.path.join(root, name, "part-0"), f"old {name}")
+    _put(os.path.join(root, "a", "part-1"), "old a, second file")
+    _put(staged(root, "a", "part-0"), "new a")
+    _put(staged(root, "b", "part-0"), "new b")
+
+
+_BEFORE = {
+    "a/part-0": "old a",
+    "a/part-1": "old a, second file",
+    "c/part-0": "old c",
+    "keep/part-0": "old keep",
+}
+_AFTER = {"a/part-0": "new a", "b/part-0": "new b", "keep/part-0": "old keep"}
+
+
+def test_swap_installs_and_drops_in_one_commit(tmp_path):
+    root = str(tmp_path / "t")
+    _stage_swap(root)
+    swap_dirs(root, ["a", "b"], ["c"])
+    assert _files(root) == _AFTER
+    with pytest.raises(FileNotFoundError, match="nothing staged"):
+        swap_dirs(root, ["z"])
+    assert _files(root) == _AFTER
+
+
+def test_swap_crash_before_marker_writer_rolls_back_reader_waits(tmp_path):
+    root = str(tmp_path / "t")
+    _stage_swap(root)  # staged, marker never written
+    staging = _files(os.path.join(root, SWAP))
+    recover_swaps(root, forward_only=True)
+    assert _files(os.path.join(root, SWAP)) == staging
+    recover_swaps(root)
+    assert _files(root) == _BEFORE
+    assert not os.path.exists(os.path.join(root, SWAP))
+
+
+@pytest.mark.parametrize("forward_only", [False, True])
+@pytest.mark.parametrize("step", range(_N_RENAMES))
+def test_swap_crash_after_marker_rolls_forward(tmp_path, monkeypatch, step, forward_only):
+    root = str(tmp_path / "t")
+    _stage_swap(root)
+    crash_at(monkeypatch, step)
+    with pytest.raises(Crash):
+        swap_dirs(root, ["a", "b"], ["c"])
+    monkeypatch.undo()
+    # every live directory is whole: all old or all new, never mixed
+    live = _by_dir({k: v for k, v in _files(root).items() if not k.startswith(SWAP)})
+    for name, files in live.items():
+        assert files in (_by_dir(_BEFORE).get(name), _by_dir(_AFTER).get(name)), name
+    recover_swaps(root, forward_only=forward_only)
+    assert _files(root) == _AFTER
+    recover_swaps(root)  # idempotent once finished
+    assert _files(root) == _AFTER
+
+
+def test_swap_leftover_after_success_is_cleared(tmp_path):
+    root = str(tmp_path / "t")
+    _stage_swap(root)
+    swap_dirs(root, ["a", "b"], ["c"])
+    # a crash after the marker was removed, before the staging was
+    _put(os.path.join(root, SWAP, "old", "a", "part-0"), "old a")
+    _put(staged(root, "_SUCCESS"), "")
+    recover_swaps(root, forward_only=True)
+    assert os.path.isdir(os.path.join(root, SWAP))
+    recover_swaps(root)
+    assert _files(root) == _AFTER
+
+
+@pytest.mark.parametrize("step", range(_N_RENAMES))
+def test_swap_oserror_in_writer_rolls_back_in_full(tmp_path, monkeypatch, step):
+    root = str(tmp_path / "t")
+    _stage_swap(root)
+    crash_at(monkeypatch, step, OSError("simulated rename failure"))
+    with pytest.raises(OSError, match="simulated"):
+        swap_dirs(root, ["a", "b"], ["c"])
+    monkeypatch.undo()
+    assert _files(root) == _BEFORE
+    assert not os.path.exists(os.path.join(root, SWAP))
+
+
+@pytest.mark.parametrize("step", range(_N_RENAMES))
+def test_swap_reader_recovery_leaves_a_live_writer_alone(tmp_path, monkeypatch, step):
+    """A query open's recovery that runs while the writer is between
+    its renames neither takes a step of its own nor retires the swap:
+    the writer finishes, and every directory is whole."""
+    root = str(tmp_path / "t")
+    _stage_swap(root)
+    real, calls = os.rename, []
+
+    def rename(src, dst):
+        calls.append(src)
+        if len(calls) == step + 1:
+            recover_swaps(root, forward_only=True)  # another process's open
+        real(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+    swap_dirs(root, ["a", "b"], ["c"])
+    monkeypatch.undo()
+    assert len(calls) == _N_RENAMES
+    assert _files(root) == _AFTER
+
+
+def test_replace_dir_siblings_swap_independently(tmp_path):
+    """Two sibling directories rewritten with interleaved staging: the
+    inner rewrite's recovery and swap leave the outer one's staging
+    alone, and the swap directories hold no ``=``, which Spark would
+    read as a partition."""
+    parent = str(tmp_path)
+    for name in ("day=1", "day=2"):
+        _put(os.path.join(parent, name, "part-0"), f"old {name}")
+
+    def write(name: str, inner=None):
+        def fill(staging: str) -> None:
+            assert "=" not in os.path.relpath(staging, parent).split(os.sep)[0]
+            _put(os.path.join(staging, "part-0"), f"new {name}")
+            if inner is not None:
+                inner()
+
+        return fill
+
+    replace_dir(
+        os.path.join(parent, "day=1"),
+        write("day=1", lambda: replace_dir(os.path.join(parent, "day=2"), write("day=2"))),
+    )
+    assert _files(parent) == {"day=1/part-0": "new day=1", "day=2/part-0": "new day=2"}

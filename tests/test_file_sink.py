@@ -42,74 +42,66 @@ def test_stream_ingest_exactly_once(spark, sf_dir, tmp_path):
     assert again.select("doc_id").distinct().count() == n_want
 
 
-def test_stream_rollup_maintenance_incremental(spark, sf_dir, tmp_path):
-    """Rollup maintenance: initial drain builds the summary; a replayed
-    drain with nothing new changes nothing; a new source file merges
-    only its days. The rollup must always equal the batch aggregate over
-    everything ingested so far."""
-    import glob
+def _day_rollup(spark, paths):
+    """{(day, event_type): (n_events, value sum)} of the event files
+    ``paths`` in one pass: what the maintained rollup must equal."""
+    from sentiment_analysis_vector_search_spark.catalog import normalize_event_ts
+
+    out = {}
+    for p in paths:
+        df = normalize_event_ts(spark.read.parquet(p))
+        for r in (
+            df.groupBy(
+                F.date_format("ts", "yyyy-MM-dd").alias("day"), "event_type"
+            )
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.col("value").cast("decimal(30,10)"))
+                .cast("double")
+                .alias("v"),
+            )
+            .collect()
+        ):
+            k = (r.day, r.event_type)
+            n0, v0 = out.get(k, (0, 0.0))
+            out[k] = (n0 + r.n, v0 + float(r.v))
+    return out
+
+
+def _rollup_state(spark, rollup):
+    return {
+        (str(r.day), r.event_type): (r.n_events, float(r.value_d))
+        for r in spark.read.parquet(rollup).collect()
+    }
+
+
+def _assert_rollup_matches(spark, rollup, paths):
+    got, want = _rollup_state(spark, rollup), _day_rollup(spark, paths)
+    assert set(got) == set(want)
+    for k in want:
+        assert got[k][0] == want[k][0], k
+        assert abs(got[k][1] - want[k][1]) < 1e-6, k
+
+
+def _seed_events(sf_dir, src_dir):
+    """Copy the seed events file into a fresh stream source directory."""
     import os
     import shutil
 
-    from sentiment_analysis_vector_search_spark.catalog import normalize_event_ts
-    from sentiment_analysis_vector_search_spark.streaming.file_sink import (
-        stream_rollup_maintenance,
-    )
-
-    src_dir = str(tmp_path / "src")
-    rollup = str(tmp_path / "rollup")
-    ckpt = str(tmp_path / "rckpt")
     os.makedirs(src_dir)
     shutil.copy(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
+    return f"{src_dir}/events.parquet"
 
-    def agg_of(paths):
-        out = {}
-        for p in paths:
-            df = normalize_event_ts(spark.read.parquet(p))
-            for r in (
-                df.groupBy(
-                    F.date_format("ts", "yyyy-MM-dd").alias("day"), "event_type"
-                )
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(F.col("value").cast("decimal(30,10)"))
-                    .cast("double")
-                    .alias("v"),
-                )
-                .collect()
-            ):
-                k = (r.day, r.event_type)
-                n0, v0 = out.get(k, (0, 0.0))
-                out[k] = (n0 + r.n, v0 + float(r.v))
-        return out
 
-    def rollup_state():
-        return {
-            (str(r.day), r.event_type): (r.n_events, float(r.value_d))
-            for r in spark.read.parquet(rollup).collect()
-        }
+def _land_extra_events(spark, src_dir, tmp_path):
+    """Land a second events file (shifted ids, doubled values) in the
+    source. Built from the RAW read so the new file keeps the seed's ts
+    encoding — the stream reads every file with the schema probed from
+    the seed (ts encodings have changed between rounds; a normalized-ts
+    file would diverge)."""
+    import glob
+    import os
 
-    def assert_matches(paths):
-        got, want = rollup_state(), agg_of(paths)
-        assert set(got) == set(want)
-        for k in want:
-            assert got[k][0] == want[k][0], k
-            assert abs(got[k][1] - want[k][1]) < 1e-6, k
-
-    # 1. initial build
-    stream_rollup_maintenance(spark, src_dir, rollup, ckpt)
-    assert_matches([f"{src_dir}/events.parquet"])
-
-    # 2. replay with no new data: unchanged
-    before = rollup_state()
-    stream_rollup_maintenance(spark, src_dir, rollup, ckpt)
-    assert rollup_state() == before
-
-    # 3. incremental: a NEW file lands (shifted ids, doubled values);
-    # the next drain merges only its days. Built from the RAW read so
-    # the new file keeps the seed's ts encoding — the stream reads every
-    # file with the schema probed from the seed (ts encodings have
-    # changed between rounds; a normalized-ts file would diverge).
     base = spark.read.parquet(f"{src_dir}/events.parquet")
     extra = base.limit(500).select(
         (F.col("event_id") + 10_000_000).alias("event_id"),
@@ -123,9 +115,68 @@ def test_stream_rollup_maintenance_incremental(spark, sf_dir, tmp_path):
     extra.coalesce(1).write.parquet(tmp_extra)
     part = glob.glob(f"{tmp_extra}/part-*.parquet")[0]
     os.replace(part, f"{src_dir}/events_2.parquet")
+    return f"{src_dir}/events_2.parquet"
 
+
+def test_stream_rollup_maintenance_incremental(spark, sf_dir, tmp_path):
+    """Rollup maintenance: initial drain builds the summary; a replayed
+    drain with nothing new changes nothing; a new source file merges
+    only its days. The rollup must always equal the batch aggregate over
+    everything ingested so far."""
+    from sentiment_analysis_vector_search_spark.streaming.file_sink import (
+        stream_rollup_maintenance,
+    )
+
+    src_dir = str(tmp_path / "src")
+    rollup = str(tmp_path / "rollup")
+    ckpt = str(tmp_path / "rckpt")
+    seed = _seed_events(sf_dir, src_dir)
+
+    # 1. initial build
     stream_rollup_maintenance(spark, src_dir, rollup, ckpt)
-    assert_matches([f"{src_dir}/events.parquet", f"{src_dir}/events_2.parquet"])
+    _assert_rollup_matches(spark, rollup, [seed])
+
+    # 2. replay with no new data: unchanged
+    before = _rollup_state(spark, rollup)
+    stream_rollup_maintenance(spark, src_dir, rollup, ckpt)
+    assert _rollup_state(spark, rollup) == before
+
+    # 3. incremental: a NEW file lands; the next drain merges only its days
+    extra = _land_extra_events(spark, src_dir, tmp_path)
+    stream_rollup_maintenance(spark, src_dir, rollup, ckpt)
+    _assert_rollup_matches(spark, rollup, [seed, extra])
+
+
+def test_stream_rollup_maintenance_crash_before_record_is_exactly_once(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A crash after a batch's day swap and before its replay record
+    must not double-count the batch when the drain resumes: the days it
+    rewrote carry its id inside the swap, so the replay skips them."""
+    import pytest
+
+    from sentiment_analysis_vector_search_spark.streaming import file_sink
+
+    src_dir = str(tmp_path / "src")
+    rollup = str(tmp_path / "rollup")
+    ckpt = str(tmp_path / "rckpt")
+    seed = _seed_events(sf_dir, src_dir)
+    file_sink.stream_rollup_maintenance(spark, src_dir, rollup, ckpt)
+    extra = _land_extra_events(spark, src_dir, tmp_path)
+
+    real = file_sink.write_json
+
+    def crash_before_record(path, obj):
+        if path.endswith("_rollup_commits.json"):
+            raise RuntimeError("crash between the day swap and the record")
+        real(path, obj)
+
+    monkeypatch.setattr(file_sink, "write_json", crash_before_record)
+    with pytest.raises(Exception, match="crash between"):
+        file_sink.stream_rollup_maintenance(spark, src_dir, rollup, ckpt)
+    monkeypatch.undo()
+    file_sink.stream_rollup_maintenance(spark, src_dir, rollup, ckpt)  # replays
+    _assert_rollup_matches(spark, rollup, [seed, extra])
 
 
 def test_stream_ingest_dedup_gates_against_history(spark, sf_dir, tmp_path):

@@ -12,6 +12,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from sentiment_analysis_vector_search_spark.commit import SWAP, recover_swaps, staged
 from sentiment_analysis_vector_search_spark.operators.ivfpq import (
     ann_ivfpq_index_query,
     build_ivfpq_index,
@@ -21,6 +22,7 @@ from sentiment_analysis_vector_search_spark.operators.similarity import (
     _N_QUERIES,
     _vectors,
 )
+from tests.swaps import Crash, crash_at, stage_copy, torn_swap
 
 
 def _queries(spark, sf_dir):
@@ -160,6 +162,40 @@ def test_compact_preserves_answers(spark, sf_dir, tmp_path):
     assert _rows(ann_ivfpq_index_query(spark, idx, q, prim)) == before
 
 
+def test_compact_crash_hides_staging(spark, sf_dir, tmp_path, monkeypatch):
+    """A process death in the middle of compacting a ``cell=N`` leaf
+    leaves nothing a reader takes for data: no duplicate code row and an
+    integer ``cell``. Writer recovery then holds every code row once."""
+    from sentiment_analysis_vector_search_spark.sinks import compact_index
+
+    full, idx = str(tmp_path / "full"), str(tmp_path / "inc")
+    build_ivfpq_index(spark, sf_dir, full)
+    for name in ("coarse_codebook", "pq_codebook"):
+        shutil.copytree(f"{full}/{name}", f"{idx}/{name}")
+    vecs = _vectors(spark, sf_dir).select("vec_id", "v")
+    for i in (0, 1):  # two appends: cells hold several files
+        ivfpq_index_add(spark, idx, vecs.where(F.col("vec_id") % 2 == i))
+    codes = f"{idx}/codes"
+
+    def rows():  # one code row per (vector, subspace)
+        return sorted((r.vec_id, r.s) for r in spark.read.parquet(codes).collect())
+
+    want = rows()
+    assert len(want) == len(set(want))
+
+    crash_at(monkeypatch, 0)  # the compaction's first rename
+    with pytest.raises(Crash):
+        compact_index(spark, idx, "ivfpq")
+    monkeypatch.undo()
+    seen = spark.read.parquet(codes)
+    assert dict(seen.dtypes)["cell"] == "int"
+    got = rows()
+    assert len(got) == len(set(got))
+
+    recover_swaps(idx)  # the index's writer recovery covers its leaves
+    assert rows() == want
+
+
 def test_codes_scan_is_cell_pruned(spark, sf_dir, tmp_path):
     from sentiment_analysis_vector_search_spark.plans import plan_str
 
@@ -224,10 +260,7 @@ def test_ivfpq_codebook_refresh_swap_and_full_rebuild(spark, sf_dir, tmp_path):
     n_before = spark.read.parquet(f"{idx}/codes").count()
     out = ivfpq_codebook_refresh(spark, idx, vecs, force=True)
     assert out["refreshed"] is True
-    for name in _IVFPQ_LIFECYCLE_DIRS:
-        for suffix in ("__new", "__old"):
-            assert not os.path.exists(os.path.join(idx, name + suffix))
-    assert not os.path.exists(os.path.join(idx, "_refresh_commit.json"))
+    assert not os.path.exists(os.path.join(idx, SWAP))
 
     # full rebuild pin: stored codes == assign+encode from scratch
     # against BOTH refreshed codebooks
@@ -271,44 +304,28 @@ def test_ivfpq_codebook_refresh_swap_and_full_rebuild(spark, sf_dir, tmp_path):
 def test_ivfpq_refresh_crash_recovery_and_forward_only_open(spark, sf_dir, tmp_path):
     """Writer recovery handles both crash states over the three
     directories; a query open never deletes uncommitted staging."""
-    import json
-
-    from sentiment_analysis_vector_search_spark.operators.ivfpq import (
-        ivfpq_index_recover,
-    )
 
     idx = str(tmp_path / "ivfpq")
     build_ivfpq_index(spark, sf_dir, idx)
     vecs = _vectors(spark, sf_dir).select("vec_id", "v")
     q = _queries(spark, sf_dir)
-    coarse = os.path.join(idx, "coarse_codebook")
-    pq_cb = os.path.join(idx, "pq_codebook")
 
     # uncommitted staging: query-open leaves it; writer recovery removes
-    shutil.copytree(coarse, coarse + "__new")
+    stage_copy(idx, "coarse_codebook")
     got = ann_ivfpq_index_query(spark, idx, q, vecs, exclude_self=True)
     assert got.count() > 0
-    assert os.path.isdir(coarse + "__new"), "query open deleted live staging"
-    ivfpq_index_recover(idx)
-    assert not os.path.isdir(coarse + "__new")
+    assert os.path.isdir(staged(idx, "coarse_codebook")), "query open deleted live staging"
+    recover_swaps(idx)
+    assert not os.path.isdir(staged(idx, "coarse_codebook"))
 
     # committed, crash mid-swap in the worst state: both codebooks
-    # displaced, codes __new staged but not installed
-    for d in (coarse, pq_cb):
-        shutil.copytree(d, d + "__new")
-    codes = os.path.join(idx, "codes")
-    shutil.copytree(codes, codes + "__new")
-    with open(os.path.join(idx, "_refresh_commit.json"), "w") as f:
-        json.dump({"drift_at_refresh": {}}, f)
-    os.rename(coarse, coarse + "__old")
-    os.rename(pq_cb, pq_cb + "__old")
+    # displaced, codes staged but not installed
+    torn_swap(idx, _IVFPQ_LIFECYCLE_DIRS, ("coarse_codebook", "pq_codebook"))
     got = ann_ivfpq_index_query(spark, idx, q, vecs, exclude_self=True)
     assert got.count() > 0  # the open itself rolled the swap forward
     for name in _IVFPQ_LIFECYCLE_DIRS:
         assert os.path.isdir(os.path.join(idx, name))
-        for suffix in ("__new", "__old"):
-            assert not os.path.exists(os.path.join(idx, name + suffix))
-    assert not os.path.exists(os.path.join(idx, "_refresh_commit.json"))
+    assert not os.path.exists(os.path.join(idx, SWAP))
 
 
 def test_ivfpq_refinement_audit_grid(spark, sf_dir, tmp_path):

@@ -191,7 +191,7 @@ def test_cli_pq_and_ivfpq_refresh_verbs(spark, sf_dir, tmp_path, capsys):
         assert rc == 0
         done = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
         assert done["refreshed"] is True
-        assert not os.path.exists(os.path.join(out, "_refresh_commit.json"))
+        assert not os.path.exists(os.path.join(out, "_swap"))
         emb = f"{sf_dir}/embeddings.parquet"
         rc = main(
             ["knn", kind, out, "--vectors-dir", emb, "--query-vec-id", "1", "--k", "5"]

@@ -175,4 +175,44 @@ def test_rollup_compact_state_aware(spark, sf_dir, tmp_path):
     assert n == spark.read.parquet(out).select("l_returnflag", "l_linestatus").distinct().count()
     after = _rows(rollup_answer(spark, out, ["l_returnflag"], WANTS))
     assert after == before
-    assert not any("__compact__" in d or "__old__" in d for d in os.listdir(tmp_path))
+    assert os.listdir(tmp_path) == ["mv"]  # no staging left
+
+
+def test_cli_rollup_compact_folds_added_state(spark, sf_dir, tmp_path, capsys):
+    """``rollup compact`` folds the partial state ``rollup add`` appends:
+    after build, add, add, compact the answers are unchanged and the
+    rollup holds one state row per dim tuple."""
+    import json
+
+    from sentiment_analysis_vector_search_spark.__main__ import main
+    from sentiment_analysis_vector_search_spark.catalog import table
+
+    li = table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_returnflag", "l_linestatus", "l_quantity"
+    )
+    srcs = []
+    for i in range(3):
+        srcs.append(str(tmp_path / f"facts{i}"))
+        li.where(F.col("l_orderkey") % 3 == i).write.parquet(srcs[-1])
+    out = str(tmp_path / "mv")
+
+    def run(*argv):
+        assert main(list(argv)) == 0
+        return [json.loads(ln) for ln in capsys.readouterr().out.splitlines() if ln.startswith("{")]
+
+    run("rollup", "build", out, "--source", srcs[0],
+        "--dims", "l_returnflag,l_linestatus", "--measures", "qty=l_quantity")
+    for src in srcs[1:]:
+        run("rollup", "add", out, "--source", src)
+
+    def answer():
+        rows = run("rollup", "answer", out, "--group-by", "l_returnflag",
+                   "--wants", "sum:qty,avg:qty,min:qty,max:qty,count:*")
+        return sorted(json.dumps(r, sort_keys=True) for r in rows)
+
+    before = answer()
+    state_before = spark.read.parquet(out).count()
+    (done,) = run("rollup", "compact", out)
+    assert answer() == before
+    dims = spark.read.parquet(out).select("l_returnflag", "l_linestatus")
+    assert done["state_rows"] == dims.count() == dims.distinct().count() < state_before

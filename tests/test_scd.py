@@ -179,11 +179,14 @@ def test_stream_scd2_equals_rebuild_and_replay_noop(spark, sf_dir, tmp_path):
 
 
 def test_stream_scd2_swap_crash_recovery(spark, sf_dir, tmp_path):
-    """r10 advice (medium): a crash between the two swap renames leaves
-    ``bucket=N`` missing and ``bucket=N__old`` holding all history. The
-    deterministic old-dir name + recovery pass before each batch must
-    restore it, so the next apply still converges to the full rebuild."""
+    """A crash between the two swap renames leaves ``bucket=N`` missing,
+    displaced into the hidden ``_swap`` directory with all its history.
+    The recovery pass before each batch must restore it, so the next
+    apply still converges to the full rebuild."""
     import os
+
+    from sentiment_analysis_vector_search_spark.commit import SWAP
+    from tests.swaps import torn_swap
 
     from pyspark.sql import functions as F
 
@@ -215,13 +218,11 @@ def test_stream_scd2_swap_crash_recovery(spark, sf_dir, tmp_path):
     bucket = next(
         d for d in sorted(os.listdir(scd_dir)) if d.startswith("bucket=")
     )
-    os.rename(
-        os.path.join(scd_dir, bucket), os.path.join(scd_dir, bucket + "__old")
-    )
+    torn_swap(scd_dir, (bucket,), (bucket,))
 
     _write_single(ev.where(c > cut), tmp_path, "b", src, "events_b.parquet")
     stream_scd2_maintenance(spark, src, scd_dir, ckpt)
-    assert not os.path.exists(os.path.join(scd_dir, bucket + "__old"))
+    assert not os.path.exists(os.path.join(scd_dir, SWAP))
     want = {
         (r["user_id"], r["state"], str(r["valid_from"]),
          str(r["valid_to"]), r["is_current"])
@@ -229,10 +230,10 @@ def test_stream_scd2_swap_crash_recovery(spark, sf_dir, tmp_path):
     }
     assert _scd_table(spark, scd_dir) == want
 
-    # the leftover-after-success shape: both dst and __old present
-    os.makedirs(os.path.join(scd_dir, bucket + "__old"), exist_ok=True)
+    # the leftover-after-success shape: both dst and a displaced copy
+    os.makedirs(os.path.join(scd_dir, SWAP, "old", bucket), exist_ok=True)
     stream_scd2_maintenance(spark, src, scd_dir, ckpt)  # no new files
-    assert not os.path.exists(os.path.join(scd_dir, bucket + "__old"))
+    assert not os.path.exists(os.path.join(scd_dir, SWAP))
     assert _scd_table(spark, scd_dir) == want
 
 
@@ -273,7 +274,7 @@ def test_stream_scd2_bucket_pin_and_bounded_record(spark, sf_dir, tmp_path):
     recs = [
         os.path.join(scd_dir, d, "_applied.json")
         for d in os.listdir(scd_dir)
-        if d.startswith("bucket=") and not d.endswith("__old")
+        if d.startswith("bucket=")
     ]
     assert recs
     for p in recs:

@@ -1,7 +1,9 @@
 import pytest
 from pyspark.sql import functions as F
 
+from sentiment_analysis_vector_search_spark.commit import SWAP, recover_swaps, staged
 from tests.parity import assert_parity
+from tests.swaps import Crash, crash_at, stage_copy, torn_swap
 
 SIMILARITY = [
     "ann_bruteforce_topk",
@@ -355,16 +357,14 @@ def test_ivf_codebook_refresh_drift_trigger_and_swap(spark, sf_dir, tmp_path):
     # gate: threshold above the measured drift -> measurement-only no-op
     out = ivf_codebook_refresh(spark, index_dir, max_drift=d0["max_drift"] + 1.0)
     assert out["refreshed"] is False
-    assert not os.path.isdir(os.path.join(index_dir, "codebook__new"))
+    assert not os.path.exists(os.path.join(index_dir, SWAP))
 
     n_before = spark.read.parquet(f"{index_dir}/assignments").count()
     out = ivf_codebook_refresh(spark, index_dir, force=True)
     assert out["refreshed"] is True
     # swap is complete: no staging/marker leftovers, row count preserved,
     # every vector still assigned to exactly one cell
-    for leftover in ("codebook__new", "assignments__new", "codebook__old",
-                     "assignments__old", "_refresh_commit.json"):
-        assert not os.path.exists(os.path.join(index_dir, leftover)), leftover
+    assert not os.path.exists(os.path.join(index_dir, SWAP))
     asg = spark.read.parquet(f"{index_dir}/assignments")
     assert asg.count() == n_before
     assert asg.groupBy("vec_id").count().where("count > 1").count() == 0
@@ -381,14 +381,11 @@ def test_ivf_codebook_refresh_drift_trigger_and_swap(spark, sf_dir, tmp_path):
 
 def test_ivf_refresh_crash_recovery(spark, sf_dir, tmp_path):
     """Marker present -> recovery rolls FORWARD to the new index;
-    marker absent -> stray __new staging rolls BACK to the current."""
-    import json
+    marker absent -> stray staging rolls BACK to the current."""
     import os
-    import shutil
 
     from sentiment_analysis_vector_search_spark.operators.similarity import (
         build_ivf_index,
-        ivf_index_recover,
     )
 
     index_dir = str(tmp_path / "ivf")
@@ -397,33 +394,92 @@ def test_ivf_refresh_crash_recovery(spark, sf_dir, tmp_path):
     asg = os.path.join(index_dir, "assignments")
 
     # uncommitted staging (crash before the marker): rolled back
-    shutil.copytree(cb, cb + "__new")
-    ivf_index_recover(index_dir)
-    assert not os.path.isdir(cb + "__new") and os.path.isdir(cb)
+    stage_copy(index_dir, "codebook")
+    recover_swaps(index_dir)
+    assert not os.path.isdir(staged(index_dir, "codebook")) and os.path.isdir(cb)
 
     # committed refresh, crash mid-swap in the WORST state: codebook
-    # already displaced to __old, new not yet renamed, assignments
-    # untouched -> forward recovery installs __new everywhere
-    shutil.copytree(cb, cb + "__new")
-    shutil.copytree(asg, asg + "__new")
-    with open(os.path.join(index_dir, "_refresh_commit.json"), "w") as f:
-        json.dump({"drift_at_refresh": {}}, f)
-    os.rename(cb, cb + "__old")
-    ivf_index_recover(index_dir)
-    for leftover in ("codebook__new", "assignments__new", "codebook__old",
-                     "assignments__old", "_refresh_commit.json"):
-        assert not os.path.exists(os.path.join(index_dir, leftover)), leftover
+    # already displaced, new not yet renamed, assignments untouched ->
+    # forward recovery installs the staging everywhere
+    torn_swap(index_dir, ("codebook", "assignments"), ("codebook",))
+    recover_swaps(index_dir)
+    assert not os.path.exists(os.path.join(index_dir, SWAP))
     # index is readable and complete after recovery
     assert spark.read.parquet(cb).count() >= 2
     assert spark.read.parquet(asg).count() > 0
 
 
+def test_refresh_after_compaction_crash_keeps_every_vector(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A compaction that died between displacing a ``cell=N`` leaf and
+    installing its rewrite, then a refresh: the refresh first finishes
+    the compaction (one swap root per index), so its full re-assign
+    reads, and keeps, every vector."""
+    import shutil
+
+    from sentiment_analysis_vector_search_spark.operators.similarity import (
+        build_ivf_index,
+        ivf_codebook_refresh,
+        ivf_index_add,
+    )
+    from sentiment_analysis_vector_search_spark.sinks import compact_index
+
+    full, idx = str(tmp_path / "full"), str(tmp_path / "inc")
+    build_ivf_index(spark, sf_dir, full)
+    shutil.copytree(f"{full}/codebook", f"{idx}/codebook")
+    vecs = spark.read.parquet(f"{full}/assignments").select("vec_id", "v")
+    for i in (0, 1):  # two appends: cells hold several files
+        ivf_index_add(spark, idx, vecs.where(F.col("vec_id") % 2 == i))
+    want = sorted(r.vec_id for r in vecs.collect())
+
+    crash_at(monkeypatch, 1)  # the install, right after the displacement
+    with pytest.raises(Crash):
+        compact_index(spark, idx, "ivf")
+    monkeypatch.undo()
+    ivf_codebook_refresh(spark, idx, force=True)
+    got = sorted(r.vec_id for r in spark.read.parquet(f"{idx}/assignments").collect())
+    assert got == want
+
+
+@pytest.mark.parametrize("step", [0, 1])
+def test_append_after_compaction_crash_keeps_every_vector(
+    spark, sf_dir, tmp_path, monkeypatch, step
+):
+    """A compaction that died before (step 0) or right after (step 1)
+    displacing a ``cell=N`` leaf, then an append: the append finishes the
+    compaction first, so the later recovery displaces none of the new
+    batch, and every vector is stored exactly once."""
+    import shutil
+
+    from sentiment_analysis_vector_search_spark.operators.similarity import (
+        build_ivf_index,
+        ivf_index_add,
+    )
+    from sentiment_analysis_vector_search_spark.sinks import compact_index
+
+    full, idx = str(tmp_path / "full"), str(tmp_path / "inc")
+    build_ivf_index(spark, sf_dir, full)
+    shutil.copytree(f"{full}/codebook", f"{idx}/codebook")
+    vecs = spark.read.parquet(f"{full}/assignments").select("vec_id", "v")
+    for i in (0, 1):  # two appends: cells hold several files
+        ivf_index_add(spark, idx, vecs.where(F.col("vec_id") % 3 == i))
+    want = sorted(r.vec_id for r in vecs.collect())
+
+    crash_at(monkeypatch, step)
+    with pytest.raises(Crash):
+        compact_index(spark, idx, "ivf")
+    monkeypatch.undo()
+    ivf_index_add(spark, idx, vecs.where(F.col("vec_id") % 3 == 2))
+    recover_swaps(idx)
+    got = sorted(r.vec_id for r in spark.read.parquet(f"{idx}/assignments").collect())
+    assert got == want
+
+
 def test_ivf_query_open_recovers_torn_swap(spark, sf_dir, tmp_path):
     """ann_ivf_index_query completes a committed-but-torn refresh swap
     at open, so readers never see a missing/partial directory."""
-    import json
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -437,28 +493,24 @@ def test_ivf_query_open_recovers_torn_swap(spark, sf_dir, tmp_path):
     index_dir = str(tmp_path / "ivf")
     build_ivf_index(spark, sf_dir, index_dir)
     cb = os.path.join(index_dir, "codebook")
-    # committed refresh crashed with the codebook displaced and __new
-    # not yet installed — a plain read of codebook/ would fail
-    shutil.copytree(cb, cb + "__new")
-    with open(os.path.join(index_dir, "_refresh_commit.json"), "w") as f:
-        json.dump({}, f)
-    os.rename(cb, cb + "__old")
+    # committed refresh crashed with the codebook displaced and its
+    # staging not yet installed — a plain read of codebook/ would fail
+    torn_swap(index_dir, ("codebook",), ("codebook",))
     queries = _vectors(spark, sf_dir).where(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
     got = ann_ivf_index_query(spark, index_dir, queries)
     assert got.count() > 0
     assert os.path.isdir(cb)
-    assert not os.path.exists(os.path.join(index_dir, "_refresh_commit.json"))
+    assert not os.path.exists(os.path.join(index_dir, SWAP))
 
 
 def test_ivf_query_open_is_forward_only(spark, sf_dir, tmp_path):
-    """A query open must NOT delete uncommitted __new staging — it may
-    belong to a refresh that is still writing (r12 advice, the
-    writer/reader contract in similarity.py); only the refresh writer
-    (ivf_index_recover default mode) rolls staging back."""
+    """A query open must NOT delete uncommitted staging — it may
+    belong to a refresh that is still writing (the writer/reader
+    contract, SCALING.md rule 37); only the refresh writer
+    (recover_swaps default mode) rolls staging back."""
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -467,28 +519,26 @@ def test_ivf_query_open_is_forward_only(spark, sf_dir, tmp_path):
         _vectors,
         ann_ivf_index_query,
         build_ivf_index,
-        ivf_index_recover,
     )
 
     index_dir = str(tmp_path / "ivf")
     build_ivf_index(spark, sf_dir, index_dir)
-    cb = os.path.join(index_dir, "codebook")
-    shutil.copytree(cb, cb + "__new")
+    stage_copy(index_dir, "codebook")
     queries = _vectors(spark, sf_dir).where(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
     got = ann_ivf_index_query(spark, index_dir, queries)
     assert got.count() > 0
-    assert os.path.isdir(cb + "__new"), "query open deleted live staging"
+    assert os.path.isdir(staged(index_dir, "codebook")), "query open deleted live staging"
     # the writer-side recover is the one that rolls it back
-    ivf_index_recover(index_dir)
-    assert not os.path.isdir(cb + "__new")
+    recover_swaps(index_dir)
+    assert not os.path.isdir(staged(index_dir, "codebook"))
 
 
 def test_one_dot_product_and_refresh_marker_spelling():
     """The left-fold dot product is spelled once (functions/vectors.py)
-    and the refresh marker file name once (similarity.py), so every
-    index kind and every caller share them."""
+    and the swap marker file name once (commit.py), so every index kind
+    and every caller share them."""
     from pathlib import Path
 
     pkg = Path(__file__).resolve().parents[1] / "sentiment_analysis_vector_search_spark"
@@ -498,9 +548,9 @@ def test_one_dot_product_and_refresh_marker_spelling():
             for p in sorted(pkg.rglob("*.py"))
             for _ in range(p.read_text().count(needle))
         ]
-        for needle in ("aggregate(zip_with(", "_refresh_commit.json")
+        for needle in ("aggregate(zip_with(", '"commit.json"')
     }
     assert hits == {
         "aggregate(zip_with(": ["functions/vectors.py"],
-        "_refresh_commit.json": ["operators/similarity.py"],
+        '"commit.json"': ["commit.py"],
     }

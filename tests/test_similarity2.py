@@ -1,6 +1,8 @@
 import pytest
 
+from sentiment_analysis_vector_search_spark.commit import SWAP, recover_swaps, staged
 from tests.parity import assert_parity
+from tests.swaps import stage_copy, torn_swap
 
 
 def test_ann_pq_parity(spark, sf_dir):
@@ -274,9 +276,7 @@ def test_pq_staged_append_replay_is_idempotent(spark, sf_dir, tmp_path):
         build_pq_index,
         pq_index_add,
     )
-    from sentiment_analysis_vector_search_spark.streaming.file_sink import (
-        _idempotent_append_dir,
-    )
+    from sentiment_analysis_vector_search_spark.commit import idempotent_append_dir
 
     idx = str(tmp_path / "pq_idx")
     build_pq_index(spark, sf_dir, idx)
@@ -289,7 +289,7 @@ def test_pq_staged_append_replay_is_idempotent(spark, sf_dir, tmp_path):
     def apply_batch():
         stage = str(tmp_path / "stage_b1")
         pq_index_add(spark, idx, batch, stage_dir=stage)
-        _idempotent_append_dir(stage, f"{idx}/codes", batch_id=1)
+        idempotent_append_dir(stage, f"{idx}/codes", batch_id=1)
 
     apply_batch()
     once = sorted(
@@ -392,14 +392,12 @@ def test_pq_codebook_refresh_gate_swap_and_full_reencode(spark, sf_dir, tmp_path
 
     out = pq_codebook_refresh(spark, idx, vecs, max_drift=d0["max_drift"] + 1.0)
     assert out["refreshed"] is False
-    assert not os.path.isdir(os.path.join(idx, "codebook__new"))
+    assert not os.path.exists(os.path.join(idx, SWAP))
 
     n_before = spark.read.parquet(f"{idx}/codes").count()
     out = pq_codebook_refresh(spark, idx, vecs, force=True)
     assert out["refreshed"] is True
-    for leftover in ("codebook__new", "codes__new", "codebook__old",
-                     "codes__old", "_refresh_commit.json"):
-        assert not os.path.exists(os.path.join(idx, leftover)), leftover
+    assert not os.path.exists(os.path.join(idx, SWAP))
 
     # full re-encode pin: stored codes == encode-from-scratch against
     # the refreshed codebook, row for row
@@ -438,13 +436,10 @@ def test_pq_codebook_refresh_gate_swap_and_full_reencode(spark, sf_dir, tmp_path
 def test_pq_refresh_crash_recovery(spark, sf_dir, tmp_path):
     """Marker present -> writer recovery rolls FORWARD; marker absent ->
     writer recovery rolls BACK stray staging (both crash states)."""
-    import json
     import os
-    import shutil
 
     from sentiment_analysis_vector_search_spark.operators.similarity2 import (
         build_pq_index,
-        pq_index_recover,
     )
 
     idx = str(tmp_path / "pq")
@@ -453,31 +448,24 @@ def test_pq_refresh_crash_recovery(spark, sf_dir, tmp_path):
     codes = os.path.join(idx, "codes")
 
     # crash before the marker: staging rolled back, index untouched
-    shutil.copytree(cb, cb + "__new")
-    pq_index_recover(idx)
-    assert not os.path.isdir(cb + "__new") and os.path.isdir(cb)
+    stage_copy(idx, "codebook")
+    recover_swaps(idx)
+    assert not os.path.isdir(staged(idx, "codebook")) and os.path.isdir(cb)
 
     # committed refresh, crash mid-swap in the worst state: codebook
-    # displaced to __old, __new not installed, codes untouched
-    shutil.copytree(cb, cb + "__new")
-    shutil.copytree(codes, codes + "__new")
-    with open(os.path.join(idx, "_refresh_commit.json"), "w") as f:
-        json.dump({"drift_at_refresh": {}}, f)
-    os.rename(cb, cb + "__old")
-    pq_index_recover(idx)
-    for leftover in ("codebook__new", "codes__new", "codebook__old",
-                     "codes__old", "_refresh_commit.json"):
-        assert not os.path.exists(os.path.join(idx, leftover)), leftover
+    # displaced, its staging not installed, codes untouched
+    torn_swap(idx, ("codebook", "codes"), ("codebook",))
+    recover_swaps(idx)
+    assert not os.path.exists(os.path.join(idx, SWAP))
     assert spark.read.parquet(cb).count() >= 2
     assert spark.read.parquet(codes).count() > 0
 
 
 def test_pq_query_open_is_forward_only(spark, sf_dir, tmp_path):
     """A query open must complete a COMMITTED torn swap, but must NEVER
-    delete uncommitted __new staging — that directory may belong to a
-    refresh that is still writing it (r12 advice, the writer/reader
-    contract)."""
-    import json
+    delete uncommitted staging — that directory may belong to a
+    refresh that is still writing it (the writer/reader contract,
+    SCALING.md rule 37)."""
     import os
     import shutil
 
@@ -493,22 +481,19 @@ def test_pq_query_open_is_forward_only(spark, sf_dir, tmp_path):
 
     # uncommitted staging (a live refresh mid-write): query works and
     # the staging SURVIVES the open
-    shutil.copytree(cb, cb + "__new")
+    stage_copy(idx, "codebook")
     got = ann_pq_index_query(spark, idx, queries, vecs, exclude_self=True)
     assert got.count() > 0
-    assert os.path.isdir(cb + "__new"), "query open deleted live staging"
-    shutil.rmtree(cb + "__new")
+    assert os.path.isdir(staged(idx, "codebook")), "query open deleted live staging"
+    shutil.rmtree(os.path.join(idx, SWAP))
 
     # committed torn swap (writer crashed post-marker with the codebook
     # displaced): the open rolls forward and serves
-    shutil.copytree(cb, cb + "__new")
-    with open(os.path.join(idx, "_refresh_commit.json"), "w") as f:
-        json.dump({}, f)
-    os.rename(cb, cb + "__old")
+    torn_swap(idx, ("codebook",), ("codebook",))
     got = ann_pq_index_query(spark, idx, queries, vecs, exclude_self=True)
     assert got.count() > 0
     assert os.path.isdir(cb)
-    assert not os.path.exists(os.path.join(idx, "_refresh_commit.json"))
+    assert not os.path.exists(os.path.join(idx, SWAP))
 
 
 def test_pq_refinement_audit_curve(spark, sf_dir):

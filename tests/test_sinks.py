@@ -746,12 +746,13 @@ def test_apply_cdc_after_evolution_preserves_evolved_column(spark, tmp_path):
 
 
 def test_optimize_table_rollback_on_swap_failure(spark, tmp_path, monkeypatch):
-    """r7 ADVICE (medium) regression: if the second rename of the atomic
-    swap fails, the ORIGINAL table directory must be restored (not left
-    missing with the optimized output deleted by the finally clause)."""
+    """If the second rename of the swap fails, the ORIGINAL table
+    directory must be restored (not left missing with the optimized
+    output deleted)."""
     import os
 
     from sentiment_analysis_vector_search_spark import sinks
+    from sentiment_analysis_vector_search_spark.commit import SWAP, staged
     from sentiment_analysis_vector_search_spark.sinks import optimize_table
 
     path = str(tmp_path / "t")
@@ -765,7 +766,7 @@ def test_optimize_table_rollback_on_swap_failure(spark, tmp_path, monkeypatch):
 
     def flaky_rename(src, dst):
         # fail exactly the rename that installs the optimized dir as base
-        if dst == path and "__optimize_" in src:
+        if dst == path and src == staged(str(tmp_path), "t", swap=f"{SWAP}.t"):
             calls["n"] += 1
             raise OSError("simulated swap failure")
         return real_rename(src, dst)
@@ -781,8 +782,41 @@ def test_optimize_table_rollback_on_swap_failure(spark, tmp_path, monkeypatch):
     # original table back in place, values intact, no stray tmp dirs
     assert os.path.isdir(path)
     assert sorted(r["a"] for r in spark.read.parquet(path).collect()) == want
-    stray = [d for d in os.listdir(tmp_path) if "__optimize_" in d or "__old_" in d]
-    assert stray == []
+    assert sorted(os.listdir(tmp_path)) == ["t"]  # no staging left
+
+
+def test_merge_upsert_crash_mid_swap_hides_staging(spark, tmp_path, monkeypatch):
+    """A process death right after the old partition is moved aside:
+    readers see only the table's own partition values, typed as before
+    (no staging or displaced directory read as data), and the next
+    writer's recovery leaves exactly the rows of the completed merge."""
+    import pytest
+
+    from sentiment_analysis_vector_search_spark.commit import recover_swaps
+    from sentiment_analysis_vector_search_spark.sinks import merge_upsert
+    from tests.swaps import Crash, crash_at
+
+    base = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(1, "2024-01-01", 10.0), (2, "2024-01-02", 20.0)],
+        "k int, day string, v double",
+    ).write.partitionBy("day").parquet(base)
+    updates = spark.createDataFrame(
+        [(1, "2024-01-01", 11.0), (3, "2024-01-01", 30.0)],
+        "k int, day string, v double",
+    )
+    crash_at(monkeypatch, 1)  # the install, right after the displacement
+    with pytest.raises(Crash):
+        merge_upsert(spark, base, updates, ["k"], "day")
+    monkeypatch.undo()
+    seen = spark.read.parquet(base)
+    assert dict(seen.dtypes)["day"] == "date"
+    days = {str(r.day) for r in seen.select("day").distinct().collect()}
+    assert days <= {"2024-01-01", "2024-01-02"}
+
+    recover_swaps(base)
+    got = sorted((r.k, str(r.day), r.v) for r in spark.read.parquet(base).collect())
+    assert got == [(1, "2024-01-01", 11.0), (2, "2024-01-02", 20.0), (3, "2024-01-01", 30.0)]
 
 
 def test_jsonl_shards_roundtrip_through_read_documents(spark, sf_dir, tmp_path):
