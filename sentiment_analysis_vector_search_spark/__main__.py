@@ -41,6 +41,15 @@ def _fold_id(batch_id: int | None, path: str) -> int | str:
     return path_digest(path) if batch_id is None else batch_id
 
 
+def _spark(name: str):
+    """The CLI's Spark session ``name``, logging errors only."""
+    from .session import get_spark
+
+    spark = get_spark(name)
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
 _FOLD_VERBS = (
     "analyze-incremental", "hotkeys", "sample", "hist", "cmsfreq", "checksum"
 )
@@ -56,10 +65,8 @@ def _fold_verb(args) -> int:
     import os
 
     from . import stats as st
-    from .session import get_spark
 
-    spark = get_spark(f"cli-{args.cmd}")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _spark(f"cli-{args.cmd}")
     qs = [float(q) for q in getattr(args, "quantiles", "").split(",") if q]
 
     def dump(obj) -> str:
@@ -535,10 +542,7 @@ def main(argv: list[str] | None = None) -> int:
     queries = entry.queries()
 
     if args.cmd == "index":
-        from .session import get_spark
-
-        spark = get_spark("cli-index")
-        spark.sparkContext.setLogLevel("ERROR")
+        spark = _spark("cli-index")
         if args.kind == "dedup":
             from .catalog import table
             from .operators.dedup_index import build_dedup_index
@@ -557,11 +561,9 @@ def main(argv: list[str] | None = None) -> int:
         import json
 
         from .operators.similarity import INDEX_LAYOUT, _vectors, index_verb
-        from .session import get_spark
 
         kind = args.cmd[: -len("-refresh")]
-        spark = get_spark(f"cli-{args.cmd}")
-        spark.sparkContext.setLogLevel("ERROR")
+        spark = _spark(f"cli-{args.cmd}")
         store = ()
         if INDEX_LAYOUT[kind].primary_store:
             store = (_vectors(spark, args.sf_dir).select("vec_id", "v"),)
@@ -591,11 +593,9 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "optimize":
         import json
 
-        from .session import get_spark
         from .sinks import optimize_table
 
-        spark = get_spark("cli-optimize")
-        spark.sparkContext.setLogLevel("ERROR")
+        spark = _spark("cli-optimize")
         manifest = optimize_table(
             spark,
             args.table_dir,
@@ -609,11 +609,9 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "stats":
         import json
 
-        from .session import get_spark
         from .stats import table_stats, write_table_stats
 
-        spark = get_spark("cli-stats")
-        spark.sparkContext.setLogLevel("ERROR")
+        spark = _spark("cli-stats")
         if args.write_dir:
             path = write_table_stats(spark, args.sf_dir, args.table, args.write_dir)
             print(json.dumps({"written": path}))
@@ -675,10 +673,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "scd2":
         import json
 
-        from .session import get_spark
-
-        spark = get_spark("cli-scd2")
-        spark.sparkContext.setLogLevel("ERROR")
+        spark = _spark("cli-scd2")
         if args.scd_cmd == "build":
             from pyspark.sql import functions as F
 
@@ -736,10 +731,8 @@ def main(argv: list[str] | None = None) -> int:
             rollup_answer,
             rollup_compact,
         )
-        from .session import get_spark
 
-        spark = get_spark("cli-rollup")
-        spark.sparkContext.setLogLevel("ERROR")
+        spark = _spark("cli-rollup")
         if args.roll_cmd in ("build", "add") and not args.source:
             print("rollup build/add requires --source", file=sys.stderr)
             return 2
@@ -780,11 +773,9 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "warc":
         import json
 
-        from .session import get_spark
         from .sources.warc import warc_documents
 
-        spark = get_spark("cli-warc")
-        spark.sparkContext.setLogLevel("ERROR")
+        spark = _spark("cli-warc")
         docs = warc_documents(spark, args.warc_path)
         docs.write.mode("overwrite").parquet(args.out_dir)
         n = spark.read.parquet(args.out_dir).count()
@@ -794,14 +785,12 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "sqlite":
         import json
 
-        from .session import get_spark
         from .sources.sqlite_store import (
             read_sqlite_comments,
             read_sqlite_extracted_text,
         )
 
-        spark = get_spark("cli-sqlite")
-        spark.sparkContext.setLogLevel("ERROR")
+        spark = _spark("cli-sqlite")
         if args.table == "extracted_text_data":
             docs = read_sqlite_extracted_text(
                 spark, args.db_path, min_length=args.min_length
@@ -834,10 +823,8 @@ def main(argv: list[str] | None = None) -> int:
         import json
 
         from .operators.text_index import build_text_index, text_index_query
-        from .session import get_spark
 
-        spark = get_spark("cli-search")
-        spark.sparkContext.setLogLevel("ERROR")
+        spark = _spark("cli-search")
         if args.build_from:
             build_text_index(spark, spark.read.parquet(args.build_from), args.index_dir)
         words = tuple(w for w in args.words.split(",") if w)
@@ -850,10 +837,7 @@ def main(argv: list[str] | None = None) -> int:
 
         from pyspark.sql import functions as F
 
-        from .session import get_spark
-
-        spark = get_spark("cli-knn")
-        spark.sparkContext.setLogLevel("ERROR")
+        spark = _spark("cli-knn")
         if not args.vectors_dir:
             p.error("knn requires --vectors-dir (the primary embeddings store)")
         vecs = spark.read.parquet(args.vectors_dir).select(
@@ -884,11 +868,9 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "pipeline":
         import json
 
-        from .session import get_spark
         from .training_pipeline import run_training_pipeline
 
-        spark = get_spark("cli-pipeline")
-        spark.sparkContext.setLogLevel("ERROR")
+        spark = _spark("cli-pipeline")
         man = run_training_pipeline(spark, args.sf_dir, args.out_root)
         print(json.dumps(man, indent=1, sort_keys=True))
         return 0
@@ -902,10 +884,8 @@ def main(argv: list[str] | None = None) -> int:
             bloom_lookup,
             build_bloom_index,
         )
-        from .session import get_spark
 
-        spark = get_spark("cli-bloom")
-        spark.sparkContext.setLogLevel("ERROR")
+        spark = _spark("cli-bloom")
         if args.bloom_cmd == "build":
             build_bloom_index(
                 spark,
@@ -938,10 +918,8 @@ def main(argv: list[str] | None = None) -> int:
         if not args.job_id:
             print("job run requires a job_id", file=sys.stderr)
             return 2
-        from .session import get_spark
 
-        spark = get_spark("cli-job")
-        spark.sparkContext.setLogLevel("ERROR")
+        spark = _spark("cli-job")
         manifest = run_analysis_job(spark, args.sf_dir, args.jobs_root, args.job_id)
         print(json.dumps(manifest))
         return 0
@@ -957,11 +935,9 @@ def main(argv: list[str] | None = None) -> int:
 
         from .plans import lint_plan
         from .registry import QUERIES, load_all_modules
-        from .session import get_spark
 
         load_all_modules()
-        spark = get_spark("cli-lint")
-        spark.sparkContext.setLogLevel("ERROR")
+        spark = _spark("cli-lint")
         bad: dict[str, list[str]] = {}
         names = [n for n in QUERIES if n.startswith(args.prefix)]
         for name in names:
@@ -992,10 +968,7 @@ def main(argv: list[str] | None = None) -> int:
         print(oracles[args.query].strip())
         return 0
 
-    from .session import get_spark
-
-    spark = get_spark("cli")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _spark("cli")
     df = queries[args.query](spark, args.sf_dir)
 
     if args.cmd == "explain":

@@ -100,8 +100,28 @@ toksets AS (
 """
 
 
+def doc_shingles(docs: DataFrame) -> DataFrame:
+    """Distinct (doc_id, sh) word-trigram shingles of a docs frame."""
+    return (
+        docs.select("doc_id", F.split(F.lower("text"), r"\s+").alias("t"))
+        .select(
+            "doc_id",
+            F.explode(
+                F.when(
+                    F.size("t") >= 3,
+                    F.expr(
+                        "transform(sequence(1, size(t) - 2),"
+                        " p -> concat(t[p - 1], ' ', t[p], ' ', t[p + 1]))"
+                    ),
+                ).otherwise(F.expr("array()"))
+            ).alias("sh"),
+        )
+        .distinct()
+    )
+
+
 def shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct (doc_id, sh) word-trigram shingles, behind an eager cut.
+    """The corpus's ``doc_shingles``, behind an eager cut.
 
     The cut lets consumers that read the relation several times (minhash:
     signatures + sizes + both sides of the verify join; jaccard: sizes +
@@ -115,22 +135,8 @@ def shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenize + trigram transform + explode is the expensive scan-stage
     # projection in both jaccard and minhash: fan it out across cores.
     docs = fan_out(spark, table(spark, sf_dir, "documents"))
-    df = docs.select(
-        "doc_id", F.split(F.lower("text"), r"\s+").alias("t")
-    ).select(
-        "doc_id",
-        F.explode(
-            F.when(
-                F.size("t") >= 3,
-                F.expr(
-                    "transform(sequence(1, size(t) - 2),"
-                    " p -> concat(t[p - 1], ' ', t[p], ' ', t[p + 1]))"
-                ),
-            ).otherwise(F.expr("array()"))
-        ).alias("sh"),
-    )
     # cut: multi-consumer — sizes, df filter and both join sides read it
-    return cut(df.distinct(), eager=True)
+    return cut(doc_shingles(docs), eager=True)
 
 
 def _sizes(sh: DataFrame) -> DataFrame:
@@ -609,7 +615,7 @@ def emb_signatures(vectors: DataFrame) -> DataFrame:
     ann_bruteforce_topk_arrow: the plane matrix is process-resident per
     executor, the scan distributes. A signature depends ONLY on its own
     vector (fixed seeded planes), which is the frozen-derivation
-    property the persisted embedding index (dedup_emb_index) relies on.
+    property the persisted embedding index (dedup_index, kind emb) relies on.
     """
     import numpy as np
 
@@ -672,7 +678,7 @@ def emb_candidate_pairs(vectors: DataFrame) -> DataFrame:
     """Banded sign-LSH near-dup pairs of a ``(vec_id, v)`` frame:
     (vec_a, vec_b, cosine >= threshold) with vec_a < vec_b — the batch
     operator's body, frame-parameterized so the persisted embedding
-    index (emb_index) can pin incremental ≡ batch on any corpus."""
+    index (dedup_index, kind emb) can pin incremental ≡ batch on any corpus."""
     sig = emb_signatures(vectors)
     # No explicit repartition here (unlike dedup_simhash): the band
     # relation is small enough that AQE broadcasts one join side, which

@@ -1,193 +1,80 @@
-"""Incremental corpus dedup: a persisted MinHash/LSH signature index.
+"""Incremental near-dup gates: persisted LSH band indexes.
 
 The batch operators (dedup.py) answer "which pairs in THIS corpus are
 near-dups" — but a production ingest asks a different question every
 hour: "is this NEW batch a near-dup of anything already in the 100 TB
-corpus?" Recomputing corpus shingles per batch is a full corpus scan;
-this module persists what the batch pipeline derives once —
+corpus?" Recomputing corpus signatures per batch is a full corpus scan;
+this module persists what the batch operators derive once, for two
+kinds of near-dup (``NEAR_DUP``):
 
-- ``shingles/``  (doc_id, sh)           the exact-verify relation
-- ``sizes/``     (doc_id, sz)           per-doc distinct-shingle counts
-- ``bands/``     (band, bh, doc_id)     LSH band buckets, partitioned
-                                        by band so a probe prunes to
-                                        its band's partition
+- ``minhash``, the index of ``dedup_minhash_lsh``:
+  ``shingles/`` (doc_id, sh), ``sizes/`` (doc_id, sz) and
+  ``bands/`` (band, bh, doc_id);
+- ``emb``, the sign-LSH index of ``dedup_embedding``:
+  ``vectors/`` (vec_id, v, nrm) and ``bands/`` (band, bucket, vec_id).
 
-— so checking a batch costs O(batch + collisions), never O(corpus):
-the batch's band signatures equi-join the persisted buckets, and only
-colliding docs' shingles are read back for exact-Jaccard verification.
+``bands/`` is partitioned by band so a probe prunes to its band's
+partition, so checking a batch costs O(batch + collisions), never
+O(corpus): the batch's band rows equi-join the persisted buckets, and
+only the colliding ids' verify rows are read back for the exact score
+(Jaccard or cosine).
 
-Because a doc's MinHash signature depends only on its own shingles
-(min over a fixed seeded hash family, dedup.py:210), the streamed /
-incremental index is IDENTICAL to one derived from the union corpus —
-``dedup_index_check`` returns exactly the cross-batch pairs the batch
-``dedup_minhash_lsh`` would find on the union (pinned by pytest), the
-same frozen-derivation property the IVF index relies on.
+Because a signature depends only on its own doc or vector (a fixed
+seeded hash family or hyperplane set), the incremental index is
+IDENTICAL to one derived from the union corpus — ``*_index_check``
+returns exactly the cross-batch pairs the batch operator would find on
+the union (pinned by pytest), the same frozen-derivation property the
+IVF index relies on. The emb band width (SPARK_GRAFT_EMB_BAND_BITS /
+dedup.emb_band_bits_for) applies at BUILD time: the index's
+``manifest.json`` records it, and add and check refuse a process with
+another width, which would silently probe the wrong buckets.
 
-Operating procedure at scale: ``build_dedup_index`` seeds from the
-existing corpus; per ingest batch run ``dedup_index_check`` (gate or
-tag the duplicates) then ``dedup_index_add`` for the survivors;
-compact the appended band/shingle partitions on a schedule
+Operating procedure at scale: ``build_*`` seeds from the existing
+corpus; per ingest batch run the check (gate or tag the duplicates),
+then the add for the survivors — ``file_sink.stream_dedup_ingest`` does
+both, exactly once; compact the appended partitions on a schedule
 (sinks.compact_dir).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+from dataclasses import dataclass, field
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import cut
+from ..commit import read_json, write_json
+from ..functions.vectors import dot
+from ..sinks import spread_repartition
 from .dedup import (
+    _EMB_BAND_BITS,
+    _EMB_BANDS,
+    _EMB_T,
     _JACCARD_T,
+    _sizes,
     band_structs_expr,
+    doc_shingles,
+    emb_signatures,
     minhash_sig_exprs,
 )
 
 
-def _doc_shingles(docs: DataFrame) -> DataFrame:
-    """Distinct (doc_id, sh) word-trigram shingles of a docs frame
-    (same derivation as dedup.shingle_sets, which is sf_dir-bound)."""
-    return (
-        docs.select("doc_id", F.split(F.lower("text"), r"\s+").alias("t"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.when(
-                    F.size("t") >= 3,
-                    F.expr(
-                        "transform(sequence(1, size(t) - 2),"
-                        " p -> concat(t[p - 1], ' ', t[p], ' ', t[p + 1]))"
-                    ),
-                ).otherwise(F.expr("array()"))
-            ).alias("sh"),
-        )
-        .distinct()
-    )
-
-
-def _band_rows(sh: DataFrame) -> DataFrame:
+def _minhash_bands(sh: DataFrame) -> DataFrame:
     """(band, bh, doc_id) LSH band buckets from a shingle relation."""
     sigs = sh.groupBy("doc_id").agg(*minhash_sig_exprs())
-    band_structs = band_structs_expr()
-    return sigs.select("doc_id", F.explode(band_structs).alias("b")).select(
+    return sigs.select("doc_id", F.explode(band_structs_expr()).alias("b")).select(
         F.col("b.band").alias("band"), F.col("b.bh").alias("bh"), "doc_id"
     )
 
 
-def _write(sh: DataFrame, index_dir: str, mode: str) -> None:
-    sh = cut(sh, eager=True)  # cut: multi-consumer — shingles, sizes, bands
-    sh.write.mode(mode).parquet(f"{index_dir}/shingles")
-    (
-        sh.groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("sz"))
-        .write.mode(mode)
-        .parquet(f"{index_dir}/sizes")
-    )
-    from ..sinks import spread_repartition
-
-    # (band, bh) shuffle so the band-partitioned write scales with
-    # executors instead of capping at #bands tasks (r8 verdict #2 shape)
-    (
-        spread_repartition(_band_rows(sh), "band", "bh")
-        .write.mode(mode)
-        .partitionBy("band")
-        .parquet(f"{index_dir}/bands")
-    )
-
-
-def build_dedup_index(spark: SparkSession, docs: DataFrame, index_dir: str) -> None:
-    """Seed the index from an existing corpus (overwrites)."""
-    _write(_doc_shingles(docs), index_dir, "overwrite")
-
-
-def dedup_index_add(spark: SparkSession, docs: DataFrame, index_dir: str) -> None:
-    """Append a batch's signatures: cost tracks the batch, not the index."""
-    _write(_doc_shingles(docs), index_dir, "append")
-
-
-def dedup_index_check(
-    spark: SparkSession,
-    docs: DataFrame,
-    index_dir: str,
-    broadcast_max_bytes: int | None = None,
-) -> DataFrame:
-    """Near-dup pairs between a new batch and the indexed corpus:
-    (doc_a, doc_b, jaccard, is_duplicate) with doc_a < doc_b, exactly the
-    cross-batch rows batch ``dedup_minhash_lsh`` would emit on the union.
-
-    Plan shape: batch bands broadcast against the band-partitioned bucket
-    table — the corpus-side scan is an equi-join probe, and the verify
-    reads only colliding docs' shingles (semi-joined by the candidate
-    ids). Self-pairs within the new batch are the batch operator's job;
-    this is the ingest gate against history.
-
-    The broadcast is GATED through ``stats.choose_join_strategy`` (r5
-    verdict #7's size gate, routed through the shared chooser per r7
-    verdict #6): the hourly-ingest shape broadcasts, but a backfill-sized
-    batch would OOM the executors with an unconditional hint, so past
-    ``broadcast_max_bytes`` estimated bytes (exact batch shingle-row
-    count x dtype row width; default ``stats.DEFAULT_BROADCAST_MAX_BYTES``)
-    the probe falls back to keyed shuffle joins on the same equi keys.
-    The count costs no extra pass: the batch is cut for
-    the multi-branch probe, so count() reads
-    materialized block sizes. The chooser's 'salted' branch cannot
-    trigger here — the probe key is a banded bucket hash whose occupancy
-    dedup_index_stats audits (ndv ~ rows on the batch side).
-    """
-    from .. import stats as _stats
-
-    # cut: multi-consumer — the count, bands, shared join and sizes
-    new_sh = cut(_doc_shingles(docs), eager=True)
-    n_rows = new_sh.count()
-    # exact driver-side count in the chooser's stats shape
-    batch_stats = {
-        "sh": {
-            "n_rows": n_rows,
-            "n_nulls": 0,
-            "min_value": None,
-            "max_value": None,
-            "approx_ndv": max(n_rows, 1),
-        }
-    }
-    cap = (
-        broadcast_max_bytes
-        if broadcast_max_bytes is not None
-        else _stats.DEFAULT_BROADCAST_MAX_BYTES
-    )
-    small = (
-        _stats.choose_join_strategy(
-            batch_stats,
-            batch_stats,
-            "sh",
-            _stats.schema_row_bytes(new_sh),
-            cap,
-        )
-        == "broadcast"
-    )
-    hint = F.broadcast if small else (lambda df: df)
-    new_bands = _band_rows(new_sh)
-    idx_bands = spark.read.parquet(f"{index_dir}/bands")
-    # cut: multi-consumer — the index shingle semi-join and the shared join
-    cand = cut(
-        idx_bands.join(
-            hint(new_bands.withColumnsRenamed({"doc_id": "new_id", "bh": "bh"})),
-            ["band", "bh"],
-        )
-        .select(F.col("doc_id").alias("idx_id"), "new_id")
-        .where(F.col("idx_id") != F.col("new_id"))
-        .distinct(),
-        eager=True,
-    )
-    idx_sh = spark.read.parquet(f"{index_dir}/shingles").join(
-        hint(cand.select(F.col("idx_id").alias("doc_id")).distinct()),
-        "doc_id",
-        "left_semi",
-    )
+def _shingle_pairs(spark, index_dir, cand, idx_sh, new_sh) -> DataFrame:
+    """Candidate pairs with their shared-shingle count and both sizes."""
     shared = (
         cand.join(idx_sh.withColumnsRenamed({"doc_id": "idx_id"}), "idx_id")
-        .join(
-            new_sh.withColumnsRenamed({"doc_id": "new_id"}),
-            ["new_id", "sh"],
-        )
+        .join(new_sh.withColumnsRenamed({"doc_id": "new_id"}), ["new_id", "sh"])
         .groupBy("idx_id", "new_id")
         .agg(F.count(F.lit(1)).alias("shared"))
     )
@@ -199,25 +86,239 @@ def dedup_index_check(
         .agg(F.count(F.lit(1)).alias("sz_n"))
         .withColumnsRenamed({"doc_id": "new_id"})
     )
-    jc = F.round(
-        F.col("shared")
-        * F.lit(1.0)
-        / (F.col("sz_i") + F.col("sz_n") - F.col("shared")),
-        6,
+    return shared.join(idx_sz, "idx_id").join(new_sz, "new_id")
+
+
+def _jaccard() -> Column:
+    shared = F.col("shared")
+    return F.round(shared * F.lit(1.0) / (F.col("sz_i") + F.col("sz_n") - shared), 6)
+
+
+def _vector_pairs(spark, index_dir, cand, idx_vecs, new_vecs) -> DataFrame:
+    """Candidate pairs with both vectors and norms."""
+    return cand.join(
+        idx_vecs.withColumnsRenamed({"vec_id": "idx_id", "v": "iv", "nrm": "inrm"}),
+        "idx_id",
+    ).join(
+        new_vecs.withColumnsRenamed({"vec_id": "new_id", "v": "nv", "nrm": "nnrm"}),
+        "new_id",
     )
-    return (
-        shared.join(idx_sz, "idx_id")
-        .join(new_sz, "new_id")
-        .select(
-            F.least("idx_id", "new_id").alias("doc_a"),
-            F.greatest("idx_id", "new_id").alias("doc_b"),
-            jc.alias("jaccard"),
-            (jc >= _JACCARD_T).alias("is_duplicate"),
-            # which side is the incoming doc (doc_a/doc_b are canonically
-            # ordered, so an ingest gate can't infer it from position)
-            F.col("new_id").alias("new_doc_id"),
+
+
+def _cosine() -> Column:
+    return F.round(dot("iv", "nv") / (F.col("inrm") * F.col("nnrm")), 6)
+
+
+@dataclass(frozen=True)
+class NearDup:
+    """One near-dup index kind.
+
+    ``relation`` derives the relation every write and probe cuts once
+    from a batch; ``dirs`` maps each directory written before ``bands/``
+    to its rows of that relation, the first being the verify relation;
+    ``bands`` derives the (band, ``bucket``, ``key``) rows; ``pairs``
+    joins the probe's candidates to both sides' verify rows, and
+    ``score`` scores them; ``knobs`` are the build knobs the manifest
+    records."""
+
+    key: str
+    bucket: str
+    relation: Callable[[DataFrame], DataFrame]
+    dirs: dict[str, Callable[[DataFrame], DataFrame]]
+    bands: Callable[[DataFrame], DataFrame]
+    pairs: Callable[..., DataFrame]
+    score: Callable[[], Column]
+    knobs: dict = field(default_factory=dict)
+
+
+NEAR_DUP = {
+    "minhash": NearDup(
+        "doc_id",
+        "bh",
+        doc_shingles,
+        {"shingles": lambda sh: sh, "sizes": _sizes},
+        _minhash_bands,
+        _shingle_pairs,
+        _jaccard,
+    ),
+    "emb": NearDup(
+        "vec_id",
+        "bucket",
+        emb_signatures,
+        {"vectors": lambda sig: sig.select("vec_id", "v", "nrm")},
+        lambda sig: sig.select(
+            F.posexplode("buckets").alias("band", "bucket"), "vec_id"
+        ),
+        _vector_pairs,
+        _cosine,
+        {"bands": _EMB_BANDS, "band_bits": _EMB_BAND_BITS},
+    ),
+}
+
+
+def check_knobs(kind: str, index_dir: str, pin: bool = False) -> None:
+    """Refuse an index built with other build knobs than this process
+    runs; with ``pin``, an index that records none takes this
+    process's."""
+    want = NEAR_DUP[kind].knobs
+    if not want:
+        return
+    path = os.path.join(index_dir, "manifest.json")
+    got = read_json(path)
+    if got is None and pin:
+        write_json(path, want)
+    elif got != want:
+        raise ValueError(
+            f"{kind} index built with {got}; this process runs {want} "
+            "(a band knob mismatch: probing would read the wrong buckets)"
         )
+
+
+def write_index(kind: str, batch: DataFrame, index_dir: str, mode: str) -> None:
+    """Write ``batch`` into every directory of a ``kind`` index, ``bands/``
+    last, from one cut of its relation."""
+    k = NEAR_DUP[kind]
+    rel = cut(k.relation(batch), eager=True)  # cut: multi-consumer — every directory
+    for name, rows in k.dirs.items():
+        rows(rel).write.mode(mode).parquet(f"{index_dir}/{name}")
+    # (band, bucket) shuffle so the band-partitioned write scales with
+    # executors instead of capping at #bands tasks
+    (
+        spread_repartition(k.bands(rel), "band", k.bucket)
+        .write.mode(mode)
+        .partitionBy("band")
+        .parquet(f"{index_dir}/bands")
     )
+
+
+def _build(kind: str, batch: DataFrame, index_dir: str) -> None:
+    write_index(kind, batch, index_dir, "overwrite")
+    if NEAR_DUP[kind].knobs:
+        write_json(os.path.join(index_dir, "manifest.json"), NEAR_DUP[kind].knobs)
+
+
+def _add(kind: str, batch: DataFrame, index_dir: str) -> None:
+    check_knobs(kind, index_dir)
+    write_index(kind, batch, index_dir, "append")
+
+
+def probe_pairs(
+    spark: SparkSession,
+    kind: str,
+    batch: DataFrame,
+    index_dir: str,
+    broadcast_max_bytes: int | None = None,
+) -> DataFrame:
+    """Every (idx_id, new_id) pair of an indexed row and a ``batch`` row
+    that share a band bucket (self-pairs excluded), with the kind's
+    ``pairs`` columns for its ``score``.
+
+    Plan shape: batch band rows probe the band-partitioned bucket table
+    (an equi-join), and only the colliding ids' verify rows are read
+    back (semi-joined by the candidate ids). Both joins get a broadcast
+    hint while the batch relation's estimated bytes (exact row count x
+    dtype row width) fit ``broadcast_max_bytes`` (default
+    ``stats.DEFAULT_BROADCAST_MAX_BYTES``, the join chooser's cap): the
+    hourly-ingest shape broadcasts, and a backfill-sized batch takes
+    keyed shuffle joins on the same keys instead of OOMing executors.
+    The count costs no extra pass: it reads the cut's block sizes."""
+    from ..stats import DEFAULT_BROADCAST_MAX_BYTES, schema_row_bytes
+
+    k = NEAR_DUP[kind]
+    check_knobs(kind, index_dir)
+    # cut: multi-consumer — the count, bands, the verify join and the scores
+    new = cut(k.relation(batch), eager=True)
+    if broadcast_max_bytes is None:
+        broadcast_max_bytes = DEFAULT_BROADCAST_MAX_BYTES
+    small = new.count() * schema_row_bytes(new) <= broadcast_max_bytes
+    hint = F.broadcast if small else (lambda df: df)
+    new_bands = k.bands(new)
+    idx_bands = spark.read.parquet(f"{index_dir}/bands")
+    # cut: multi-consumer — the index verify semi-join and the pair join
+    # (the bucket's self-rename is a no-op that keeps the formatted
+    # plan's expression ids stable)
+    cand = cut(
+        idx_bands.join(
+            hint(new_bands.withColumnsRenamed({k.key: "new_id", k.bucket: k.bucket})),
+            ["band", k.bucket],
+        )
+        .select(F.col(k.key).alias("idx_id"), "new_id")
+        .where(F.col("idx_id") != F.col("new_id"))
+        .distinct(),
+        eager=True,
+    )
+    verify, rows = next(iter(k.dirs.items()))
+    idx_rows = spark.read.parquet(f"{index_dir}/{verify}").join(
+        hint(cand.select(F.col("idx_id").alias(k.key)).distinct()),
+        k.key,
+        "left_semi",
+    )
+    return k.pairs(spark, index_dir, cand, idx_rows, rows(new))
+
+
+def build_dedup_index(spark: SparkSession, docs: DataFrame, index_dir: str) -> None:
+    """Seed the MinHash index from an existing corpus (overwrites)."""
+    _build("minhash", docs, index_dir)
+
+
+def dedup_index_add(spark: SparkSession, docs: DataFrame, index_dir: str) -> None:
+    """Append a batch's signatures: cost tracks the batch, not the index."""
+    _add("minhash", docs, index_dir)
+
+
+def dedup_index_check(
+    spark: SparkSession,
+    docs: DataFrame,
+    index_dir: str,
+    broadcast_max_bytes: int | None = None,
+) -> DataFrame:
+    """Near-dup pairs between a new batch and the indexed corpus:
+    (doc_a, doc_b, jaccard, is_duplicate, new_doc_id) with doc_a < doc_b,
+    exactly the cross-batch rows batch ``dedup_minhash_lsh`` would emit
+    on the union. Self-pairs within the new batch are the batch
+    operator's job; this is the ingest gate against history. Plan shape
+    and the broadcast gate: ``probe_pairs``."""
+    jc = NEAR_DUP["minhash"].score()
+    return probe_pairs(spark, "minhash", docs, index_dir, broadcast_max_bytes).select(
+        F.least("idx_id", "new_id").alias("doc_a"),
+        F.greatest("idx_id", "new_id").alias("doc_b"),
+        jc.alias("jaccard"),
+        (jc >= _JACCARD_T).alias("is_duplicate"),
+        # which side is the incoming doc (doc_a/doc_b are canonically
+        # ordered, so an ingest gate can't infer it from position)
+        F.col("new_id").alias("new_doc_id"),
+    )
+
+
+def build_emb_index(spark: SparkSession, vectors: DataFrame, index_dir: str) -> None:
+    """Seed the embedding index from ``vectors`` (vec_id, v array<double>)
+    and record its band knobs (overwrites)."""
+    _build("emb", vectors, index_dir)
+
+
+def emb_index_add(spark: SparkSession, vectors: DataFrame, index_dir: str) -> None:
+    """Append a new batch — signatures depend only on their own vectors,
+    so append ≡ rebuild from the union (pytest-pinned)."""
+    _add("emb", vectors, index_dir)
+
+
+def emb_index_check(
+    spark: SparkSession,
+    vectors: DataFrame,
+    index_dir: str,
+    broadcast_max_bytes: int | None = None,
+) -> DataFrame:
+    """Near-dup pairs between a new vector batch and the indexed corpus:
+    (vec_a, vec_b, cosine, new_vec_id) with vec_a < vec_b, exactly the
+    cross-batch rows batch ``dedup_embedding`` would emit on the union.
+    Plan shape and the broadcast gate: ``probe_pairs``."""
+    cosine = NEAR_DUP["emb"].score()
+    return probe_pairs(spark, "emb", vectors, index_dir, broadcast_max_bytes).select(
+        F.least("idx_id", "new_id").alias("vec_a"),
+        F.greatest("idx_id", "new_id").alias("vec_b"),
+        cosine.alias("cosine"),
+        F.col("new_id").alias("new_vec_id"),
+    ).where(F.col("cosine") >= _EMB_T)
 
 
 def dedup_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:

@@ -345,71 +345,125 @@ def stream_ivfpq_ingest(
     _stream_vector_ingest(spark, src_dir, index_dir, checkpoint_dir, "ivfpq")
 
 
-def stream_ingest_dedup(
+def _unique_docs(batch_df: DataFrame, threshold: float) -> DataFrame:
+    """Within-batch exact dedup: keep the min doc_id per content hash."""
+    from ..functions.hashing import md5_long
+
+    h = batch_df.withColumn("_h", md5_long(F.col("text")))
+    keep_ids = h.groupBy("_h").agg(F.min("doc_id").alias("doc_id"))
+    return h.join(keep_ids, ["_h", "doc_id"], "left_semi").drop("_h")
+
+
+def _unique_vectors(batch_df: DataFrame, threshold: float) -> DataFrame:
+    """(vec_id, v) rows with within-batch near-dups dropped: keep the min
+    vec_id of each pair the batch candidate generator finds."""
+    from ..operators.dedup import emb_candidate_pairs
+
+    rows = batch_df.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+    dups = (
+        emb_candidate_pairs(rows)
+        .where(F.col("cosine") >= threshold)
+        .select(F.col("vec_b").alias("vec_id"))
+        .distinct()
+    )
+    return rows.join(dups, "vec_id", "left_anti")
+
+
+# kind -> (source files, source schema, replay record, within-batch
+# dedup, the table's rows of the survivors)
+_DEDUP_INGEST = {
+    "minhash": (
+        "documents*.parquet", _DOC_SCHEMA, "_ingest_commits.json", _unique_docs,
+        lambda rows: rows,
+    ),
+    "emb": (
+        "embeddings*.parquet", "vec_id bigint, embedding array<double>",
+        "_emb_ingest_commits.json", _unique_vectors,
+        lambda rows: rows.select("vec_id", F.col("v").alias("embedding")),
+    ),
+}
+
+
+def stream_dedup_ingest(
     spark: SparkSession,
+    kind: str,
     src_dir: str,
     index_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    jaccard_t: float | None = None,
+    threshold: float | None = None,
 ) -> None:
     """Continuous ingest with near-dup gating against corpus history:
-    each micro-batch of documents is checked against the persisted
-    MinHash/LSH index (``dedup_index_check`` — O(batch + collisions),
-    never a corpus rescan), survivors land in the parquet table AND
-    join the index, so later batches are checked against them too.
+    each micro-batch of documents (``minhash``) or embeddings (``emb``)
+    drops its within-batch duplicates, then every row with a near-dup
+    at ``threshold`` (Jaccard or cosine) in the persisted index
+    (``dedup_index.NEAR_DUP[kind]``; O(batch + collisions), never a
+    corpus rescan). Survivors land in the parquet table AND join the
+    index, so later batches are checked against them too.
 
     This is the full production shape of LLM-corpus ingest: the batch
     dedup operators answer "clean this corpus once"; this loop keeps a
     growing corpus clean forever, with per-batch cost independent of
-    corpus size. Within-batch duplicates are resolved first (exact
-    min-doc_id per content hash), then history decides.
+    corpus size. Every source file already landed arrives in one
+    micro-batch; ids are keys, so no batch repeats an indexed id.
 
-    Every source file already landed arrives in one micro-batch. The
-    ``_ingest_commits.json`` record skips replayed batches, so a replay
-    neither re-appends survivors nor re-inserts signatures. The append
-    followed by the index add is not idempotent, so the loop is
-    at-least-once across a crash between those effects and the record.
-    """
-    from ..functions.hashing import md5_long
-    from ..operators.dedup_index import dedup_index_add, dedup_index_check
+    Exactly-once: the table rows and every index directory are staged
+    under ``_stage_<batch_id>`` and promoted under batch-stamped names
+    (``commit.idempotent_append_dir``), ``bands/`` last because it
+    turns the gate on; then the batch is recorded. A replay after a
+    crash before the record finds its own survivors indexed, so the
+    gate ignores hits on ids of the batch itself: it gates against the
+    index as it was before the batch, re-stages the same rows and
+    re-replaces the same files."""
+    from ..operators.dedup import _EMB_T, _JACCARD_T
+    from ..operators.dedup_index import NEAR_DUP, check_knobs, probe_pairs, write_index
 
-    if jaccard_t is None:
-        from ..operators.dedup import _JACCARD_T as jaccard_t
-
+    glob, schema, record, unique, table_rows = _DEDUP_INGEST[kind]
+    k = NEAR_DUP[kind]
+    default, floor = {"minhash": (_JACCARD_T, 0.0), "emb": (_EMB_T, _EMB_T)}[kind]
+    if threshold is None:
+        threshold = default
+    elif threshold < floor:
+        raise ValueError(
+            f"threshold={threshold} is below the {kind} candidate generators' "
+            f"threshold {floor}: pairs under it are never generated, so the "
+            "looser gate would silently not apply"
+        )
     src = (
-        spark.readStream.schema(_DOC_SCHEMA)
-        .option("pathGlobFilter", "documents*.parquet")
-        .parquet(src_dir)
+        spark.readStream.schema(schema).option("pathGlobFilter", glob).parquet(src_dir)
     )
 
     def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # within-batch exact dedup: keep min doc_id per content hash
-        h = batch_df.withColumn("_h", md5_long(F.col("text")))
-        keep_ids = h.groupBy("_h").agg(F.min("doc_id").alias("doc_id"))
-        batch = h.join(keep_ids, ["_h", "doc_id"], "left_semi").drop("_h")
-        batch = cut(batch, eager=True)  # cut: multi-consumer — check, gate, add
-        # history gate: anything near-duplicating the indexed corpus drops
+        # cut: multi-consumer — the index probe, the gate and its anti-joins
+        batch = cut(unique(batch_df, threshold), eager=True)
         if os.path.isdir(f"{index_dir}/bands"):
             hits = (
-                dedup_index_check(spark, batch, index_dir)
-                .where(F.col("jaccard") >= jaccard_t)
-                .select(F.col("new_doc_id").alias("doc_id"))
+                probe_pairs(spark, kind, batch, index_dir)
+                .where(k.score() >= threshold)
+                .join(
+                    batch.select(F.col(k.key).alias("idx_id")), "idx_id", "left_anti"
+                )
+                .select(F.col("new_id").alias(k.key))
                 .distinct()
             )
-            survivors = batch.join(hits, "doc_id", "left_anti")
-        else:
-            survivors = batch
-        survivors = cut(survivors, eager=True)  # cut: multi-consumer — write + index add
-        survivors.write.mode("append").parquet(out_dir)
-        if os.path.isdir(f"{index_dir}/bands"):
-            dedup_index_add(spark, survivors, index_dir)
-        else:
-            from ..operators.dedup_index import build_dedup_index
+            batch = batch.join(hits, k.key, "left_anti")
+        survivors = cut(batch, eager=True)  # cut: multi-consumer — both writes
+        table_stage = os.path.join(out_dir, f"_stage_{batch_id}")
+        index_stage = os.path.join(index_dir, f"_stage_{batch_id}")
+        table_rows(survivors).write.mode("overwrite").parquet(table_stage)
+        write_index(kind, survivors, index_stage, "overwrite")
+        idempotent_append_dir(table_stage, out_dir, batch_id)
+        for name in [*k.dirs, "bands"]:
+            idempotent_append_dir(
+                os.path.join(index_stage, name), f"{index_dir}/{name}", batch_id
+            )
+        shutil.rmtree(table_stage, ignore_errors=True)
+        shutil.rmtree(index_stage, ignore_errors=True)
 
-            build_dedup_index(spark, survivors, index_dir)
-
-    _drain(spark, src, checkpoint_dir, gate_batch, record="_ingest_commits.json")
+    check_knobs(kind, index_dir, pin=True)
+    _drain(spark, src, checkpoint_dir, gate_batch, record=record)
 
 
 def stream_sketch_maintenance(
@@ -450,90 +504,6 @@ def stream_sketch_maintenance(
         fold_sketch(kind, stats_dir, table_name, batch_df, batch_id=batch_id, **params)
 
     _drain(spark, src, checkpoint_dir, fold_batch)
-
-
-def stream_emb_dedup_ingest(
-    spark: SparkSession,
-    src_dir: str,
-    index_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    cosine_t: float | None = None,
-) -> None:
-    """Continuous EMBEDDING ingest with near-dup gating against corpus
-    history — the sign-LSH counterpart of ``stream_ingest_dedup``: each
-    micro-batch of vectors is checked against the persisted embedding
-    index (``emb_index_check`` — O(batch + collisions)), survivors land
-    in the parquet table AND join the index. Within-batch dups are
-    resolved first (min vec_id per batch-internal near-dup pair via the
-    batch candidate generator), then history decides. The
-    ``_emb_ingest_commits.json`` record skips replayed batches; the
-    append followed by the index add is not idempotent, so the loop is
-    at-least-once across a crash between those effects and the
-    record."""
-    from ..operators.dedup import emb_candidate_pairs
-    from ..operators.emb_index import (
-        build_emb_index,
-        emb_index_add,
-        emb_index_check,
-    )
-
-    from ..operators.dedup import _EMB_T
-
-    if cosine_t is None:
-        cosine_t = _EMB_T
-    elif cosine_t < _EMB_T:
-        # the candidate generators (emb_candidate_pairs / emb_index_check)
-        # already filter at the module threshold BEFORE this loop's
-        # re-filter, so a looser value would silently behave as _EMB_T —
-        # refuse a parameter the pipeline cannot honor
-        raise ValueError(
-            f"cosine_t={cosine_t} is below the candidate generators' "
-            f"threshold {_EMB_T}; pairs under {_EMB_T} are never generated, "
-            "so the looser gate would silently not apply — lower "
-            "dedup._EMB_T (rebuild the index) to loosen the pipeline"
-        )
-
-    src = (
-        spark.readStream.schema("vec_id bigint, embedding array<double>")
-        .option("pathGlobFilter", "embeddings*.parquet")
-        .parquet(src_dir)
-    )
-
-    def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # cut: multi-consumer — within-batch pairs, index check, gate, add
-        batch = cut(
-            batch_df.select("vec_id", F.col("embedding").cast("array<double>").alias("v")),
-            eager=True,
-        )
-        # within-batch near-dup: keep the min vec_id of each pair
-        within = (
-            emb_candidate_pairs(batch)
-            .where(F.col("cosine") >= cosine_t)
-            .select(F.col("vec_b").alias("vec_id"))
-            .distinct()
-        )
-        batch = batch.join(within, "vec_id", "left_anti")
-        if os.path.isdir(f"{index_dir}/bands"):
-            hits = (
-                emb_index_check(spark, batch, index_dir)
-                .where(F.col("cosine") >= cosine_t)
-                .select(F.col("new_vec_id").alias("vec_id"))
-                .distinct()
-            )
-            survivors = batch.join(hits, "vec_id", "left_anti")
-        else:
-            survivors = batch
-        survivors = cut(survivors, eager=True)  # cut: multi-consumer — write + index add
-        survivors.select(
-            "vec_id", F.col("v").alias("embedding")
-        ).write.mode("append").parquet(out_dir)
-        if os.path.isdir(f"{index_dir}/bands"):
-            emb_index_add(spark, survivors, index_dir)
-        else:
-            build_emb_index(spark, survivors, index_dir)
-
-    _drain(spark, src, checkpoint_dir, gate_batch, record="_emb_ingest_commits.json")
 
 
 def stream_bloom_maintenance(

@@ -214,9 +214,8 @@ def test_minhash_quality_audit(spark, sf_dir):
 def test_dedup_index_check_large_batch_keyed_path(spark, sf_dir, tmp_path):
     """Forcing the batch over the broadcast gate (broadcast_max_bytes=0)
     must take the keyed-join path and return EXACTLY the broadcast
-    path's pairs (r5 verdict #7: a backfill-sized batch must not OOM on
-    an unconditional broadcast hint; since r8 the gate routes through
-    stats.choose_join_strategy)."""
+    path's pairs (a backfill-sized batch must not OOM on an
+    unconditional broadcast hint)."""
     from pyspark.sql import functions as F
 
     from sentiment_analysis_vector_search_spark.operators.dedup_index import (

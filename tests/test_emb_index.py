@@ -34,7 +34,7 @@ def test_emb_index_check_equals_batch_cross_pairs(spark, tmp_path):
     from sentiment_analysis_vector_search_spark.operators.dedup import (
         emb_candidate_pairs,
     )
-    from sentiment_analysis_vector_search_spark.operators.emb_index import (
+    from sentiment_analysis_vector_search_spark.operators.dedup_index import (
         build_emb_index,
         emb_index_check,
     )
@@ -66,7 +66,7 @@ def test_emb_index_check_equals_batch_cross_pairs(spark, tmp_path):
 def test_emb_index_add_equals_rebuild(spark, tmp_path):
     """Seed with first third, add second third; checking the last third
     must equal a fresh index built from the first two thirds."""
-    from sentiment_analysis_vector_search_spark.operators.emb_index import (
+    from sentiment_analysis_vector_search_spark.operators.dedup_index import (
         build_emb_index,
         emb_index_add,
         emb_index_check,
@@ -90,7 +90,7 @@ def test_emb_index_width_mismatch_refused(spark, tmp_path):
     import json
     import os
 
-    from sentiment_analysis_vector_search_spark.operators.emb_index import (
+    from sentiment_analysis_vector_search_spark.operators.dedup_index import (
         build_emb_index,
         emb_index_check,
     )

@@ -1,5 +1,6 @@
 """Streaming file sink: exactly-once semantics under re-drain."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from sentiment_analysis_vector_search_spark.streaming.file_sink import (
@@ -179,50 +180,33 @@ def test_stream_rollup_maintenance_crash_before_record_is_exactly_once(
     _assert_rollup_matches(spark, rollup, [seed, extra])
 
 
-def test_stream_ingest_dedup_gates_against_history(spark, sf_dir, tmp_path):
-    """Two document files drained in order: the second batch's docs that
-    near-duplicate the already-ingested corpus are dropped; survivors
-    join the index; re-drain is a no-op."""
+def _land(df, src_dir, name):
+    """Land ``df`` in ``src_dir`` as the one parquet file ``name``."""
     import os
     import shutil
 
+    stage = f"{src_dir}.{name}"
+    df.coalesce(1).write.parquet(stage)
+    part = next(n for n in os.listdir(stage) if n.endswith(".parquet"))
+    shutil.copy(os.path.join(stage, part), os.path.join(src_dir, name))
+
+
+def _minhash_gate_case(spark, sf_dir):
+    """Two document batches (doc_id < 250, then the rest), the survivors
+    the batch operators imply on their union, and a check on the case.
+    The second batch holds within-batch near-dup pairs."""
     import __spark_entry__ as entrymod
-    from sentiment_analysis_vector_search_spark.streaming.file_sink import (
-        stream_ingest_dedup,
-    )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     half1 = docs.where(F.col("doc_id") < 250)
     half2 = docs.where(F.col("doc_id") >= 250)
 
-    src_dir = str(tmp_path / "doc_src")
-    os.makedirs(src_dir)
-
-    def land(df, name):
-        stage = str(tmp_path / f"_{name}")
-        df.coalesce(1).write.parquet(stage)
-        part = next(n for n in os.listdir(stage) if n.endswith(".parquet"))
-        shutil.copy(os.path.join(stage, part), os.path.join(src_dir, name))
-
-    out = str(tmp_path / "clean_corpus")
-    idx = str(tmp_path / "hist_idx")
-    ckpt = str(tmp_path / "ingest_ckpt")
-
-    land(half1, "documents_a.parquet")
-    stream_ingest_dedup(spark, src_dir, idx, out, ckpt)
-    land(half2, "documents_b.parquet")
-    stream_ingest_dedup(spark, src_dir, idx, out, ckpt)
-
-    got_ids = {r.doc_id for r in spark.read.parquet(out).select("doc_id").collect()}
-
     # expectations from the BATCH operators (ground truth on the union):
     # within-batch exact dedup keeps min doc_id per text hash ...
     exact = entrymod.queries()["dedup_exact"](spark, sf_dir).collect()
-    kept_exact = set()
     by_hash: dict = {}
     for r in exact:
-        half = r.doc_id < 250
-        key = (r.text_hash, half)
+        key = (r.text_hash, r.doc_id < 250)
         if key not in by_hash or r.doc_id < by_hash[key]:
             by_hash[key] = r.doc_id
     kept_exact = set(by_hash.values())
@@ -238,14 +222,167 @@ def test_stream_ingest_dedup_gates_against_history(spark, sf_dir, tmp_path):
         if lo < 250 <= hi:
             gated_b2.add(hi)
     want = {d for d in kept_exact if not (d >= 250 and d in gated_b2)}
-    assert got_ids == want
-    assert gated_b2 & kept_exact, "fixture must actually gate something"
 
-    # idempotent re-drain: no new files, no index growth
-    n_sh = spark.read.parquet(f"{idx}/shingles").count()
-    stream_ingest_dedup(spark, src_dir, idx, out, ckpt)
-    assert {r.doc_id for r in spark.read.parquet(out).select("doc_id").collect()} == want
-    assert spark.read.parquet(f"{idx}/shingles").count() == n_sh
+    def check(out):
+        assert gated_b2 & kept_exact, "fixture must actually gate something"
+
+    batches = [("documents_a.parquet", half1), ("documents_b.parquet", half2)]
+    return batches, "doc_id", want, check
+
+
+def _emb_gate_case(spark, sf_dir):
+    """Batch A seeds the index; batch B holds exact dups of A, an
+    internal dup pair and fresh vectors."""
+    import numpy as np
+
+    from sentiment_analysis_vector_search_spark.operators.dedup import (
+        emb_candidate_pairs,
+    )
+
+    rng = np.random.default_rng(7)
+    base = rng.normal(size=(60, 64))
+    fresh = rng.normal(size=(10, 64))
+    a_rows = [(i, list(map(float, v))) for i, v in enumerate(base)]
+    # batch B: dups of A's first 8 (ids 1001..1008), an internal dup pair
+    # (2000, 2001 identical), and 10 fresh vectors (3000..)
+    b_ids = list(range(1001, 1009)) + [2000, 2001] + list(range(3000, 3010))
+    b_vecs = (
+        [list(map(float, base[i])) for i in range(8)]
+        + [list(map(float, fresh[0]))] * 2
+        + [list(map(float, v)) for v in fresh]
+    )
+    schema = "vec_id bigint, embedding array<double>"
+    batches = [
+        ("embeddings_a.parquet", spark.createDataFrame(a_rows, schema)),
+        ("embeddings_b.parquet", spark.createDataFrame([*zip(b_ids, b_vecs)], schema)),
+    ]
+    # all of A survives; B's A-dups (1001-1008) drop; internal pair keeps
+    # 2000 only — BUT 2000 duplicates fresh[0] which is also vec 3000:
+    # batch order within B resolves via min vec_id → 2000 survives and
+    # 3000 drops; 3001.. survive.
+    want = set(range(60)) | {2000} | set(range(3001, 3010))
+
+    def check(out):
+        # no near-dup pair among survivors
+        survivors = spark.read.parquet(out).select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("v")
+        )
+        assert emb_candidate_pairs(survivors).count() == 0
+
+    return batches, "vec_id", want, check
+
+
+_GATE_CASES = {"minhash": _minhash_gate_case, "emb": _emb_gate_case}
+
+
+def _index_rows(spark, kind, idx):
+    """Row count of each directory of a near-dup index."""
+    from sentiment_analysis_vector_search_spark.operators.dedup_index import NEAR_DUP
+
+    return {
+        d: spark.read.parquet(f"{idx}/{d}").count()
+        for d in [*NEAR_DUP[kind].dirs, "bands"]
+    }
+
+
+@pytest.mark.parametrize("kind", ["minhash", "emb"])
+def test_stream_dedup_ingest_gates_against_history(spark, sf_dir, tmp_path, kind):
+    """Two source files drained in order: the second batch's rows that
+    near-duplicate the already-ingested corpus are dropped, within-batch
+    duplicates keep the min id, survivors join the index; re-drain is a
+    no-op."""
+    import os
+
+    from sentiment_analysis_vector_search_spark.streaming.file_sink import (
+        stream_dedup_ingest,
+    )
+
+    batches, key, want, check = _GATE_CASES[kind](spark, sf_dir)
+    src_dir, idx, out, ckpt = (
+        str(tmp_path / d) for d in ("src", "hist_idx", "clean_corpus", "ingest_ckpt")
+    )
+    os.makedirs(src_dir)
+    for name, df in batches:
+        _land(df, src_dir, name)
+        stream_dedup_ingest(spark, kind, src_dir, idx, out, ckpt)
+
+    def got_ids():
+        return {r[0] for r in spark.read.parquet(out).select(key).collect()}
+
+    assert got_ids() == want
+    check(out)
+
+    # idempotent re-drain: no new rows, no index growth
+    n_idx = _index_rows(spark, kind, idx)
+    stream_dedup_ingest(spark, kind, src_dir, idx, out, ckpt)
+    assert got_ids() == want
+    assert _index_rows(spark, kind, idx) == n_idx
+
+
+@pytest.mark.parametrize("kind", ["minhash", "emb"])
+def test_stream_dedup_ingest_crash_before_record_is_exactly_once(
+    spark, sf_dir, tmp_path, monkeypatch, kind
+):
+    """A crash after the second batch's table rows and index directories
+    are promoted and before its replay record: the resumed drain must
+    leave the table and the index exactly as a crash-free drain does.
+    The second batch holds within-batch near-dup pairs, so a replay
+    that gated against its own indexed rows would drop them."""
+    import os
+
+    from sentiment_analysis_vector_search_spark.streaming import file_sink
+
+    batches, key, _, _ = _GATE_CASES[kind](spark, sf_dir)
+    record = {"minhash": "_ingest_commits.json", "emb": "_emb_ingest_commits.json"}
+    real = file_sink.write_json
+
+    def crash_before_record(path, obj):
+        if path.endswith(record[kind]):
+            raise RuntimeError("crash between the promote and the record")
+        real(path, obj)
+
+    def drain(root, crash):
+        src_dir, idx, out, ckpt = (
+            str(tmp_path / root / d) for d in ("src", "idx", "out", "ckpt")
+        )
+        os.makedirs(src_dir)
+        for i, (name, df) in enumerate(batches):
+            _land(df, src_dir, name)
+            if crash and i == 1:
+                monkeypatch.setattr(file_sink, "write_json", crash_before_record)
+                with pytest.raises(Exception, match="crash between"):
+                    file_sink.stream_dedup_ingest(spark, kind, src_dir, idx, out, ckpt)
+                monkeypatch.undo()
+            file_sink.stream_dedup_ingest(spark, kind, src_dir, idx, out, ckpt)
+        table = spark.read.parquet(out)
+        ids = sorted(r[0] for r in table.select(key).collect())
+        return table.count(), ids, _index_rows(spark, kind, idx)
+
+    assert drain("crashed", True) == drain("clean", False)
+
+
+def test_file_sink_loops_never_append_in_place():
+    """Every loop append is staged and promoted under batch-stamped names
+    (``commit.idempotent_append_dir``), so a replay re-replaces the same
+    files. A writer ``.mode("append")`` would append again on replay;
+    the file sink's ``.outputMode("append")`` is exactly-once through
+    ``_spark_metadata`` and is allowed."""
+    import ast
+
+    from sentiment_analysis_vector_search_spark.streaming import file_sink
+
+    tree = ast.parse(open(file_sink.__file__).read())
+    appends = [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "mode"
+        and any(
+            isinstance(a, ast.Constant) and a.value == "append" for a in node.args
+        )
+    ]
+    assert not appends, f"file_sink.py appends in place at lines {appends}"
 
 
 def test_stream_stats_maintenance_matches_batch_analyze(spark, sf_dir, tmp_path):
@@ -320,65 +457,6 @@ def test_stream_stats_maintenance_matches_batch_analyze(spark, sf_dir, tmp_path)
     stream_sketch_maintenance(spark, "analyze", src_dir, stats_dir, ckpt2, k=256)
     rebuilt = load_sketch("analyze", stats_dir, "documents")
     assert rebuilt["doc_id"]["n_rows"] == want["doc_id"]["n_rows"]
-
-
-def test_stream_emb_dedup_ingest_gates_against_history(spark, tmp_path):
-    """Embedding ingest gate: batch A seeds the index; batch B's exact
-    dups of A drop, B's internal dup keeps only the min vec_id, fresh
-    vectors survive; survivors carry no near-dup pair; re-drain no-op."""
-    import os
-
-    import numpy as np
-    import pandas as pd
-
-    from sentiment_analysis_vector_search_spark.operators.dedup import (
-        emb_candidate_pairs,
-    )
-    from sentiment_analysis_vector_search_spark.streaming.file_sink import (
-        stream_emb_dedup_ingest,
-    )
-
-    rng = np.random.default_rng(7)
-    base = rng.normal(size=(60, 64))
-    fresh = rng.normal(size=(10, 64))
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    pd.DataFrame(
-        {"vec_id": range(60), "embedding": [list(map(float, v)) for v in base]}
-    ).to_parquet(f"{src}/embeddings_a.parquet", index=False)
-    # batch B: dups of A's first 8 (ids 1001..1008), an internal dup pair
-    # (2000, 2001 identical), and 10 fresh vectors (3000..)
-    b_ids = list(range(1001, 1009)) + [2000, 2001] + list(range(3000, 3010))
-    b_vecs = (
-        [list(map(float, base[i])) for i in range(8)]
-        + [list(map(float, fresh[0]))] * 2
-        + [list(map(float, v)) for v in fresh]
-    )
-    pd.DataFrame({"vec_id": b_ids, "embedding": b_vecs}).to_parquet(
-        f"{src}/embeddings_b.parquet", index=False
-    )
-
-    idx = str(tmp_path / "idx")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    stream_emb_dedup_ingest(spark, src, idx, out, ckpt)
-
-    got_ids = {r.vec_id for r in spark.read.parquet(out).collect()}
-    # all of A survives; B's A-dups (1001-1008) drop; internal pair keeps
-    # 2000 only — BUT 2000 duplicates fresh[0] which is also vec 3000:
-    # batch order within B resolves via min vec_id → 2000 survives and
-    # 3000 drops; 3001.. survive.
-    want = set(range(60)) | {2000} | set(range(3001, 3010))
-    assert got_ids == want
-    # no near-dup pair among survivors
-    survivors = spark.read.parquet(out).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    assert emb_candidate_pairs(survivors).count() == 0
-    # exactly-once: re-drain appends nothing
-    stream_emb_dedup_ingest(spark, src, idx, out, ckpt)
-    assert {r.vec_id for r in spark.read.parquet(out).collect()} == want
 
 
 def test_stream_hot_keys_maintenance(spark, sf_dir, tmp_path):

@@ -886,15 +886,16 @@ def test_stream_emb_dedup_rejects_unhonorable_threshold(spark, tmp_path):
     import pytest
 
     from sentiment_analysis_vector_search_spark.streaming.file_sink import (
-        stream_emb_dedup_ingest,
+        stream_dedup_ingest,
     )
 
     with pytest.raises(ValueError, match="never generated"):
-        stream_emb_dedup_ingest(
+        stream_dedup_ingest(
             spark,
+            "emb",
             str(tmp_path / "src"),
             str(tmp_path / "idx"),
             str(tmp_path / "out"),
             str(tmp_path / "ck"),
-            cosine_t=0.01,
+            threshold=0.01,
         )
