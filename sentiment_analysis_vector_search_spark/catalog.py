@@ -33,7 +33,7 @@ def read_events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as the scan surfaces it, ts un-normalized.
 
     The driver's generated events table has shipped with two different
-    parquet timestamp encodings across rounds — TIMESTAMP(NANOS), which
+    parquet timestamp encodings across versions — TIMESTAMP(NANOS), which
     vanilla Spark only reads via the nanosAsLong legacy conf (as a bigint),
     and TIMESTAMP(MICROS, isAdjustedToUTC=false), which reads natively as
     TIMESTAMP_NTZ. Set the legacy conf defensively (harmless for micros
@@ -48,9 +48,9 @@ def read_events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and pins the session timezone here — the single entry point every
     # events consumer (batch table(), streaming _event_stream) goes
     # through — rather than as a hidden branch-dependent side effect
-    # inside normalize_event_ts (r4 advice). The NTZ→TIMESTAMP cast below
-    # reinterprets wall-clock in the session timezone, so without the pin
-    # a caller-provided non-UTC session would silently shift every event.
+    # inside normalize_event_ts. The NTZ→TIMESTAMP cast below reinterprets
+    # wall-clock in the session timezone, so without the pin a
+    # caller-provided non-UTC session would silently shift every event.
     # Callers that need another zone should convert on the OUTPUT with
     # from_utc_timestamp, not reconfigure the engine.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -78,13 +78,12 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-# Per-session table memo (r6): `spark.read.parquet` re-lists the directory
-# and re-reads footers on EVERY call — a fixed ~50-100 ms tax per table per
-# query invocation that the r5 cross-round bench surfaced as a uniform
-# +0.3-0.5 s floor on trivial queries. The memoized DataFrame is a lazy,
-# immutable logical plan over a static testdata dir, so reuse is
-# value-identical; the session key is weak so a stopped session's entries
-# drop. (At cluster scale the equivalent is a real metastore table —
+# Per-session table memo: `spark.read.parquet` re-lists the directory and
+# re-reads footers on EVERY call — a fixed ~50-100 ms tax per table per
+# query invocation, measured as a uniform +0.3-0.5 s floor on trivial
+# queries. The memoized DataFrame is a lazy, immutable logical plan over
+# a static testdata dir, so reuse is value-identical; the session key is
+# weak so a stopped session's entries drop. (At cluster scale the equivalent is a real metastore table —
 # resolved once, not per query.) STATIC-DIRECTORY ASSUMPTION: a session
 # that rewrites/appends an sf_dir must call catalog.refresh(spark, sf_dir)
 # to drop the captured file listing — see refresh() below.
@@ -94,9 +93,8 @@ _TABLE_MEMO: "WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]"
 
 
 def refresh(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Invalidate the table memo (r6 advice): the memoized DataFrames
-    capture the parquet file listing (InMemoryFileIndex) at first read,
-    so a session that REGENERATES or APPENDS to an sf_dir (data-prep then
+    """Invalidate the table memo: the memoized DataFrames capture the
+    parquet file listing (InMemoryFileIndex) at first read, so a session that REGENERATES or APPENDS to an sf_dir (data-prep then
     query in one session) must call this — or pass the specific dir — to
     drop the stale listings. Tests that write their own table files into
     a tmp sf_dir are the in-repo callers."""
@@ -107,10 +105,10 @@ def refresh(spark: SparkSession, sf_dir: str | None = None) -> None:
         else:
             for key in [k for k in per if k[0] == sf_dir]:
                 del per[key]
-    # Stale-stats coupling (r7 advice, low): the stats memo is keyed by the
-    # same (sf_dir, table) identity; a rewritten dir invalidates BOTH the
-    # captured file listing and any per-table statistics the broadcast /
-    # join-strategy gates consume.
+    # Stale-stats coupling: the stats memo is keyed by the same (sf_dir,
+    # table) identity; a rewritten dir invalidates BOTH the captured file
+    # listing and any per-table statistics the broadcast / join-strategy
+    # gates consume.
     from . import stats as _stats
 
     _stats.refresh(sf_dir)

@@ -17,24 +17,44 @@ driver/oracle-verified), artifacts land as parquet under
 ``manifest.json`` recording per-stage row counts and status — written
 LAST, so a manifest's existence is the success marker (the ``jobs_db``
 status record of the reference; a crashed job leaves no manifest and its
-directory is re-runnable or expirable). There is no driver-side data
-movement: counts come from the stage writes' committed files.
+directory is re-runnable or expirable).
 
-Scale: stages share the session; each artifact write is an independent
-action over operator plans that are themselves scale-audited. At 100 TB
-the per-stage parquet dirs are partitioned by the operators' natural
-keys and jobs_root sits on object storage — the layout cleanup_old_jobs
-expects, generalized.
+One run does three things:
+
+- **One classification.** Every stage consumes the same sentiment
+  classification, so the job classifies once, as one eager lineage cut
+  (``sentiment_ops.shared_classification``), and builds every stage on
+  that cut. The stages keep their registered ``(spark, sf_dir)`` call
+  and, called alone, their plans.
+- **Side-by-side writes.** The stages are built one after another on the
+  caller's thread, and each is handed to a thread pool as soon as it is
+  built, so its parquet write runs while the next stage is built and
+  next to the other writes. Each write runs under the Spark local
+  properties (job group, description) the caller had when that stage was
+  built. A failed stage fails the job once every submitted write has
+  finished, before any manifest is written.
+- **Counts from footers.** Each stage's row count is summed from its
+  committed files' parquet footers (``sinks.parquet_rows``): no Spark
+  job, no data read, and the listing goes through the Hadoop FileSystem
+  so it works on object storage.
+
+Scale: the stage outputs are small aggregates of the classified corpus
+(a corpus-sized ``sent_classify`` aside), so a run is bound by per-job
+latency, which the side-by-side writes overlap. At 100 TB the shared cut
+is the one corpus-sized pass and jobs_root sits on object storage — the
+layout cleanup_old_jobs expects, generalized.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .commit import write_json
+from .sinks import parquet_rows
 
 # stage name -> registered operator (import-light: resolved lazily so the
 # module does not force-load every operator suite at import time)
@@ -64,7 +84,7 @@ def run_analysis_job(
     counts and status — the success marker, written only after every
     stage committed.
     """
-    from .registry import QUERIES, load_all_modules
+    from .registry import load_all_modules
 
     load_all_modules()
     job_dir = os.path.join(jobs_root, job_id)
@@ -72,13 +92,7 @@ def run_analysis_job(
     # job (or a future stage that writes elsewhere) must still be able to
     # commit its manifest.
     os.makedirs(job_dir, exist_ok=True)
-    counts: dict[str, int] = {}
-    for stage in stages:
-        df: DataFrame = QUERIES[stage](spark, sf_dir)
-        out = os.path.join(job_dir, stage)
-        df.write.mode("overwrite").parquet(out)
-        # count from the committed files, not a recompute of the plan
-        counts[stage] = spark.read.parquet(out).count()
+    counts = _run_stages(spark, sf_dir, job_dir, stages) if stages else {}
     manifest = {
         "job_id": job_id,
         "status": "succeeded",
@@ -87,6 +101,34 @@ def run_analysis_job(
     }
     write_json(os.path.join(job_dir, "manifest.json"), manifest)
     return manifest
+
+
+def _run_stages(
+    spark: SparkSession, sf_dir: str, job_dir: str, stages: tuple[str, ...]
+) -> dict[str, int]:
+    """Build every stage over one classification, in order on this
+    thread, handing each to a thread pool that writes and counts it while
+    the next is built; returns the row counts, or raises the first failed
+    stage's error once every submitted write has finished."""
+    from .operators.sentiment_ops import shared_classification
+    from .registry import QUERIES
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def write(out: str, df: DataFrame, props) -> int:
+        jsc.setLocalProperties(props)
+        df.write.mode("overwrite").parquet(out)
+        return parquet_rows(spark, out)
+
+    futures = {}
+    with ThreadPoolExecutor(len(stages)) as pool, shared_classification(spark, sf_dir):
+        for stage in stages:
+            df = QUERIES[stage](spark, sf_dir)
+            # the write's jobs carry the job group and description this
+            # thread had when the stage was built
+            props = jsc.getLocalProperties().clone()
+            futures[stage] = pool.submit(write, os.path.join(job_dir, stage), df, props)
+    return {stage: f.result() for stage, f in futures.items()}
 
 
 def read_job_artifact(

@@ -61,6 +61,26 @@ def list_data_files(
     return sorted(out)
 
 
+def parquet_rows(spark: SparkSession, path: str) -> int:
+    """Rows in the parquet directory ``path``, summed from its data files'
+    footers: the files come from ``list_data_files`` and each footer is
+    read by the JVM's parquet reader, so no Spark job starts and no data
+    page is read, on any filesystem the session can read."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    hadoop_file = jvm.org.apache.parquet.hadoop.util.HadoopInputFile
+    rows = 0
+    for f in list_data_files(spark, path):
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+            hadoop_file.fromPath(jvm.org.apache.hadoop.fs.Path(f), conf)
+        )
+        try:
+            rows += reader.getRecordCount()
+        finally:
+            reader.close()
+    return rows
+
+
 def spread_repartition(
     df: DataFrame, part_col: str, spreader_col: str, n: int | None = None
 ) -> DataFrame:

@@ -3,14 +3,19 @@ stage artifacts committed per job dir, manifest as the atomic success
 marker, incomplete jobs surfaced, old jobs expirable."""
 
 import os
+import re
 
 import pytest
+from pyspark.sql import functions as F
 
 from sentiment_analysis_vector_search_spark.jobs import (
     list_jobs,
     read_job_artifact,
     run_analysis_job,
 )
+from sentiment_analysis_vector_search_spark.operators import sentiment_ops
+from sentiment_analysis_vector_search_spark.plans import plan_str
+from sentiment_analysis_vector_search_spark.registry import QUERIES
 
 
 def test_job_artifacts_match_operators(spark, sf_dir, tmp_path):
@@ -30,6 +35,65 @@ def test_job_artifacts_match_operators(spark, sf_dir, tmp_path):
         a = sorted(map(tuple, art.collect()))
         b = sorted(map(tuple, live.collect()))
         assert a == b, stage
+
+
+def test_job_runs_under_callers_job_group(spark, sf_dir, tmp_path):
+    """Every Spark job of the analysis job, the side-by-side stage writes
+    included, carries the caller's job group, and the stages share one
+    classification (46 jobs when each stage classified and re-read its
+    artifact to count it)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    grouped = set(tracker.getJobIdsForGroup("g"))
+    sc.setJobGroup("g", "analysis job", False)
+    try:
+        run_analysis_job(spark, sf_dir, str(tmp_path / "jobs"), "job-g")
+    finally:
+        sc._jsc.clearJobGroup()
+    bus.waitUntilEmpty()
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    assert 0 < len(set(tracker.getJobIdsForGroup("g")) - grouped) <= 24
+
+
+def _plan(df) -> str:
+    # expression ids, lambda variables and AQE plan ids count up per
+    # construction
+    return re.sub(r"#\d+|\bx_\d+|plan_id=\d+", "", plan_str(df))
+
+
+def test_shared_classification_does_not_leak(spark, sf_dir, tmp_path):
+    before = _plan(QUERIES["sent_classify"](spark, sf_dir))
+    run_analysis_job(spark, sf_dir, str(tmp_path / "jobs"), "job-scope")
+    assert sentiment_ops._SHARED.get() is None
+    assert _plan(QUERIES["sent_classify"](spark, sf_dir)) == before
+
+
+def _fails_at_construct(spark, sf_dir):
+    raise ValueError("stage failed")
+
+
+def _fails_at_exec(spark, sf_dir):
+    boom = F.raise_error(F.lit("stage failed"))
+    return spark.range(4).select(
+        F.when(F.col("id") == 2, boom).otherwise(F.col("id")).alias("id")
+    )
+
+
+@pytest.mark.parametrize("broken", [_fails_at_construct, _fails_at_exec])
+def test_failed_stage_fails_job_without_manifest(spark, sf_dir, tmp_path, monkeypatch, broken):
+    """A stage that fails, while being built or while its write runs next
+    to the others, fails the whole job: no manifest, listed incomplete,
+    and the shared classification is gone."""
+    monkeypatch.setitem(QUERIES, "top_words", broken)
+    jobs_root = str(tmp_path / "jobs")
+    with pytest.raises(Exception, match="stage failed"):
+        run_analysis_job(spark, sf_dir, jobs_root, "job-bad")
+    assert not os.path.exists(os.path.join(jobs_root, "job-bad", "manifest.json"))
+    assert list_jobs(jobs_root) == [{"job_id": "job-bad", "status": "incomplete"}]
+    assert sentiment_ops._SHARED.get() is None
 
 
 def test_job_manifest_is_success_marker(spark, sf_dir, tmp_path):
@@ -102,7 +166,7 @@ def test_cli_knn_search(spark, sf_dir, tmp_path, capsys):
 
 def test_empty_stages_job_still_commits_manifest(spark, sf_dir, tmp_path):
     """stages=() must produce an empty-success manifest, not crash on a
-    missing job dir (r5 advice)."""
+    missing job dir."""
     jobs_root = str(tmp_path / "jobs")
     manifest = run_analysis_job(spark, sf_dir, jobs_root, "job-empty", stages=())
     assert manifest["status"] == "succeeded"
@@ -112,7 +176,7 @@ def test_empty_stages_job_still_commits_manifest(spark, sf_dir, tmp_path):
 
 def test_corrupt_manifest_reported_incomplete(spark, sf_dir, tmp_path):
     """A truncated manifest.json (crash mid-damage) downgrades the job to
-    'incomplete' in the listing instead of raising (r5 advice)."""
+    'incomplete' in the listing instead of raising."""
     jobs_root = str(tmp_path / "jobs")
     run_analysis_job(spark, sf_dir, jobs_root, "job-ok", stages=("run_metrics",))
     bad_dir = os.path.join(jobs_root, "job-bad")
