@@ -6,11 +6,16 @@ Run: python scripts/dump_plans.py            # rewrite PLANS.md (sf0.001 shapes)
      python scripts/dump_plans.py NAME ...   # print each NAME's formatted plan
                                              # at $SPARK_GRAFT_SF_DIR (default:
                                              # the PLANS.md data)
+
+Printed plans are normalized (``normalize``): expression ids, exchange
+plan ids and RDD ids with their call sites become fixed tokens, so the
+output of two checkouts diffs directly.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, ".")
@@ -93,6 +98,16 @@ SHOW = [
 ]
 
 
+def normalize(plan: str) -> str:
+    """``plan`` with expression ids (``#123``, ``#123L``), exchange plan
+    ids (``plan_id=457``) and RDD ids and call sites
+    (``MapPartitionsRDD[34] at localCheckpoint at ...``) replaced by fixed
+    tokens."""
+    plan = re.sub(r"#\d+L?\b", "#_", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=_", plan)
+    return re.sub(r"\b(\w*RDD)\[\d+\] at [^,\n]*", r"\1[_]", plan)
+
+
 def main() -> None:
     spark = get_spark("plans")
     qs = entrymod.queries()
@@ -100,7 +115,7 @@ def main() -> None:
     if sys.argv[1:]:
         sf = os.environ.get("SPARK_GRAFT_SF_DIR", sf)
         for name in sys.argv[1:]:
-            print(f"## {name}\n\n{plan_str(qs[name](spark, sf)).strip()}\n")
+            print(f"## {name}\n\n{normalize(plan_str(qs[name](spark, sf))).strip()}\n")
         return
     out = ["# PLANS — headline physical plans (local[*], sf0.001 shapes)\n"]
     out.append(

@@ -31,6 +31,21 @@ from ..catalog import cut, fan_out, table
 from ..functions.hashing import md5_int31, sql_md5_int31
 from ..functions.tfidf import BPE_RE as _BPE_RE
 from ..registry import register
+from .dedup import (
+    _SQL_SHINGLES_CTE,
+    _SQL_SIGS_CTE,
+    _sizes,
+    _sql_band_selects,
+    _sql_verify_cte,
+    band_candidates,
+    candidate_shingles,
+    jaccard,
+    minhash_bands,
+    minhash_sigs,
+    shared_counts,
+    shingle_sets,
+    with_sizes,
+)
 
 # ---------------------------------------------------------------------------
 # text_gopher_quality
@@ -351,8 +366,8 @@ def domain_mix_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Parity: the Shannon entropy term -(c/n) ln(c/n) decomposes over the
 # integer counts as (c/n) * (stable_ln(n) - stable_ln(c)) — engine-
-# native ln in a decimal-summed, 6-dp-rounded hashed column is the same
-# host-libm hazard the r10 verdict flagged for sample_weighted.
+# native ln in a decimal-summed, 6-dp-rounded hashed column is a
+# host-libm hazard (the same one sample_weighted avoids).
 # ---------------------------------------------------------------------------
 
 def _ent_term() -> str:
@@ -401,15 +416,14 @@ FROM n JOIN top t USING (source) JOIN ent e ON e.source = n.source
 def corpus_data_card(
     spark: SparkSession, sf_dir: str, stats_dir: str | None = None
 ) -> DataFrame:
-    """Per-source corpus data card. ``stats_dir`` (r13, r12 verdict #4)
-    is the documented scale path REALIZED: when given, p50_chars /
-    p90_chars are served from the MAINTAINED grouped fixed-width
-    histogram (the "ghist" sketch of stats.SKETCHES over documents
-    (source, n_chars)) via ``served_group_quantiles`` — |sources| x 64
-    integers of driver metadata instead of an exact percentile over the
-    fact table. The default (None) keeps the exact graded surface;
-    pytest pins the served values within one bin width of the exact
-    ones."""
+    """Per-source corpus data card. ``stats_dir`` is the scale path:
+    when given, p50_chars / p90_chars are served from the MAINTAINED
+    grouped fixed-width histogram (the "ghist" sketch of stats.SKETCHES
+    over documents (source, n_chars)) via ``served_group_quantiles`` —
+    |sources| x 64 integers of driver metadata instead of an exact
+    percentile over the fact table. The default (None) keeps the exact
+    graded surface; pytest pins the served values within one bin width
+    of the exact ones."""
     from ..functions.stable import dsum
 
     docs = table(spark, sf_dir, "documents")
@@ -425,8 +439,8 @@ def corpus_data_card(
     lc = docs.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("c"))
     # per_src is |sources| rows — broadcast into the lang-mix relation
     mix = lc.join(F.broadcast(per_src.select("source", "n_docs")), "source")
-    # Staged stable_ln (r11 verdict #2): identical op DAG to the
-    # oracle's inline _ENT_TERM, ~17 KB less plan text.
+    # Staged stable_ln: identical op DAG to the oracle's inline
+    # _ENT_TERM, ~17 KB less plan text.
     from ..functions.stable import with_stable_ln
 
     staged = with_stable_ln(
@@ -603,28 +617,17 @@ def corpus_balance_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 # broadcast probe, so candidates cost one broadcast-hash-join over the
 # banded corpus (no corpus×corpus pairing anywhere). Verification
 # semi-joins the shingle relation down to candidate docs + eval docs
-# before the jaccard join — the dedup_minhash_lsh discipline pointed
-# at a benchmark. The oracle runs the identical algorithm (same seeded
-# hash family as dedup.py, so signatures agree engine-to-engine).
+# before the jaccard join — the shingle-similarity core of dedup.py
+# pointed at a benchmark. The oracle runs the identical algorithm (same
+# seeded hash family as dedup.py, so signatures agree engine-to-engine).
 # ---------------------------------------------------------------------------
 
 _FUZZY_T = 0.5  # jaccard threshold for "contaminated"
 
 
-def _fuzzy_oracle() -> str:
-    from .dedup import (
-        _SQL_SHINGLES_CTE,
-        _sql_band_selects,
-        _sql_minhash_aggs,
-    )
-
-    return f"""
+_FUZZY_ORACLE = f"""
 WITH {_SQL_SHINGLES_CTE},
-sigs AS (
-  SELECT doc_id,
-         {_sql_minhash_aggs()}
-  FROM shingles GROUP BY doc_id
-), allbands AS (
+{_SQL_SIGS_CTE}, allbands AS (
   {_sql_band_selects()}
 ), ebands AS (
   SELECT doc_id AS eval_id, band, bh FROM allbands WHERE doc_id < {_EVAL_DOCS}
@@ -633,13 +636,7 @@ sigs AS (
 ), cand AS (
   SELECT DISTINCT c.doc_id, e.eval_id
   FROM cbands c JOIN ebands e ON c.band = e.band AND c.bh = e.bh
-), ver AS (
-  SELECT c.doc_id, c.eval_id, count(*) AS shared
-  FROM cand c
-  JOIN shingles sc ON sc.doc_id = c.doc_id
-  JOIN shingles se ON se.doc_id = c.eval_id AND se.sh = sc.sh
-  GROUP BY 1, 2
-), scored AS (
+), {_sql_verify_cte("sc", "se", "doc_id", "eval_id")}, scored AS (
   SELECT v.doc_id,
          round(v.shared * 1.0 / (sc.sz + se.sz - v.shared), 6) AS j
   FROM ver v
@@ -658,61 +655,28 @@ LEFT JOIN best b ON b.doc_id = d.doc_id
 """
 
 
-@register("decontaminate_fuzzy", oracle=_fuzzy_oracle())
+@register("decontaminate_fuzzy", oracle=_FUZZY_ORACLE)
 def decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy benchmark decontamination: corpus docs whose shingle-set
     jaccard against any eval doc clears the threshold, found by an
     asymmetric MinHash-LSH probe (broadcast eval bands against banded
     corpus signatures) and verified exactly on candidates only."""
-    from .dedup import band_structs_expr, minhash_sig_exprs, shingle_sets
-
     sh = shingle_sets(spark, sf_dir)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     # cut: multi-consumer — the eval and corpus band branches would each
     # re-run the 16-aggregate signature groupBy
-    sigs = cut(sh.groupBy("doc_id").agg(*minhash_sig_exprs()))
-    band_structs = band_structs_expr()
-    bands = sigs.select("doc_id", F.explode(band_structs).alias("b")).select(
-        "doc_id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
-    )
-    ebands = bands.where(F.col("doc_id") < _EVAL_DOCS).withColumnsRenamed(
-        {"doc_id": "eval_id"}
-    )
-    cbands = bands.where(F.col("doc_id") >= _EVAL_DOCS)
-    # cut: multi-consumer — the candidate id semi-join and the verify join
-    cand = cut(
-        cbands.join(F.broadcast(ebands), ["band", "bh"]).select("doc_id", "eval_id").distinct(),
-        eager=True,
-    )
+    bands = minhash_bands(cut(minhash_sigs(sh)))
+    is_eval = F.col("doc_id") < _EVAL_DOCS
+    # doc_a: the corpus doc; doc_b: the eval doc it collides with
+    cand = band_candidates(bands.where(~is_eval), F.broadcast(bands.where(is_eval)))
     # shingles of candidate corpus docs + ALL eval shingles (eval is
     # broadcast-sized by definition)
-    cand_ids = cand.select("doc_id").distinct()
-    sh_c = sh.join(F.broadcast(cand_ids), "doc_id", "left_semi")
-    sh_e = sh.where(F.col("doc_id") < _EVAL_DOCS).withColumnsRenamed(
-        {"doc_id": "eval_id"}
-    )
-    ver = (
-        cand.join(sh_c, "doc_id")
-        .join(sh_e, ["eval_id", "sh"])
-        .groupBy("doc_id", "eval_id")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    sc = sizes.withColumnsRenamed({"sz": "sz_c"})
-    se = sizes.withColumnsRenamed({"doc_id": "eval_id", "sz": "sz_e"})
-    j = F.round(
-        F.col("shared")
-        * F.lit(1.0)
-        / (F.col("sz_c") + F.col("sz_e") - F.col("shared")),
-        6,
-    )
+    ver = shared_counts(cand, candidate_shingles(sh, cand, "doc_a"), sh.where(is_eval))
     best = (
-        ver.join(sc, "doc_id")
-        .join(F.broadcast(se), "eval_id")
-        .select("doc_id", j.alias("j"))
-        .groupBy("doc_id")
+        with_sizes(ver, _sizes(sh))
+        .groupBy(F.col("doc_a").alias("doc_id"))
         .agg(
             F.count(F.lit(1)).alias("n_candidates"),
-            F.max("j").alias("max_jaccard"),
+            F.max(jaccard()).alias("max_jaccard"),
         )
     )
     corpus = table(spark, sf_dir, "documents").where(

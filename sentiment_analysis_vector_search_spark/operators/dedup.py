@@ -26,6 +26,7 @@ generalize that to corpus-scale near-dup detection.
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -34,7 +35,6 @@ from pyspark.sql import functions as F
 from ..catalog import cut, fan_out, table
 from ..functions.hashing import (
     MOD31,
-    md5_int31,
     md5_long,
     minhash_params,
     sql_md5_int31,
@@ -128,9 +128,6 @@ def shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     df-filter + both sides of the candidate self-join) pay the
     scan→explode→distinct shuffle once instead of once per subtree — at
     corpus scale each recomputation is a full extra corpus scan + shuffle.
-    A pipeline running several shingle-based dedups back-to-back should
-    build the frame once and pass it to each operator via their ``sh``
-    parameter.
     """
     # tokenize + trigram transform + explode is the expensive scan-stage
     # projection in both jaccard and minhash: fan it out across cores.
@@ -139,8 +136,112 @@ def shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cut(doc_shingles(docs), eager=True)
 
 
-def _sizes(sh: DataFrame) -> DataFrame:
-    return sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+def _sizes(sh: DataFrame, name: str = "sz") -> DataFrame:
+    return sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias(name))
+
+
+# ---------------------------------------------------------------------------
+# The shingle-similarity core. Every shingle operator (n-gram Jaccard,
+# MinHash-LSH and its quality audit, containment, fuzzy decontamination,
+# the persisted MinHash index) is a composition of these blocks:
+# - the MinHash band relation: ``minhash_sigs`` → ``minhash_bands``;
+# - the banded candidate join: ``band_candidates``;
+# - the candidate-side semi-join and shared-count verify:
+#   ``candidate_shingles`` → ``shared_counts``;
+# - the df-capped shingle pair count: ``capped_shingles`` →
+#   ``shingle_pair_counts``;
+# - one rounded score: ``shared_ratio`` (``jaccard``), over ``with_sizes``.
+# ---------------------------------------------------------------------------
+
+
+def capped_shingles(sh: DataFrame) -> DataFrame:
+    """``sh`` without boilerplate: shingles present in more than
+    ``_DF_CAP`` docs are dropped, which bounds the pair join at C(cap, 2)
+    pairs per shingle."""
+    freq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df")).where(
+        F.col("df") <= _DF_CAP
+    )
+    return sh.join(freq.select("sh"), "sh")
+
+
+def _pair_join(a: DataFrame, b: DataFrame, *keys: str, ordered: bool = True) -> DataFrame:
+    """``a`` equi-joined to ``b`` on ``keys`` under the aliases ``a`` and
+    ``b``; ``ordered`` keeps one row per pair, a.doc_id < b.doc_id."""
+    on = reduce(Column.__and__, [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys])
+    if ordered:
+        on = on & (F.col("a.doc_id") < F.col("b.doc_id"))
+    return a.alias("a").join(b.alias("b"), on)
+
+
+def _pair_ids() -> list[Column]:
+    """A ``_pair_join``'s doc ids as (doc_a, doc_b)."""
+    return [F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")]
+
+
+def shingle_pair_counts(rows: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, shared): every pair of docs sharing a shingle of
+    ``rows`` with its shared count, doc_a < doc_b — the shingle-keyed
+    self-join, never a cross join."""
+    return (
+        _pair_join(rows, rows, "sh")
+        .groupBy(*_pair_ids())
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+
+
+def band_candidates(bands: DataFrame, probe: DataFrame | None = None) -> DataFrame:
+    """Distinct (doc_a, doc_b) pairs of (doc_id, band, bh) rows that share
+    a band bucket: the banded self-join of ``bands`` (doc_a < doc_b), or,
+    with ``probe``, ``bands`` probed by ``probe``'s buckets (doc_b)."""
+    ordered = probe is None
+    joined = _pair_join(bands, bands if ordered else probe, "band", "bh", ordered=ordered)
+    # cut: multi-consumer — the candidate relation feeds the id semi-join
+    # AND the verify join; without it the band join runs twice.
+    return cut(joined.select(*_pair_ids()).distinct(), eager=True)
+
+
+def candidate_shingles(sh: DataFrame, cand: DataFrame, *ids: str) -> DataFrame:
+    """``sh`` semi-joined down to the docs named in ``cand``'s ``ids``
+    columns, BEFORE the verify join: only docs that collided in some band
+    can contribute a verified pair, so the verify shuffle moves candidate
+    shingles, not the whole corpus. The id set is near-dup-bounded (tiny
+    relative to the corpus) → broadcast; at extreme candidate volumes drop
+    the hint and let AQE pick a shuffled semi-join."""
+    docs = reduce(DataFrame.union, [cand.select(F.col(c).alias("doc_id")) for c in ids])
+    return sh.join(F.broadcast(docs.distinct()), "doc_id", "left_semi")
+
+
+def shared_counts(
+    cand: DataFrame, sh_a: DataFrame, sh_b: DataFrame, a: str = "doc_a", b: str = "doc_b"
+) -> DataFrame:
+    """(a, b, shared): each candidate pair of ``cand`` with the count of
+    shingles its ``a`` doc (rows of ``sh_a``) and ``b`` doc (``sh_b``)
+    share."""
+    return (
+        cand.join(sh_a.withColumnsRenamed({"doc_id": a}), a)
+        .join(sh_b.withColumnsRenamed({"doc_id": b}), [b, "sh"])
+        .groupBy(a, b)
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+
+
+def with_sizes(pairs: DataFrame, sizes: DataFrame, name: str = "sz") -> DataFrame:
+    """``pairs`` with each side's ``name`` column of ``sizes`` as
+    ``{name}_a`` and ``{name}_b``."""
+    return pairs.join(
+        sizes.withColumnsRenamed({"doc_id": "doc_a", name: f"{name}_a"}), "doc_a"
+    ).join(sizes.withColumnsRenamed({"doc_id": "doc_b", name: f"{name}_b"}), "doc_b")
+
+
+def shared_ratio(denom: Column) -> Column:
+    """``round(shared / denom, 6)``: every shingle score (Jaccard,
+    containment) rounds the same way its oracle does."""
+    return F.round(F.col("shared") * F.lit(1.0) / denom, 6)
+
+
+def jaccard(sz_a: str = "sz_a", sz_b: str = "sz_b") -> Column:
+    """The rounded Jaccard of a pair with ``shared`` and both set sizes."""
+    return shared_ratio(F.col(sz_a) + F.col(sz_b) - F.col("shared"))
 
 
 # ---------------------------------------------------------------------------
@@ -168,35 +269,11 @@ WHERE round(shared * 1.0 / (sa.sz + sb.sz - shared), 6) >= {_JACCARD_T}
 
 
 @register("dedup_ngram_jaccard", oracle=_JACCARD_ORACLE)
-def dedup_ngram_jaccard(
-    spark: SparkSession, sf_dir: str, sh: DataFrame | None = None
-) -> DataFrame:
-    # ``sh``: optionally a pre-materialized shingle_sets() frame so a
-    # pipeline running jaccard AND minhash shares one materialization.
-    if sh is None:
-        sh = shingle_sets(spark, sf_dir)
-    sizes = _sizes(sh)
-    freq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df")).where(
-        F.col("df") <= _DF_CAP
-    )
-    filtered = sh.join(freq.select("sh"), "sh")
-    a = filtered.alias("a")
-    b = filtered.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    sa = sizes.withColumnsRenamed({"doc_id": "doc_a", "sz": "sz_a"})
-    sb = sizes.withColumnsRenamed({"doc_id": "doc_b", "sz": "sz_b"})
-    jc = F.round(
-        F.col("shared") * F.lit(1.0) / (F.col("sz_a") + F.col("sz_b") - F.col("shared")),
-        6,
-    )
+def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    sh = shingle_sets(spark, sf_dir)
     return (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", "shared", jc.alias("jaccard"))
+        with_sizes(shingle_pair_counts(capped_shingles(sh)), _sizes(sh))
+        .select("doc_a", "doc_b", "shared", jaccard().alias("jaccard"))
         .where(F.col("jaccard") >= _JACCARD_T)
     )
 
@@ -223,15 +300,11 @@ def _spark_md5_int31(col: str) -> str:
     return f"cast(conv(substring(md5({col}), 1, 7), 16, 10) as bigint)"
 
 
-_SPARK_MD5_INT31_SH = _spark_md5_int31("sh")
-
-
 def minhash_sig_exprs(col: str = "sh") -> list:
     """The 16 ``min((md5_int31(col) * a + b) % MOD31) AS mh{i}`` aggregate
     columns, parsed from SQL text (Spark-side twin of the oracle's
     ``_sql_minhash_aggs``). ``col`` names the shingle column the text
-    resolves against (r13 advice: the old hardcoded 'sh' silently bound
-    to any in-scope column of that name)."""
+    resolves against."""
     return [
         F.expr(
             f"min((({_spark_md5_int31(col)}) * {a} + {b}) % {MOD31}) AS mh{i}"
@@ -256,6 +329,19 @@ def band_structs_expr():
     return F.expr(f"array({structs})")
 
 
+def minhash_sigs(sh: DataFrame) -> DataFrame:
+    """(doc_id, mh0..mh15) MinHash signatures of a shingle relation: one
+    map-side-combinable groupBy of mins."""
+    return sh.groupBy("doc_id").agg(*minhash_sig_exprs())
+
+
+def minhash_bands(sigs: DataFrame) -> DataFrame:
+    """(doc_id, band, bh) LSH band buckets of a ``minhash_sigs`` frame."""
+    return sigs.select("doc_id", F.explode(band_structs_expr()).alias("b")).select(
+        "doc_id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
+    )
+
+
 def _sql_minhash_aggs() -> str:
     base = sql_md5_int31("sh")
     return ",\n         ".join(
@@ -277,24 +363,35 @@ def _sql_band_selects() -> str:
     return "\nUNION ALL\n".join(selects)
 
 
-_MINHASH_ORACLE = f"""
-WITH {_SQL_SHINGLES_CTE},
-sigs AS (
+# The oracles' MinHash CTEs: signatures, then (minhash, keep-canonical,
+# audit) bands and banded candidates, then the shared-shingle verify.
+_SQL_SIGS_CTE = f"""sigs AS (
   SELECT doc_id,
          {_sql_minhash_aggs()}
   FROM shingles GROUP BY doc_id
-), bands AS (
+)"""
+
+_SQL_CAND_CTES = f"""{_SQL_SIGS_CTE}, bands AS (
   {_sql_band_selects()}
 ), cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-), ver AS (
-  SELECT c.doc_a, c.doc_b, count(*) AS shared
+)"""
+
+
+def _sql_verify_cte(sa: str, sb: str, doc_a: str = "doc_a", doc_b: str = "doc_b") -> str:
+    return f"""ver AS (
+  SELECT c.{doc_a}, c.{doc_b}, count(*) AS shared
   FROM cand c
-  JOIN shingles sa ON sa.doc_id = c.doc_a
-  JOIN shingles sb ON sb.doc_id = c.doc_b AND sb.sh = sa.sh
+  JOIN shingles {sa} ON {sa}.doc_id = c.{doc_a}
+  JOIN shingles {sb} ON {sb}.doc_id = c.{doc_b} AND {sb}.sh = {sa}.sh
   GROUP BY 1, 2
-)
+)"""
+
+
+_MINHASH_ORACLE = f"""
+WITH {_SQL_SHINGLES_CTE},
+{_SQL_CAND_CTES}, {_sql_verify_cte("sa", "sb")}
 SELECT v.doc_a, v.doc_b,
        round(v.shared * 1.0 / (sa.sz + sb.sz - v.shared), 6) AS jaccard
 FROM ver v
@@ -303,69 +400,26 @@ JOIN sizes sb ON sb.doc_id = v.doc_b
 """
 
 
-@register("dedup_minhash_lsh", oracle=_MINHASH_ORACLE)
-def dedup_minhash_lsh(
-    spark: SparkSession, sf_dir: str, sh: DataFrame | None = None
-) -> DataFrame:
-    # ``sh``: optionally a pre-materialized shingle_sets() frame (shared
-    # with dedup_ngram_jaccard when a pipeline runs both).
-    if sh is None:
-        sh = shingle_sets(spark, sf_dir)
-    sizes = _sizes(sh)
+def _minhash_verified(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The corpus's MinHash signatures and its banded candidate pairs
+    with their shared-shingle count and both sizes (doc_a, doc_b, shared,
+    sz_a, sz_b)."""
+    sh = shingle_sets(spark, sf_dir)
     # cut: multi-consumer — both band self-join sides and the probe branch
-    # would each re-run the 16-aggregate signature groupBy (a broadcast
-    # side defeats exchange reuse). The cut hides size stats from
-    # Catalyst, so the band joins shuffle — intended: doc-grain sides are
-    # never broadcastable at corpus scale.
-    sigs = cut(sh.groupBy("doc_id").agg(*minhash_sig_exprs()))
-    band_structs = band_structs_expr()
-    bands = sigs.select("doc_id", F.explode(band_structs).alias("b")).select(
-        "doc_id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    # cut: multi-consumer — the candidate relation feeds the id semi-join
-    # below AND the verify join; without it the band self-join runs twice.
-    cand = cut(
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct(),
-        eager=True,
-    )
-    # Semi-join the shingle relation down to candidate docs BEFORE the
-    # verify join: only docs that collided in some band can contribute a
-    # verified pair, so the verify shuffle moves candidate shingles, not
-    # the whole corpus. The candidate id set is near-dup-bounded (tiny
-    # relative to the corpus) → broadcast; at extreme candidate volumes
-    # drop the hint and let AQE pick a shuffled semi-join.
-    cand_ids = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .union(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    sh_cand = sh.join(F.broadcast(cand_ids), "doc_id", "left_semi")
-    sha = sh_cand.withColumnsRenamed({"doc_id": "doc_a"})
-    shb = sh_cand.withColumnsRenamed({"doc_id": "doc_b"})
-    ver = (
-        cand.join(sha, "doc_a")
-        .join(shb, ["doc_b", "sh"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    sa = sizes.withColumnsRenamed({"doc_id": "doc_a", "sz": "sz_a"})
-    sb = sizes.withColumnsRenamed({"doc_id": "doc_b", "sz": "sz_b"})
-    jc = F.round(
-        F.col("shared") * F.lit(1.0) / (F.col("sz_a") + F.col("sz_b") - F.col("shared")),
-        6,
-    )
-    return (
-        ver.join(sa, "doc_a").join(sb, "doc_b").select("doc_a", "doc_b", jc.alias("jaccard"))
-    )
+    # (and the audit's estimate joins) would each re-run the 16-aggregate
+    # signature groupBy (a broadcast side defeats exchange reuse). The cut
+    # hides size stats from Catalyst, so the band joins shuffle — intended:
+    # doc-grain sides are never broadcastable at corpus scale.
+    sigs = cut(minhash_sigs(sh))
+    cand = band_candidates(minhash_bands(sigs))
+    sh_cand = candidate_shingles(sh, cand, "doc_a", "doc_b")
+    return sigs, with_sizes(shared_counts(cand, sh_cand, sh_cand), _sizes(sh))
+
+
+@register("dedup_minhash_lsh", oracle=_MINHASH_ORACLE)
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    _, verified = _minhash_verified(spark, sf_dir)
+    return verified.select("doc_a", "doc_b", jaccard().alias("jaccard"))
 
 
 # ---------------------------------------------------------------------------
@@ -427,12 +481,12 @@ WHERE bit_count(xor(sim_a, sim_b)) <= {_SIM_HAMMING}
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Signature via explode + ONE partial-aggregable groupBy with 60
     # conditional sums — the oracle's own formulation, and whole-stage
-    # codegen end-to-end. The r4 row-local higher-order-function variant
-    # avoided this shuffle but paid ~64 INTERPRETED closure evals per
-    # token; the 100x scale smoke measured that at >8 minutes while this
-    # codegen form stays linear (summing +-1 per token == summing +-tf
-    # per distinct word, so the tf stage is folded away; the shuffle
-    # carries 60 combined longs per doc per map partition, not tokens).
+    # codegen end-to-end. A row-local higher-order-function form avoids
+    # this shuffle but pays ~64 INTERPRETED closure evals per token and
+    # goes super-linear in the 100x scale smoke, while this codegen form
+    # stays linear (summing +-1 per token == summing +-tf per distinct
+    # word, so the tf stage is folded away; the shuffle carries 60
+    # combined longs per doc per map partition, not tokens).
     docs = fan_out(spark, table(spark, sf_dir, "documents"))
     # explode_outer + isNotNull, NOT explode: InferFiltersFromGenerate
     # would push a size()>0 filter below the generate and re-evaluate the
@@ -448,8 +502,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SQL TEXT (one parse round trip per expression) instead of stacked
     # Column operators: the Column form costs ~8 py4j round trips per
     # term — ~1 s of per-EXECUTION driver latency for this constructor
-    # alone (measured r13; each bench rep and each production submission
-    # rebuilds the DataFrame). The parsed trees are the identical ops, so
+    # alone (each bench rep and each production submission rebuilds the
+    # DataFrame). The parsed trees are the identical ops, so
     # plan and results are unchanged (pytest-pinned vs the oracle).
     sums = bits.groupBy("doc_id").agg(
         *[
@@ -515,20 +569,19 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _EMB_T = 0.5
-# 8 bands x 8 bits (default since r8): P(bucket collision | random pair)
+# 8 bands x 8 bits by default: P(bucket collision | random pair)
 # = 1/256 per band, while a true near-dup pair (cosine >= 0.5) collides
 # in >= 1 band with p ~ 1-(1-(2/3)^8)^8 ~ 0.27 (a high-cosine dup at 0.9
 # still collides with p ~ 0.94 — the regime exact dedup cares about).
 #
 # BAND WIDTH IS THE SCALE KNOB: expected candidate pairs per band grow as
-# n^2 / 2^bits. The pre-r8 default of 5 bits was tuned for recall on the
-# ~10^3-vector test corpus but measured 1.2-2.7x SUPER-linear in every
-# 10x-vectors smoke (bucket occupancy grows with the corpus, candidate
-# pairs quadratically within buckets); 8 bits measured 0.72-0.87x linear
-# on identical data. A 100 TB deploy that forgets the env var must get
-# the scale-safe setting, so 8 is the default and 5 is the opt-in
-# small-corpus setting (SPARK_GRAFT_EMB_BAND_BITS=5 restores the old
-# recall economics; see SCALING.md rule 3). For a KNOWN corpus size,
+# n^2 / 2^bits. 5 bits suits recall on a ~10^3-vector corpus but grows
+# 1.2-2.7x SUPER-linear per 10x vectors (bucket occupancy grows with the
+# corpus, candidate pairs quadratically within buckets); 8 bits stays
+# 0.72-0.87x linear on identical data. A 100 TB deploy that forgets the
+# env var must get the scale-safe setting, so 8 is the default and 5 is
+# the opt-in small-corpus setting (SPARK_GRAFT_EMB_BAND_BITS=5; see
+# SCALING.md rule 3). For a KNOWN corpus size,
 # :func:`emb_band_bits_for` derives the width from row-count stats
 # (stats.table_stats) so candidate volume stays ~linear. The knob is
 # read at import and the DuckDB oracle text is GENERATED from the same
@@ -540,7 +593,7 @@ _EMB_PLANES = hyperplanes(_EMB_BANDS * _EMB_BAND_BITS, 64, seed=7)
 
 
 def emb_band_bits_for(n_vectors: int, pairs_per_vector: float = 8.0) -> int:
-    """Stats-informed band width (r7 verdict #2): the smallest bits such
+    """Stats-informed band width: the smallest bits such
     that EXPECTED random-collision candidate pairs stay ~linear in n —
     E[pairs/band] ~ n^2 / 2^(bits+1) <= pairs_per_vector * n, i.e.
     bits >= log2(n / (2 * pairs_per_vector)). Clamped to [8, 24]: never
@@ -853,7 +906,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cc_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairs stay LAZY: _components_from_pairs reads them exactly once
-    # (single-explode symmetrization, r8), so the expensive LSH subtree
+    # (single-explode symmetrization), so the expensive LSH subtree
     # evaluates once inside the edge materialization — no separate
     # persist+count job for the pair relation.
     return _components_from_pairs(
@@ -871,18 +924,18 @@ _CC_CK_EVERY = 4
 def _components_from_pairs(pairs: DataFrame) -> DataFrame:
     """Min-label connected components over a 2-column pair frame.
 
-    ``pairs`` may be LAZY (r8): the symmetrized + self-looped edge
+    ``pairs`` may be LAZY: the symmetrized + self-looped edge
     relation is built in ONE pass over it — explode each pair into its
     four directed/self-loop edges, then distinct — so the expensive
     candidate subtree evaluates exactly once, inside the single edge
     materialization job, instead of needing its own persist+count.
     Returns (id, component).
 
-    Iteration-state lifecycle (the r6-verdict spike fix): each round's
-    label frame is persisted (MEMORY_AND_DISK) and the PREVIOUS round's
-    blocks are released explicitly the moment the new round is
-    materialized, instead of an eager cut per round whose blocks linger
-    until garbage collection. A cut is kept only every
+    Iteration-state lifecycle, which keeps executor memory flat across
+    rounds: each round's label frame is persisted (MEMORY_AND_DISK) and
+    the PREVIOUS round's blocks are released explicitly the moment the
+    new round is materialized, instead of an eager cut per round whose
+    blocks linger until garbage collection. A cut is kept only every
     ``_CC_CK_EVERY`` rounds, purely for lineage truncation (on a real
     cluster: a reliable checkpoint at the same cadence).
     """
@@ -927,7 +980,7 @@ def _components_from_pairs(pairs: DataFrame) -> DataFrame:
     prev_sum = _sum(comp)  # materializes edges_sl + init labels (AQE on:
     # this action also evaluates the candidate subtree, which wants it)
     releasable = comp  # persisted frame whose blocks we still hold
-    # AQE OFF for the round probes (r7 verdict #7): every round reads
+    # AQE OFF for the round probes: every round reads
     # only the two cached 8-partition frames, so adaptive re-planning
     # buys nothing while charging ~one driver-side job per exchange it
     # materializes — with it off each probe is ONE job. Restored after.
@@ -953,14 +1006,12 @@ def _cc_rounds(edges_sl, comp, prev_sum, releasable, _sum):
     exactly the rounds). Returns (converged labels, releasable)."""
     for i in range(_CC_MAX_ITERS):
         # One min-propagation hop, persisted and probed BEFORE the
-        # pointer jump (r7 verdict #7 — the query is the suite's most
-        # per-job-fixed-cost-sensitive, and under AQE each probe costs
-        # ~one job per exchange it materializes):
+        # pointer jump (per-job fixed cost dominates this query):
         # - the hop probe doubles as the convergence check, so the FINAL
         #   (confirming) round pays one cheap join+groupBy, never a jump;
         # - a non-converged round's jump self-joins the CACHED hop frame
-        #   instead of double-evaluating the hop subtree (the old lazy
-        #   jump re-ran the join+groupBy twice inside one action).
+        #   instead of double-evaluating the hop subtree (a lazy jump
+        #   re-runs the join+groupBy twice inside one action).
         stepped = (
             edges_sl.join(comp, edges_sl.a == comp.id)
             .groupBy(F.col("b").alias("id"))
@@ -1016,22 +1067,7 @@ def _cc_rounds(edges_sl, comp, prev_sum, releasable, _sum):
 
 _KEEP_ORACLE = f"""
 WITH RECURSIVE {_SQL_SHINGLES_CTE},
-sigs AS (
-  SELECT doc_id,
-         {_sql_minhash_aggs()}
-  FROM shingles GROUP BY doc_id
-), bands AS (
-  {_sql_band_selects()}
-), cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-), ver AS (
-  SELECT c.doc_a, c.doc_b, count(*) AS shared
-  FROM cand c
-  JOIN shingles sa ON sa.doc_id = c.doc_a
-  JOIN shingles sb ON sb.doc_id = c.doc_b AND sb.sh = sa.sh
-  GROUP BY 1, 2
-), pairs AS (
+{_SQL_CAND_CTES}, {_sql_verify_cte("sa", "sb")}, pairs AS (
   SELECT v.doc_a, v.doc_b
   FROM ver v
   JOIN sizes sa ON sa.doc_id = v.doc_a
@@ -1058,9 +1094,9 @@ FROM cc
 
 @register("dedup_keep_canonical", oracle=_KEEP_ORACLE)
 def dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # pairs stay lazy (r8): the single-explode symmetrization inside
-    # _components_from_pairs reads them once, saving the separate
-    # persist+count job (verdict #7 — per-job fixed cost).
+    # pairs stay lazy: the single-explode symmetrization inside
+    # _components_from_pairs reads them once, saving a separate
+    # persist+count job.
     pairs = (
         dedup_minhash_lsh(spark, sf_dir)
         .where(F.col("jaccard") >= _JACCARD_T)
@@ -1092,10 +1128,10 @@ def dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 # carrying the load. Complements dedup_index_stats (bucket occupancy) —
 # that audits the *cost* side, this audits the *accuracy* side.
 #
-# Scale: identical bounded machinery as dedup_minhash_lsh (one shingle
-# materialization, banded candidate join, candidate-semi-joined verify);
-# the estimate join adds one broadcast-amenable signature lookup per
-# pair side. Output is O(10) rows.
+# Scale: the same ``_minhash_verified`` pipeline as dedup_minhash_lsh (one
+# shingle materialization, banded candidate join, candidate-semi-joined
+# verify); the estimate join adds one broadcast-amenable signature lookup
+# per pair side. Output is O(10) rows.
 # ---------------------------------------------------------------------------
 
 
@@ -1108,22 +1144,7 @@ def _sql_mh_match_count() -> str:
 
 _MH_AUDIT_ORACLE = f"""
 WITH {_SQL_SHINGLES_CTE},
-sigs AS (
-  SELECT doc_id,
-         {_sql_minhash_aggs()}
-  FROM shingles GROUP BY doc_id
-), bands AS (
-  {_sql_band_selects()}
-), cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-), ver AS (
-  SELECT c.doc_a, c.doc_b, count(*) AS shared
-  FROM cand c
-  JOIN shingles sha ON sha.doc_id = c.doc_a
-  JOIN shingles shb ON shb.doc_id = c.doc_b AND shb.sh = sha.sh
-  GROUP BY 1, 2
-), scored AS (
+{_SQL_CAND_CTES}, {_sql_verify_cte("sha", "shb")}, scored AS (
   SELECT v.doc_a, v.doc_b,
          round(v.shared * 1.0 / (sza.sz + szb.sz - v.shared), 6) AS exact_j,
          ({_sql_mh_match_count()}) * 1.0 / {_N_HASHES} AS est_j
@@ -1145,68 +1166,23 @@ GROUP BY 1
 
 @register("dedup_minhash_quality_audit", oracle=_MH_AUDIT_ORACLE)
 def dedup_minhash_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = shingle_sets(spark, sf_dir)
-    sizes = _sizes(sh)
-    # cut: multi-consumer — feeds bands AND both estimate join sides
-    sigs = cut(sh.groupBy("doc_id").agg(*minhash_sig_exprs()), eager=True)
-    band_structs = band_structs_expr()
-    bands = sigs.select("doc_id", F.explode_outer(band_structs).alias("b")).select(
-        "doc_id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    # cut: multi-consumer — feeds the id semi-join AND the exact join
-    cand = cut(
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    sigs, verified = _minhash_verified(spark, sf_dir)
+    side = {
+        s: sigs.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            *[F.col(f"mh{i}").alias(f"{s}{i}") for i in range(_N_HASHES)],
         )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct(),
-        eager=True,
-    )
-    cand_ids = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .union(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    sh_cand = sh.join(F.broadcast(cand_ids), "doc_id", "left_semi")
-    sha = sh_cand.withColumnsRenamed({"doc_id": "doc_a"})
-    shb = sh_cand.withColumnsRenamed({"doc_id": "doc_b"})
-    ver = (
-        cand.join(sha, "doc_a")
-        .join(shb, ["doc_b", "sh"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    sza = sizes.withColumnsRenamed({"doc_id": "doc_a", "sz": "sz_a"})
-    szb = sizes.withColumnsRenamed({"doc_id": "doc_b", "sz": "sz_b"})
-    siga = sigs.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(_N_HASHES)],
-    )
-    sigb = sigs.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(_N_HASHES)],
-    )
+        for s in "ab"
+    }
     match_n = sum(
         F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
         for i in range(_N_HASHES)
     )
     scored = (
-        ver.join(sza, "doc_a")
-        .join(szb, "doc_b")
-        .join(siga, "doc_a")
-        .join(sigb, "doc_b")
+        verified.join(side["a"], "doc_a")
+        .join(side["b"], "doc_b")
         .select(
-            F.round(
-                F.col("shared")
-                * F.lit(1.0)
-                / (F.col("sz_a") + F.col("sz_b") - F.col("shared")),
-                6,
-            ).alias("exact_j"),
+            jaccard().alias("exact_j"),
             (match_n * F.lit(1.0) / F.lit(_N_HASHES)).alias("est_j"),
         )
     )

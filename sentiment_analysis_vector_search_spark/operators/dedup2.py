@@ -33,6 +33,16 @@ from pyspark.sql import functions as F
 from ..catalog import cut, fan_out, table
 from ..functions.hashing import sql_md5_long
 from ..registry import register
+from .dedup import (
+    _DF_CAP,
+    _SQL_SHINGLES_CTE,
+    _sizes,
+    capped_shingles,
+    shared_ratio,
+    shingle_pair_counts,
+    shingle_sets,
+    with_sizes,
+)
 
 _K = 4  # words per gram
 _W = 3  # winnow window (in grams)
@@ -137,7 +147,7 @@ def dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
 # directions so the consumer can tell subset-duplicates (one side ~1.0)
 # from mutual near-dups (both high).
 #
-# Same candidate machinery as dedup_ngram_jaccard (shared materialized
+# Same shingle-similarity blocks as dedup_ngram_jaccard (materialized
 # shingle relation, boilerplate df-cap bounding the pair join at
 # C(cap, 2) per shingle). Denominators use the SURVIVING (non-
 # boilerplate) shingle counts — containment of the informative content;
@@ -148,10 +158,7 @@ def dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CONTAIN_T = 0.3
 
 
-def _containment_oracle() -> str:
-    from .dedup import _DF_CAP, _SQL_SHINGLES_CTE
-
-    return f"""
+_CONTAIN_ORACLE = f"""
 WITH {_SQL_SHINGLES_CTE},
 freq AS (
   SELECT sh FROM shingles GROUP BY sh HAVING count(*) <= {_DF_CAP}
@@ -175,44 +182,18 @@ WHERE greatest(round(shared * 1.0 / fa.fsz, 6),
 """
 
 
-@register("dedup_containment", oracle=_containment_oracle())
-def dedup_containment(
-    spark: SparkSession, sf_dir: str, sh: DataFrame | None = None
-) -> DataFrame:
+@register("dedup_containment", oracle=_CONTAIN_ORACLE)
+def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingle-containment pairs: (doc_a, doc_b, shared, contain_a,
     contain_b) where either direction's containment >= threshold —
     catches subset-duplication (quotes, page-in-page, doc-inside-doc)
-    that symmetric Jaccard under-scores. ``sh`` accepts a pre-
-    materialized shingle_sets() frame (shared with jaccard/minhash
-    in a composed pipeline)."""
-    from .dedup import _DF_CAP, shingle_sets
-
-    if sh is None:
-        sh = shingle_sets(spark, sf_dir)
-    freq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df")).where(
-        F.col("df") <= _DF_CAP
-    )
+    that symmetric Jaccard under-scores."""
     # cut: multi-consumer — the size aggregate and both self-join sides
-    filtered = cut(sh.join(freq.select("sh"), "sh"))
-    fsz = filtered.groupBy("doc_id").agg(F.count(F.lit(1)).alias("fsz"))
-    a = filtered.alias("a")
-    b = filtered.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    fa = fsz.withColumnsRenamed({"doc_id": "doc_a", "fsz": "fsz_a"})
-    fb = fsz.withColumnsRenamed({"doc_id": "doc_b", "fsz": "fsz_b"})
-    ca = F.round(F.col("shared") * F.lit(1.0) / F.col("fsz_a"), 6)
-    cb = F.round(F.col("shared") * F.lit(1.0) / F.col("fsz_b"), 6)
+    filtered = cut(capped_shingles(shingle_sets(spark, sf_dir)))
+    ca = shared_ratio(F.col("fsz_a"))
+    cb = shared_ratio(F.col("fsz_b"))
     return (
-        pairs.join(fa, "doc_a")
-        .join(fb, "doc_b")
+        with_sizes(shingle_pair_counts(filtered), _sizes(filtered, "fsz"), "fsz")
         .select(
             "doc_a",
             "doc_b",

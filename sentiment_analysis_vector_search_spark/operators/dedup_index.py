@@ -55,43 +55,26 @@ from .dedup import (
     _EMB_T,
     _JACCARD_T,
     _sizes,
-    band_structs_expr,
     doc_shingles,
     emb_signatures,
-    minhash_sig_exprs,
+    jaccard,
+    minhash_bands,
+    minhash_sigs,
+    shared_counts,
 )
-
-
-def _minhash_bands(sh: DataFrame) -> DataFrame:
-    """(band, bh, doc_id) LSH band buckets from a shingle relation."""
-    sigs = sh.groupBy("doc_id").agg(*minhash_sig_exprs())
-    return sigs.select("doc_id", F.explode(band_structs_expr()).alias("b")).select(
-        F.col("b.band").alias("band"), F.col("b.bh").alias("bh"), "doc_id"
-    )
 
 
 def _shingle_pairs(spark, index_dir, cand, idx_sh, new_sh) -> DataFrame:
     """Candidate pairs with their shared-shingle count and both sizes."""
-    shared = (
-        cand.join(idx_sh.withColumnsRenamed({"doc_id": "idx_id"}), "idx_id")
-        .join(new_sh.withColumnsRenamed({"doc_id": "new_id"}), ["new_id", "sh"])
-        .groupBy("idx_id", "new_id")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
     idx_sz = spark.read.parquet(f"{index_dir}/sizes").withColumnsRenamed(
         {"doc_id": "idx_id", "sz": "sz_i"}
     )
-    new_sz = (
-        new_sh.groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("sz_n"))
-        .withColumnsRenamed({"doc_id": "new_id"})
+    new_sz = _sizes(new_sh, "sz_n").withColumnsRenamed({"doc_id": "new_id"})
+    return (
+        shared_counts(cand, idx_sh, new_sh, "idx_id", "new_id")
+        .join(idx_sz, "idx_id")
+        .join(new_sz, "new_id")
     )
-    return shared.join(idx_sz, "idx_id").join(new_sz, "new_id")
-
-
-def _jaccard() -> Column:
-    shared = F.col("shared")
-    return F.round(shared * F.lit(1.0) / (F.col("sz_i") + F.col("sz_n") - shared), 6)
 
 
 def _vector_pairs(spark, index_dir, cand, idx_vecs, new_vecs) -> DataFrame:
@@ -137,9 +120,9 @@ NEAR_DUP = {
         "bh",
         doc_shingles,
         {"shingles": lambda sh: sh, "sizes": _sizes},
-        _minhash_bands,
+        lambda sh: minhash_bands(minhash_sigs(sh)).select("band", "bh", "doc_id"),
         _shingle_pairs,
-        _jaccard,
+        lambda: jaccard("sz_i", "sz_n"),
     ),
     "emb": NearDup(
         "vec_id",

@@ -71,10 +71,21 @@ def test_events_sessions_partitioned_window(spark, sf_dir):
 
 def test_dedup_embedding_no_cartesian(spark, sf_dir):
     # Bucketed candidate generation must join on bucket keys; a cartesian
-    # product in any dedup plan means the prefilter was optimized away.
-    for name in ("dedup_minhash_lsh", "dedup_simhash", "dedup_ngram_jaccard"):
+    # product or a nested-loop join in any dedup plan means the prefilter
+    # was optimized away. Covers simhash and every operator built on the
+    # shingle-similarity core.
+    for name in (
+        "dedup_minhash_lsh",
+        "dedup_simhash",
+        "dedup_ngram_jaccard",
+        "dedup_containment",
+        "dedup_minhash_quality_audit",
+        "decontaminate_fuzzy",
+    ):
         plan = plan_str(QUERIES[name](spark, sf_dir))
         assert "CartesianProduct" not in plan, f"{name}:\n{plan}"
+        assert "BroadcastNestedLoopJoin" not in plan, f"{name}:\n{plan}"
+        assert "HashJoin" in plan or "SortMergeJoin" in plan, f"{name}:\n{plan}"
 
 
 def test_whole_stage_codegen_on_hot_paths(spark, sf_dir):
@@ -267,8 +278,12 @@ def test_pack_sequences_window_is_sharded(spark, sf_dir):
 
 
 def test_keep_canonical_no_cartesian(spark, sf_dir):
+    # The plan reads its converged labels through a lineage cut, so its
+    # pair join (the dedup_minhash_lsh plan) is not in it; what remains
+    # must still join without a cartesian product or a nested loop.
     df = QUERIES["dedup_keep_canonical"](spark, sf_dir)
     assert count_in_plan(df, "CartesianProduct") == 0, plan_str(df)
+    assert count_in_plan(df, "BroadcastNestedLoopJoin") == 0, plan_str(df)
 
 
 def test_chunking_is_map_only(spark, sf_dir):
