@@ -89,7 +89,7 @@ SHOW = [
     ("q_events_kmv_setops", "two-phase salted bottom-K per set; all estimate math on <=2k retained rows"),
     ("q_part_skyline", "price-grain prefix maxima (bucket + within-bucket windows); no self-join"),
     ("ann_ivf_filtered_topk", "label predicate pushed to parquet scan BELOW the cell assignment"),
-    ("dedup_containment", "df-capped shingle pair join; surviving-shingle size joins"),
+    ("dedup_containment", "df-capped shingle pair join; surviving-shingle sizes carried, no size joins"),
     ("er_fuzzy_part_names", "distinct-name grain; block-keyed equi-join; in-block Levenshtein only"),
     ("q_nation_trade_triangles", "Q7 fact spine once; oriented edge relation checkpointed; two edge-grain equi-joins"),
     ("q_user_state_scd2", "(user, day)-chunked lag + lead windows; day-grain boundary merges"),

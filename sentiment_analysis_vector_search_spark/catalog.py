@@ -8,6 +8,8 @@ gets column pruning + predicate pushdown into the scan for free.
 from __future__ import annotations
 
 import os
+import threading
+from typing import Callable
 from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
@@ -94,10 +96,12 @@ _TABLE_MEMO: "WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]"
 
 def refresh(spark: SparkSession, sf_dir: str | None = None) -> None:
     """Invalidate the table memo: the memoized DataFrames capture the
-    parquet file listing (InMemoryFileIndex) at first read, so a session that REGENERATES or APPENDS to an sf_dir (data-prep then
-    query in one session) must call this — or pass the specific dir — to
-    drop the stale listings. Tests that write their own table files into
-    a tmp sf_dir are the in-repo callers."""
+    parquet file listing (InMemoryFileIndex) at first read, and the
+    ``memoized`` relations the rows derived from it, so a session that
+    REGENERATES or APPENDS to an sf_dir (data-prep then query in one
+    session) must call this — or pass the specific dir — to drop the
+    stale listings and relations. Tests that write their own table files
+    into a tmp sf_dir are the in-repo callers."""
     per = _TABLE_MEMO.get(spark)
     if per:
         if sf_dir is None:
@@ -112,6 +116,32 @@ def refresh(spark: SparkSession, sf_dir: str | None = None) -> None:
     from . import stats as _stats
 
     _stats.refresh(sf_dir)
+
+
+# Taken by ``memoized`` on a miss only: side-by-side first callers wait
+# for one build instead of each running their own. Reentrant, so a build
+# may itself call ``memoized``.
+_BUILD_LOCK = threading.RLock()
+
+
+def memoized(
+    spark: SparkSession, sf_dir: str, key: str, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """``build()`` memoized per (session, ``sf_dir``) under ``key``, next
+    to the tables and under their static-directory contract:
+    ``refresh(spark, sf_dir)`` drops it. A hit takes no lock; a miss
+    builds under one, so concurrent first callers share one build."""
+    try:
+        per = _TABLE_MEMO.setdefault(spark, {})
+    except TypeError:  # session not weak-referenceable: skip memoization
+        return build()
+    df = per.get((sf_dir, key))
+    if df is None:
+        with _BUILD_LOCK:
+            df = per.get((sf_dir, key))
+            if df is None:
+                df = per[(sf_dir, key)] = build()
+    return df
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

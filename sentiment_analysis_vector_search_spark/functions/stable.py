@@ -176,6 +176,13 @@ def dsum(col: Column) -> Column:
     return F.sum(col.cast(DEC)).cast("double")
 
 
+def spark_dsum_sql(expr: str) -> str:
+    """``dsum`` of a Spark SQL expression, as Spark SQL text for
+    ``F.expr`` (the Spark dialect; ``sql_dsum`` below is the DuckDB
+    oracle's)."""
+    return f"cast(sum(cast({expr} as {DEC})) as double)"
+
+
 def davg(col: Column) -> Column:
     """Order-independent mean: exact decimal sum, then one double division."""
     return F.round(dsum(col) / F.count(F.lit(1)), 6)

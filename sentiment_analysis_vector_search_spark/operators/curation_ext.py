@@ -34,7 +34,6 @@ from ..registry import register
 from .dedup import (
     _SQL_SHINGLES_CTE,
     _SQL_SIGS_CTE,
-    _sizes,
     _sql_band_selects,
     _sql_verify_cte,
     band_candidates,
@@ -44,7 +43,6 @@ from .dedup import (
     minhash_sigs,
     shared_counts,
     shingle_sets,
-    with_sizes,
 )
 
 # ---------------------------------------------------------------------------
@@ -670,10 +668,11 @@ def decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = band_candidates(bands.where(~is_eval), F.broadcast(bands.where(is_eval)))
     # shingles of candidate corpus docs + ALL eval shingles (eval is
     # broadcast-sized by definition)
-    ver = shared_counts(cand, candidate_shingles(sh, cand, "doc_a"), sh.where(is_eval))
+    ver = shared_counts(
+        cand, candidate_shingles(sh, cand, "doc_a"), sh.where(is_eval), size="sz"
+    )
     best = (
-        with_sizes(ver, _sizes(sh))
-        .groupBy(F.col("doc_a").alias("doc_id"))
+        ver.groupBy(F.col("doc_a").alias("doc_id"))
         .agg(
             F.count(F.lit(1)).alias("n_candidates"),
             F.max(jaccard()).alias("max_jaccard"),

@@ -32,7 +32,7 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import cut, fan_out, table
+from ..catalog import cut, fan_out, memoized, table
 from ..functions.hashing import (
     MOD31,
     md5_long,
@@ -121,23 +121,40 @@ def doc_shingles(docs: DataFrame) -> DataFrame:
 
 
 def shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The corpus's ``doc_shingles``, behind an eager cut.
+    """The corpus's shingle relation (doc_id, sh, df, sz, fsz): its
+    ``doc_shingles`` with the shingle's document frequency ``df``, the
+    doc's shingle count ``sz`` and its count ``fsz`` of shingles with
+    ``df <= _DF_CAP``.
 
-    The cut lets consumers that read the relation several times (minhash:
-    signatures + sizes + both sides of the verify join; jaccard: sizes +
-    df-filter + both sides of the candidate self-join) pay the
-    scan→explode→distinct shuffle once instead of once per subtree — at
-    corpus scale each recomputation is a full extra corpus scan + shuffle.
+    One relation per (session, ``sf_dir``), built once behind one eager
+    cut (``catalog.memoized``, dropped by ``catalog.refresh``): every
+    shingle operator reads it several times (signatures, both sides of a
+    pair or verify join) and takes its sizes and df cap from the carried
+    columns, so the scan→explode→distinct shuffle and the df and size
+    aggregates run once per corpus, not once per subtree and call.
     """
+    return memoized(spark, sf_dir, "shingle_sets", lambda: _shingle_relation(spark, sf_dir))
+
+
+def _shingle_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenize + trigram transform + explode is the expensive scan-stage
-    # projection in both jaccard and minhash: fan it out across cores.
+    # projection: fan it out across cores.
     docs = fan_out(spark, table(spark, sf_dir, "documents"))
-    # cut: multi-consumer — sizes, df filter and both join sides read it
-    return cut(doc_shingles(docs), eager=True)
-
-
-def _sizes(sh: DataFrame, name: str = "sz") -> DataFrame:
-    return sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias(name))
+    n = F.count(F.lit(1))
+    by_doc = Window.partitionBy("doc_id")
+    rel = (
+        doc_shingles(docs)
+        .withColumn("df", n.over(Window.partitionBy("sh")))
+        .select(
+            "doc_id",
+            "sh",
+            "df",
+            n.over(by_doc).alias("sz"),
+            F.count(F.when(F.col("df") <= _DF_CAP, 1)).over(by_doc).alias("fsz"),
+        )
+    )
+    # cut: multi-consumer — every shingle operator of the session reads it
+    return cut(rel, eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -148,20 +165,10 @@ def _sizes(sh: DataFrame, name: str = "sz") -> DataFrame:
 # - the banded candidate join: ``band_candidates``;
 # - the candidate-side semi-join and shared-count verify:
 #   ``candidate_shingles`` → ``shared_counts``;
-# - the df-capped shingle pair count: ``capped_shingles`` →
-#   ``shingle_pair_counts``;
-# - one rounded score: ``shared_ratio`` (``jaccard``), over ``with_sizes``.
+# - the df-capped shingle pair count: ``shingle_pair_counts``;
+# - one rounded score: ``shared_ratio`` (``jaccard``), over the set
+#   sizes the pair carries.
 # ---------------------------------------------------------------------------
-
-
-def capped_shingles(sh: DataFrame) -> DataFrame:
-    """``sh`` without boilerplate: shingles present in more than
-    ``_DF_CAP`` docs are dropped, which bounds the pair join at C(cap, 2)
-    pairs per shingle."""
-    freq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df")).where(
-        F.col("df") <= _DF_CAP
-    )
-    return sh.join(freq.select("sh"), "sh")
 
 
 def _pair_join(a: DataFrame, b: DataFrame, *keys: str, ordered: bool = True) -> DataFrame:
@@ -178,13 +185,18 @@ def _pair_ids() -> list[Column]:
     return [F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")]
 
 
-def shingle_pair_counts(rows: DataFrame) -> DataFrame:
-    """(doc_a, doc_b, shared): every pair of docs sharing a shingle of
-    ``rows`` with its shared count, doc_a < doc_b — the shingle-keyed
-    self-join, never a cross join."""
+def shingle_pair_counts(sh: DataFrame, size: str) -> DataFrame:
+    """(doc_a, doc_b, {size}_a, {size}_b, shared): every pair of docs of a
+    ``shingle_sets`` relation sharing a shingle, with its shared count and
+    each doc's ``size`` column, doc_a < doc_b — the shingle-keyed
+    self-join, never a cross join. Boilerplate is dropped first: a
+    shingle present in more than ``_DF_CAP`` docs would add C(df, 2)
+    pairs."""
+    rows = sh.where(F.col("df") <= _DF_CAP)
+    sizes = [F.col(f"{s}.{size}").alias(f"{size}_{s}") for s in "ab"]
     return (
         _pair_join(rows, rows, "sh")
-        .groupBy(*_pair_ids())
+        .groupBy(*_pair_ids(), *sizes)
         .agg(F.count(F.lit(1)).alias("shared"))
     )
 
@@ -212,25 +224,28 @@ def candidate_shingles(sh: DataFrame, cand: DataFrame, *ids: str) -> DataFrame:
 
 
 def shared_counts(
-    cand: DataFrame, sh_a: DataFrame, sh_b: DataFrame, a: str = "doc_a", b: str = "doc_b"
+    cand: DataFrame,
+    sh_a: DataFrame,
+    sh_b: DataFrame,
+    a: str = "doc_a",
+    b: str = "doc_b",
+    size: str | None = None,
 ) -> DataFrame:
     """(a, b, shared): each candidate pair of ``cand`` with the count of
     shingles its ``a`` doc (rows of ``sh_a``) and ``b`` doc (``sh_b``)
-    share."""
+    share; with ``size``, each side's ``size`` column rides along as
+    ``{size}_a`` and ``{size}_b``."""
+    keys = [a, b]
+    if size is not None:
+        sh_a = sh_a.select("doc_id", "sh", F.col(size).alias(f"{size}_a"))
+        sh_b = sh_b.select("doc_id", "sh", F.col(size).alias(f"{size}_b"))
+        keys += [f"{size}_a", f"{size}_b"]
     return (
         cand.join(sh_a.withColumnsRenamed({"doc_id": a}), a)
         .join(sh_b.withColumnsRenamed({"doc_id": b}), [b, "sh"])
-        .groupBy(a, b)
+        .groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("shared"))
     )
-
-
-def with_sizes(pairs: DataFrame, sizes: DataFrame, name: str = "sz") -> DataFrame:
-    """``pairs`` with each side's ``name`` column of ``sizes`` as
-    ``{name}_a`` and ``{name}_b``."""
-    return pairs.join(
-        sizes.withColumnsRenamed({"doc_id": "doc_a", name: f"{name}_a"}), "doc_a"
-    ).join(sizes.withColumnsRenamed({"doc_id": "doc_b", name: f"{name}_b"}), "doc_b")
 
 
 def shared_ratio(denom: Column) -> Column:
@@ -270,9 +285,8 @@ WHERE round(shared * 1.0 / (sa.sz + sb.sz - shared), 6) >= {_JACCARD_T}
 
 @register("dedup_ngram_jaccard", oracle=_JACCARD_ORACLE)
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = shingle_sets(spark, sf_dir)
     return (
-        with_sizes(shingle_pair_counts(capped_shingles(sh)), _sizes(sh))
+        shingle_pair_counts(shingle_sets(spark, sf_dir), "sz")
         .select("doc_a", "doc_b", "shared", jaccard().alias("jaccard"))
         .where(F.col("jaccard") >= _JACCARD_T)
     )
@@ -413,7 +427,7 @@ def _minhash_verified(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Data
     sigs = cut(minhash_sigs(sh))
     cand = band_candidates(minhash_bands(sigs))
     sh_cand = candidate_shingles(sh, cand, "doc_a", "doc_b")
-    return sigs, with_sizes(shared_counts(cand, sh_cand, sh_cand), _sizes(sh))
+    return sigs, shared_counts(cand, sh_cand, sh_cand, size="sz")
 
 
 @register("dedup_minhash_lsh", oracle=_MINHASH_ORACLE)

@@ -36,12 +36,9 @@ from ..registry import register
 from .dedup import (
     _DF_CAP,
     _SQL_SHINGLES_CTE,
-    _sizes,
-    capped_shingles,
     shared_ratio,
     shingle_pair_counts,
     shingle_sets,
-    with_sizes,
 )
 
 _K = 4  # words per gram
@@ -188,12 +185,10 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     contain_b) where either direction's containment >= threshold —
     catches subset-duplication (quotes, page-in-page, doc-inside-doc)
     that symmetric Jaccard under-scores."""
-    # cut: multi-consumer — the size aggregate and both self-join sides
-    filtered = cut(capped_shingles(shingle_sets(spark, sf_dir)))
     ca = shared_ratio(F.col("fsz_a"))
     cb = shared_ratio(F.col("fsz_b"))
     return (
-        with_sizes(shingle_pair_counts(filtered), _sizes(filtered, "fsz"), "fsz")
+        shingle_pair_counts(shingle_sets(spark, sf_dir), "fsz")
         .select(
             "doc_a",
             "doc_b",

@@ -54,7 +54,6 @@ from .dedup import (
     _EMB_BANDS,
     _EMB_T,
     _JACCARD_T,
-    _sizes,
     doc_shingles,
     emb_signatures,
     jaccard,
@@ -62,6 +61,11 @@ from .dedup import (
     minhash_sigs,
     shared_counts,
 )
+
+
+def _sizes(sh: DataFrame, name: str = "sz") -> DataFrame:
+    """(doc_id, ``name``): each doc's shingle count."""
+    return sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias(name))
 
 
 def _shingle_pairs(spark, index_dir, cand, idx_sh, new_sh) -> DataFrame:

@@ -16,12 +16,12 @@ from __future__ import annotations
 from contextlib import contextmanager
 from contextvars import ContextVar
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import cut, fan_out, table
 from ..functions import sentiment as S
-from ..functions.stable import dsum, sql_dsum
+from ..functions.stable import dsum, spark_dsum_sql, sql_dsum
 from ..registry import register
 
 BASE_RATE = 5000.0  # insurance_calculator.py:16
@@ -356,146 +356,131 @@ FROM scored
 """
 
 
+# The scalar aggregates and the multiplier/score chain below are built
+# as SQL text, one parsed expression per column (the ``minhash_sig_exprs``
+# idiom): one py4j round trip per column instead of one per Column
+# sub-expression (about 850 for this stage). Float literals carry the
+# ``D`` suffix so they stay doubles (a bare ``0.5`` parses as a decimal),
+# and each expression keeps the operand order of the Column operators, so
+# the analyzed plan is the same.
+_CNT = "sum(CASE WHEN sentiment = '{}' THEN 1 ELSE 0 END)"
+_IN_RANGE = "CASE WHEN ((rn >= {1}) AND (rn <= {2})) THEN {0} ELSE 0 END"
+
+
 @register("sent_trend_risk", oracle=_RISK_ORACLE)
 def sent_trend_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
     lab = classified(spark, sf_dir)
-    conf = F.col("confidence")
-    cnt = lambda s: F.sum(F.when(F.col("sentiment") == s, 1).otherwise(0))  # noqa: E731
     stats = lab.agg(
-        F.count(F.lit(1)).alias("n"),
-        cnt("POSITIVE").alias("n_pos"),
-        cnt("NEGATIVE").alias("n_neg"),
-        cnt("NEUTRAL").alias("n_neu"),
-        dsum(conf).alias("conf_sum"),
-        dsum(conf * conf).alias("conf_sumsq"),
+        *[
+            F.expr(f"{e} AS {name}")
+            for name, e in (
+                ("n", "count(1)"),
+                ("n_pos", _CNT.format("POSITIVE")),
+                ("n_neg", _CNT.format("NEGATIVE")),
+                ("n_neu", _CNT.format("NEUTRAL")),
+                ("conf_sum", spark_dsum_sql("confidence")),
+                ("conf_sumsq", spark_dsum_sql("(confidence * confidence)")),
+            )
+        ]
     )
 
-    tr = trends_df(spark, sf_dir)
-    w = Window.orderBy(F.desc("visit_date"))
-    tr = tr.withColumn("rn", F.row_number().over(w))
-    in_range = lambda col, lo, hi: F.when(  # noqa: E731
-        (F.col("rn") >= lo) & (F.col("rn") <= hi), F.col(col)
-    ).otherwise(F.lit(0))
+    tr = trends_df(spark, sf_dir).withColumn(
+        "rn", F.expr("row_number() OVER (ORDER BY visit_date DESC)")
+    )
     tr_agg = tr.agg(
-        F.count(F.lit(1)).alias("n_dates"),
-        dsum(in_range("total", 1, 14)).alias("recent_total"),
-        dsum(in_range("negative", 1, 14)).alias("recent_neg"),
-        dsum(in_range("total", 15, 28)).alias("prev_total"),
-        dsum(in_range("negative", 15, 28)).alias("prev_neg"),
-        dsum(in_range("total", 1, 3)).alias("last3_total"),
-        dsum(in_range("negative", 1, 3)).alias("last3_neg"),
+        F.expr("count(1) AS n_dates"),
+        *[
+            F.expr(f"{spark_dsum_sql(_IN_RANGE.format(col, lo, hi))} AS {name}")
+            for name, col, lo, hi in (
+                ("recent_total", "total", 1, 14),
+                ("recent_neg", "negative", 1, 14),
+                ("prev_total", "total", 15, 28),
+                ("prev_neg", "negative", 15, 28),
+                ("last3_total", "total", 1, 3),
+                ("last3_neg", "negative", 1, 3),
+            )
+        ],
     )
 
     return risk_from_scalars(stats.crossJoin(tr_agg))
 
 
+def _exprs(cols: dict[str, str]) -> dict[str, Column]:
+    return {name: F.expr(e) for name, e in cols.items()}
+
+
 def risk_from_scalars(sc: DataFrame) -> DataFrame:
-    """insurance_calculator.py's multiplier/score chain as pure Column
+    """insurance_calculator.py's multiplier/score chain as pure column
     arithmetic over the ONE-row scalar frame (n, n_pos, n_neg, n_neu,
     conf_sum, conf_sumsq, n_dates, recent_total, recent_neg, prev_total,
     prev_neg, last3_total, last3_neg). Kept apart from sent_trend_risk so
     the golden fixtures (tests/test_reference_golden.py) can drive the
     published multipliers with literal scalar rows, independent of the
     corpus-derived aggregation above."""
-    n = F.col("n")
-    avg_conf = F.col("conf_sum") / n
-    conf_std = F.when(
-        n > 1,
-        F.sqrt(
-            F.greatest(
-                (F.col("conf_sumsq") - F.col("conf_sum") * F.col("conf_sum") / n)
-                / (n - 1),
-                F.lit(0.0),
-            )
-        ),
-    ).otherwise(F.lit(0.0))
-    pos_ratio = F.col("n_pos") * F.lit(1.0) / n
-    neg_ratio = F.col("n_neg") * F.lit(1.0) / n
-    neu_ratio = F.col("n_neu") * F.lit(1.0) / n
     sc = sc.withColumns(
-        {
-            "avg_conf": avg_conf,
-            "conf_std": conf_std,
-            "pos_ratio": pos_ratio,
-            "neg_ratio": neg_ratio,
-            "neu_ratio": neu_ratio,
-        }
-    )
-
-    conf_mult = (1.5 - F.col("avg_conf") * 0.5) * F.when(
-        F.col("conf_std") > 0.2, F.lit(1.1)
-    ).otherwise(F.lit(1.0))
-    sent_mult = (1.0 + F.col("neg_ratio") * 2.5 + F.col("neu_ratio") * 0.5) * (
-        F.when(F.col("pos_ratio") > 0.85, F.lit(0.85))
-        .when(F.col("pos_ratio") > 0.75, F.lit(0.95))
-        .otherwise(F.lit(1.0))
-    )
-    sample_mult = (
-        F.when(n < 50, F.lit(1.3)).when(n < 100, F.lit(1.15)).otherwise(F.lit(1.0))
-    )
-    recent_ratio = F.col("recent_neg") / F.col("recent_total")
-    prev_ratio = F.col("prev_neg") / F.col("prev_total")
-    has_prev = (F.col("n_dates") >= 28) & (F.col("prev_total") > 0)
-    trend_mult = (
-        F.when((F.col("n_dates") < 7) | (F.col("recent_total") == 0), F.lit(1.0))
-        .when(has_prev & (recent_ratio > prev_ratio * 1.5), F.lit(1.4))
-        .when(has_prev & (recent_ratio > prev_ratio * 1.2), F.lit(1.2))
-        .when(has_prev & (recent_ratio < prev_ratio * 0.7), F.lit(0.9))
-        .when(
-            (F.col("last3_total") > 0)
-            & (F.col("last3_neg") / F.col("last3_total") > 0.3),
-            F.lit(1.3),
+        _exprs(
+            {
+                "avg_conf": "(conf_sum / n)",
+                "conf_std": "CASE WHEN (n > 1) THEN sqrt(greatest(((conf_sumsq"
+                " - ((conf_sum * conf_sum) / n)) / (n - 1)), 0.0D)) ELSE 0.0D END",
+                "pos_ratio": "((n_pos * 1.0D) / n)",
+                "neg_ratio": "((n_neg * 1.0D) / n)",
+                "neu_ratio": "((n_neu * 1.0D) / n)",
+            }
         )
-        .otherwise(F.lit(1.0))
     )
+    has_prev = "((n_dates >= 28) AND (prev_total > 0))"
+    recent, prev = "(recent_neg / recent_total)", "(prev_neg / prev_total)"
     sc = sc.withColumns(
-        {
-            "conf_mult": conf_mult,
-            "sent_mult": sent_mult,
-            "sample_mult": sample_mult,
-            "trend_mult": trend_mult,
-        }
+        _exprs(
+            {
+                "conf_mult": "((1.5D - (avg_conf * 0.5D))"
+                " * CASE WHEN (conf_std > 0.2D) THEN 1.1D ELSE 1.0D END)",
+                "sent_mult": "((((neg_ratio * 2.5D) + 1.0D) + (neu_ratio * 0.5D))"
+                " * CASE WHEN (pos_ratio > 0.85D) THEN 0.85D"
+                " WHEN (pos_ratio > 0.75D) THEN 0.95D ELSE 1.0D END)",
+                "sample_mult": "CASE WHEN (n < 50) THEN 1.3D"
+                " WHEN (n < 100) THEN 1.15D ELSE 1.0D END",
+                "trend_mult": "CASE WHEN ((n_dates < 7) OR (recent_total = 0)) THEN 1.0D"
+                f" WHEN ({has_prev} AND ({recent} > ({prev} * 1.5D))) THEN 1.4D"
+                f" WHEN ({has_prev} AND ({recent} > ({prev} * 1.2D))) THEN 1.2D"
+                f" WHEN ({has_prev} AND ({recent} < ({prev} * 0.7D))) THEN 0.9D"
+                " WHEN ((last3_total > 0) AND ((last3_neg / last3_total) > 0.3D))"
+                " THEN 1.3D ELSE 1.0D END",
+            }
+        )
     )
-
     raw_score = (
-        F.col("neg_ratio") * 200
-        + F.when(F.col("pos_ratio") < 0.6, (0.6 - F.col("pos_ratio")) * 50).otherwise(
-            F.lit(0.0)
-        )
-        + F.when(F.col("avg_conf") < 0.9, (0.9 - F.col("avg_conf")) * 100).otherwise(
-            F.lit(0.0)
-        )
-        + F.when(n < 100, (100 - n) / F.lit(10.0)).otherwise(F.lit(0.0))
-        + F.when(
-            F.col("trend_mult") > 1.0, (F.col("trend_mult") - 1.0) * 25
-        ).otherwise(F.lit(0.0))
+        "(((((neg_ratio * 200)"
+        " + CASE WHEN (pos_ratio < 0.6D) THEN ((0.6D - pos_ratio) * 50) ELSE 0.0D END)"
+        " + CASE WHEN (avg_conf < 0.9D) THEN ((0.9D - avg_conf) * 100) ELSE 0.0D END)"
+        " + CASE WHEN (n < 100) THEN ((100 - n) / 10.0D) ELSE 0.0D END)"
+        " + CASE WHEN (trend_mult > 1.0D) THEN ((trend_mult - 1.0D) * 25) ELSE 0.0D END)"
     )
-    risk_score = F.least(F.floor(raw_score), F.lit(100)).cast("int")
+    risk = f"CAST(least(floor({raw_score}), 100) AS INT)"
+    rounded = {
+        "positive_ratio": "pos_ratio",
+        "negative_ratio": "neg_ratio",
+        "neutral_ratio": "neu_ratio",
+        "avg_confidence": "avg_conf",
+        "confidence_std": "conf_std",
+        "sentiment_multiplier": "sent_mult",
+        "confidence_multiplier": "conf_mult",
+        "sample_multiplier": "sample_mult",
+        "trend_multiplier": "trend_mult",
+    }
     return sc.select(
-        n.alias("total_samples"),
-        F.round(F.col("pos_ratio"), 6).alias("positive_ratio"),
-        F.round(F.col("neg_ratio"), 6).alias("negative_ratio"),
-        F.round(F.col("neu_ratio"), 6).alias("neutral_ratio"),
-        F.round(F.col("avg_conf"), 6).alias("avg_confidence"),
-        F.round(F.col("conf_std"), 6).alias("confidence_std"),
-        F.round(F.col("sent_mult"), 6).alias("sentiment_multiplier"),
-        F.round(F.col("conf_mult"), 6).alias("confidence_multiplier"),
-        F.round(F.col("sample_mult"), 6).alias("sample_multiplier"),
-        F.round(F.col("trend_mult"), 6).alias("trend_multiplier"),
-        F.round(
-            F.lit(BASE_RATE)
-            * F.col("sent_mult")
-            * F.col("conf_mult")
-            * F.col("sample_mult")
-            * F.col("trend_mult"),
-            2,
-        ).alias("insurance_cost"),
-        risk_score.alias("risk_score"),
-        F.when(risk_score >= 70, F.lit("Critical"))
-        .when(risk_score >= 50, F.lit("High"))
-        .when(risk_score >= 30, F.lit("Medium"))
-        .otherwise(F.lit("Low"))
-        .alias("risk_level"),
+        F.expr("n AS total_samples"),
+        *[F.expr(f"round({c}, 6) AS {name}") for name, c in rounded.items()],
+        F.expr(
+            f"round(((({BASE_RATE}D * sent_mult) * conf_mult) * sample_mult)"
+            " * trend_mult, 2) AS insurance_cost"
+        ),
+        F.expr(f"{risk} AS risk_score"),
+        F.expr(
+            f"CASE WHEN ({risk} >= 70) THEN 'Critical' WHEN ({risk} >= 50) THEN 'High'"
+            f" WHEN ({risk} >= 30) THEN 'Medium' ELSE 'Low' END AS risk_level"
+        ),
     )
 
 

@@ -22,3 +22,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(autouse=True)
+def _drop_tmp_corpus_memos(request):
+    """Drop what a test's tmp corpora left in the session's table memo
+    (``catalog.refresh`` of each), so a memoized shingle relation and its
+    local checkpoint do not outlive the test that made the corpus."""
+    names = request.fixturenames
+    if "tmp_path" not in names or "spark" not in names:
+        yield
+        return
+    from sentiment_analysis_vector_search_spark import catalog
+
+    spark = request.getfixturevalue("spark")
+    root = str(request.getfixturevalue("tmp_path"))
+    yield
+    per = catalog._TABLE_MEMO.get(spark) or {}
+    for d in {k[0] for k in per if k[0] == root or k[0].startswith(root + os.sep)}:
+        catalog.refresh(spark, d)

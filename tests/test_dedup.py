@@ -239,3 +239,159 @@ def test_dedup_index_check_large_batch_keyed_path(spark, sf_dir, tmp_path):
     got_large = {(r.doc_a, r.doc_b, r.jaccard) for r in large.collect()}
     assert got_small, "fixture must contain cross-half pairs"
     assert got_small == got_large
+
+
+# ---------------------------------------------------------------------------
+# The memoized shingle relation (dedup.shingle_sets): one build per
+# (session, corpus), dropped by catalog.refresh, shared by concurrent
+# first callers; and the job budget of the curation pass it serves.
+# ---------------------------------------------------------------------------
+
+_A = "the quick brown fox jumps over the lazy dog near the river bank today"
+_B = "completely different words make up this second document about something else"
+CURATION = (
+    "dedup_minhash_lsh",
+    "dedup_containment",
+    "dedup_ngram_jaccard",
+    "dedup_keep_canonical",
+)
+
+
+def _write_docs(spark, sf: str, texts) -> None:
+    spark.createDataFrame(
+        list(enumerate(texts, 1)), "doc_id bigint, text string"
+    ).write.mode("overwrite").parquet(f"{sf}/documents.parquet")
+
+
+def _jaccard_pairs(spark, sf: str) -> set:
+    import __spark_entry__ as entrymod
+
+    df = entrymod.queries()["dedup_ngram_jaccard"](spark, sf)
+    return {(r.doc_a, r.doc_b) for r in df.collect()}
+
+
+def _count_builds(monkeypatch) -> list:
+    from sentiment_analysis_vector_search_spark.operators import dedup
+
+    builds = []
+    real = dedup._shingle_relation
+
+    def counting(spark, sf_dir):
+        builds.append(sf_dir)
+        return real(spark, sf_dir)
+
+    monkeypatch.setattr(dedup, "_shingle_relation", counting)
+    return builds
+
+
+def _jobs_in_group(spark, group: str, fn) -> tuple[int, object]:
+    """(jobs ``fn()`` started, its result), ``fn`` run under ``group``."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup(group))
+    sc.setJobGroup(group, group, False)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    bus.waitUntilEmpty()
+    return len(set(tracker.getJobIdsForGroup(group)) - before), out
+
+
+def test_shingle_relation_built_once_per_corpus(spark, tmp_path, monkeypatch):
+    """Two Jaccard calls over one corpus build its shingle relation once;
+    the second call starts no job while it is built, and its plan reads
+    the memoized relation: no parquet scan, no tokenizing Generate."""
+    import __spark_entry__ as entrymod
+    from sentiment_analysis_vector_search_spark.plans import plan_str
+
+    sf = str(tmp_path)
+    _write_docs(spark, sf, [_A, _A, _B])
+    builds = _count_builds(monkeypatch)
+    first = _jaccard_pairs(spark, sf)
+    n_jobs, df = _jobs_in_group(
+        spark, "memo-second", lambda: entrymod.queries()["dedup_ngram_jaccard"](spark, sf)
+    )
+    assert builds == [sf]
+    assert n_jobs == 0
+    plan = plan_str(df)
+    assert "Scan parquet" not in plan and "Generate" not in plan, plan
+    assert {(r.doc_a, r.doc_b) for r in df.collect()} == first == {(1, 2)}
+
+
+def test_refresh_drops_shingle_relation(spark, tmp_path):
+    from sentiment_analysis_vector_search_spark import catalog
+
+    sf = str(tmp_path)
+    _write_docs(spark, sf, [_A, _A, _B])
+    assert _jaccard_pairs(spark, sf) == {(1, 2)}
+    _write_docs(spark, sf, [_A, _B, _A])
+    catalog.refresh(spark, sf)
+    assert _jaccard_pairs(spark, sf) == {(1, 3)}
+
+
+def test_concurrent_first_callers_share_one_build(spark, tmp_path, monkeypatch):
+    from concurrent.futures import ThreadPoolExecutor
+
+    from sentiment_analysis_vector_search_spark.operators.dedup import shingle_sets
+
+    sf = str(tmp_path)
+    _write_docs(spark, sf, [_A, _A, _B])
+    builds = _count_builds(monkeypatch)
+    with ThreadPoolExecutor(4) as ex:
+        got = list(ex.map(lambda _: shingle_sets(spark, sf), range(4)))
+    assert all(g is got[0] for g in got)
+    assert builds == [sf]
+
+
+def test_memo_hit_does_not_wait_for_a_build(spark, tmp_path):
+    """A memo hit returns while another thread holds the build lock (a
+    first build of some other corpus)."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from sentiment_analysis_vector_search_spark import catalog
+    from sentiment_analysis_vector_search_spark.operators.dedup import shingle_sets
+
+    sf = str(tmp_path)
+    _write_docs(spark, sf, [_A, _A, _B])
+    first = shingle_sets(spark, sf)
+    held, release = threading.Event(), threading.Event()
+
+    def hold_lock():
+        with catalog._BUILD_LOCK:
+            held.set()
+            release.wait(60)
+
+    holder = threading.Thread(target=hold_lock)
+    holder.start()
+    held.wait()
+    ex = ThreadPoolExecutor(1)
+    try:
+        assert ex.submit(shingle_sets, spark, sf).result(timeout=20) is first
+    finally:
+        release.set()
+        holder.join()
+        ex.shutdown()
+
+
+def test_curation_pass_job_budget(spark, sf_dir):
+    """The second pass of the four curation calls over one corpus, each
+    frame collected, runs at most 36 jobs (10 MinHash, 3 containment,
+    3 Jaccard, 20 keep-canonical), the count measured on this fixture.
+    Before the shingle relation was memoized with its df and size
+    columns, each call re-derived it behind its own cut and re-aggregated
+    sizes and doc frequency: the same pass ran 59 jobs."""
+    import __spark_entry__ as entrymod
+
+    queries = entrymod.queries()
+
+    def curation_pass():
+        for name in CURATION:
+            queries[name](spark, sf_dir).collect()
+
+    curation_pass()
+    n_jobs, _ = _jobs_in_group(spark, "curation-pass", curation_pass)
+    assert 0 < n_jobs <= 36, n_jobs

@@ -5,6 +5,8 @@ pruned scan from a full-width scan — these tests pin the physical-plan
 properties that decide whether an operator survives 100 TB.
 """
 
+import re
+
 import __spark_entry__ as entrymod
 import pytest
 
@@ -69,11 +71,34 @@ def test_events_sessions_partitioned_window(spark, sf_dir):
             assert "user_id" in line, line
 
 
-def test_dedup_embedding_no_cartesian(spark, sf_dir):
+def test_dedup_embedding_no_cartesian(spark, sf_dir, monkeypatch):
     # Bucketed candidate generation must join on bucket keys; a cartesian
     # product or a nested-loop join in any dedup plan means the prefilter
     # was optimized away. Covers simhash and every operator built on the
-    # shingle-similarity core.
+    # shingle-similarity core. The banded candidate join runs inside an
+    # eager cut (``dedup.band_candidates``), so the final plans only read
+    # its result: the cut dedup.py calls is wrapped to record the plan of
+    # every frame it cuts, and the band join is checked there.
+    from sentiment_analysis_vector_search_spark.operators import dedup
+
+    cut_plans: list[str] = []
+    real_cut = dedup.cut
+
+    def recording_cut(df, eager=False):
+        cut_plans.append(plan_str(df))
+        return real_cut(df, eager)
+
+    monkeypatch.setattr(dedup, "cut", recording_cut)
+    banded = {
+        "dedup_minhash_lsh",
+        "dedup_minhash_quality_audit",
+        "decontaminate_fuzzy",
+        "dedup_keep_canonical",
+    }
+    band_join = re.compile(
+        r"Left keys \[2\]: \[band#\d+, bh#\d+\]\n"
+        r"Right keys \[2\]: \[band#\d+, bh#\d+\]"
+    )
     for name in (
         "dedup_minhash_lsh",
         "dedup_simhash",
@@ -81,11 +106,20 @@ def test_dedup_embedding_no_cartesian(spark, sf_dir):
         "dedup_containment",
         "dedup_minhash_quality_audit",
         "decontaminate_fuzzy",
+        "dedup_keep_canonical",
     ):
+        cut_plans.clear()
         plan = plan_str(QUERIES[name](spark, sf_dir))
-        assert "CartesianProduct" not in plan, f"{name}:\n{plan}"
-        assert "BroadcastNestedLoopJoin" not in plan, f"{name}:\n{plan}"
-        assert "HashJoin" in plan or "SortMergeJoin" in plan, f"{name}:\n{plan}"
+        for p in (plan, *cut_plans):
+            assert "CartesianProduct" not in p, f"{name}:\n{p}"
+            assert "BroadcastNestedLoopJoin" not in p, f"{name}:\n{p}"
+        if name in banded:
+            assert any(band_join.search(p) for p in cut_plans), (
+                f"{name}: no cut frame joins on (band, bh):\n" + "\n".join(cut_plans)
+            )
+        # keep_canonical's plan reads its converged labels through a cut
+        if name != "dedup_keep_canonical":
+            assert "HashJoin" in plan or "SortMergeJoin" in plan, f"{name}:\n{plan}"
 
 
 def test_whole_stage_codegen_on_hot_paths(spark, sf_dir):
